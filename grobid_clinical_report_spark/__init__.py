@@ -11,7 +11,7 @@ stages over an interleaved-span document table:
 
 One row = one document. All extraction logic lives in pure
 ``pandas.DataFrame -> pandas.DataFrame`` kernels (``kernels/``) composed inside a
-single shuffle-free ``mapInPandas`` pass (``pipeline.py``); Spark provides
+single shuffle-free ``mapInArrow`` pass (``pipeline.py``); Spark provides
 partitioning, skew salting, checkpoint/resume and writes (``runner.py``,
 ``manifest.py``).
 

@@ -177,9 +177,9 @@ def _mask_any(offs: np.ndarray, mask: np.ndarray) -> np.ndarray:
 def _mask_or(offs: np.ndarray, mask: np.ndarray) -> np.ndarray:
     """Per-string 'any True byte' for DENSE masks: logical_or.reduceat
     (~2 ms on a 6 MB buffer vs ~20 ms flatnonzero when most bytes hit).
-    Caller guarantees len(mask) > 0."""
-    starts = np.minimum(offs[:-1], len(mask) - 1)
-    out = np.logical_or.reduceat(mask, starts)
+    One padded False byte keeps trailing empty strings' starts in range
+    without shortening the last non-empty string's segment."""
+    out = np.logical_or.reduceat(np.append(mask, False), offs[:-1])
     out[offs[:-1] == offs[1:]] = False  # reduceat misreports empties
     return out
 
@@ -246,14 +246,6 @@ def collapse_ws_runs(arr: pa.Array) -> pa.Array:
     if _np_view(arr) is None:
         return pc.replace_substring_regex(arr, r"[\s ]+", " ")
     return subset_replace(arr, ws_anomaly(arr), [(r"[\s ]+", " ")])
-
-
-def mask_digit_runs(arr: pa.Array) -> pa.Array:
-    """Byte-exact replace(arr, r"\\d+", "#") — RE2 runs only on the
-    digit-bearing strings (sparse candidate scan, ~2.5% of unique lines)."""
-    if _np_view(arr) is None:
-        return pc.replace_substring_regex(arr, r"\d+", "#")
-    return subset_replace(arr, any_digit(arr), [(r"\d+", "#")])
 
 
 def any_digit(arr: pa.Array) -> np.ndarray:
@@ -355,7 +347,3 @@ def replace(arr: pa.Array, pattern: str, repl: str) -> pa.Array:
 
 def strip(arr: pa.Array) -> pa.Array:
     return pc.utf8_trim_whitespace(arr)
-
-
-def lstrip(arr: pa.Array) -> pa.Array:
-    return pc.utf8_ltrim_whitespace(arr)

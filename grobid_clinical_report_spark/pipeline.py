@@ -10,6 +10,11 @@ No groupBy is needed because one row already holds a whole document — the
 JVM↔Python Arrow hop is the only process boundary (vs. the reference's
 per-document pdfalto subprocess + Wapiti JNI hops).
 
+There is one batch loop: `_prepared` (coalesce → flatten → prepare) feeds
+`_extract` (kernels → regroup), which `run_mode`, the trained-NER serving
+mapper and the in-process `PANDAS_MODES` all run; the training-data mappers
+loop over `_prepared` and only emit their own rows.
+
 Public modes (API parity with §2.6: EngineMedical.process* / REST endpoints):
   extract_full     — /api/processFullMedicalText  (body structure + notes)
   extract_header   — /api/processHeaderDocument   (header field spans)
@@ -43,7 +48,6 @@ from .schema import EXTRACTED_DDL
 _EMPTY_SPANS = pd.DataFrame(
     columns=["doc_id", "kind", "text", "media_ref", "offset"]
 )
-_LINE_COLS = ["doc_id", "seq", "kind", "text", "media_ref", "offset"]
 
 
 # which feature passes each mode needs: token modes only need structure,
@@ -116,20 +120,6 @@ def prepare_lines(lines: pd.DataFrame, profile: str = "all") -> pd.DataFrame:
     if profile == "minimal":
         return lines
     return featurize_lines(lines, profile=profile)
-
-
-def explode_docs(pdf: pd.DataFrame) -> pd.DataFrame:
-    """(doc_id, spans[]) pandas rows → raw flat lines frame (test path; the
-    Spark path flattens in Arrow, see _lines_from_batch)."""
-    if pdf.empty:
-        return pd.DataFrame(columns=_LINE_COLS)
-    ex = pdf[["doc_id", "spans"]].explode("spans", ignore_index=True)
-    ex = ex[ex["spans"].notna()]
-    cols = pd.DataFrame(ex["spans"].tolist(), index=ex.index)
-    lines = pd.concat([ex[["doc_id"]], cols], axis=1).reset_index(drop=True)
-    if "media_ref" not in lines:
-        lines["media_ref"] = None
-    return lines
 
 
 # ---------------------------------------------------------------------------
@@ -278,99 +268,6 @@ for _name, _labeler in sub_k.SUBPARSERS.items():
 
 
 # ---------------------------------------------------------------------------
-# pandas-level modes (pure; unit-testable without Spark)
-# ---------------------------------------------------------------------------
-
-
-def _prep_for_test(pdf: pd.DataFrame, profile: str = "minimal") -> pd.DataFrame:
-    """Test helper: explode + prepare keeping string doc_ids."""
-    return prepare_lines(explode_docs(pdf), profile=profile)
-
-
-def _run_pdf(pdf: pd.DataFrame, mode: str) -> pd.DataFrame:
-    raw = explode_docs(pdf)
-    if raw.empty:
-        return _regroup(pdf, _EMPTY_SPANS)
-    codes, uniques = pd.factorize(raw["doc_id"])
-    raw["doc_id"] = codes
-    lines = prepare_lines(raw, profile=_MODE_PROFILE.get(mode, "all"))
-    flat = FLAT_MODES[mode](lines)
-    if not flat.empty:
-        # concat with the empty sentinel frame may upcast codes to object
-        codes_out = flat["doc_id"].to_numpy().astype(np.int64)
-        flat = flat.assign(doc_id=uniques.to_numpy()[codes_out])
-    return _regroup(pdf, flat)
-
-
-def _regroup(pdf_in: pd.DataFrame, flat: pd.DataFrame) -> pd.DataFrame:
-    """Flat spans → one (doc_id, spans[]) row per input doc (empty list when
-    a doc produced nothing, so output cardinality == input cardinality)."""
-    if flat.empty:
-        return pd.DataFrame(
-            {"doc_id": pdf_in["doc_id"], "spans": [[] for _ in range(len(pdf_in))]}
-        )
-    flat = flat.sort_values(["doc_id", "offset"], kind="stable")
-    recs = pd.DataFrame(
-        {
-            "doc_id": flat["doc_id"],
-            "span": [
-                {"kind": k, "text": t, "media_ref": m, "offset": int(o)}
-                for k, t, m, o in zip(
-                    flat["kind"], flat["text"], flat["media_ref"], flat["offset"]
-                )
-            ],
-        }
-    )
-    grouped = recs.groupby("doc_id", sort=False)["span"].agg(list).rename("spans")
-    out = pdf_in[["doc_id"]].merge(
-        grouped, left_on="doc_id", right_index=True, how="left"
-    )
-    out["spans"] = [s if isinstance(s, list) else [] for s in out["spans"]]
-    return out
-
-
-def extract_full_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    return _run_pdf(pdf, "extract_full")
-
-
-def extract_header_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    return _run_pdf(pdf, "extract_header")
-
-
-def extract_leftnote_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    return _run_pdf(pdf, "extract_leftnote")
-
-
-def ner_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    return _run_pdf(pdf, "ner")
-
-
-def parse_dateline_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    return _run_pdf(pdf, "parse_dateline")
-
-
-def parse_medic_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    return _run_pdf(pdf, "parse_medic")
-
-
-def parse_patient_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    return _run_pdf(pdf, "parse_patient")
-
-
-PANDAS_MODES: dict[str, Callable[[pd.DataFrame], pd.DataFrame]] = {
-    "extract_full": extract_full_pdf,
-    "extract_header": extract_header_pdf,
-    "extract_leftnote": extract_leftnote_pdf,
-    "ner": ner_pdf,
-    "parse_dateline": parse_dateline_pdf,
-    "parse_medic": parse_medic_pdf,
-    "parse_patient": parse_patient_pdf,
-}
-for _m in ("parse_name", "parse_address", "parse_org"):
-    PANDAS_MODES[_m] = (lambda mode: lambda pdf: _run_pdf(pdf, mode))(_m)
-
-
-# ---------------------------------------------------------------------------
 # Spark layer: Arrow-native flatten → kernels → Arrow-native regroup
 # ---------------------------------------------------------------------------
 
@@ -505,6 +402,61 @@ def _arr_str(s: pd.Series) -> pa.Array:
     return arr_of(s)
 
 
+def _prepared(
+    batches: Iterator[pa.RecordBatch], profile: str
+) -> Iterator[tuple[pa.Array, pd.DataFrame]]:
+    """The one batch loop every mapper runs: coalesced document batches →
+    (doc_id array, prepared lines keyed by batch-local doc codes). `lines`
+    is empty when no document in the batch has a span."""
+    for batch in _coalesced(batches):
+        doc_ids, raw = _lines_from_batch(batch)
+        yield doc_ids, prepare_lines(raw, profile=profile)
+
+
+def _extract(
+    batches: Iterator[pa.RecordBatch],
+    flat_fn: Callable[[pd.DataFrame], pd.DataFrame],
+    profile: str,
+) -> Iterator[pa.RecordBatch]:
+    """Document batches → extracted-span batches, one output row per input
+    document in input order (an empty list when a document yields nothing)."""
+    for doc_ids, lines in _prepared(batches, profile):
+        flat = flat_fn(lines) if not lines.empty else _EMPTY_SPANS
+        yield _batch_from_flat(doc_ids, flat)
+
+
+_DOCS_ARROW = pa.schema(
+    [pa.field("doc_id", pa.string()), pa.field("spans", pa.list_(_OUT_STRUCT))]
+)
+
+
+def _docs_batch(pdf: pd.DataFrame) -> pa.RecordBatch:
+    """(doc_id, spans[]) pandas rows → one Arrow batch in the documents
+    schema, the shape a mapper receives from Spark."""
+    return pa.RecordBatch.from_pandas(
+        pdf[["doc_id", "spans"]], schema=_DOCS_ARROW, preserve_index=False
+    )
+
+
+def _in_process(mode: str) -> Callable[[pd.DataFrame], pd.DataFrame]:
+    """`mode` without Spark: pandas rows → `_docs_batch` → the same
+    `_extract` loop run_mode's mapper runs → pandas rows with `spans` as
+    lists of dicts."""
+    flat_fn, profile = FLAT_MODES[mode], _MODE_PROFILE[mode]
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = pa.Table.from_batches(
+            list(_extract([_docs_batch(pdf)], flat_fn, profile)),
+            schema=_DOCS_ARROW,
+        )
+        return pd.DataFrame(out.to_pylist(), columns=["doc_id", "spans"])
+
+    return fn
+
+
+PANDAS_MODES = {mode: _in_process(mode) for mode in FLAT_MODES}
+
+
 TRAINING_DDL = "doc_id string, seq int, text string, label string"
 TRAINING_NER_DDL = (
     "doc_id string, seq int, tok_idx int, text string, label string"
@@ -515,14 +467,11 @@ def run_training_ner(df):
     """createTrainingFrenchMedicalNER analog: per-TOKEN supervision pairs —
     every content token with its decoded NER label (incl. 'other'
     negatives, which the CRF refit needs). Same zero-shuffle mapInArrow
-    shape as run_mode."""
+    shape as run_mode; 'minimal' profile because _content_tokens drops the
+    line features before the token path."""
 
     def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in _coalesced(batches):
-            if batch.num_rows == 0:
-                continue
-            doc_ids, raw = _lines_from_batch(batch)
-            lines = prepare_lines(raw, profile="body")
+        for doc_ids, lines in _prepared(batches, "minimal"):
             if lines.empty:
                 continue
             toks = _content_tokens(lines)
@@ -564,14 +513,8 @@ def run_training(df, model: str = "segmenter"):
         raise ValueError(f"unknown training model: {model}")
 
     def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .kernels.segmenter import segment_lines
-
-        for batch in _coalesced(batches):
-            if batch.num_rows == 0:
-                continue
-            doc_ids, raw = _lines_from_batch(batch)
-            # segmentation consumes only the 'body' feature profile
-            lines = prepare_lines(raw, profile="body")
+        # segmentation consumes only the 'body' feature profile
+        for doc_ids, lines in _prepared(batches, "body"):
             if lines.empty:
                 continue
             lines = lines.assign(zone=segment_lines(lines))
@@ -617,15 +560,9 @@ def run_mode(df, mode: str):
     whatever the scan/repartition upstream chose — see runner.salt_partition).
     """
     flat_fn = FLAT_MODES[mode]
-    profile = _MODE_PROFILE.get(mode, "all")
+    profile = _MODE_PROFILE[mode]
 
     def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in _coalesced(batches):
-            if batch.num_rows == 0:
-                continue
-            doc_ids, raw = _lines_from_batch(batch)
-            lines = prepare_lines(raw, profile=profile)
-            flat = flat_fn(lines) if not lines.empty else _EMPTY_SPANS
-            yield _batch_from_flat(doc_ids, flat)
+        yield from _extract(batches, flat_fn, profile)
 
     return df.mapInArrow(mapper, schema=EXTRACTED_DDL)

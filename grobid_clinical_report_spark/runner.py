@@ -15,7 +15,7 @@ Scale design (the 100 TB story):
   from hash(doc_id) so no task gets two whales; AQE can't help a map-only
   stage, salting at the repartition does.
 - **Shuffle count**: exactly one repartition per bucket (to spread work);
-  the cascade itself is a single mapInPandas — no other exchange.
+  the cascade itself is a single mapInArrow — no other exchange.
 - **Resume**: per-bucket overwrite + manifest append (see manifest.py).
 """
 

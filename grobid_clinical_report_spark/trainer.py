@@ -340,8 +340,8 @@ def _blas_single_thread() -> None:
 def build_training_set(docs: DataFrame, spec: ModelSpec | None = None) -> DataFrame:
     """Interleaved-span corpus → one compact training row per document:
     (doc_id, seq[], tok_idx[], feats[] packed int64, gold[] label idx,
-    starts[] per-line segment offsets). Zero-shuffle mapInArrow, same
-    coalesced-batch shape as `pipeline.run_mode`.
+    starts[] per-line segment offsets). Zero-shuffle mapInArrow over the
+    same `pipeline._prepared` batch loop as `pipeline.run_mode`.
 
     Gold labels come from the surrogate labeler (`label_ner_tokens`) — the
     distillation refit of SURVEY.md §7.0: the trained linear model learns
@@ -351,21 +351,16 @@ def build_training_set(docs: DataFrame, spec: ModelSpec | None = None) -> DataFr
     import pyarrow as pa
 
     from .kernels.segments import seg_starts
-    from .pipeline import _coalesced, _content_tokens, _lines_from_batch
-    from .pipeline import prepare_lines
+    from .pipeline import _content_tokens, _prepared
 
     if spec is None:
         spec = _ner_spec()
     labeler, label_ix, features = spec.labeler, spec.ix, spec.features
 
     def mapper(batches):
-        for batch in _coalesced(batches):
-            if batch.num_rows == 0:
-                continue
-            doc_ids, raw = _lines_from_batch(batch)
-            # 'minimal': featurization is token-level only (same audit as
-            # run_trained_ner — line features are never read here)
-            lines = prepare_lines(raw, profile="minimal")
+        # 'minimal': featurization is token-level only (same audit as
+        # run_trained_ner — line features are never read here)
+        for doc_ids, lines in _prepared(batches, "minimal"):
             if lines.empty:
                 continue
             toks = _content_tokens(lines)
@@ -871,26 +866,16 @@ def run_trained_ner(
     spec: ModelSpec | None = None,
 ) -> DataFrame:
     """documents (doc_id, spans) → extracted entity spans, decoded with
-    TRAINED weights — the same zero-shuffle mapInArrow shape as
+    TRAINED weights — the same `pipeline._extract` batch loop as
     `pipeline.run_mode("ner")`, with X·W emissions (exactness-tiered BLAS)
     instead of the hand-weighted surrogate. Weights ship in the closure
     (≈2k ints). This closes the loop the reference runs operationally:
     createTraining → train → the trained model serves extraction
     (`MedicalReportTrainerRunner.java` mode 0 feeding the engine's model
     directory)."""
-    import pyarrow as pa
-
     from .kernels.segments import seg_starts
     from .kernels.subparsers import tokens_to_spans
-    from .pipeline import (
-        EXTRACTED_DDL,
-        _EMPTY_SPANS,
-        _batch_from_flat,
-        _coalesced,
-        _content_tokens,
-        _lines_from_batch,
-        prepare_lines,
-    )
+    from .pipeline import EXTRACTED_DDL, _EMPTY_SPANS, _content_tokens, _extract
 
     if spec is None:
         spec = _ner_spec()
@@ -898,41 +883,35 @@ def run_trained_ner(
     tf = T.copy()
     features = spec.features
 
+    def decode(lines: pd.DataFrame) -> pd.DataFrame:
+        toks = _content_tokens(lines)
+        if toks.empty:
+            return _EMPTY_SPANS
+        f = pack_features(toks, features)
+        starts = seg_starts(toks["line_key"].to_numpy())
+        lens = np.diff(np.append(starts, len(f)))
+        em = _serving_emissions(
+            _unpack_u8(f, wf.shape[0]), wf,
+            int(np.abs(tf).max(initial=0)),
+            int(lens.max(initial=0)),
+        )
+        flat = viterbi_segments(em, starts, tf)
+        # Categorical, as in the surrogate decoders (r8): codes flow
+        # through rle_cluster_ids' fast path, strings materialize at
+        # span granularity inside tokens_to_spans
+        toks["label"] = pd.Series(
+            pd.Categorical.from_codes(flat, spec.labels),
+            index=toks.index,
+        )
+        return tokens_to_spans(toks)
+
     def mapper(batches):
         _blas_single_thread()
-        for batch in _coalesced(batches):
-            if batch.num_rows == 0:
-                continue
-            doc_ids, raw = _lines_from_batch(batch)
-            # 'minimal': the token path consumes only token-level features
-            # (run_mode("ner") uses the same profile) — the line
-            # featurization was wasted work in the serving hot path
-            # (ADVICE r7)
-            lines = prepare_lines(raw, profile="minimal")
-            if lines.empty:
-                yield _batch_from_flat(doc_ids, _EMPTY_SPANS)
-                continue
-            toks = _content_tokens(lines)
-            if toks.empty:
-                yield _batch_from_flat(doc_ids, _EMPTY_SPANS)
-                continue
-            f = pack_features(toks, features)
-            starts = seg_starts(toks["line_key"].to_numpy())
-            lens = np.diff(np.append(starts, len(f)))
-            em = _serving_emissions(
-                _unpack_u8(f, wf.shape[0]), wf,
-                int(np.abs(tf).max(initial=0)),
-                int(lens.max(initial=0)),
-            )
-            flat = viterbi_segments(em, starts, tf)
-            # Categorical, as in the surrogate decoders (r8): codes flow
-            # through rle_cluster_ids' fast path, strings materialize at
-            # span granularity inside tokens_to_spans
-            toks["label"] = pd.Series(
-                pd.Categorical.from_codes(flat, spec.labels),
-                index=toks.index,
-            )
-            yield _batch_from_flat(doc_ids, tokens_to_spans(toks))
+        # 'minimal': the token path consumes only token-level features
+        # (run_mode("ner") uses the same profile) — the line
+        # featurization was wasted work in the serving hot path
+        # (ADVICE r7)
+        yield from _extract(batches, decode, "minimal")
 
     return df.mapInArrow(mapper, schema=EXTRACTED_DDL)
 

@@ -47,13 +47,12 @@ def test_tei_roundtrip_reader(fixture_docs_pdf):
     tab-joined (documented lossiness of the rendered form)."""
     from grobid_clinical_report_spark import datagen
     from grobid_clinical_report_spark.kernels import tei as tei_k
-    from grobid_clinical_report_spark.pipeline import extract_full_pdf
 
     keep = sorted(datagen.FIXTURE_EXPECTED["extract_full"])
     pdf = fixture_docs_pdf[fixture_docs_pdf.doc_id.isin(keep)].reset_index(
         drop=True
     )
-    out = extract_full_pdf(pdf)
+    out = PANDAS_MODES["extract_full"](pdf)
     flat = out.explode("spans").dropna(subset=["spans"])
     flat = pd.concat(
         [
@@ -229,12 +228,12 @@ def test_ner_char_offsets(fixture_docs_pdf):
     from grobid_clinical_report_spark.kernels import ner as ner_k
     from grobid_clinical_report_spark.kernels import subparsers as sub_k
     from grobid_clinical_report_spark.kernels.tokenize import explode_tokens
-    from grobid_clinical_report_spark.pipeline import _prep_for_test
+    from grobid_clinical_report_spark.pipeline import _docs_batch, _prepared
 
     pdf = fixture_docs_pdf[fixture_docs_pdf.doc_id == "fx-ner-0004"].reset_index(
         drop=True
     )
-    lines = _prep_for_test(pdf)
+    _, lines = next(_prepared([_docs_batch(pdf)], "minimal"))
     content = lines[
         ~(lines["is_blank"] | lines["is_page_break"] | lines["is_media"])
     ]

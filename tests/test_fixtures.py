@@ -1,7 +1,7 @@
 """Span-sequence equality gate (FIXTURES.md §5, BASELINE.md correctness gate):
 for every fixture document, pipeline output must equal the expected ordered
-(kind, text, media_ref) list exactly — first at the pandas kernel level, then
-through the Spark mapInPandas path (identical by construction, verified)."""
+(kind, text, media_ref) list exactly — first in-process (PANDAS_MODES), then
+through the Spark mapInArrow path (the same batch loop, verified)."""
 
 from __future__ import annotations
 

@@ -374,12 +374,12 @@ def test_segmenter_new_zones(fixture_docs_pdf):
     import pandas as pd
 
     from grobid_clinical_report_spark.kernels.segmenter import segment_lines
-    from grobid_clinical_report_spark.pipeline import _prep_for_test
+    from grobid_clinical_report_spark.pipeline import _docs_batch, _prepared
 
     cover = fixture_docs_pdf[
         fixture_docs_pdf.doc_id == "fx-cover-0011"
     ].reset_index(drop=True)
-    lines = _prep_for_test(cover, profile="all")
+    _, lines = next(_prepared([_docs_batch(cover)], "all"))
     lines["zone"] = segment_lines(lines)
     by_text = dict(zip(lines["text"], lines["zone"]))
     assert by_text["COMPTE RENDU D'HOSPITALISATION"] == "titlePage"
@@ -411,7 +411,7 @@ def test_segmenter_new_zones(fixture_docs_pdf):
             }
         ]
     )
-    lines = _prep_for_test(margins, profile="all")
+    _, lines = next(_prepared([_docs_batch(margins)], "all"))
     lines["zone"] = segment_lines(lines)
     by_text = dict(zip(lines["text"], lines["zone"]))
     assert by_text["Destinataire : Dr Jean KOVAC"] == "rightnote"
@@ -439,7 +439,7 @@ def test_ner_keyword_window_stays_on_its_line():
     pdf = pd.DataFrame(
         [{"doc_id": "kw", "spans": datagen._with_offsets(lines)}]
     )
-    out = pl._run_pdf(pdf, "ner")
+    out = pl.PANDAS_MODES["ner"](pdf)
     kinds = [(s["kind"], s["text"]) for s in out["spans"].iloc[0]]
     assert ("fax", "01 45 17 80 01") not in kinds  # next line: no window
     # >8 tokens after the keyword: window expired, digits unlabeled
@@ -563,9 +563,6 @@ def test_byte_kernels_match_re2():
         assert pc.replace_substring_regex(a, r"[\s ]+", " ").equals(
             at.collapse_ws_runs(a)
         )
-        assert pc.replace_substring_regex(a, r"\d+", "#").equals(
-            at.mask_digit_runs(a)
-        )
         np.testing.assert_array_equal(
             at.any_digit(a), at.contains(a, r"\d")
         )
@@ -583,11 +580,23 @@ def test_byte_kernels_match_re2():
         )
     # null-bearing inputs take the pc fallback and stay equivalent
     wn = pa.array(["A b", None, "12", "ŒUF"], type=pa.string())
-    assert at.mask_digit_runs(wn).to_pylist() == ["A b", None, "#", "ŒUF"]
     assert at.collapse_ws_runs(wn).to_pylist() == ["A b", None, "12", "ŒUF"]
     empty = pa.array([], type=pa.string())
     assert at.collapse_ws_runs(empty).to_pylist() == []
     assert at.any_digit(empty).tolist() == []
+
+
+def test_mask_or_trailing_empty_strings():
+    """A string followed only by empty strings keeps its last byte in its
+    reduceat segment."""
+    import numpy as np
+    import pyarrow as pa
+
+    from grobid_clinical_report_spark.kernels import arrowtext as at
+
+    offs, data = at._np_view(pa.array(["XYZa", "", ""], type=pa.string()))
+    mask = (data >= 0x61) & (data <= 0x7A)
+    assert at._mask_or(offs, mask).tolist() == [True, False, False]
 
 
 def test_np_parts_matches_re2():

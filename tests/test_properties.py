@@ -1,7 +1,7 @@
 """Property tests over the seeded synthetic corpus (SURVEY.md §5.2.4):
-invariants that must hold for ANY document, plus exact Spark-vs-pandas path
-parity (the Arrow flatten/regroup path must be observationally identical to
-the test-path explode/regroup)."""
+invariants that must hold for ANY document, plus exact parity between the
+in-process entry points (PANDAS_MODES) and the Spark mapInArrow path — both
+run the same batch loop, so any difference is a boundary bug."""
 
 from __future__ import annotations
 
@@ -9,7 +9,11 @@ import pandas as pd
 
 from grobid_clinical_report_spark import datagen
 from grobid_clinical_report_spark.kernels.labels import BODY_LABELS, SEG_LABELS
-from grobid_clinical_report_spark.pipeline import PANDAS_MODES, run_mode
+from grobid_clinical_report_spark.pipeline import (
+    FLAT_MODES,
+    PANDAS_MODES,
+    run_mode,
+)
 from grobid_clinical_report_spark.schema import DOCUMENTS_SCHEMA
 
 _VOCAB = set(BODY_LABELS) | set(SEG_LABELS)
@@ -41,26 +45,26 @@ def test_output_invariants_on_synthetic_corpus():
     assert len(out_media) >= 0.8 * len(in_media)
 
 
+def _row(doc_id, spans) -> tuple:
+    return doc_id, [
+        (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans
+    ]
+
+
 def test_spark_and_pandas_paths_identical(spark):
-    pdf = pd.concat(
-        [datagen.fixture_documents_pdf(), _synth(40)], ignore_index=True
-    )
-    for mode in ["extract_full", "extract_header", "ner"]:
-        want = {
-            r.doc_id: [
-                (s["kind"], s["text"], s["media_ref"], s["offset"])
-                for s in r.spans
-            ]
-            for r in PANDAS_MODES[mode](pdf).itertuples()
-        }
-        df = spark.createDataFrame(pdf, schema=DOCUMENTS_SCHEMA)
-        got = {
-            r["doc_id"]: [
-                (s["kind"], s["text"], s["media_ref"], s["offset"])
-                for s in r["spans"]
-            ]
-            for r in run_mode(df, mode).collect()
-        }
+    """Every mode, row for row in input order — including two rows that
+    share a doc_id (fixture docs 0 and 1): each row keeps its own spans."""
+    fx = datagen.fixture_documents_pdf()
+    dup = fx.iloc[[0, 1]].assign(doc_id="dup")
+    pdf = pd.concat([fx, _synth(40), dup], ignore_index=True)
+    df = spark.createDataFrame(pdf, schema=DOCUMENTS_SCHEMA)
+    for mode in sorted(FLAT_MODES):
+        want = [
+            _row(r.doc_id, r.spans) for r in PANDAS_MODES[mode](pdf).itertuples()
+        ]
+        got = [
+            _row(r["doc_id"], r["spans"]) for r in run_mode(df, mode).collect()
+        ]
         assert got == want, mode
 
 
@@ -138,8 +142,6 @@ def test_media_ref_conservation_property():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from grobid_clinical_report_spark.pipeline import extract_full_pdf
-
     line_kinds = st.sampled_from(
         [
             ("text", "SYNTHÈSE MÉDICALE", None),
@@ -168,7 +170,7 @@ def test_media_ref_conservation_property():
             )
             off += max(len(text), 1) + 1
         pdf = pd.DataFrame({"doc_id": ["d"], "spans": [spans]})
-        out = extract_full_pdf(pdf)
+        out = PANDAS_MODES["extract_full"](pdf)
         assert len(out) == 1
         got = out.iloc[0]["spans"]
         offs = [s["offset"] for s in got]
@@ -305,7 +307,7 @@ def test_adversarial_inputs_never_crash():
              "parse_dateline", "parse_medic", "parse_patient", "parse_name",
              "parse_address", "parse_org"]
     for mode in modes:
-        out = pl._run_pdf(docs, mode)
+        out = pl.PANDAS_MODES[mode](docs)
         assert len(out) == len(docs), mode
         assert set(out["doc_id"]) == set(docs["doc_id"]), mode
 

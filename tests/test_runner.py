@@ -256,7 +256,7 @@ def test_quarantine_zone_continuity(spark, tmp_path):
     document-global — no re-opened zones, no double-emitted fields."""
     import pandas as pd
 
-    from grobid_clinical_report_spark.pipeline import extract_full_pdf
+    from grobid_clinical_report_spark.pipeline import PANDAS_MODES
 
     cap = 20
     # header block of 26 lines (crosses the 20-span window boundary),
@@ -291,7 +291,7 @@ def test_quarantine_zone_continuity(spark, tmp_path):
     got_spans = [
         (s["kind"], s["text"], s["media_ref"]) for s in got[0]["spans"]
     ]
-    want = extract_full_pdf(pdf)  # un-windowed reference run
+    want = PANDAS_MODES["extract_full"](pdf)  # un-windowed reference run
     want_spans = [
         (s["kind"], s["text"], s["media_ref"])
         for s in want["spans"].iloc[0]
