@@ -217,9 +217,10 @@ def segment_lines(df: pd.DataFrame) -> pd.Series:
     ordered by (doc_id, seq). Returns a string Series aligned with df."""
     em = segment_emissions(df)
     trans = segment_transitions()
-    # dense sorted decode over contiguous per-doc segments (no padding; the
-    # zone-order transition matrix is non-sticky, so this runs the general
-    # O(L^2) step — L=7, still one small tensor per time step)
+    # one decode over the contiguous per-doc segments, mostly in
+    # viterbi_segments' factor-2 padded buckets (the zone-order transition
+    # matrix is non-sticky, so this runs the general O(L^2) step — L=7,
+    # still one small tensor per time step)
     _, doc_starts = _doc_slices(df["doc_id"].to_numpy())
     flat = viterbi_segments(em, doc_starts[:-1], trans)
     lab = np.array(SEG_LABELS, dtype=object)[flat]

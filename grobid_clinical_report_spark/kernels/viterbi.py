@@ -9,24 +9,24 @@ real linear-chain Viterbi decode in numpy, with transition/emission weights fit
 offline against the fixture corpus (SURVEY.md §7.0).
 
 Vectorization contract ("never per-row Python", BASELINE.json north_star):
-sequences from a whole Arrow batch of documents are padded into one
-(n_seqs, max_len, n_labels) tensor; the only Python loop is over *time steps*
-(bounded by the longest sequence in a length-bucket, not by row count). Docs
-are bucketed by length so one pathological 50k-line document doesn't force
-50k iterations on the ~120-line median docs (skew guardrails cap length
-upstream — MedicalReportSegmenterParser.java:250-253 analogue).
+every model decodes a whole Arrow batch's segments in one `viterbi_segments`
+call; the only Python loops are over length buckets and over *time steps*
+(bounded by a bucket's longest segment, not by row count). One bucketing
+rule: segments sort by length, and a bucket starting at length T takes every
+length up to T when T ≤ _DENSE_MAX_T and up to 2·T above it. A bucket
+holding a single length decodes as a (k, T, L) reshape view with no padding
+and no mask; any other bucket is scattered into a padded block with a live
+mask, its padded work bounded at 2× the live work. One DP core, `_decode`,
+runs both.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-_LEN_BUCKETS = (16, 64, 256, 1024, 4096, 16384, 65536, 1 << 30)
-
-# viterbi_segments: lengths up to this decode dense (zero padding); longer
-# segments decode in padded geometric buckets (see the docstring's cost
-# model — the crossover is where per-length numpy call overhead on small
-# (B, L) blocks outgrows the ≤2× padded-work bound of factor-2 buckets)
+# bucket cap: lengths up to this decode one length per block (zero padding);
+# longer segments share factor-2 buckets — the crossover is where per-length
+# numpy call overhead on small (B, L) blocks outgrows the ≤2× padded work
 _DENSE_MAX_T = 64
 
 
@@ -47,41 +47,6 @@ def _acc_dtype(em_dtype: np.dtype) -> np.dtype:
     return np.dtype(em_dtype)
 
 
-def viterbi_single(emissions: np.ndarray, transitions: np.ndarray) -> np.ndarray:
-    """Decode one sequence: emissions (T, L), transitions (L, L) → labels (T,)."""
-    return viterbi_batch([emissions], transitions)[0]
-
-
-def viterbi_batch(
-    emission_list: list[np.ndarray], transitions: np.ndarray
-) -> list[np.ndarray]:
-    """Decode many sequences with shared transitions.
-
-    emission_list: per-sequence (T_i, L) float arrays.
-    Returns per-sequence int label-index arrays (argmax path).
-    """
-    n = len(emission_list)
-    if n == 0:
-        return []
-    lengths = np.array([e.shape[0] for e in emission_list], dtype=np.int64)
-    out: list[np.ndarray | None] = [None] * n
-
-    # group into length buckets so padding waste stays bounded
-    buckets = np.searchsorted(np.array(_LEN_BUCKETS), lengths, side="left")
-    for b in np.unique(buckets):
-        idx = np.where((buckets == b) & (lengths > 0))[0]
-        if idx.size == 0:
-            continue
-        max_t = int(lengths[idx].max())
-        labs = _decode_padded([emission_list[i] for i in idx], max_t, transitions)
-        for j, i in enumerate(idx):
-            out[i] = labs[j][: lengths[i]]
-    for i in range(n):
-        if out[i] is None:  # zero-length sequences
-            out[i] = np.zeros(0, dtype=np.int64)
-    return out  # type: ignore[return-value]
-
-
 def viterbi_segments(
     em: np.ndarray, starts: np.ndarray, transitions: np.ndarray
 ) -> np.ndarray:
@@ -91,21 +56,15 @@ def viterbi_segments(
     start offsets (seg_starts form). Returns flat (N,) label indices aligned
     with em rows.
 
-    Hybrid decode, picked per length, not per call (both regions of one
-    sorted gather):
-
-    - lengths ≤ _DENSE_MAX_T run DENSE: equal-length runs reshape into
-      (B, T, L) blocks — zero padding, no mask. This is the token-model
-      shape (millions of short per-line sequences, few distinct lengths);
-      switching NER to it measured 14.5s → ~5s at local[32].
-    - longer lengths run PADDED in greedy geometric buckets (factor-2
-      growth, so padded work ≤ 2× the live work — see the cap comment
-      below): the line-model shape (tens of thousands of ~50-400
-      line documents, hundreds of DISTINCT lengths) would otherwise decode
-      as thousands of tiny per-length numpy steps where call overhead
-      dominates — measured 5.9s → 9.2s on the extraction cascade when
-      everything ran dense. Buckets are built by one vectorized scatter
-      (no per-sequence Python fill, unlike viterbi_batch).
+    Segments are gathered in length order and decoded bucket by bucket
+    (see the module docstring). Lengths ≤ _DENSE_MAX_T get one bucket each:
+    the token-model shape (millions of short per-line sequences, few
+    distinct lengths), where switching NER off padded buckets measured
+    14.5s → ~5s at local[32]. Longer lengths share greedy factor-2 buckets:
+    the line-model shape (tens of thousands of ~50-400 line documents,
+    hundreds of DISTINCT lengths) would otherwise decode as thousands of
+    tiny per-length numpy steps where call overhead dominates — measured
+    5.9s → 9.2s on the extraction cascade when every length ran alone.
     """
     n, n_lab = em.shape
     if n == 0:
@@ -127,34 +86,18 @@ def viterbi_segments(
     em2 = em[gather]
 
     out_sorted = np.empty(n, dtype=np.int64)
-    pos = 0
-    seg0 = 0
     uniq, counts = np.unique(s_lens, return_counts=True)
-    j = 0
+    pos = 0
+    j = int(uniq[0] == 0)  # zero-length segments sort first, emit no rows
     while j < len(uniq):
-        t_len, k = int(uniq[j]), int(counts[j])
-        if t_len == 0:
-            seg0 += k  # zero-length segments sort first and emit no rows
-            j += 1
-            continue
-        if t_len <= _DENSE_MAX_T:
-            width = t_len * k
-            block = em2[pos : pos + width].reshape(k, t_len, n_lab)
-            out_sorted[pos : pos + width] = _decode_dense(
-                block, transitions
-            ).ravel()
-            pos += width
-            seg0 += k
-            j += 1
-            continue
-        # greedy geometric bucket: extend while padding waste stays ≤ 2×.
-        # At line-model widths (B ≈ 50-150 docs, L ≈ 12, f32) a DP step's
-        # numpy call overhead dominates its B×L arithmetic, so fewer,
-        # taller buckets win: factor-2 growth (~5-10 buckets per batch)
-        # measured ~15-20% faster than a 1.25 cap in both A/B run orders,
-        # while still bounding worst-case padded work at 2× (one bucket
-        # per batch would let a single long document pad everything).
-        cap = 2 * t_len
+        # greedy bucket. At line-model widths (B ≈ 50-150 docs, L ≈ 12, f32)
+        # a DP step's numpy call overhead dominates its B×L arithmetic, so
+        # fewer, taller buckets win: factor-2 growth (~5-10 buckets per
+        # batch) measured ~15-20% faster than a 1.25 cap in both A/B run
+        # orders, while still bounding worst-case padded work at 2× (one
+        # bucket per batch would let a single long document pad everything)
+        t_len = int(uniq[j])
+        cap = t_len if t_len <= _DENSE_MAX_T else 2 * t_len
         j2 = j
         while j2 + 1 < len(uniq) and uniq[j2 + 1] <= cap:
             j2 += 1
@@ -162,16 +105,21 @@ def viterbi_segments(
         t_max = int(uniq[j2])
         width = int((uniq[j : j2 + 1] * counts[j : j2 + 1]).sum())
         rows = slice(pos, pos + width)
-        local_seg = seg_of_row[rows] - seg0
-        intra_b = intra[rows]
-        pad = np.full((k, t_max, n_lab), _neg_sentinel(em.dtype), em.dtype)
-        pad[local_seg, intra_b] = em2[rows]
-        live = np.zeros((k, t_max), dtype=bool)
-        live[local_seg, intra_b] = True
-        labs = _dp_padded(pad, live, transitions)
-        out_sorted[rows] = labs[local_seg, intra_b]
+        if j2 == j:
+            block = em2[rows].reshape(k, t_len, n_lab)
+            out_sorted[rows] = _decode(block, None, transitions).ravel()
+        else:
+            # bucket-local segment index: the bucket's first row belongs to
+            # its first segment
+            local_seg = seg_of_row[rows] - seg_of_row[pos]
+            intra_b = intra[rows]
+            pad = np.full((k, t_max, n_lab), _neg_sentinel(em.dtype), em.dtype)
+            pad[local_seg, intra_b] = em2[rows]
+            live = np.zeros((k, t_max), dtype=bool)
+            live[local_seg, intra_b] = True
+            labs = _decode(pad, live, transitions)
+            out_sorted[rows] = labs[local_seg, intra_b]
         pos += width
-        seg0 += k
         j = j2 + 1
     out = np.empty(n, dtype=np.int64)
     out[gather] = out_sorted
@@ -264,42 +212,78 @@ def _step_structured(dp, mv, scalar, diag, col, rows, neg):
     return best, best_prev
 
 
-def _decode_dense(emis: np.ndarray, transitions: np.ndarray) -> np.ndarray:
-    """Batched Viterbi over a dense (B, T, L) tensor — no padding/mask.
-    Shares the structured (sticky-transition) O(L) fast path with
-    _decode_padded; tie resolution is argmax-first-index in both.
+def _decode(
+    emis: np.ndarray, live: np.ndarray | None, transitions: np.ndarray
+) -> np.ndarray:
+    """Batched Viterbi over a (B, T, L) block → (B, T) labels.
 
-    The structured step is _step_structured (top-2 of dp + one fix-up
-    column); column-structured matrices (body model: per-label entry
-    costs) take it too, with a vector move."""
+    live (B, T) marks the real cells of a padded block, a prefix of each
+    row; None means every cell is live. Padding lanes never move dp, and the
+    backtrace never reads their backpointers; padding positions of the
+    result hold arbitrary values (callers gather only live cells). Steps
+    below the shortest live length mask nothing — every lane is alive —
+    and factor-2 buckets guarantee that is at least half of all steps (all
+    of them for a single-length block).
+
+    The step is picked once: `_step_structured` (top-2 of dp + one fix-up
+    column) for constant-move (sticky) and column-structured (body model:
+    per-label entry costs) matrices, the general O(L²) scores step
+    otherwise. Tie resolution is argmax-first-index in both."""
     b, max_t, n_lab = emis.shape
-    # general-transition blocks decode in row tiles (rows are independent;
-    # bit-identical to the unsplit decode) so the per-step scores buffer
-    # stays cache-resident — see _GENERAL_TILE_BYTES
-    if _col_move(transitions)[0] is None:
-        tile = _general_rows(n_lab, emis.dtype.itemsize)
+    rows = np.arange(b)
+    # accumulator: _acc_dtype, except that int16 emissions keep an int16 dp
+    # when a per-block bound proves it cannot wrap — |dp| ≤ max_t · (max|em|
+    # + max|trans|), checked against the sentinel headroom (2^14). Short
+    # single-length blocks (the NER corpus shape) almost always pass and
+    # keep the int16 dp bandwidth win; padded blocks fail on their sentinel
+    # cells and accumulate in int32. The bound costs two allocation-free
+    # reduction passes over a block about to be read max_t times.
+    acc = _acc_dtype(emis.dtype)
+    if emis.dtype == np.int16:
+        per_step = max(int(emis.max()), -int(emis.min()), 0) + max(
+            int(np.max(transitions)), -int(np.min(transitions)), 0
+        )
+        if max_t * per_step < (1 << 14) - 64:
+            acc = emis.dtype
+    transitions = np.asarray(transitions, dtype=acc)
+    mv, scalar = _col_move(transitions)
+
+    if mv is None:
+        # general-transition blocks decode in row tiles (rows are
+        # independent; bit-identical to the unsplit decode) so the per-step
+        # scores buffer stays cache-resident — see _GENERAL_TILE_BYTES
+        tile = _general_rows(n_lab, acc.itemsize)
         if b > tile:
             out = np.empty((b, max_t), dtype=np.int64)
             for lo in range(0, b, tile):
-                out[lo : lo + tile] = _decode_dense(
-                    emis[lo : lo + tile], transitions
-                )
+                hi = lo + tile
+                tile_live = None if live is None else live[lo:hi]
+                out[lo:hi] = _decode(emis[lo:hi], tile_live, transitions)
             return out
-    # Integer emissions: dp may keep the narrow int16 dtype ONLY when a
-    # per-block bound proves it cannot wrap — |dp| ≤ max_t · (max|em| +
-    # max|trans|), checked against the sentinel headroom (2^14). The dense
-    # path handles ≤64-step blocks (the NER corpus shape), so the check
-    # almost always passes and the int16 dp bandwidth win is kept; blocks
-    # that could overflow accumulate in int32 (_acc_dtype). The bound
-    # costs two allocation-free reduction passes over a block about to be
-    # read max_t times.
-    acc = emis.dtype
-    if np.issubdtype(emis.dtype, np.integer):
-        step = max(int(emis.max()), -int(emis.min()), 0) + max(
-            int(np.max(transitions)), -int(np.min(transitions)), 0
-        )
-        safe16 = emis.dtype == np.int16 and max_t * step < (1 << 14) - 64
-        acc = emis.dtype if safe16 else _acc_dtype(emis.dtype)
+        # (B, dest, prev) layout: argmax runs over the CONTIGUOUS last axis
+        # — ~25% faster than the strided middle-axis argmax, with an
+        # identical first-predecessor tie-break (randomized-tie pytest).
+        # Preallocated scores buffer + direct fancy gather (np.take_along_axis
+        # builds its index tuple in Python per call — profiled at ~0.8s over
+        # a 54k-step cascade decode)
+        trans_t = np.ascontiguousarray(transitions.T)[None, :, :]
+        scores = np.empty((b, n_lab, n_lab), dtype=acc)
+        rows_ix = rows[:, None]
+        cols_ix = np.arange(n_lab)[None, :]
+
+        def step(dp):
+            np.add(dp[:, None, :], trans_t, out=scores)
+            best_prev = scores.argmax(axis=2)
+            return scores[rows_ix, cols_ix, best_prev], best_prev
+    else:
+        diag = np.diag(transitions)[None, :]
+        col = np.arange(n_lab, dtype=np.int32)[None, :]
+        neg = _neg_sentinel(acc)
+
+        def step(dp):
+            return _step_structured(dp, mv, scalar, diag, col, rows, neg)
+
+    min_len = max_t if live is None else int(live.sum(axis=1).min())
     dp = emis[:, 0, :].astype(acc, copy=True)
     # int8 backpointers when labels fit (all current models: L ≤ 27):
     # back is the largest tensor the DP touches ((B, T, L), written every
@@ -308,157 +292,17 @@ def _decode_dense(emis: np.ndarray, transitions: np.ndarray) -> np.ndarray:
     back = np.empty(
         (b, max_t, n_lab), dtype=np.int8 if n_lab <= 127 else np.int32
     )
-    neg = _neg_sentinel(dp.dtype)
+    for t in range(1, max_t):
+        best, back[:, t, :] = step(dp)
+        ndp = best + emis[:, t, :]
+        dp = ndp if t < min_len else np.where(live[:, t, None], ndp, dp)
 
-    mv, scalar = _col_move(transitions)
-    if mv is not None:
-        diag = np.diag(transitions)[None, :]
-        col = np.arange(n_lab, dtype=np.int32)[None, :]
-        rows = np.arange(b)
-        for t in range(1, max_t):
-            best, bt = _step_structured(dp, mv, scalar, diag, col, rows, neg)
-            back[:, t, :] = bt
-            dp = best + emis[:, t, :]
-    else:
-        # general O(L²) step: preallocated scores buffer + direct fancy
-        # gather (np.take_along_axis builds its index tuple in Python per
-        # call — profiled at ~0.8s over a 54k-step cascade decode).
-        # (B, dest, prev) layout: argmax runs over the CONTIGUOUS last
-        # axis — ~25% faster than the strided middle-axis argmax, with an
-        # identical first-predecessor tie-break (randomized-tie pytest)
-        trans_t = np.ascontiguousarray(transitions.T)[None, :, :]
-        scores = np.empty((b, n_lab, n_lab), dtype=dp.dtype)
-        rows_ix = np.arange(b)[:, None]
-        cols_ix = np.arange(n_lab)[None, :]
-        for t in range(1, max_t):
-            np.add(dp[:, None, :], trans_t, out=scores)
-            best_prev = scores.argmax(axis=2)
-            dp = scores[rows_ix, cols_ix, best_prev] + emis[:, t, :]
-            back[:, t, :] = best_prev
-
+    # backtrace: a row whose segment ended holds its final label
     labels = np.empty((b, max_t), dtype=np.int64)
     cur = dp.argmax(axis=1)
     labels[:, max_t - 1] = cur
-    rows = np.arange(b)
     for t in range(max_t - 1, 0, -1):
-        cur = back[rows, t, cur]
+        prev = back[rows, t, cur]
+        cur = prev if t < min_len else np.where(live[:, t], prev, cur)
         labels[:, t - 1] = cur
-    return labels
-
-
-def _decode_padded(
-    seqs: list[np.ndarray], max_t: int, transitions: np.ndarray
-) -> np.ndarray:
-    """Pad to (B, max_t, L), run batched Viterbi, return (B, max_t) labels."""
-    b = len(seqs)
-    n_lab = transitions.shape[0]
-    neg = -1e30
-    # np.empty + per-row fill: each cell written once (np.full pre-fills
-    # the whole (B, T, L) tensor and the real rows overwrite it; measured
-    # ~1% of single-thread kernel wall — small, but strictly fewer writes)
-    emis = np.empty((b, max_t, n_lab), dtype=np.float64)
-    mask = np.zeros((b, max_t), dtype=bool)
-    for i, e in enumerate(seqs):
-        t = e.shape[0]
-        emis[i, :t] = e
-        emis[i, t:] = neg
-        mask[i, :t] = True
-    return _dp_padded(emis, mask, transitions)
-
-
-def _dp_padded(
-    emis: np.ndarray, mask: np.ndarray, transitions: np.ndarray
-) -> np.ndarray:
-    """Batched masked Viterbi over a prebuilt (B, max_t, L) tensor; padding
-    lanes (mask False) neither move dp nor write backpointers. Returns
-    (B, max_t) labels (padding positions hold arbitrary values — callers
-    gather only live cells)."""
-    b, max_t, n_lab = emis.shape
-    # transitions + dp in the accumulator dtype (== emis dtype for floats;
-    # int32 for integer emissions, whose int16 dp would wrap on long
-    # segments). Emission gathers keep the caller's dtype.
-    acc = _acc_dtype(emis.dtype)
-    transitions = np.asarray(transitions, dtype=acc)
-
-    # general-transition row tiling, as in _decode_dense (exact: rows are
-    # independent; per-tile min_len only ever masks MORE conservatively)
-    if _col_move(transitions)[0] is None:
-        tile = _general_rows(emis.shape[2], np.dtype(acc).itemsize)
-        if b > tile:
-            out = np.empty((b, max_t), dtype=np.int64)
-            for lo in range(0, b, tile):
-                out[lo : lo + tile] = _dp_padded(
-                    emis[lo : lo + tile], mask[lo : lo + tile], transitions
-                )
-            return out
-
-    # forward max-product
-    dp = emis[:, 0, :].astype(acc, copy=True)  # (B, L)
-    # int8 backpointers when labels fit — see _decode_dense
-    back = np.zeros(
-        (b, max_t, n_lab), dtype=np.int8 if n_lab <= 127 else np.int32
-    )
-
-    # structured fast path (_step_structured): constant-move (sticky) and
-    # column-structured (body model) matrices decompose the prev→next max
-    # to O(L) per step — the token-models-at-corpus-scale hot loop.
-    # steps below the shortest live length need no masking at all — every
-    # lane is alive, so dp/backpointer writes are unconditional. Factor-2
-    # buckets guarantee min_len ≥ max_t/2, so this skips the two
-    # np.where passes for at least half of all steps (and for ALL steps
-    # of equal-length buckets, e.g. the whale documents).
-    min_len = int(mask.sum(axis=1).min()) if b else max_t
-
-    mv, scalar = _col_move(transitions)
-    if mv is not None:
-        diag = np.diag(transitions)[None, :]  # (1, L)
-        col = np.arange(n_lab, dtype=np.int32)[None, :]
-        rows = np.arange(b)
-        neg = _neg_sentinel(transitions.dtype)
-        for t in range(1, max_t):
-            best_score, best_prev = _step_structured(
-                dp, mv, scalar, diag, col, rows, neg
-            )
-            if t < min_len:
-                dp = best_score + emis[:, t, :]
-                back[:, t, :] = best_prev
-                continue
-            ndp = best_score + emis[:, t, :]
-            alive = mask[:, t]
-            dp = np.where(alive[:, None], ndp, dp)
-            back[:, t, :] = np.where(alive[:, None], best_prev, 0)
-    else:
-        # general O(L²) step (segmenter: zone-order constraints make a few
-        # columns non-constant): preallocated scores buffer + direct fancy
-        # gather instead of np.take_along_axis's per-call Python indexing.
-        # (B, dest, prev) layout — contiguous-last-axis argmax, identical
-        # first-predecessor tie-break (see _decode_dense)
-        trans_t = np.ascontiguousarray(transitions.T)[None, :, :]
-        scores = np.empty((b, n_lab, n_lab), dtype=dp.dtype)
-        rows_ix = np.arange(b)[:, None]
-        cols_ix = np.arange(n_lab)[None, :]
-        for t in range(1, max_t):
-            np.add(dp[:, None, :], trans_t, out=scores)
-            best_prev = scores.argmax(axis=2)  # (B, L)
-            ndp = scores[rows_ix, cols_ix, best_prev] + emis[:, t, :]
-            if t < min_len:
-                dp = ndp
-                back[:, t, :] = best_prev
-                continue
-            alive = mask[:, t]
-            dp = np.where(alive[:, None], ndp, dp)
-            back[:, t, :] = np.where(alive[:, None], best_prev, 0)
-
-    # backtrace (batched across sequences; loop is over time steps only)
-    labels = np.zeros((b, max_t), dtype=np.int64)
-    last_t = mask.sum(axis=1) - 1  # (B,)
-    t_idx = np.arange(b)
-    cur_lab = dp.argmax(axis=1)
-    labels[t_idx, last_t] = cur_lab
-    for t in range(max_t - 1, 0, -1):
-        active = last_t >= t
-        prev_lab = back[t_idx, t, cur_lab]
-        new_lab = np.where(active, prev_lab, cur_lab)
-        labels[t_idx, t - 1] = np.where(active, new_lab, labels[t_idx, t - 1])
-        cur_lab = new_lab
     return labels

@@ -145,6 +145,14 @@ def stream_dedup_extract(
     own clock and replay skew can't prematurely flush (or unboundedly
     retain) state. Output epochs are overwrite-idempotent like
     stream_extract.
+
+    A processing-time run turns off no-data micro-batches for this query
+    only: a ProcessingTimeTimeout operator asks for another batch after
+    every batch, so with them on an ``availableNow`` run never finishes and
+    writes an empty epoch every trigger. Without them, expired
+    fingerprints are evicted when the next data batch runs. The event-time
+    path keeps them, because watermark-driven eviction runs in no-data
+    batches.
     """
     import pyspark.sql.types as T
     from pyspark.sql import functions as F
@@ -236,12 +244,22 @@ def stream_dedup_extract(
             os.path.join(output_dir, "spans", f"epoch={epoch_id}")
         )
 
-    return (
+    writer = (
         deduped.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
-        .start()
     )
+    if event_time_col:
+        return writer.start()
+    # the query clones the session's SQL conf when it starts, so setting the
+    # key around start() scopes it to this query
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        return writer.start()
+    finally:
+        spark.conf.set(key, prev)
 
 
 # ---------------------------------------------------------------------------

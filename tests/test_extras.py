@@ -256,7 +256,9 @@ def test_ner_char_offsets(fixture_docs_pdf):
 
 def test_streaming_stateful_dedup(spark, tmp_path):
     """Cross-batch dedup: identical docs in batch 2 are dropped by the
-    applyInPandasWithState state store; new docs still extract."""
+    applyInPandasWithState state store; new docs still extract. Each
+    availableNow run with the default processing-time TTL terminates on its
+    own and writes one epoch (no empty no-data epochs)."""
     import glob
     import shutil
 
@@ -274,9 +276,15 @@ def test_streaming_stateful_dedup(spark, tmp_path):
             shutil.move(f, os.path.join(in_dir, f"{sub}-{i}.parquet"))
         shutil.rmtree(d)
 
+    def run():
+        q = stream_dedup_extract(spark, in_dir, out_dir)
+        try:
+            assert q.awaitTermination(180)
+        finally:
+            q.stop()
+
     land("b0", pdf.iloc[:2])
-    q = stream_dedup_extract(spark, in_dir, out_dir)
-    q.awaitTermination(180)
+    run()
     n1 = spark.read.parquet(os.path.join(out_dir, "spans")).count()
     assert n1 == 2
 
@@ -284,11 +292,12 @@ def test_streaming_stateful_dedup(spark, tmp_path):
     dup = pdf.iloc[[0]].copy()
     dup["doc_id"] = "dup-of-0"
     land("b1", pd.concat([dup, pdf.iloc[2:3]], ignore_index=True))
-    q2 = stream_dedup_extract(spark, in_dir, out_dir)
-    q2.awaitTermination(180)
+    run()
     out = spark.read.parquet(os.path.join(out_dir, "spans"))
     assert out.count() == 3  # duplicate dropped, new doc processed
     assert out.filter("doc_id = 'dup-of-0'").count() == 0
+    assert len(glob.glob(os.path.join(out_dir, "spans", "epoch=*"))) <= 2
+    assert not spark.streams.active
 
 
 def test_streaming_stateful_dedup_event_time_ttl(spark, tmp_path):

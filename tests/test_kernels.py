@@ -18,7 +18,7 @@ from grobid_clinical_report_spark.kernels.tokenize import (
     contiguous_pieces,
     explode_tokens,
 )
-from grobid_clinical_report_spark.kernels.viterbi import viterbi_batch
+from grobid_clinical_report_spark.kernels.viterbi import viterbi_segments
 
 
 # --- viterbi -----------------------------------------------------------------
@@ -35,19 +35,52 @@ def _brute(em, trans):
     return np.array(bp)
 
 
+def _ref_viterbi(em, trans):
+    """Textbook per-sequence Viterbi: float64 scores, first-index argmax
+    for both the best predecessor and the final label."""
+    em = np.asarray(em, dtype=np.float64)
+    trans = np.asarray(trans, dtype=np.float64)
+    T, L = em.shape
+    path = np.zeros(T, dtype=np.int64)
+    if T == 0:
+        return path
+    score = em[0].copy()
+    back = np.zeros((T, L), dtype=np.int64)
+    for t in range(1, T):
+        cand = score[:, None] + trans  # (prev, cur)
+        back[t] = cand.argmax(axis=0)
+        score = cand.max(axis=0) + em[t]
+    path[-1] = score.argmax()
+    for t in range(T - 1, 0, -1):
+        path[t - 1] = back[t, path[t]]
+    return path
+
+
+def _decode_each(ems, trans):
+    """Decode a list of (T_i, L) sequences with one viterbi_segments call
+    and split the flat result back per sequence."""
+    lens = [e.shape[0] for e in ems]
+    starts = np.concatenate([[0], np.cumsum(lens)[:-1]]).astype(np.int64)
+    flat = viterbi_segments(np.concatenate(ems), starts, trans)
+    return np.split(flat, np.cumsum(lens)[:-1])
+
+
 def test_viterbi_matches_bruteforce():
     rng = np.random.default_rng(7)
     trans = rng.normal(size=(3, 3))
     ems = [rng.normal(size=(t, 3)) for t in [1, 2, 4, 6, 5, 3]]
-    got = viterbi_batch(ems, trans)
+    got = _decode_each(ems, trans)
     for e, g in zip(ems, got):
         assert np.array_equal(g, _brute(e, trans))
+        assert np.array_equal(_ref_viterbi(e, trans), g)
 
 
 def test_viterbi_empty_and_batching():
     trans = np.zeros((2, 2))
-    out = viterbi_batch([np.zeros((0, 2)), np.ones((3, 2))], trans)
+    out = _decode_each([np.zeros((0, 2)), np.ones((3, 2))], trans)
     assert len(out[0]) == 0 and len(out[1]) == 3
+    none = viterbi_segments(np.zeros((0, 2)), np.zeros(1, int), trans)
+    assert len(none) == 0
 
 
 def _rand_transitions(rng, L, kind):
@@ -67,20 +100,16 @@ def _rand_transitions(rng, L, kind):
 def test_viterbi_structured_shapes_optimal_and_consistent():
     """All three transition structures hit distinct decode branches
     (scalar top-2, vector-move top-2, general scores tensor); each must be
-    score-optimal vs brute force, and the segments decoder (dense short /
-    bucketed-padded long) must agree exactly with viterbi_batch."""
-    from grobid_clinical_report_spark.kernels.viterbi import (
-        viterbi_segments,
-        viterbi_single,
-    )
-
+    score-optimal vs brute force, and the segments decoder (one-length
+    blocks / padded factor-2 buckets, every emission dtype) must agree
+    exactly with the textbook reference."""
     rng = np.random.default_rng(11)
     for trial in range(24):
         L = int(rng.integers(2, 5))
         T = int(rng.integers(1, 6))
         em = rng.integers(-4, 5, size=(T, L)).astype(float)
         tr = _rand_transitions(rng, L, trial % 3)
-        got = viterbi_single(em, tr)
+        got = viterbi_segments(em, np.zeros(1, np.int64), tr)
         ts = np.arange(T)
         gs = em[ts, got].sum() + sum(tr[got[t - 1], got[t]] for t in range(1, T))
         want = _brute(em, tr)
@@ -91,25 +120,23 @@ def test_viterbi_structured_shapes_optimal_and_consistent():
     for trial in range(12):
         L = int(rng.integers(2, 16))
         lens = rng.choice(
-            [0, 1, 3, 7, 40, 64, 65, 90, 150, 300],
+            [0, 1, 3, 7, 40, 63, 64, 65, 90, 150, 300],
             size=int(rng.integers(1, 30)),
         )
+        # a repeated length in a bucket of its own: the one-length view
+        # path above _DENSE_MAX_T
+        lens = rng.permutation(np.append(lens, [700, 700]))
         n = int(lens.sum())
         em = rng.integers(-8, 9, size=(n, L)).astype(
-            rng.choice([np.float32, np.float64])
+            rng.choice([np.float32, np.float64, np.int16, np.int32])
         )
         tr = _rand_transitions(rng, L, trial % 3)
         starts = np.concatenate([[0], np.cumsum(lens)[:-1]]).astype(np.int64)
         got = viterbi_segments(em, starts, tr)
-        seqs = [
-            em[s : s + ln].astype(np.float64) for s, ln in zip(starts, lens)
-        ]
-        want = (
-            np.concatenate(viterbi_batch(seqs, tr))
-            if n
-            else np.zeros(0, int)
+        want = np.concatenate(
+            [_ref_viterbi(em[s : s + ln], tr) for s, ln in zip(starts, lens)]
         )
-        assert np.array_equal(got, want), (trial, trial % 3)
+        assert np.array_equal(got, want), (trial, trial % 3, em.dtype)
 
 
 def test_viterbi_int16_long_segment_no_overflow():
@@ -124,7 +151,7 @@ def test_viterbi_int16_long_segment_no_overflow():
     L = 12
     trans = np.full((L, L), -2, dtype=np.float64)
     np.fill_diagonal(trans, 4)  # sticky shape, like the NER kernel
-    for T in (300, 5000):
+    for T in (300, 3000, 5000):
         em_f = rng.integers(0, 17, size=(T, L)).astype(np.float64)
         starts = np.array([0], dtype=np.int64)
         lab_f = viterbi_segments(em_f, starts, trans)
@@ -359,7 +386,7 @@ def test_viterbi_path_is_valid_shape(shapes):
     rng = np.random.default_rng(0)
     n_lab = shapes[0][1]
     ems = [rng.normal(size=(t, n_lab)) for t, _ in shapes]
-    out = viterbi_batch(ems, np.zeros((n_lab, n_lab)))
+    out = _decode_each(ems, np.zeros((n_lab, n_lab)))
     for e, g in zip(ems, out):
         assert g.shape == (e.shape[0],)
         assert ((g >= 0) & (g < n_lab)).all()
@@ -504,7 +531,7 @@ def test_viterbi_general_tiling_exact(monkeypatch):
     """The general-transition row tiling (serving-scale trained matrices:
     the (B, L, L) scores buffer is kept cache-resident) must be
     bit-identical to the unsplit decode — rows are independent — across
-    both the dense and the padded-bucket paths, including argmax
+    both one-length blocks and padded buckets, including argmax
     tie-breaks (low-entropy integer scores force ties), and int32/int64
     emissions must agree."""
     from grobid_clinical_report_spark.kernels import viterbi as V
@@ -512,7 +539,7 @@ def test_viterbi_general_tiling_exact(monkeypatch):
     rng = np.random.default_rng(23)
     for trial in range(6):
         L = int(rng.integers(3, 9))
-        # mixed lengths: ≤64 exercises dense blocks, >64 padded buckets
+        # mixed lengths: ≤64 exercises one-length blocks, >64 padded buckets
         lens = rng.choice([1, 2, 5, 17, 17, 17, 70, 90], size=700)
         n = int(lens.sum())
         em64 = rng.integers(-3, 4, size=(n, L)).astype(np.int64)

@@ -93,6 +93,54 @@ def test_job_runs_and_resumes_idempotently(spark, input_path, tmp_path):
     assert m3["buckets_run"] == 0
 
 
+def test_crash_between_write_and_commit_resumes_exactly(
+    spark, input_path, tmp_path, monkeypatch
+):
+    """A crash after a bucket's write_spans but before its manifest commit
+    leaves spans on disk with no manifest row. The re-run must redo exactly
+    that bucket, end with output equal to an uninterrupted run, and leave a
+    third run with nothing to do."""
+    ref, out = str(tmp_path / "ref"), str(tmp_path / "out")
+    runner.run_extraction_job(spark, input_path, ref, n_buckets=4, max_spans=500)
+    want = {
+        r["doc_id"]: r["spans"]
+        for r in runner.read_extracted(spark, ref).collect()
+    }
+
+    real_commit = mf.commit_bucket
+    crashed = []
+
+    def commit_or_crash(spark_, output_path, bucket, *args, **kwargs):
+        if bucket == 2 and not crashed:
+            crashed.append(bucket)
+            # the bucket's spans are already written
+            assert os.listdir(os.path.join(output_path, "bucket=2"))
+            raise RuntimeError("injected crash before the manifest commit")
+        return real_commit(spark_, output_path, bucket, *args, **kwargs)
+
+    monkeypatch.setattr(mf, "commit_bucket", commit_or_crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        runner.run_extraction_job(
+            spark, input_path, out, n_buckets=4, max_spans=500
+        )
+    assert crashed == [2]
+    assert mf.completed_buckets(spark, out) == {0, 1, 3}
+
+    m2 = runner.run_extraction_job(
+        spark, input_path, out, n_buckets=4, max_spans=500
+    )
+    assert m2["buckets_run"] == 1  # only the uncommitted bucket
+    got = {
+        r["doc_id"]: r["spans"]
+        for r in runner.read_extracted(spark, out).collect()
+    }
+    assert got == want
+    m3 = runner.run_extraction_job(
+        spark, input_path, out, n_buckets=4, max_spans=500
+    )
+    assert m3["buckets_run"] == 0
+
+
 def test_staged_buckets_match_unstaged(spark, input_path, tmp_path):
     """stage_buckets=True (one-pass bucket-partitioned staging, directory
     pruning per bucket job) must produce byte-identical output to the
