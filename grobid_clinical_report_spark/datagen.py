@@ -782,17 +782,6 @@ def fixture_documents_pdf() -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def expected_spans_pdf(mode: str) -> pd.DataFrame:
-    rows = []
-    for doc_id, exp in sorted(FIXTURE_EXPECTED[mode].items()):
-        spans = [
-            {"kind": k, "text": t, "media_ref": r, "offset": i}
-            for i, (k, t, r) in enumerate(exp)
-        ]
-        rows.append({"doc_id": doc_id, "spans": spans})
-    return pd.DataFrame(rows)
-
-
 # ---------------------------------------------------------------------------
 # filler corpus (scale tiers) — seeded, vectorized generation
 # ---------------------------------------------------------------------------

@@ -1,12 +1,9 @@
-"""Label clustering / zone assembly / dedup kernels (SURVEY.md §2.4 L2-L3,
-§2.5 C6, §2.3 F1).
+"""Label clustering / dedup kernels (SURVEY.md §2.4 L2, §2.5 C6, §2.3 F1).
 
 Reference parity:
 - L2 `TaggingTokenClusteror` — maximal runs of consecutive same-label tokens
   become one cluster/span (used HeaderMedicalParser.java:1230-1242,
   TEIFormatter.java:784-800) → vectorized run-length encoding,
-- L3 `BasicStructureBuilder.generalResultSegmentation` — line labels mapped
-  back onto member tokens (MedicalReportSegmenterParser.java:146),
 - C6 headnote/footnote dedup across pages (TEIFormatter.java:637-716),
 - F1 repetitive-pattern mining: first line of first-2/last-2 blocks per page,
   doc-wide repeat counting (MedicalReportSegmenterParser.java:258-288,402-414).
@@ -119,48 +116,8 @@ def rle_cluster_ids(
     return np.cumsum(change) - 1
 
 
-def clusters_to_spans(
-    lines: pd.DataFrame,
-    label_col: str = "label",
-    joiner: str = " ",
-) -> pd.DataFrame:
-    """L2 continued: aggregate each cluster into one output span.
-
-    Input: flat lines with [doc_id, seq, text, media_ref, offset, label_col].
-    Output: one row per cluster: doc_id, kind (label without I- prefix),
-    text (joined member text), media_ref (first non-null), offset (first).
-    Pure groupby-agg; cluster order preserved via first offset.
-    """
-    df = lines.copy()
-    df["_cl"] = rle_cluster_ids(df["doc_id"], df[label_col])
-    kinds = df[label_col].astype(str).str.removeprefix("I-")
-    df["_kind"] = kinds
-    agg = (
-        df.groupby("_cl", sort=True)
-        .agg(
-            doc_id=("doc_id", "first"),
-            kind=("_kind", "first"),
-            text=("text", lambda s: joiner.join(x for x in s if x)),
-            media_ref=("media_ref", "first"),
-            offset=("offset", "first"),
-        )
-        .reset_index(drop=True)
-    )
-    return agg
-
-
-def broadcast_line_labels_to_tokens(
-    tokens: pd.DataFrame, line_labels: pd.DataFrame
-) -> pd.DataFrame:
-    """L3: map per-line labels onto member tokens (merge on doc_id+seq)."""
-    return tokens.merge(
-        line_labels[["doc_id", "seq", "label"]], on=["doc_id", "seq"], how="left"
-    )
-
-
 def repeated_pattern_flags(
-    lines: pd.DataFrame,
-    text_enc: tuple[np.ndarray, "object"] | None = None,
+    lines: pd.DataFrame, text_enc: tuple[np.ndarray, "object"]
 ) -> pd.Series:
     """F1: boilerplate detector. A line's normalized pattern that occurs on
     ≥2 distinct pages of the same document, positioned in the first-2 or
@@ -171,18 +128,14 @@ def repeated_pattern_flags(
     (Reference hashes the pattern via FeatureFactory.getPattern and counts
     doc-wide repeats; same semantics.)
 
-    ``text_enc``: optional (codes, unique_strings) dictionary-encoding of
-    the text column (featurize_lines computes one for its own feature
-    passes); the 3-pass normalization then runs over the unique strings
-    only and the pattern codes compose through the gather.
+    ``text_enc``: the (codes, unique_strings) dictionary-encoding of the
+    text column that featurize_lines computes for its own feature passes;
+    the 3-pass normalization runs over the unique strings only and the
+    pattern codes compose through the gather.
     """
     from . import arrowtext as at
 
-    if text_enc is None:
-        enc = at.arr_of(lines["text"]).dictionary_encode()
-        t_codes, t_uniq = np.asarray(enc.indices), enc.dictionary
-    else:
-        t_codes, t_uniq = text_enc
+    t_codes, t_uniq = text_enc
     # lower → digit-runs→'#' → ws-runs→' ' → strip. The two RE2 replaces
     # (the largest single featurizer cost, ~1.3 s/8 batches) now run only
     # on the strings they could change — one sparse byte scan finds the

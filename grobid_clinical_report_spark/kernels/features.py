@@ -80,12 +80,11 @@ def _vocab_low_cores() -> list[tuple[str, str]]:
     return [(n, c if c is not None else fills[n]) for n, c in _VOCAB_LOW]
 
 
-def featurize_lines(
-    lines: pd.DataFrame, profile: str = "all"
-) -> pd.DataFrame:
+def featurize_lines(lines: pd.DataFrame) -> pd.DataFrame:
     """Add the shared feature columns used by segmenter/header/body emission
     models. Input must already carry block/page structure
-    (tokenize.assign_blocks_pages).
+    (tokenize.assign_blocks_pages). The header/left-note-only columns come
+    from featurize_extras, run on those zones' lines only.
 
     String features run on Arrow compute kernels (kernels/arrowtext.py) —
     one RE2 pass per feature, no per-row Python — over the batch's
@@ -101,10 +100,6 @@ def featurize_lines(
     re-consolidate the pandas block manager each time (measured ~10%% of
     kernel time), and even a single DataFrame+axis-1 concat pays a
     vstack + consolidation pass the from-dict build avoids.
-
-    ``profile``: 'body' skips the header/left-note-only lexicon passes
-    (time/email/web/city + the shape classes — full-column RE2 scans unused
-    by the segmenter/body models); 'all' computes everything.
     """
     import pyarrow.compute as pc
 
@@ -219,13 +214,6 @@ def featurize_lines(
             at.word_bounded(r"IPP|NIP|N°\s*dossier"),
         )
     f["has_ipp"] = u_ipp[codes]
-    if profile == "all":
-        f.update(
-            {
-                k: v[codes]
-                for k, v in _extra_features(txt, low, u_raw_len).items()
-            }
-        )
     u_medic_title = VSUB(at.word_bounded(vc["has_medic_title"]))
     f["has_medic_title"] = u_medic_title[codes]
     u_patient_title = VSUB(at.word_bounded(vc["has_patient_title"]))
@@ -315,13 +303,12 @@ def featurize_lines(
     return out
 
 
-def _extra_features(txt, low, raw_len) -> dict[str, np.ndarray]:
-    """The header/left-note-only feature block ('all' minus 'body'): the
-    expensive full-column RE2 passes (the CITIES_FR alternation,
-    time/email/web) plus the shape classes. Never consumed by the
-    segmenter or body models. All pure functions of the line text —
-    callers pass the batch's unique-string dictionary and expand."""
-    _ = raw_len  # kept in the signature for callers that precompute it
+def _extra_features(txt, low) -> dict[str, np.ndarray]:
+    """The header/left-note-only feature block: the expensive RE2 passes
+    (the CITIES_FR alternation, time/email/web) plus the shape classes.
+    Never consumed by the segmenter or body models. All pure functions of
+    the line text — the caller passes the unique-string dictionary and
+    expands."""
     f: dict[str, np.ndarray] = {}
     f["has_time"] = at.contains(txt, lx.RE_TIME.pattern)
     f["has_email"] = at.contains(txt, lx.RE_EMAIL.pattern)
@@ -353,14 +340,14 @@ def _extra_features(txt, low, raw_len) -> dict[str, np.ndarray]:
 
 def featurize_extras(lines: pd.DataFrame) -> pd.DataFrame:
     """Two-pass featurization, pass 2 (VERDICT r2 'what's wrong #1'):
-    segmentation runs on the cheap 'body' profile over EVERY line; this
-    computes the 'all'-only extras on a SUBSET frame — the ~10 header/
-    left-note-zone lines per ~150-line document — instead of burning the big
-    gazetteer scans on the whole corpus. Same columns as profile='all'."""
+    segmentation runs on featurize_lines over EVERY line; this adds the
+    header/left-note extras to a SUBSET frame — the ~10 header/left-note-
+    zone lines per ~150-line document — instead of burning the big
+    gazetteer scans on the whole corpus."""
     enc = at.arr_of(lines["text"]).dictionary_encode()
     codes = np.asarray(enc.indices)
     txt = enc.dictionary
-    f = _extra_features(txt, at.lower(txt), None)
+    f = _extra_features(txt, at.lower(txt))
     return pd.DataFrame(
         {
             **{c: lines[c] for c in lines.columns},
@@ -368,11 +355,4 @@ def featurize_extras(lines: pd.DataFrame) -> pd.DataFrame:
         },
         index=lines.index,
         copy=False,
-    )
-
-
-def feature_matrix(df: pd.DataFrame, cols: list[str]) -> np.ndarray:
-    """Stack selected feature columns into an (N, F) float64 tensor."""
-    return np.column_stack(
-        [df[c].astype(np.float64).to_numpy() for c in cols]
     )

@@ -32,7 +32,6 @@ def header_emissions(df: pd.DataFrame) -> np.ndarray:
     # f32: weights are 0.5-multiples with tiny path sums — exact (see body)
     em = np.zeros((n, len(HEADER_LABELS)), dtype=np.float32)
     all_caps = df["all_caps"].to_numpy()
-    long_line = (df["line_len"] > 25).to_numpy()
 
     em[:, _IX["docnum"]] += 5.0 * df["has_docnum"].to_numpy()
     # 'Réf : 7301-884' / 'Dossier 12-X' — document numbers without the N°
@@ -103,7 +102,6 @@ def header_emissions(df: pd.DataFrame) -> np.ndarray:
     em[:, _IX["title"]] += 2.5 * title_like
     em[:, _IX["note"]] += 0.5  # weak fallback
     em[(df["is_blank"] | df["is_page_break"]).to_numpy(), :] = 0.0
-    _ = long_line
     return em
 
 
@@ -139,6 +137,7 @@ def merge_header_fields(df: pd.DataFrame) -> pd.DataFrame:
     d["canon"] = d["text_n"].str.lower().str.replace(r"\s+", "", regex=True)
     # isDifferentContent dedup: first occurrence of (doc, field, canon) wins
     d = d[~d.duplicated(subset=["doc_id", "label", "canon"], keep="first")]
+    d["pos"] = np.arange(len(d))  # document order, the tie-break below
 
     # keep-longest for dates / first-wins for time, vectorized by ranking
     tlen = d["text_n"].str.len()
@@ -153,16 +152,17 @@ def merge_header_fields(df: pd.DataFrame) -> pd.DataFrame:
     # ' ; ' concatenation via Arrow group_join over contiguous
     # (doc, label) groups (the former .agg(" ; ".join) was a per-group
     # Python call — the header merge's profiled hotspot). Each group's
-    # first row after the (doc, label, offset) sort carries min(offset),
-    # and the final offset sort below restores the emission order (field
-    # first-offsets are distinct lines, so the order is total).
+    # first row after the (doc, label, offset) sort carries min(offset)
+    # and, among that offset's rows, the earliest document position; the
+    # final (doc, offset, pos) sort restores the emission order, document
+    # order included when fields share an offset (hostile input).
     from .cluster import group_join
 
     d = d.sort_values(["doc_id", "label", "offset"], kind="stable")
     first = (~d.duplicated(subset=["doc_id", "label"])).to_numpy()
     grp = np.cumsum(first) - 1
     agg = (
-        d.loc[first, ["doc_id", "label", "offset"]]
+        d.loc[first, ["doc_id", "label", "offset", "pos"]]
         .rename(columns={"label": "kind"})
         .reset_index(drop=True)
     )
@@ -174,7 +174,7 @@ def merge_header_fields(df: pd.DataFrame) -> pd.DataFrame:
     iso = to_iso_date(agg.loc[is_date, "text"])
     agg.loc[is_date, "text"] = iso.where(iso.ne(""), agg.loc[is_date, "text"])
     agg["media_ref"] = None
-    return agg.sort_values(["doc_id", "offset"], kind="stable")[
+    return agg.sort_values(["doc_id", "offset", "pos"], kind="stable")[
         ["doc_id", "kind", "text", "media_ref", "offset"]
     ].reset_index(drop=True)
 

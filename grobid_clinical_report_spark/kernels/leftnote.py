@@ -5,7 +5,9 @@ Reference: `LeftNoteMedicalParser` runs header-like features over the left
 margin zone (LeftNoteMedicalParser.java:174-573) and aggregates clusters into
 organization fields (resultExtraction :981-1129).
 
-Rebuild shares the header model's machinery with the left-note vocabulary.
+Rebuild shares the header model's machinery with the left-note vocabulary:
+the same emission/Viterbi shape here, and the header's field merge
+(`header.merge_header_fields`) for the aggregation.
 """
 
 from __future__ import annotations
@@ -14,7 +16,6 @@ import numpy as np
 import pandas as pd
 
 from .labels import LEFTNOTE_LABELS, label_index, sticky_transitions
-from .normalize import normalize_text
 from .segmenter import _doc_slices
 from .viterbi import viterbi_segments
 
@@ -61,28 +62,3 @@ def label_leftnote_lines(df: pd.DataFrame) -> pd.Series:
         name="label"
     )
 
-
-def merge_leftnote_fields(df: pd.DataFrame) -> pd.DataFrame:
-    """L5 aggregation: one span per populated field, dedup + ' ; ' join —
-    same merge semantics as the header model (LeftNoteMedicalParser mirrors
-    HeaderMedicalParser's resultExtraction pattern)."""
-    d = df[~(df["is_blank"] | df["is_page_break"]) & ~df["is_media"]].copy()
-    if d.empty:
-        return pd.DataFrame(
-            columns=["doc_id", "kind", "text", "media_ref", "offset"]
-        )
-    d["text_n"] = normalize_text(d["text"])
-    d = d[d["text_n"].ne("")]
-    d["canon"] = d["text_n"].str.lower().str.replace(r"\s+", "", regex=True)
-    d = d[~d.duplicated(subset=["doc_id", "label", "canon"], keep="first")]
-    agg = (
-        d.sort_values(["doc_id", "offset"], kind="stable")
-        .groupby(["doc_id", "label"], sort=False)
-        .agg(text=("text_n", " ; ".join), offset=("offset", "min"))
-        .reset_index()
-        .rename(columns={"label": "kind"})
-    )
-    agg["media_ref"] = None
-    return agg.sort_values(["doc_id", "offset"], kind="stable")[
-        ["doc_id", "kind", "text", "media_ref", "offset"]
-    ].reset_index(drop=True)

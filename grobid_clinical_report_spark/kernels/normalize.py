@@ -1,8 +1,8 @@
 """Text normalization kernels (SURVEY.md §2.5 C7, §2.5 C2 date normalization).
 
 Reference parity:
-- `normalizeDehyphenizeText` / `dehyphenize` / `normalizeSpace` / `toTitleCase`
-  (FullMedicalTextParser.java:6097-6118, call sites throughout),
+- `normalizeDehyphenizeText` (dehyphenize + normalizeSpace,
+  FullMedicalTextParser.java:6097-6118, call sites throughout),
 - ISO date normalization with French month names
   (HeaderMedicalParser.java:174-181, 394-409).
 
@@ -14,19 +14,6 @@ from __future__ import annotations
 import pandas as pd
 
 from .lexicon import MONTHS_FR
-
-_WS = r"[\s ]+"
-
-
-def normalize_space(s: pd.Series) -> pd.Series:
-    """Collapse whitespace runs to single spaces, strip ends."""
-    return s.fillna("").str.replace(_WS, " ", regex=True).str.strip()
-
-
-def dehyphenize(s: pd.Series) -> pd.Series:
-    """Join words split by a line-break hyphen: 'anti-\\nbiothérapie' →
-    'antibiothérapie' (core TextUtilities.dehyphenize equivalent)."""
-    return s.fillna("").str.replace(r"(\w)-\s*\n\s*(\w)", r"\1\2", regex=True)
 
 
 def normalize_text(s: pd.Series) -> pd.Series:
@@ -44,10 +31,6 @@ def normalize_text(s: pd.Series) -> pd.Series:
     return pd.Series(
         arr.to_numpy(zero_copy_only=False), index=s.index, name=s.name
     )
-
-
-def to_title_case(s: pd.Series) -> pd.Series:
-    return s.fillna("").str.title()
 
 
 # ---------------------------------------------------------------------------

@@ -23,14 +23,6 @@ def seg_starts(keys: np.ndarray) -> np.ndarray:
     return np.flatnonzero(change)
 
 
-def seg_ids(starts: np.ndarray, n: int) -> np.ndarray:
-    """Row → segment ordinal (0..n_segments-1)."""
-    ids = np.zeros(n, dtype=np.int64)
-    if len(starts) > 1:
-        ids[starts[1:]] = 1
-    return np.cumsum(ids)
-
-
 def seg_sizes(starts: np.ndarray, n: int) -> np.ndarray:
     return np.diff(np.append(starts, n))
 

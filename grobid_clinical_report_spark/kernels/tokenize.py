@@ -199,11 +199,6 @@ def _np_parts(uniq):
     return pa.ListArray.from_arrays(pa.array(list_offs, type=pa.int32()), values)
 
 
-def tokenize_column(text: pd.Series) -> pd.Series:
-    """Each element → list[str] of tokens (vectorized str.findall)."""
-    return text.fillna("").str.findall(TOKEN_RE)
-
-
 def explode_tokens(
     lines: pd.DataFrame, text_col: str = "text", drop_text: bool = False
 ) -> pd.DataFrame:

@@ -10,10 +10,16 @@ No groupBy is needed because one row already holds a whole document — the
 JVM↔Python Arrow hop is the only process boundary (vs. the reference's
 per-document pdfalto subprocess + Wapiti JNI hops).
 
-There is one batch loop: `_prepared` (coalesce → flatten → prepare) feeds
-`_extract` (kernels → regroup), which `run_mode`, the trained-NER serving
-mapper and the in-process `PANDAS_MODES` all run; the training-data mappers
-loop over `_prepared` and only emit their own rows.
+There is one batch loop: `_prepared` (coalesce → flatten → sanitize →
+structure) feeds `_extract` (kernels → regroup), which `run_mode`, the
+trained-NER serving mapper and the in-process `PANDAS_MODES` all run; the
+training-data mappers loop over `_prepared` and only emit their own rows.
+
+Line features are computed by the stage that reads them, never by the loop:
+the line modes (and `run_training`) call `_zoned` (featurize_lines →
+segmenter zones over every line), and the header/left-note paths then call
+`_zone_lines` (featurize_extras on that zone's lines only). Token modes read
+only block/page structure and call neither.
 
 Public modes (API parity with §2.6: EngineMedical.process* / REST endpoints):
   extract_full     — /api/processFullMedicalText  (body structure + notes)
@@ -38,6 +44,7 @@ from .kernels import header as header_k
 from .kernels import leftnote as leftnote_k
 from .kernels import ner as ner_k
 from .kernels import subparsers as sub_k
+from .kernels.arrowtext import arr_of, series_of
 from .kernels.cluster import dedup_notes
 from .kernels.features import featurize_extras, featurize_lines
 from .kernels.normalize import normalize_text
@@ -49,25 +56,6 @@ _EMPTY_SPANS = pd.DataFrame(
     columns=["doc_id", "kind", "text", "media_ref", "offset"]
 )
 
-
-# which feature passes each mode needs: token modes only need structure,
-# extract_full skips the header-only lexicon scans. Header/leftnote modes
-# are TWO-PASS: segmentation on the 'body' profile over every line, the
-# 'all'-only extras (featurize_extras) computed on the zone subset only —
-# ~10 lines per ~150-line document instead of the whole corpus
-_MODE_PROFILE = {
-    "extract_full": "body",
-    "extract_header": "body",
-    "extract_leftnote": "body",
-    # token-level modes need only block/page structure, no line features
-    "ner": "minimal",
-    "parse_dateline": "minimal",
-    "parse_medic": "minimal",
-    "parse_patient": "minimal",
-    "parse_name": "minimal",
-    "parse_address": "minimal",
-    "parse_org": "minimal",
-}
 
 # Preferred input-split size per mode (spark.sql.files.maxPartitionBytes, a
 # RUNTIME SQL conf — settable per job, unlike spark.task.cpus). The token
@@ -109,28 +97,41 @@ def apply_split_hint(spark, mode: str) -> None:
         spark.conf.set("spark.sql.files.maxPartitionBytes", hint)
 
 
-def prepare_lines(lines: pd.DataFrame, profile: str = "all") -> pd.DataFrame:
-    """Raw flat lines → sanitized, block/page-structured, featurized lines.
-    `doc_id` must be a batch-local integer code (kernels group on ints —
-    string doc_ids stay out of the per-line hot path entirely)."""
+def prepare_lines(lines: pd.DataFrame) -> pd.DataFrame:
+    """Raw flat lines → sanitized, block/page-structured lines. `doc_id`
+    must be a batch-local integer code (kernels group on ints — string
+    doc_ids stay out of the per-line hot path entirely)."""
     if lines.empty:
         return lines
-    lines = sanitize_lines(lines)
-    lines = assign_blocks_pages(lines)  # adds seq/block/page structure
-    if profile == "minimal":
-        return lines
-    return featurize_lines(lines, profile=profile)
+    return assign_blocks_pages(sanitize_lines(lines))
+
+
+def _zoned(lines: pd.DataFrame) -> pd.DataFrame:
+    """Line features → segmenter zones, over every line of the batch: the
+    first pass of the line modes. Token modes never call it, so they never
+    pay for line features."""
+    lines = featurize_lines(lines)
+    return lines.assign(zone=segment_lines(lines))
+
+
+def _zone_lines(lines: pd.DataFrame, zone: str) -> pd.DataFrame:
+    """One zone's lines with the header/left-note extras: the second pass,
+    run on the zone subset only (~10 lines per ~150-line document) instead
+    of burning the big gazetteer scans on the whole batch (reference zone
+    pruning, HeaderMedicalParser.java:102)."""
+    sub = lines[lines["zone"].eq(zone)]
+    return sub if sub.empty else featurize_extras(sub)
 
 
 # ---------------------------------------------------------------------------
-# flat stage functions: featurized lines → flat spans
+# flat stage functions: prepared lines → flat spans
 # ---------------------------------------------------------------------------
 
 
 def flat_extract_full(lines: pd.DataFrame) -> pd.DataFrame:
     """C1 full cascade → body-structure spans + annex/acknowledgement spans
     + deduped note spans."""
-    lines = lines.assign(zone=segment_lines(lines))
+    lines = _zoned(lines)
 
     body_lines = lines[lines["zone"].eq("body")].copy()
     if not body_lines.empty:
@@ -182,11 +183,10 @@ def flat_extract_full(lines: pd.DataFrame) -> pd.DataFrame:
 
 
 def flat_extract_header(lines: pd.DataFrame) -> pd.DataFrame:
-    lines = lines.assign(zone=segment_lines(lines))
-    hdr = lines[lines["zone"].eq("header")].copy()
+    lines = _zoned(lines)
+    hdr = _zone_lines(lines, "header")
     if hdr.empty:
         return _EMPTY_SPANS
-    hdr = featurize_extras(hdr)  # pass 2: zone subset only
     hdr["label"] = header_k.label_header_lines(hdr)
     spans = header_k.merge_header_fields(hdr)
     # C2 enrichment: dateline fallback, medic/patient sub-models, langid,
@@ -195,13 +195,15 @@ def flat_extract_header(lines: pd.DataFrame) -> pd.DataFrame:
 
 
 def flat_extract_leftnote(lines: pd.DataFrame) -> pd.DataFrame:
-    lines = lines.assign(zone=segment_lines(lines))
-    ln = lines[lines["zone"].eq("leftnote")].copy()
+    lines = _zoned(lines)
+    ln = _zone_lines(lines, "leftnote")
     if ln.empty:
         return _EMPTY_SPANS
-    ln = featurize_extras(ln)  # pass 2: zone subset only
     ln["label"] = leftnote_k.label_leftnote_lines(ln)
-    spans = leftnote_k.merge_leftnote_fields(ln)
+    # L5 is the header's L4 merge (LeftNoteMedicalParser mirrors
+    # HeaderMedicalParser's resultExtraction); LEFTNOTE_LABELS has no
+    # date/time, so its keep-longest and first-wins rules never fire here
+    spans = header_k.merge_header_fields(ln)
     if spans.empty:
         return spans
     # langid + page-count enrichment (LeftNoteMedicalParser.java:121-155 —
@@ -323,8 +325,6 @@ def _lines_from_batch(batch: pa.RecordBatch) -> tuple[pa.Array, pd.DataFrame]:
     spans = batch.column("spans")
     parent = pc.list_parent_indices(spans)
     flat = pc.list_flatten(spans)
-    from .kernels.arrowtext import series_of
-
     lines = pd.DataFrame(
         {
             # batch-local int code = row index of the parent document; the
@@ -368,7 +368,7 @@ def _batch_from_flat(doc_ids: pa.Array, flat: pd.DataFrame) -> pa.RecordBatch:
             # Arrow-backed columns (token-mode span text since r8) export
             # without the object round-trip; never-null by construction
             if isinstance(s.dtype, pd.ArrowDtype):
-                return _arr_str(s)
+                return arr_of(s)
             return pa.array(s.astype(str), type=pa.string())
 
         mref = flat["media_ref"]
@@ -395,32 +395,24 @@ def _batch_from_flat(doc_ids: pa.Array, flat: pd.DataFrame) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays([doc_ids, spans], names=["doc_id", "spans"])
 
 
-def _arr_str(s: pd.Series) -> pa.Array:
-    """Series → Arrow string array, zero-copy for Arrow-backed columns."""
-    from .kernels.arrowtext import arr_of
-
-    return arr_of(s)
-
-
 def _prepared(
-    batches: Iterator[pa.RecordBatch], profile: str
+    batches: Iterator[pa.RecordBatch],
 ) -> Iterator[tuple[pa.Array, pd.DataFrame]]:
     """The one batch loop every mapper runs: coalesced document batches →
     (doc_id array, prepared lines keyed by batch-local doc codes). `lines`
     is empty when no document in the batch has a span."""
     for batch in _coalesced(batches):
         doc_ids, raw = _lines_from_batch(batch)
-        yield doc_ids, prepare_lines(raw, profile=profile)
+        yield doc_ids, prepare_lines(raw)
 
 
 def _extract(
     batches: Iterator[pa.RecordBatch],
     flat_fn: Callable[[pd.DataFrame], pd.DataFrame],
-    profile: str,
 ) -> Iterator[pa.RecordBatch]:
     """Document batches → extracted-span batches, one output row per input
     document in input order (an empty list when a document yields nothing)."""
-    for doc_ids, lines in _prepared(batches, profile):
+    for doc_ids, lines in _prepared(batches):
         flat = flat_fn(lines) if not lines.empty else _EMPTY_SPANS
         yield _batch_from_flat(doc_ids, flat)
 
@@ -442,11 +434,11 @@ def _in_process(mode: str) -> Callable[[pd.DataFrame], pd.DataFrame]:
     """`mode` without Spark: pandas rows → `_docs_batch` → the same
     `_extract` loop run_mode's mapper runs → pandas rows with `spans` as
     lists of dicts."""
-    flat_fn, profile = FLAT_MODES[mode], _MODE_PROFILE[mode]
+    flat_fn = FLAT_MODES[mode]
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         out = pa.Table.from_batches(
-            list(_extract([_docs_batch(pdf)], flat_fn, profile)),
+            list(_extract([_docs_batch(pdf)], flat_fn)),
             schema=_DOCS_ARROW,
         )
         return pd.DataFrame(out.to_pylist(), columns=["doc_id", "spans"])
@@ -467,11 +459,10 @@ def run_training_ner(df):
     """createTrainingFrenchMedicalNER analog: per-TOKEN supervision pairs —
     every content token with its decoded NER label (incl. 'other'
     negatives, which the CRF refit needs). Same zero-shuffle mapInArrow
-    shape as run_mode; 'minimal' profile because _content_tokens drops the
-    line features before the token path."""
+    shape as run_mode; like the token modes it reads no line features."""
 
     def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for doc_ids, lines in _prepared(batches, "minimal"):
+        for doc_ids, lines in _prepared(batches):
             if lines.empty:
                 continue
             toks = _content_tokens(lines)
@@ -491,8 +482,8 @@ def run_training_ner(df):
                         toks["tok_idx"].to_numpy().astype(np.int32),
                         type=pa.int32(),
                     ),
-                    _arr_str(toks["tok"]),
-                    _arr_str(toks["label"]),
+                    arr_of(toks["tok"]),
+                    arr_of(toks["label"]),
                 ],
                 names=["doc_id", "seq", "tok_idx", "text", "label"],
             )
@@ -513,16 +504,14 @@ def run_training(df, model: str = "segmenter"):
         raise ValueError(f"unknown training model: {model}")
 
     def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # segmentation consumes only the 'body' feature profile
-        for doc_ids, lines in _prepared(batches, "body"):
+        for doc_ids, lines in _prepared(batches):
             if lines.empty:
                 continue
-            lines = lines.assign(zone=segment_lines(lines))
+            lines = _zoned(lines)
             if model in ("header", "leftnote"):
-                zone = lines[lines["zone"].eq(model)].copy()
+                zone = _zone_lines(lines, model)
                 if zone.empty:
                     continue
-                zone = featurize_extras(zone)
                 zone = zone.rename(columns={"zone": "_zone"})
                 labeler = (
                     header_k.label_header_lines
@@ -560,9 +549,8 @@ def run_mode(df, mode: str):
     whatever the scan/repartition upstream chose — see runner.salt_partition).
     """
     flat_fn = FLAT_MODES[mode]
-    profile = _MODE_PROFILE[mode]
 
     def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yield from _extract(batches, flat_fn, profile)
+        yield from _extract(batches, flat_fn)
 
     return df.mapInArrow(mapper, schema=EXTRACTED_DDL)

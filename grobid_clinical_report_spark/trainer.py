@@ -358,9 +358,7 @@ def build_training_set(docs: DataFrame, spec: ModelSpec | None = None) -> DataFr
     labeler, label_ix, features = spec.labeler, spec.ix, spec.features
 
     def mapper(batches):
-        # 'minimal': featurization is token-level only (same audit as
-        # run_trained_ner — line features are never read here)
-        for doc_ids, lines in _prepared(batches, "minimal"):
+        for doc_ids, lines in _prepared(batches):
             if lines.empty:
                 continue
             toks = _content_tokens(lines)
@@ -907,11 +905,7 @@ def run_trained_ner(
 
     def mapper(batches):
         _blas_single_thread()
-        # 'minimal': the token path consumes only token-level features
-        # (run_mode("ner") uses the same profile) — the line
-        # featurization was wasted work in the serving hot path
-        # (ADVICE r7)
-        yield from _extract(batches, decode, "minimal")
+        yield from _extract(batches, decode)
 
     return df.mapInArrow(mapper, schema=EXTRACTED_DDL)
 

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import os
-import time
 
 import pandas as pd
 
@@ -178,8 +177,14 @@ def test_streaming_incremental_extract(spark, tmp_path):
         shutil.move(f, os.path.join(in_dir, f"b0-{i}.parquet"))
     shutil.rmtree(os.path.join(in_dir, "batch0"))
 
-    q = stream_extract(spark, in_dir, out_dir)
-    q.awaitTermination(120)
+    def run():
+        q = stream_extract(spark, in_dir, out_dir)
+        try:
+            assert q.awaitTermination(180)
+        finally:
+            q.stop()
+
+    run()
     first = spark.read.parquet(os.path.join(out_dir, "spans"))
     n1 = first.count()
     assert n1 == 3
@@ -192,11 +197,10 @@ def test_streaming_incremental_extract(spark, tmp_path):
         shutil.move(f, os.path.join(in_dir, f"b1-{i}.parquet"))
     shutil.rmtree(os.path.join(in_dir, "batch1"))
 
-    q2 = stream_extract(spark, in_dir, out_dir)
-    q2.awaitTermination(120)
-    time.sleep(0.2)
+    run()
     total = spark.read.parquet(os.path.join(out_dir, "spans")).count()
     assert total == len(pdf)
+    assert not spark.streams.active
 
 
 def test_marker_majority_vote():
@@ -233,7 +237,7 @@ def test_ner_char_offsets(fixture_docs_pdf):
     pdf = fixture_docs_pdf[fixture_docs_pdf.doc_id == "fx-ner-0004"].reset_index(
         drop=True
     )
-    _, lines = next(_prepared([_docs_batch(pdf)], "minimal"))
+    _, lines = next(_prepared([_docs_batch(pdf)]))
     content = lines[
         ~(lines["is_blank"] | lines["is_page_break"] | lines["is_media"])
     ]
@@ -342,7 +346,10 @@ def test_streaming_stateful_dedup_event_time_ttl(spark, tmp_path):
             state_ttl_hours=1.0, event_time_col="ts",
             late_threshold="0 seconds",
         )
-        q.awaitTermination(180)
+        try:
+            assert q.awaitTermination(180)
+        finally:
+            q.stop()
 
     # b0: A and B first seen at t0 → both emit; TTL clock = t0 + 1h
     land("b0", [("A", "fx-hdr-0002", 0), ("B", "fx-note-0003", 0)])
@@ -367,6 +374,7 @@ def test_streaming_stateful_dedup_event_time_ttl(spark, tmp_path):
         .select("doc_id").collect()
     }
     assert got == {"A", "B", "F1", "F2", "dupA"}  # dupB dropped, dupA back
+    assert not spark.streams.active
 
 
 def test_neardup_skew_exact_dup_collapse(spark):
@@ -712,7 +720,11 @@ def test_streaming_watermarked_window_counts(spark, tmp_path):
     shutil.rmtree(d)
 
     q = stream_windowed_event_counts(spark, in_dir, out_dir)
-    q.awaitTermination(180)
+    try:
+        assert q.awaitTermination(180)
+    finally:
+        q.stop()
+    assert not spark.streams.active
     got = spark.read.parquet(os.path.join(out_dir, "windows"))
     assert got.count() > 0
     # emitted windows are the finalized ones: all strictly older than
@@ -773,17 +785,23 @@ def test_streaming_sessionization(spark, tmp_path):
     )
     for f in glob.glob(str(in_dir / "batch0" / "part*")):
         shutil.move(f, str(in_dir / "b0.parquet"))
-    q = stream_sessionize(spark, str(in_dir), out_dir, gap_minutes=30,
-                          late_threshold="1 minute")
-    q.awaitTermination()
+
+    def run():
+        q = stream_sessionize(spark, str(in_dir), out_dir, gap_minutes=30,
+                              late_threshold="1 minute")
+        try:
+            assert q.awaitTermination(180)
+        finally:
+            q.stop()
+
+    run()
     spark.createDataFrame(b1).coalesce(1).write.parquet(
         str(in_dir / "batch1")
     )
     for f in glob.glob(str(in_dir / "batch1" / "part*")):
         shutil.move(f, str(in_dir / "b1.parquet"))
-    q = stream_sessionize(spark, str(in_dir), out_dir, gap_minutes=30,
-                          late_threshold="1 minute")
-    q.awaitTermination()
+    run()
+    assert not spark.streams.active
 
     got = (
         spark.read.parquet(os.path.join(out_dir, "sessions", "epoch=*"))
@@ -838,7 +856,10 @@ def test_streaming_sessionization_out_of_order_merge(spark, tmp_path):
     def run():
         q = stream_sessionize(spark, str(in_dir), out_dir, gap_minutes=50,
                               late_threshold="1 hour")
-        q.awaitTermination()
+        try:
+            assert q.awaitTermination(180)
+        finally:
+            q.stop()
 
     # batch 0: open session [100, 100] for user 1 (watermark → minute 40)
     write_batch("b0", [(1, 100)])
@@ -863,6 +884,7 @@ def test_streaming_sessionization_out_of_order_merge(spark, tmp_path):
     }
     h = 8 * 60
     assert sessions == {(h + 60, h + 125, 3)}
+    assert not spark.streams.active
 
 
 def test_materialized_intermediates_match_cached(spark, tmp_path,

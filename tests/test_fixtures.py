@@ -65,3 +65,63 @@ def test_determinism_same_input_twice(fixture_docs_pdf):
     a = PANDAS_MODES["extract_full"](fixture_docs_pdf)
     b = PANDAS_MODES["extract_full"](fixture_docs_pdf)
     assert a.equals(b)
+
+
+def test_line_features_computed_only_where_read(fixture_docs_pdf, monkeypatch):
+    """Line features are computed by the stages that read them: the line
+    modes featurize every line once per batch, the header/left-note paths
+    add the extras to their own zone's lines only, and the token modes and
+    token-level training/serving mappers featurize no line at all."""
+    import numpy as np
+
+    from grobid_clinical_report_spark import pipeline, trainer
+    from grobid_clinical_report_spark.kernels.features import featurize_lines
+    from grobid_clinical_report_spark.kernels.segmenter import segment_lines
+
+    calls = []
+    for name in ("featurize_lines", "featurize_extras"):
+        def record(lines, _real=getattr(pipeline, name), _name=name):
+            calls.append((_name, lines))
+            return _real(lines)
+
+        monkeypatch.setattr(pipeline, name, record)
+
+    class Docs:  # the one input batch a mapper sees, without Spark
+        def mapInArrow(self, fn, schema):
+            return list(fn(iter([pipeline._docs_batch(fixture_docs_pdf)])))
+
+    def calls_of(run):
+        calls.clear()
+        assert len(run()) > 0
+        return list(calls)
+
+    def assert_zone_only(got, zone):
+        assert [n for n, _ in got] == ["featurize_lines", "featurize_extras"]
+        lines, extras_in = got[0][1], got[1][1]
+        zones = np.asarray(segment_lines(featurize_lines(lines)))
+        assert extras_in.index.equals(lines.index[zones == zone])
+        assert len(extras_in) > 0
+
+    for mode, fn in pipeline.PANDAS_MODES.items():
+        got = calls_of(lambda: fn(fixture_docs_pdf))
+        if mode == "extract_full":
+            assert [n for n, _ in got] == ["featurize_lines"]
+        elif mode in ("extract_header", "extract_leftnote"):
+            assert_zone_only(got, mode.removeprefix("extract_"))
+        else:
+            assert got == [], mode
+
+    got = calls_of(lambda: pipeline.run_training(Docs(), "segmenter"))
+    assert [n for n, _ in got] == ["featurize_lines"]
+    for model in ("header", "leftnote"):
+        assert_zone_only(calls_of(lambda: pipeline.run_training(Docs(), model)), model)
+
+    spec = trainer._ner_spec()
+    W = np.ones((spec.n_feats, spec.n_labels), dtype=np.int64)
+    T = np.zeros((spec.n_labels, spec.n_labels), dtype=np.int64)
+    for run in (
+        lambda: pipeline.run_training_ner(Docs()),
+        lambda: trainer.build_training_set(Docs()),
+        lambda: trainer.run_trained_ner(Docs(), W, T),
+    ):
+        assert calls_of(run) == []

@@ -234,6 +234,28 @@ def test_dedup_notes_keeps_first_and_drops_short():
     assert out["offset"].tolist() == [1, 4]
 
 
+def test_merge_header_fields_tied_offsets_keep_document_order():
+    """Fields whose first lines share an offset (hostile input) come out in
+    document order, not in alphabetical label order."""
+    from grobid_clinical_report_spark.kernels.header import merge_header_fields
+
+    lines = pd.DataFrame(
+        {
+            "doc_id": [0] * 4,
+            "text": ["COMPTE RENDU OPÉRATOIRE", "Le 29.04.2000",
+                     "Dr Jean MARTIN", "12 rue de la Paix 75002 Paris"],
+            "label": ["doctype", "date", "medic", "address"],
+            "offset": [0] * 4,
+            "is_blank": [False] * 4,
+            "is_page_break": [False] * 4,
+            "is_media": [False] * 4,
+        }
+    )
+    out = merge_header_fields(lines)
+    assert out["kind"].tolist() == ["doctype", "date", "medic", "address"]
+    assert out["text"].tolist()[1] == "2000-04-29"
+
+
 # --- tokenization ------------------------------------------------------------
 
 def test_explode_tokens_exact_reconstruction():
@@ -400,14 +422,13 @@ def test_segmenter_new_zones(fixture_docs_pdf):
     recipient blocks and NB-annotations get their margin zones."""
     import pandas as pd
 
-    from grobid_clinical_report_spark.kernels.segmenter import segment_lines
-    from grobid_clinical_report_spark.pipeline import _docs_batch, _prepared
+    from grobid_clinical_report_spark.pipeline import _docs_batch, _prepared, _zoned
 
     cover = fixture_docs_pdf[
         fixture_docs_pdf.doc_id == "fx-cover-0011"
     ].reset_index(drop=True)
-    _, lines = next(_prepared([_docs_batch(cover)], "all"))
-    lines["zone"] = segment_lines(lines)
+    _, lines = next(_prepared([_docs_batch(cover)]))
+    lines = _zoned(lines)
     by_text = dict(zip(lines["text"], lines["zone"]))
     assert by_text["COMPTE RENDU D'HOSPITALISATION"] == "titlePage"
     assert by_text["Hôpital de Créteil"] == "titlePage"
@@ -438,8 +459,8 @@ def test_segmenter_new_zones(fixture_docs_pdf):
             }
         ]
     )
-    _, lines = next(_prepared([_docs_batch(margins)], "all"))
-    lines["zone"] = segment_lines(lines)
+    _, lines = next(_prepared([_docs_batch(margins)]))
+    lines = _zoned(lines)
     by_text = dict(zip(lines["text"], lines["zone"]))
     assert by_text["Destinataire : Dr Jean KOVAC"] == "rightnote"
     assert by_text["Service de Radiologie"] == "rightnote"

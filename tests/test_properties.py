@@ -561,7 +561,10 @@ def test_stream_sessionize_matches_batch_twin_out_of_order(spark, tmp_path):
                 spark, str(in_dir), out_dir, gap_minutes=gap_min,
                 late_threshold="12 hours",
             )
-            q.awaitTermination()
+            try:
+                assert q.awaitTermination(180)
+            finally:
+                q.stop()
 
         got = spark.read.parquet(
             os.path.join(out_dir, "sessions", "epoch=*")
@@ -575,3 +578,4 @@ def test_stream_sessionize_matches_batch_twin_out_of_order(spark, tmp_path):
                 to_min(got["session_end"]), got["n_events"])
         )
         assert got_set == sorted(truth), f"trial {trial}"
+    assert not spark.streams.active
