@@ -20,7 +20,7 @@ import pandas as pd
 from .cluster import rle_cluster_ids
 from .labels import BODY_LABELS, label_index, sticky_transitions
 from .normalize import normalize_text
-from .segmenter import _doc_slices
+from .segments import seg_starts
 from .viterbi import viterbi_segments
 
 _IX = label_index(BODY_LABELS)
@@ -46,7 +46,7 @@ def body_emissions(df: pd.DataFrame) -> np.ndarray:
     # title eligibility is relative to the BODY zone, not the whole document:
     # a cover/header-heavy front matter must not push the opening title out
     # of range (df holds body-zone lines only, so recompute position here)
-    from .segments import seg_position, seg_size_transform, seg_starts
+    from .segments import seg_position, seg_size_transform
 
     dstarts = seg_starts(df["doc_id"].to_numpy())
     body_rel = seg_position(dstarts, n) / np.maximum(
@@ -104,11 +104,11 @@ def body_transitions() -> np.ndarray:
 
 def label_body_lines(df: pd.DataFrame) -> pd.Series:
     em = body_emissions(df)
-    _, starts = _doc_slices(df["doc_id"].to_numpy())
+    starts = seg_starts(df["doc_id"].to_numpy())
     # one decode over the contiguous per-doc segments; docs (~50-400 lines)
     # land mostly in viterbi_segments' factor-2 padded buckets, whose
     # padded DP work stays under 2x the live work
-    flat = viterbi_segments(em, starts[:-1], body_transitions())
+    flat = viterbi_segments(em, starts, body_transitions())
     return pd.Series(
         np.array(BODY_LABELS, dtype=object)[flat], index=df.index, name="label"
     )
@@ -137,7 +137,7 @@ def relabel_caption_tails(df: pd.DataFrame) -> pd.Series:
     low = at.lower(at.arr_of(df["text"]))
     caption = at.match(low, r"(?:figure|fig\.)\s*\d*")
     table_line = at.match(low, r"(?:tableau|table)\b")
-    from .segments import seg_any_transform, seg_cumsum, seg_starts
+    from .segments import seg_any_transform, seg_cumsum
 
     is_media = df["is_media"].to_numpy()
     ends = df["ends_period"].to_numpy()
@@ -270,8 +270,6 @@ def body_spans(df: pd.DataFrame) -> pd.DataFrame:
     # first non-null media_ref per cluster: clusters are contiguous runs, so
     # a minimum.reduceat over non-null row indices replaces the pandas hash
     # groupby (the former body_spans hotspot)
-    from .segments import seg_starts
-
     media = d["media_ref"].to_numpy()
     notna = pd.notna(media)
     idx = np.where(notna, np.arange(len(d)), len(d))

@@ -66,46 +66,24 @@ def rle_cluster_ids(
     Equivalent to TaggingTokenClusteror's consecutive-same-label grouping
     (an explicit `I-` prefix in a label value also opens a new cluster, as in
     GROBID's IOB scheme)."""
-    # categorical labels (the token-mode labelers ship Categorical since
-    # r8) carry their codes + tiny dictionary already — skip the
-    # corpus-sized factorize/hash entirely
+    # change detection and the I- scan run on int codes / the tiny
+    # dictionary, not per-row string compares (profiled hotspot); the
+    # Categorical labels of the token-mode labelers already carry both
     if isinstance(labels, pd.Series) and isinstance(
         labels.dtype, pd.CategoricalDtype
     ):
         codes = labels.cat.codes.to_numpy()
-        assert (codes >= 0).all(), "rle_cluster_ids: NaN labels unsupported"
         uniq = np.asarray(labels.cat.categories)
-        opens = np.char.startswith(uniq.astype(str), "I-")[codes]
-        lab = codes
-        doc = np.asarray(doc_ids)
-        if doc.dtype.kind not in "iu":
-            doc = pd.factorize(doc)[0]
-        change = (lab != np.roll(lab, 1)) | (doc != np.roll(doc, 1)) | opens
-        if aux is not None:
-            change |= np.asarray(aux) != np.roll(np.asarray(aux), 1)
-        if break_before is not None:
-            change |= np.asarray(break_before)
-        if len(change):
-            change[0] = True
-        return np.cumsum(change) - 1
-    lab = np.asarray(labels)
-    doc = np.asarray(doc_ids)
-    # label/doc columns are massively repetitive: factorize to int codes so
-    # the change detection and the I- scan run on ints / the tiny dictionary
-    # instead of per-row object-string compares (profiled hotspot)
-    if lab.dtype.kind not in "iu":
-        codes, uniq = pd.factorize(lab)
-        # factorize maps NaN to code -1, which would fancy-index the LAST
-        # unique's I- flag and merge all NaN labels into one run — no
-        # current caller passes NaN labels, so guard rather than guess
-        assert (codes >= 0).all(), "rle_cluster_ids: NaN labels unsupported"
-        opens = np.char.startswith(uniq.astype(str), "I-")[codes]
-        lab = codes
     else:
-        opens = np.zeros(len(lab), dtype=bool)
+        codes, uniq = pd.factorize(np.asarray(labels))
+    # NaN is code -1, which would index the LAST unique's I- flag and merge
+    # all NaN labels into one run: no caller passes NaN, so guard
+    assert (codes >= 0).all(), "rle_cluster_ids: NaN labels unsupported"
+    opens = np.char.startswith(uniq.astype(str), "I-")[codes]
+    doc = np.asarray(doc_ids)
     if doc.dtype.kind not in "iu":
         doc = pd.factorize(doc)[0]
-    change = (lab != np.roll(lab, 1)) | (doc != np.roll(doc, 1)) | opens
+    change = (codes != np.roll(codes, 1)) | (doc != np.roll(doc, 1)) | opens
     if aux is not None:
         aux = np.asarray(aux)
         change |= aux != np.roll(aux, 1)

@@ -22,7 +22,7 @@ import pandas as pd
 from .labels import HEADER_LABELS, label_index, sticky_transitions
 from .normalize import normalize_text, to_iso_date
 from .viterbi import viterbi_segments
-from .segmenter import _doc_slices
+from .segments import seg_starts
 
 _IX = label_index(HEADER_LABELS)
 
@@ -108,8 +108,8 @@ def header_emissions(df: pd.DataFrame) -> np.ndarray:
 def label_header_lines(df: pd.DataFrame) -> pd.Series:
     em = header_emissions(df)
     trans = sticky_transitions(HEADER_LABELS, stay=1.0)
-    _, starts = _doc_slices(df["doc_id"].to_numpy())
-    flat = viterbi_segments(em, starts[:-1], trans)
+    starts = seg_starts(df["doc_id"].to_numpy())
+    flat = viterbi_segments(em, starts, trans)
     return pd.Series(
         np.array(HEADER_LABELS, dtype=object)[flat], index=df.index, name="label"
     )

@@ -16,7 +16,7 @@ import numpy as np
 import pandas as pd
 
 from .labels import LEFTNOTE_LABELS, label_index, sticky_transitions
-from .segmenter import _doc_slices
+from .segments import seg_starts
 from .viterbi import viterbi_segments
 
 _IX = label_index(LEFTNOTE_LABELS)
@@ -55,8 +55,8 @@ def leftnote_emissions(df: pd.DataFrame) -> np.ndarray:
 def label_leftnote_lines(df: pd.DataFrame) -> pd.Series:
     em = leftnote_emissions(df)
     trans = sticky_transitions(LEFTNOTE_LABELS, stay=1.0)
-    _, starts = _doc_slices(df["doc_id"].to_numpy())
-    flat = viterbi_segments(em, starts[:-1], trans)
+    starts = seg_starts(df["doc_id"].to_numpy())
+    flat = viterbi_segments(em, starts, trans)
     return pd.Series(
         np.array(LEFTNOTE_LABELS, dtype=object)[flat], index=df.index,
         name="label"

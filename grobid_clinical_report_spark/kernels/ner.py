@@ -18,7 +18,7 @@ import numpy as np
 import pandas as pd
 
 from .labels import NER_LABELS, label_index, sticky_transitions
-from .segmenter import _doc_slices
+from .segments import seg_starts
 from .subparsers import tokens_to_spans
 from .viterbi import viterbi_segments
 
@@ -125,8 +125,8 @@ def label_ner_tokens(t: pd.DataFrame) -> pd.Series:
     # stay=4.0 = 2 × the modeled 2.0: transitions scale with the doubled
     # int16 emissions so every path comparison is unchanged
     trans = sticky_transitions(NER_LABELS, stay=4.0)
-    _, starts = _doc_slices(t["line_key"].to_numpy())
-    flat = viterbi_segments(em, starts[:-1], trans)
+    starts = seg_starts(t["line_key"].to_numpy())
+    flat = viterbi_segments(em, starts, trans)
     # Categorical: the decoded CODES flow straight through (rle_cluster_ids
     # has a codes fast path); strings materialize only at the span level
     return pd.Series(
@@ -157,8 +157,8 @@ def ner_entities(t: pd.DataFrame) -> pd.DataFrame:
     t = t.copy()
     em = ner_emissions(t)
     trans = sticky_transitions(NER_LABELS, stay=4.0)  # 2 × 2.0, see above
-    _, starts = _doc_slices(t["line_key"].to_numpy())
-    flat_lab = viterbi_segments(em, starts[:-1], trans)
+    starts = seg_starts(t["line_key"].to_numpy())
+    flat_lab = viterbi_segments(em, starts, trans)
     t["label"] = pd.Series(
         pd.Categorical.from_codes(flat_lab, NER_LABELS), index=t.index
     )
@@ -179,11 +179,10 @@ def ner_entities(t: pd.DataFrame) -> pd.DataFrame:
     flat = tokens_to_spans(t, drop=("other",), with_char_offsets=True)
     # mean margin over each entity's tokens (clusters are contiguous)
     from .cluster import rle_cluster_ids
-    from .segments import seg_starts as _ss
 
     d = t
     cl = rle_cluster_ids(d["line_key"], d["label"])
-    cstarts = _ss(cl)
+    cstarts = seg_starts(cl)
     sums = np.add.reduceat(d["_margin"].to_numpy(), cstarts)
     sizes = np.diff(np.append(cstarts, len(d)))
     keep = ~d["label"].iloc[cstarts].isin(["other"]).to_numpy()

@@ -21,6 +21,7 @@ import numpy as np
 import pandas as pd
 
 from .labels import SEG_LABELS, label_index, sticky_transitions
+from .segments import seg_starts
 from .viterbi import viterbi_segments
 
 _IX = label_index(SEG_LABELS)
@@ -49,7 +50,7 @@ def segment_emissions(df: pd.DataFrame) -> np.ndarray:
 
     # block-level contact signal: phone/fax lines pull their whole block into
     # the left margin (surrogate for the reference's x-coordinate evidence)
-    from .segments import seg_any_transform, seg_starts
+    from .segments import seg_any_transform
 
     # a left-note block is an organization CONTACT block: phone/fax lines
     # together with role/org words (Chef de Service, Secrétariat…). A bare
@@ -221,18 +222,6 @@ def segment_lines(df: pd.DataFrame) -> pd.Series:
     # viterbi_segments' factor-2 padded buckets (the zone-order transition
     # matrix is non-sticky, so this runs the general O(L^2) step — L=7,
     # still one small tensor per time step)
-    _, doc_starts = _doc_slices(df["doc_id"].to_numpy())
-    flat = viterbi_segments(em, doc_starts[:-1], trans)
+    flat = viterbi_segments(em, seg_starts(df["doc_id"].to_numpy()), trans)
     lab = np.array(SEG_LABELS, dtype=object)[flat]
     return pd.Series(lab, index=df.index, name="zone")
-
-
-def _doc_slices(doc_ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Boundaries of consecutive doc_id runs → (codes, start offsets incl. end)."""
-    n = len(doc_ids)
-    if n == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(1, dtype=np.int64)
-    change = np.ones(n, dtype=bool)
-    change[1:] = doc_ids[1:] != doc_ids[:-1]
-    starts = np.flatnonzero(change)
-    return doc_ids[starts], np.append(starts, n)

@@ -27,7 +27,7 @@ from .labels import (
     label_index,
     sticky_transitions,
 )
-from .segmenter import _doc_slices
+from .segments import seg_starts
 
 _MEDIC_TITLES = {"dr", "pr", "docteur", "professeur", "dr.", "pr."}
 _PATIENT_TITLES = {"madame", "monsieur", "mme", "mlle", "mademoiselle", "m"}
@@ -214,8 +214,8 @@ def _decode(
     from .viterbi import viterbi_segments
 
     trans = sticky_transitions(labels, stay=stay)
-    _, starts = _doc_slices(t["line_key"].to_numpy())
-    flat = viterbi_segments(em, starts[:-1], trans)
+    starts = seg_starts(t["line_key"].to_numpy())
+    flat = viterbi_segments(em, starts, trans)
     # Categorical: codes flow through rle_cluster_ids' fast path; strings
     # materialize only at the span level (tokens_to_spans)
     return pd.Series(pd.Categorical.from_codes(flat, labels), index=t.index)
@@ -254,7 +254,6 @@ def tokens_to_spans(
     import pyarrow.compute as pc
 
     from . import arrowtext as at
-    from .segments import seg_starts
 
     tok_arr = at.arr_of(d["tok"])
     gap_arr = pc.coalesce(at.arr_of(d["gap"]), "")
@@ -469,7 +468,7 @@ _NM_IX = label_index(NAME_LABELS)
 
 
 def parse_name_tokens(t: pd.DataFrame) -> pd.Series:
-    from .segments import seg_cumsum, seg_starts
+    from .segments import seg_cumsum
 
     em = np.zeros((len(t), len(NAME_LABELS)))
     lstarts = seg_starts(t["line_key"].to_numpy())
@@ -501,7 +500,7 @@ _AD_IX = label_index(ADDRESS_LABELS)
 
 
 def parse_address_tokens(t: pd.DataFrame) -> pd.Series:
-    from .segments import seg_cumsum, seg_starts
+    from .segments import seg_cumsum
 
     em = np.zeros((len(t), len(ADDRESS_LABELS)))
     lstarts = seg_starts(t["line_key"].to_numpy())
@@ -557,7 +556,7 @@ _HEAD_CATS = sorted(set(_ORG_HEADS.values()))
 
 
 def parse_org_tokens(t: pd.DataFrame) -> pd.Series:
-    from .segments import seg_position, seg_starts
+    from .segments import seg_position
 
     n = len(t)
     em = np.zeros((n, len(ORG_LABELS)))

@@ -38,17 +38,12 @@ DOCUMENTS_SCHEMA = T.StructType(
 # span text, media_ref carried through for figure/media spans, offset = order.
 EXTRACTED_SCHEMA = DOCUMENTS_SCHEMA
 
-# DDL forms for mapInPandas / applyInPandas
+# DDL forms for mapInArrow
 SPAN_DDL = (
     "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 )
 DOCUMENTS_DDL = f"doc_id string, spans {SPAN_DDL}"
 EXTRACTED_DDL = DOCUMENTS_DDL
-
-# Flat (exploded) span representation used inside kernels & some tests
-FLAT_SPAN_DDL = (
-    "doc_id string, kind string, text string, media_ref string, offset int"
-)
 
 # ---------------------------------------------------------------------------
 # Manifest table (checkpoint/resume; SURVEY.md §2.1 S6, §7.2 step 6)
@@ -70,25 +65,5 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("mode", T.StringType(), False),
         T.StructField("n_buckets", T.IntegerType(), False),
         T.StructField("max_spans", T.LongType(), False),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# NER entity output (C8)
-# ---------------------------------------------------------------------------
-
-ENTITY_STRUCT = T.StructType(
-    [
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("start", T.IntegerType(), False),
-        T.StructField("end", T.IntegerType(), False),
-    ]
-)
-
-ENTITIES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("entities", T.ArrayType(ENTITY_STRUCT, False), False),
     ]
 )

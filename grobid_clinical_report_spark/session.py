@@ -15,7 +15,7 @@ def get_spark(
 ) -> SparkSession:
     """local[N] session tuned for the extraction pipeline.
 
-    - Arrow enabled and batch-sized for mapInPandas throughput (each batch is
+    - Arrow enabled and batch-sized for mapInArrow throughput (each batch is
       a set of whole documents; 256 docs/batch keeps the Python-side tensors
       in cache while amortizing the Arrow hop),
     - AQE on (post-shuffle coalescing + skew-join splitting — the relational

@@ -15,7 +15,8 @@ The perceptron trains through the SAME Viterbi kernel the inference path
 uses — no forward-backward partition function, no gradient numerics — and
 its distributed form maps exactly onto Spark: broadcast the weight vector
 (≈2k integers), run one local perceptron pass per shard
-(`groupBy(shard).applyInPandas`), average the per-shard weights, repeat.
+(one `mapInArrow` over the shard-partitioned packed rows), average the
+per-shard weights, repeat.
 
 Integer-exact distributed semantics (the property every oracle in this
 repo is built on): weights are kept P-SCALED — `W_stored = P · W_model`
@@ -46,11 +47,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .kernels.labels import NER_LABELS, label_index
-from .kernels.segmenter import _doc_slices
+from .kernels.segments import seg_starts
 from .kernels.viterbi import viterbi_segments
 
 _IX = label_index(NER_LABELS)
@@ -284,22 +287,26 @@ def _emissions(
     return _matmul_exact(X8, W)
 
 
-def _serving_emissions(
-    X8: np.ndarray, W: np.ndarray, t_abs: int, t_max: int
+def _decode_trained(
+    feats: np.ndarray, starts: np.ndarray, W: np.ndarray, T: np.ndarray
 ) -> np.ndarray:
-    """_emissions + a corpus-decode int32 narrowing pass. Trained weights
-    usually overflow the sgemm tier (so _emissions lands int64), but the
-    DP bound over the ACTUAL emission extrema often still fits int32 —
-    halving the general-transition decode's memory traffic. Training's
-    mini-batch decodes measured and rejected the extra pass (their
-    buffers sit in cache either way); the corpus-scale serve/eval decode
-    is bandwidth-bound, where it pays (BENCH/TRAINER.md)."""
-    em = _emissions(X8, W, t_abs, t_max)
+    """Packed masks + segment starts → trained-weights label codes: the
+    shared Viterbi over _emissions plus a corpus-decode int32 narrowing
+    pass. Trained weights usually overflow the sgemm tier (so _emissions
+    lands int64), but the DP bound over the ACTUAL emission extrema often
+    still fits int32 — halving the general-transition decode's memory
+    traffic. Training's mini-batch decodes measured and rejected the
+    extra pass (their buffers sit in cache either way); the corpus-scale
+    serve/eval decode is bandwidth-bound, where it pays
+    (BENCH/TRAINER.md)."""
+    t_abs = int(np.abs(T).max(initial=0))
+    t_max = int(np.diff(np.append(starts, len(feats))).max(initial=0))
+    em = _emissions(_unpack_u8(feats, W.shape[0]), W, t_abs, t_max)
     if em.dtype == np.int64 and len(em):
         em_abs = max(int(em.max()), -int(em.min()), 0)
         if t_max * (em_abs + t_abs + 1) < (1 << 31):
             em = em.astype(np.int32)
-    return em
+    return viterbi_segments(em, starts, T)
 
 
 _BLAS_PINNED = False
@@ -348,13 +355,9 @@ def build_training_set(docs: DataFrame, spec: ModelSpec | None = None) -> DataFr
     to reproduce the decoder it will replace. `join_supervision` swaps in
     external gold (e.g. the Quaero-analog import) instead.
     """
-    import pyarrow as pa
-
-    from .kernels.segments import seg_starts
     from .pipeline import _content_tokens, _prepared
 
-    if spec is None:
-        spec = _ner_spec()
+    spec = spec or _ner_spec()
     labeler, label_ix, features = spec.labeler, spec.ix, spec.features
 
     def mapper(batches):
@@ -371,7 +374,9 @@ def build_training_set(docs: DataFrame, spec: ModelSpec | None = None) -> DataFr
                 .astype(np.int32)
             )
             feats = pack_features(toks, features)
-            codes, dstarts = _doc_slices(toks["doc_id"].to_numpy())
+            doc = toks["doc_id"].to_numpy()
+            first = seg_starts(doc)
+            codes, dstarts = doc[first], np.append(first, len(doc))
             # per-line segment starts, made doc-relative fully vectorized:
             # global start rows → owning doc via searchsorted → subtract
             # the doc's first row; list offsets via bincount.
@@ -448,14 +453,34 @@ def join_supervision(
 
 
 # ---------------------------------------------------------------------------
-# The per-shard pass (pure numpy — runs inside the mapInPandas epoch worker
-# AND inside the serial twin, so distributed-vs-local parity tests the Spark
-# plumbing, never the arithmetic).
+# The per-shard pass (pure numpy over Arrow buffers — runs inside the
+# mapInArrow epoch worker AND inside the serial twin, so distributed-vs-local
+# parity tests the Spark plumbing, never the arithmetic).
 # ---------------------------------------------------------------------------
 
 
+def _flat_packed(rows: pa.Table | pa.RecordBatch):
+    """Packed training rows → (feats, gold, tok_off, starts): every row's
+    token masks and gold labels flattened, the per-row token offsets
+    (len rows + 1) and every segment start as a global token position —
+    Arrow list kernels over the buffers, no per-row Python objects."""
+    tok_off = np.zeros(rows.num_rows + 1, dtype=np.int64)
+    np.cumsum(
+        pc.list_value_length(rows.column("feats")).to_numpy(),
+        out=tok_off[1:],
+    )
+    starts_col = rows.column("starts")
+    starts = (
+        pc.list_flatten(starts_col).to_numpy().astype(np.int64)
+        + tok_off[pc.list_parent_indices(starts_col).to_numpy()]
+    )
+    feats = pc.list_flatten(rows.column("feats")).to_numpy()
+    gold = pc.list_flatten(rows.column("gold")).to_numpy().astype(np.int64)
+    return feats, gold, tok_off, starts
+
+
 def shard_pass(
-    shard_pdf: pd.DataFrame,
+    shard: pa.Table,
     W: np.ndarray,
     T: np.ndarray,
     step: int,
@@ -476,43 +501,39 @@ def shard_pass(
     W = W.copy()
     T = T.copy()
     n_updates = n_tok = n_correct = 0
-    order = np.argsort(shard_pdf["doc_id"].to_numpy(), kind="stable")
-    feats_col = shard_pdf["feats"].to_numpy()
-    gold_col = shard_pdf["gold"].to_numpy()
-    starts_col = shard_pdf["starts"].to_numpy()
-    for lo in range(0, len(order), batch_docs):
-        rows = order[lo : lo + batch_docs]
-        f_list = [np.asarray(feats_col[r], dtype=np.int64) for r in rows]
-        g_list = [np.asarray(gold_col[r], dtype=np.int64) for r in rows]
-        lens = np.array([len(x) for x in f_list], dtype=np.int64)
-        doc_off = np.concatenate(([0], np.cumsum(lens)))
-        f = np.concatenate(f_list)
-        g = np.concatenate(g_list)
-        starts = np.concatenate(
-            [
-                np.asarray(starts_col[r], dtype=np.int64) + doc_off[i]
-                for i, r in enumerate(rows)
-            ]
-        )
-        X = _unpack_u8(f, W.shape[0])
+    # Arrow's sort is stable and compares strings bytewise (= code point
+    # order): the same doc order as a stable numpy argsort
+    shard = shard.take(pc.sort_indices(shard, [("doc_id", "ascending")]))
+    feats, gold, tok_off, starts = _flat_packed(shard)
+    n_lab = T.shape[0]
+    for lo in range(0, shard.num_rows, batch_docs):
+        hi = min(lo + batch_docs, shard.num_rows)
+        # the mini-batch is one contiguous token slice; each row's starts
+        # ascend from 0 (build_training_set), so the global starts are
+        # sorted and the batch's segments are one contiguous run of them
+        a, b = tok_off[lo], tok_off[hi]
+        s_lo, s_hi = np.searchsorted(starts, (a, b))
+        seg = starts[s_lo:s_hi] - a
+        g = gold[a:b]
+        lens = np.diff(tok_off[lo : hi + 1])
+        X = _unpack_u8(feats[a:b], W.shape[0])
         # (an astype-narrowing of an already-built int64 em was measured
         # and rejected — 6.4s vs 5.2s on the profile shard; _emissions
         # instead lands DIRECTLY in the narrowest provably-safe dtype out
         # of the sgemm, no extra pass)
         em = _emissions(X, W, int(np.abs(T).max(initial=0)), int(lens.max()))
-        pred = viterbi_segments(em, starts, T)
+        pred = viterbi_segments(em, seg, T)
         mism = pred != g
         n_tok += len(g)
         n_correct += int(len(g) - mism.sum())
         if not mism.any():
             continue
         # docs with at least one mismatched position get the full update
-        doc_of_row = np.repeat(np.arange(len(rows)), lens)
+        doc_of_row = np.repeat(np.arange(hi - lo), lens)
         bad_docs = np.unique(doc_of_row[mism])
         n_updates += len(bad_docs)
         rows_mask = np.flatnonzero(mism)
         Xm = X[rows_mask]
-        n_lab = T.shape[0]
         G = np.zeros((len(rows_mask), n_lab), dtype=np.int64)
         np.add.at(G, (np.arange(len(rows_mask)), g[rows_mask]), step)
         np.add.at(G, (np.arange(len(rows_mask)), pred[rows_mask]), -step)
@@ -520,7 +541,7 @@ def shard_pass(
         # transition counts over the bad docs' bigram positions
         in_bad = np.isin(doc_of_row, bad_docs)
         is_start = np.zeros(len(g), dtype=bool)
-        is_start[starts] = True
+        is_start[seg] = True
         bigram = in_bad & ~is_start
         p = np.flatnonzero(bigram)
         if len(p):
@@ -541,37 +562,35 @@ _EPOCH_DDL = (
 
 
 def _epoch_fn(W: np.ndarray, T: np.ndarray, step: int, batch_docs: int):
-    """mapInPandas epoch worker: each input PARTITION holds whole shards
+    """mapInArrow epoch worker: each input PARTITION holds whole shards
     (train() repartitions by the shard column once and persists), so the
     worker groups by shard locally and emits one delta row per shard.
     Per-shard results never depend on which partition carried the shard —
-    bit-equal to a groupBy().applyInPandas() epoch, minus the per-epoch
-    shuffle."""
+    bit-equal to a per-shard groupBy epoch, minus the per-epoch shuffle."""
     wf = W.copy()
     tf = T.copy()
 
-    def fn(pdfs):
+    def fn(batches):
         # Arrow hands the partition over as ≤maxRecordsPerBatch CHUNKS; a
         # shard spanning a chunk boundary must still run as ONE pass
         # (chunk-wise passes would silently reset the local weights
         # mid-shard — caught at sf0.1 where the trajectory shifted), so
         # collect the partition before grouping. Memory is one partition
-        # of ~17-byte/token packed rows — the same frame the former
-        # applyInPandas shape materialized per group.
-        chunks = [pdf for pdf in pdfs if not pdf.empty]
+        # of ~17-byte/token packed rows.
+        chunks = [b for b in batches if b.num_rows]
         if not chunks:
             return
-        whole = chunks[0] if len(chunks) == 1 else pd.concat(
-            chunks, ignore_index=True
-        )
-        for shard, part in whole.groupby("shard", sort=True):
+        whole = pa.Table.from_batches(chunks)
+        shard_col = whole.column("shard")
+        for shard in np.unique(shard_col.to_numpy()):
+            part = whole.filter(pc.equal(shard_col, shard))
             w2, t2, n_up, n_tok, n_ok = shard_pass(
                 part, wf, tf, step, batch_docs
             )
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
                     "shard": [int(shard)],
-                    "n_docs": [len(part)],
+                    "n_docs": [part.num_rows],
                     "n_updates": [n_up],
                     "n_tok": [n_tok],
                     "n_correct": [n_ok],
@@ -596,18 +615,19 @@ def train(
     epochs: int = 3,
     shards: int = 4,
     batch_docs: int = 32,
-    n_feats: int = _NF,
-    n_labels: int = _L,
+    spec: ModelSpec | None = None,
 ) -> tuple[np.ndarray, np.ndarray, list[dict]]:
     """Iterative parameter mixing over `shards` shards for `epochs` epochs.
 
-    Returns (W, T, metrics) with W (F, L) / T (L, L) int64 P-SCALED weights
+    `ts` must be packed under `spec` (default: the NER spec, as in
+    `build_training_set`), which fixes the weight shapes. Returns
+    (W, T, metrics) with W (F, L) / T (L, L) int64 P-SCALED weights
     (P = number of non-empty shards; decode-equivalent to W/P) and one
     metrics dict per epoch: n_updates (docs that triggered an update),
     token_acc_milli (online decode accuracy ·1000, integer division).
 
     The input is shard-partitioned once and persisted; epochs then run
-    shuffle-free (mapInPandas over co-located shards). Callers training
+    shuffle-free (mapInArrow over co-located shards). Callers training
     at corpus scale should still materialize the packed table first
     (~17 bytes/token) so the featurization pass never re-runs; at
     petabyte scale, write it BUCKETED by `shard` and the one-time
@@ -621,8 +641,10 @@ def train(
     (more epochs needed to the same accuracy). 4×cores is a reasonable
     wall-clock default when epochs are cheap; cores (or fewer) when
     per-epoch convergence matters more than stragglers."""
+    spec = spec or _ner_spec()
+    n_feats, n_labels = spec.n_feats, spec.n_labels
     # shard-partitioned ONCE and persisted: every epoch then reads whole
-    # shards co-located in their partitions (mapInPandas + local groupby)
+    # shards co-located in their partitions (mapInArrow + local grouping)
     # instead of re-shuffling the packed table per epoch — the in-session
     # realization of the bucketed production layout the docstring names.
     sharded = with_shard(ts, shards).repartition(shards, "shard").persist()
@@ -638,7 +660,7 @@ def train(
 
     for epoch in range(epochs):
         _t0 = _time.time()
-        rows = sharded.mapInPandas(
+        rows = sharded.mapInArrow(
             _epoch_fn(W, T, step, batch_docs), schema=_EPOCH_DDL
         ).collect()
         dW = np.zeros(n_feats * n_labels, dtype=np.int64)
@@ -672,25 +694,26 @@ def train_local(
     ts_pdf: pd.DataFrame,
     epochs: int = 3,
     batch_docs: int = 32,
-    n_feats: int = _NF,
-    n_labels: int = _L,
+    spec: ModelSpec | None = None,
 ) -> tuple[np.ndarray, np.ndarray, list[dict]]:
     """Serial twin of `train` over a collected training set WITH its shard
     column: same shard passes, same mixing arithmetic, no Spark. Exists so
     tests can pin distributed == local bit-equality (the Spark run adds
     only plumbing — grouping, delta transport — never arithmetic)."""
+    spec = spec or _ner_spec()
+    rows = pa.Table.from_pandas(ts_pdf, preserve_index=False)
     shards_present = sorted(ts_pdf["shard"].unique())
     p_eff = len(shards_present)
     step = p_eff
-    W = np.zeros((n_feats, n_labels), dtype=np.int64)
-    T = np.zeros((n_labels, n_labels), dtype=np.int64)
+    W = np.zeros((spec.n_feats, spec.n_labels), dtype=np.int64)
+    T = np.zeros((spec.n_labels, spec.n_labels), dtype=np.int64)
     metrics: list[dict] = []
     for epoch in range(epochs):
-        dW = np.zeros((n_feats, n_labels), dtype=np.int64)
-        dT = np.zeros((n_labels, n_labels), dtype=np.int64)
+        dW = np.zeros_like(W)
+        dT = np.zeros_like(T)
         n_up = n_tok = n_ok = 0
         for s in shards_present:
-            part = ts_pdf[ts_pdf["shard"] == s]
+            part = rows.filter(pc.equal(rows.column("shard"), s))
             w2, t2, u, t_n, ok = shard_pass(part, W, T, step, batch_docs)
             dW += w2 - W
             dT += t2 - T
@@ -716,9 +739,7 @@ def train_split_eval(
     epochs: int = 3,
     shards: int = 4,
     batch_docs: int = 32,
-    n_feats: int = _NF,
-    n_labels: int = _L,
-    label_names: list[str] = NER_LABELS,
+    spec: ModelSpec | None = None,
 ) -> tuple[DataFrame, list[dict], np.ndarray, np.ndarray]:
     """Reference trainer mode 2 — "split, train and evaluate"
     (`MedicalReportTrainerRunner.java:25,141`, the `-s` split ratio fed to
@@ -740,9 +761,9 @@ def train_split_eval(
     holdout = ts.where(bucket >= split_milli)
     W, T, metrics = train(
         train_part, epochs=epochs, shards=shards, batch_docs=batch_docs,
-        n_feats=n_feats, n_labels=n_labels,
+        spec=spec,
     )
-    return token_prf(predict(holdout, W, T, label_names)), metrics, W, T
+    return token_prf(predict(holdout, W, T, spec)), metrics, W, T
 
 
 def train_nfold_eval(
@@ -751,9 +772,7 @@ def train_nfold_eval(
     epochs: int = 3,
     shards: int = 4,
     batch_docs: int = 32,
-    n_feats: int = _NF,
-    n_labels: int = _L,
-    label_names: list[str] = NER_LABELS,
+    spec: ModelSpec | None = None,
 ) -> DataFrame:
     """Reference trainer mode 3 — n-fold cross-validation
     (`MedicalReportTrainerRunner.java:25,143`, the `-n` fold count fed to
@@ -779,10 +798,10 @@ def train_nfold_eval(
     for k in range(n_folds):
         W, T, _ = train(
             ts.where(fold != k), epochs=epochs, shards=shards,
-            batch_docs=batch_docs, n_feats=n_feats, n_labels=n_labels,
+            batch_docs=batch_docs, spec=spec,
         )
         per_fold.append(
-            token_prf(predict(ts.where(fold == k), W, T, label_names))
+            token_prf(predict(ts.where(fold == k), W, T, spec))
             .where(F.col("label") == "__micro__")
             .select(F.lit(k).alias("fold"), "*")
             .drop("label")
@@ -792,64 +811,40 @@ def train_nfold_eval(
 
 def predict(
     ts: DataFrame, W: np.ndarray, T: np.ndarray,
-    label_names: list[str] = NER_LABELS,
+    spec: ModelSpec | None = None,
 ) -> DataFrame:
-    """Decode a training-set table with trained weights → per-token
-    (doc_id, seq, tok_idx, gold, pred) label strings — the shape
-    `evaluate.token_prf` consumes. Map-only (weights ship in the closure,
-    ≈2k ints)."""
+    """Decode a training-set table packed under `spec` (default NER) with
+    trained weights → per-token (doc_id, seq, tok_idx, gold, pred) label
+    strings — the shape `evaluate.token_prf` consumes. Map-only (weights
+    ship in the closure, ≈2k ints)."""
     wf = W.copy()
     tf = T.copy()
-    labels = np.array(label_names, dtype=object)
+    labels = pa.array((spec or _ner_spec()).labels, type=pa.string())
 
-    def fn(pdfs):
+    def fn(batches):
         _blas_single_thread()
-        for pdf in pdfs:
-            if pdf.empty:
+        for b in batches:
+            if not b.num_rows:
                 continue
-            f_list = [np.asarray(x, dtype=np.int64) for x in pdf["feats"]]
-            lens = np.array([len(x) for x in f_list], dtype=np.int64)
-            doc_off = np.concatenate(([0], np.cumsum(lens)))
-            f = np.concatenate(f_list)
-            starts = np.concatenate(
+            feats, gold, _, starts = _flat_packed(b)
+            pred = _decode_trained(feats, starts, wf, tf)
+            yield pa.RecordBatch.from_arrays(
                 [
-                    np.asarray(s, dtype=np.int64) + doc_off[i]
-                    for i, s in enumerate(pdf["starts"])
-                ]
-            )
-            d_lens = np.diff(np.append(starts, len(f)))
-            t_hi = int(d_lens.max(initial=0))
-            pred = viterbi_segments(
-                _serving_emissions(
-                    _unpack_u8(f, wf.shape[0]), wf,
-                    int(np.abs(tf).max(initial=0)), t_hi,
-                ),
-                starts, tf,
-            )
-            gold = np.concatenate(
-                [np.asarray(x, dtype=np.int64) for x in pdf["gold"]]
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(
-                        pdf["doc_id"].to_numpy(), lens
+                    b.column("doc_id").take(
+                        pc.list_parent_indices(b.column("feats"))
                     ),
-                    "seq": np.concatenate(
-                        [np.asarray(x, np.int32) for x in pdf["seq"]]
-                    ),
-                    "tok_idx": np.concatenate(
-                        [np.asarray(x, np.int32) for x in pdf["tok_idx"]]
-                    ),
-                    "gold": labels[gold],
-                    "pred": labels[pred],
-                }
+                    pc.list_flatten(b.column("seq")),
+                    pc.list_flatten(b.column("tok_idx")),
+                    labels.take(gold),
+                    labels.take(pred),
+                ],
+                names=["doc_id", "seq", "tok_idx", "gold", "pred"],
             )
 
-    return ts.mapInPandas(
+    return ts.mapInArrow(
         fn, schema="doc_id string, seq int, tok_idx int, gold string, "
         "pred string"
     )
-
 
 
 # ---------------------------------------------------------------------------
@@ -871,12 +866,10 @@ def run_trained_ner(
     createTraining → train → the trained model serves extraction
     (`MedicalReportTrainerRunner.java` mode 0 feeding the engine's model
     directory)."""
-    from .kernels.segments import seg_starts
     from .kernels.subparsers import tokens_to_spans
     from .pipeline import EXTRACTED_DDL, _EMPTY_SPANS, _content_tokens, _extract
 
-    if spec is None:
-        spec = _ner_spec()
+    spec = spec or _ner_spec()
     wf = W.copy()
     tf = T.copy()
     features = spec.features
@@ -885,15 +878,10 @@ def run_trained_ner(
         toks = _content_tokens(lines)
         if toks.empty:
             return _EMPTY_SPANS
-        f = pack_features(toks, features)
-        starts = seg_starts(toks["line_key"].to_numpy())
-        lens = np.diff(np.append(starts, len(f)))
-        em = _serving_emissions(
-            _unpack_u8(f, wf.shape[0]), wf,
-            int(np.abs(tf).max(initial=0)),
-            int(lens.max(initial=0)),
+        flat = _decode_trained(
+            pack_features(toks, features),
+            seg_starts(toks["line_key"].to_numpy()), wf, tf,
         )
-        flat = viterbi_segments(em, starts, tf)
         # Categorical, as in the surrogate decoders (r8): codes flow
         # through rle_cluster_ids' fast path, strings materialize at
         # span granularity inside tokens_to_spans
@@ -991,10 +979,7 @@ def run_training_job(
     ts = build_training_set(docs, spec=spec).persist()
     os.makedirs(output_dir, exist_ok=True)
     out: dict = {"model": model, "train_mode": mode, "n_docs": ts.count()}
-    kw = dict(
-        epochs=epochs, shards=shards, batch_docs=batch_docs,
-        n_feats=spec.n_feats, n_labels=spec.n_labels,
-    )
+    kw = dict(epochs=epochs, shards=shards, batch_docs=batch_docs, spec=spec)
     prf = None
     try:
         if mode == 0:
@@ -1008,18 +993,16 @@ def run_training_job(
             W, T, name = load_model(weights)
             if name != model:
                 raise ValueError(f"--weights is a {name} model, not {model}")
-            prf = evaluate_labels(predict(ts, W, T, spec.labels))
+            prf = evaluate_labels(predict(ts, W, T, spec))
         elif mode == 2:
             prf, metrics, W, T = train_split_eval(
-                ts, split_milli=split_milli, label_names=spec.labels, **kw
+                ts, split_milli=split_milli, **kw
             )
             path = os.path.join(output_dir, f"{model}.npz")
             save_model(path, W, T, spec)
             out.update(weights=path, epochs=metrics)
         elif mode == 3:
-            prf = train_nfold_eval(
-                ts, n_folds=n_folds, label_names=spec.labels, **kw
-            )
+            prf = train_nfold_eval(ts, n_folds=n_folds, **kw)
         else:
             raise ValueError(f"train mode must be 0-3: {mode}")
         if prf is not None:
@@ -1065,14 +1048,21 @@ def _fixture_training_set(
     return build_training_set(docs, spec=spec)
 
 
-def q_train_ner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-epoch training metrics of the distilled NER refit on the full
-    fixture corpus (28 docs): update count falls / online accuracy rises
-    as the learned weights absorb the surrogate decoder."""
-    ts = _fixture_training_set(spark).cache()
+def _q_train_metrics(spark: SparkSession, spec: ModelSpec) -> DataFrame:
+    """Per-epoch training metrics of one model's distilled refit on the
+    full fixture corpus (28 docs): update count falls / online accuracy
+    rises as the learned weights absorb the surrogate decoder. The trainer
+    is generic over ModelSpec; train_medic and train_patient pin two more
+    instantiations, each with its own label space and bit layout (medic:
+    the synthesized 'has_at' email cue, trained-vs-surrogate micro-F1 899
+    at these settings, persname 938 / rolename 920; patient: 14 labels,
+    48 bits with five synthesized word-identity cues, micro-F1 898,
+    persname 939 / address 920)."""
+    ts = _fixture_training_set(spark, spec).cache()
     try:
         _, _, metrics = train(
-            ts, epochs=_Q_EPOCHS, shards=_Q_SHARDS, batch_docs=_Q_BATCH
+            ts, epochs=_Q_EPOCHS, shards=_Q_SHARDS, batch_docs=_Q_BATCH,
+            spec=spec,
         )
     finally:
         ts.unpersist()
@@ -1097,52 +1087,6 @@ def q_train_ner_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ts stays cached until the returned plan is consumed (predict reads
     # it); Spark evicts it with the session — the fixture set is tiny.
     return token_prf(predict(ts, W, T)).orderBy("label")
-
-
-def q_train_medic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-epoch metrics of the MEDIC sub-model refit (MedicParser analog)
-    on the fixture corpus — the trainer is generic over ModelSpec, and
-    this query pins a second instantiation (own label space, own bit
-    layout incl. the synthesized 'has_at' email cue; trained-vs-surrogate
-    micro-F1 899 at these settings, persname 938 / rolename 920)."""
-    spec = SPECS["medic"]()
-    ts = _fixture_training_set(spark, spec).cache()
-    try:
-        _, _, metrics = train(
-            ts, epochs=_Q_EPOCHS, shards=_Q_SHARDS, batch_docs=_Q_BATCH,
-            n_feats=spec.n_feats, n_labels=spec.n_labels,
-        )
-    finally:
-        ts.unpersist()
-    rows = [
-        (m["epoch"], m["n_updates"], m["token_acc_milli"]) for m in metrics
-    ]
-    return spark.createDataFrame(
-        rows, schema="epoch int, n_updates bigint, token_acc_milli bigint"
-    ).orderBy("epoch")
-
-
-def q_train_patient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-epoch metrics of the PATIENT sub-model refit (PatientParser
-    analog) on the fixture corpus — third ModelSpec instantiation (own
-    14-label space, 48-bit layout with five synthesized word-identity
-    cues); trained-vs-surrogate micro-F1 898 at these settings (persname
-    939, address 920)."""
-    spec = SPECS["patient"]()
-    ts = _fixture_training_set(spark, spec).cache()
-    try:
-        _, _, metrics = train(
-            ts, epochs=_Q_EPOCHS, shards=_Q_SHARDS, batch_docs=_Q_BATCH,
-            n_feats=spec.n_feats, n_labels=spec.n_labels,
-        )
-    finally:
-        ts.unpersist()
-    rows = [
-        (m["epoch"], m["n_updates"], m["token_acc_milli"]) for m in metrics
-    ]
-    return spark.createDataFrame(
-        rows, schema="epoch int, n_updates bigint, token_acc_milli bigint"
-    ).orderBy("epoch")
 
 
 def q_train_ner_deploy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1218,10 +1162,14 @@ def q_train_nfold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 OPS = {
-    "train_ner": q_train_ner,
+    "train_ner": lambda spark, sf_dir: _q_train_metrics(spark, _ner_spec()),
     "train_ner_eval": q_train_ner_eval,
-    "train_medic": q_train_medic,
-    "train_patient": q_train_patient,
+    "train_medic": lambda spark, sf_dir: _q_train_metrics(
+        spark, _medic_spec()
+    ),
+    "train_patient": lambda spark, sf_dir: _q_train_metrics(
+        spark, _patient_spec()
+    ),
     "train_ner_deploy": q_train_ner_deploy,
     "train_split_eval": q_train_split_eval,
     "train_nfold": q_train_nfold,

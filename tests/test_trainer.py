@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from grobid_clinical_report_spark import trainer
@@ -129,7 +130,10 @@ def test_shard_pass_matches_naive_reference():
     W0 = rng.integers(-3, 4, size=(_NF, _L)).astype(np.int64)
     T0 = rng.integers(-2, 3, size=(_L, _L)).astype(np.int64)
     for batch_docs in (1, 3, 8):
-        got = trainer.shard_pass(pdf, W0, T0, step=2, batch_docs=batch_docs)
+        got = trainer.shard_pass(
+            pa.Table.from_pandas(pdf, preserve_index=False), W0, T0,
+            step=2, batch_docs=batch_docs,
+        )
         want = _naive_pass(pdf, W0, T0, step=2, batch_docs=batch_docs)
         np.testing.assert_array_equal(got[0], want[0])
         np.testing.assert_array_equal(got[1], want[1])
@@ -360,12 +364,10 @@ def test_sub_specs_train_with_own_layout(spark, fixture_docs_pdf, name,
     ts = trainer.build_training_set(docs, spec=spec).cache()
     pdf = trainer.with_shard(ts, 2).toPandas()
     W_d, T_d, m_d = trainer.train(
-        ts, epochs=2, shards=2, batch_docs=4,
-        n_feats=spec.n_feats, n_labels=spec.n_labels,
+        ts, epochs=2, shards=2, batch_docs=4, spec=spec,
     )
     W_l, T_l, m_l = trainer.train_local(
-        pdf, epochs=2, batch_docs=4,
-        n_feats=spec.n_feats, n_labels=spec.n_labels,
+        pdf, epochs=2, batch_docs=4, spec=spec,
     )
     ts.unpersist()
     assert W_d.shape == (spec.n_feats, spec.n_labels)
@@ -552,3 +554,46 @@ def test_run_training_job_modes_roundtrip(spark, fixture_docs_pdf, tmp_path):
         shards=2, batch_docs=4,
     )
     assert [r["fold"] for r in out3["eval"]] == [0, 1]
+
+
+def test_run_training_job_sub_spec(spark, fixture_docs_pdf, tmp_path):
+    """A sub-spec runs every job mode on its OWN layout: the medic model
+    trains 44-bit x 14-label weights (no NER bias-bit drop, no foreign
+    labels), evaluates them, and its split / n-fold evals score medic
+    labels only — n-fold gold counts every non-'other' MEDIC token once."""
+    from grobid_clinical_report_spark.kernels.labels import MEDIC_LABELS
+    from grobid_clinical_report_spark.schema import DOCUMENTS_SCHEMA
+
+    docs = spark.createDataFrame(fixture_docs_pdf, schema=DOCUMENTS_SCHEMA)
+    corpus = str(tmp_path / "docs")
+    docs.write.parquet(corpus)
+    kw = dict(model="medic", epochs=2, shards=2, batch_docs=4)
+
+    out0 = trainer.run_training_job(spark, corpus, str(tmp_path / "m0"),
+                                    mode=0, **kw)
+    W, T, name = trainer.load_model(out0["weights"])
+    assert name == "medic"
+    assert W.shape == (44, len(MEDIC_LABELS)) == (44, 14)
+    assert T.shape == (14, 14)
+
+    out1 = trainer.run_training_job(spark, corpus, str(tmp_path / "m1"),
+                                    mode=1, weights=out0["weights"], **kw)
+    assert [r["level"] for r in out1["eval"]] == ["field", "token"]
+
+    out2 = trainer.run_training_job(spark, corpus, str(tmp_path / "m2"),
+                                    mode=2, **kw)
+    labels = {r["label"] for r in spark.read.parquet(
+        out2["eval_path"]).collect()}
+    assert "__micro__" in labels
+    assert labels <= set(MEDIC_LABELS) | {"__micro__"}
+
+    out3 = trainer.run_training_job(spark, corpus, str(tmp_path / "m3"),
+                                    mode=3, n_folds=2, **kw)
+    assert [r["fold"] for r in out3["eval"]] == [0, 1]
+    ts = trainer.build_training_set(docs, spec=trainer.SPECS["medic"]())
+    other = MEDIC_LABELS.index("other")
+    total = sum(
+        int((np.asarray(r["gold"]) != other).sum())
+        for r in ts.select("gold").collect()
+    )
+    assert sum(r["n_gold"] for r in out3["eval"]) == total
