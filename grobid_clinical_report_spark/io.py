@@ -2,8 +2,9 @@
 (SURVEY.md §2.1 S1/S5; north rule: Iceberg tables, fanout-aware writes).
 
 The v1 container ships no Iceberg runtime jars, so the format is probed once
-per session and the parquet bucket layout (`bucket=N/` dirs + `_manifest`)
-stands in — it reproduces the two Iceberg properties the design depends on:
+per session and the parquet bucket layout (`bucket=N/` dirs + `_manifest/`,
+one `_done-<bucket>-<run_id>.json` file per committed bucket) stands in — it
+reproduces the two Iceberg properties the design depends on:
   * bucket partition pruning (each job chunk scans 1/N of the data),
   * idempotent overwrite-by-partition (the resume unit).
 On a cluster with Iceberg on the classpath the same calls route to
@@ -67,3 +68,11 @@ def write_spans(
         df.write.mode(mode).option("ignoreNullFields", "false").json(path)
         return
     df.write.mode(mode).parquet(path)
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path``: driver-side file operations on
+    whatever filesystem the job's output lives on (local, HDFS, s3a, …),
+    with no Spark job."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p

@@ -3,56 +3,114 @@
 The 10^12-row job is chunked by `bucket = pmod(hash(doc_id), n_buckets)` —
 the same bucketing an Iceberg `bucket(N, doc_id)` partition spec gives. Each
 bucket is processed and written independently (overwrite-by-partition =
-idempotent), then a manifest row (bucket, status, metrics, lineage) is
-appended. Resume = anti-join of all buckets against `status='done'` manifest
-rows — only missing buckets are recomputed, and rewriting a bucket's output
-directory is idempotent, so a crash between data write and manifest commit
-re-does exactly that bucket (the parquet stand-in for an Iceberg transaction).
+idempotent), then committed: one JSON row holding every MANIFEST_SCHEMA field
+(bucket, status, metrics, lineage, job shape) is written to a dot-prefixed
+temp file and renamed to `_manifest/_done-<bucket>-<run_id>.json` through the
+Hadoop FileSystem API. The rename is the commit point. A commit starts no
+Spark job and needs no lock (each commit owns its file), and the leading `_`
+keeps the rows out of any parquet reader of the directory.
+
+Resume = all buckets minus the 'done' rows, computed on the driver from one
+directory listing (a commit's file name carries its bucket, so none is
+opened; only `check_compatible` reads the rows) — only
+missing buckets are recomputed, and rewriting a bucket's output directory is
+idempotent, so a crash between data write and manifest commit re-does exactly
+that bucket (the parquet stand-in for an Iceberg transaction). Manifests an
+older writer appended as parquet part files still load, resume and pass
+`check_compatible`: their rows are read, with one Spark job, only when such
+files are present.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from .io import hadoop_fs
 from .schema import MANIFEST_SCHEMA
+
+_DONE = "_done-"
 
 
 def manifest_path(output_path: str) -> str:
     return os.path.join(output_path, "_manifest")
 
 
+def _listing(spark: SparkSession, output_path: str) -> tuple:
+    """(fs, [(name, path)] of the per-commit JSON files, whether parquet part
+    files an older writer appended are present) — one directory listing."""
+    fs, d = hadoop_fs(spark, manifest_path(output_path))
+    done, parquet = [], False
+    if fs.exists(d):
+        for st in fs.listStatus(d):
+            path = st.getPath()
+            name = path.getName()
+            if name.startswith(_DONE) and name.endswith(".json"):
+                done.append((name, path))
+            elif not name.startswith(("_", ".")):
+                parquet = True
+    return fs, done, parquet
+
+
+def _parquet_rows(spark: SparkSession, output_path: str) -> list[dict]:
+    """The rows an older writer appended as parquet part files (one job)."""
+    return [
+        r.asDict()
+        for r in spark.read.schema(MANIFEST_SCHEMA)
+        .parquet(manifest_path(output_path))
+        .collect()
+    ]
+
+
+def _rows(spark: SparkSession, output_path: str) -> list[dict]:
+    """Every committed manifest row: the per-commit JSON files, plus the
+    rows of any parquet part files an older writer appended."""
+    fs, done, parquet = _listing(spark, output_path)
+    jio = spark._jvm.java.io
+    rows = []
+    for _, path in done:
+        stream = fs.open(path)
+        try:
+            line = jio.BufferedReader(
+                jio.InputStreamReader(stream, "UTF-8")
+            ).readLine()
+        finally:
+            stream.close()
+        rows.append(json.loads(line))
+    return rows + (_parquet_rows(spark, output_path) if parquet else [])
+
+
 def read_manifest(spark: SparkSession, output_path: str) -> DataFrame:
-    p = manifest_path(output_path)
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(p)
-    except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+    names = MANIFEST_SCHEMA.fieldNames()
+    return spark.createDataFrame(
+        [tuple(r[f] for f in names) for r in _rows(spark, output_path)],
+        MANIFEST_SCHEMA,
+    )
 
 
 def completed_buckets(spark: SparkSession, output_path: str) -> set[int]:
-    m = read_manifest(spark, output_path)
-    return {
-        r["bucket"]
-        for r in m.filter(F.col("status") == "done").select("bucket").collect()
-    }
+    """Done buckets from the listing alone: every JSON file is a 'done'
+    commit named `_done-<bucket>-<run_id>.json`, so none is opened."""
+    _, done, parquet = _listing(spark, output_path)
+    got = {int(name[len(_DONE):].split("-", 1)[0]) for name, _ in done}
+    if parquet:
+        got |= {
+            r["bucket"]
+            for r in _parquet_rows(spark, output_path)
+            if r["status"] == "done"
+        }
+    return got
 
 
 def pending_buckets(
     spark: SparkSession, output_path: str, n_buckets: int
 ) -> list[int]:
-    """All buckets minus completed ones. Expressed as a left_anti join so the
-    same code shape works when the bucket list is itself a table at scale
-    (SURVEY.md §2.8: the resume anti-join)."""
-    all_b = spark.range(n_buckets).select(F.col("id").cast("int").alias("bucket"))
-    done = read_manifest(spark, output_path).filter(
-        F.col("status") == "done"
-    ).select("bucket")
-    rows = all_b.join(done, "bucket", "left_anti").collect()
-    return sorted(r["bucket"] for r in rows)
+    """All buckets minus completed ones — the resume anti-join (SURVEY.md
+    §2.8), on the driver: the bucket list is n_buckets integers."""
+    return sorted(set(range(n_buckets)) - completed_buckets(spark, output_path))
 
 
 def commit_bucket(
@@ -69,25 +127,38 @@ def commit_bucket(
 ) -> None:
     from . import __version__
 
-    row = [
-        (
-            int(bucket),
-            "done",
-            int(n_docs),
-            int(n_spans),
-            int(n_quarantined),
-            float(wall_sec),
-            input_path,
-            __version__,
-            run_id,
-            str(config["mode"]),
-            int(config["n_buckets"]),
-            int(config["max_spans"]),
+    row = dict(
+        zip(
+            MANIFEST_SCHEMA.fieldNames(),
+            (
+                int(bucket),
+                "done",
+                int(n_docs),
+                int(n_spans),
+                int(n_quarantined),
+                float(wall_sec),
+                input_path,
+                __version__,
+                run_id,
+                str(config["mode"]),
+                int(config["n_buckets"]),
+                int(config["max_spans"]),
+            ),
         )
-    ]
-    spark.createDataFrame(row, MANIFEST_SCHEMA).write.mode("append").parquet(
-        manifest_path(output_path)
     )
+    fs, d = hadoop_fs(spark, manifest_path(output_path))
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    name = f"{_DONE}{int(bucket)}-{run_id}.json"
+    tmp = Path(d, f".{name}.tmp")
+    out = fs.create(tmp, True)
+    try:
+        # json.dumps escapes every non-ASCII character, so the line is ASCII
+        # and writeBytes (one byte per char) writes it exactly
+        out.writeBytes(json.dumps(row) + "\n")
+    finally:
+        out.close()
+    if not fs.rename(tmp, Path(d, name)):
+        raise OSError(f"manifest commit of bucket {bucket} failed: {name}")
 
 
 def check_compatible(
@@ -98,21 +169,15 @@ def check_compatible(
     output directory holds a DIFFERENT job's buckets — resuming would skip
     'done' buckets computed under other semantics and silently mix outputs.
     """
-    m = read_manifest(spark, output_path).filter(F.col("status") == "done")
-    rows = (
-        m.select("mode", "n_buckets", "max_spans", "input_path")
-        .distinct()
-        .collect()
+    want = (
+        config["mode"],
+        int(config["n_buckets"]),
+        int(config["max_spans"]),
+        config["input_path"],
     )
-    for r in rows:
+    for r in _rows(spark, output_path):
         got = (r["mode"], r["n_buckets"], r["max_spans"], r["input_path"])
-        want = (
-            config["mode"],
-            int(config["n_buckets"]),
-            int(config["max_spans"]),
-            config["input_path"],
-        )
-        if got != want:
+        if r["status"] == "done" and got != want:
             raise ValueError(
                 "resume=True but the committed manifest was produced by an "
                 f"incompatible job: committed {got}, requested {want}. "
@@ -121,11 +186,10 @@ def check_compatible(
 
 
 def reset(spark: SparkSession, output_path: str) -> None:
-    """Clear the manifest (full-recompute entry point): overwrite with an
-    empty dataset so stale 'done' rows can't shadow the new run."""
-    spark.createDataFrame([], MANIFEST_SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(manifest_path(output_path))
+    """Clear the manifest (full-recompute entry point): delete the directory
+    so stale 'done' rows can't shadow the new run."""
+    fs, d = hadoop_fs(spark, manifest_path(output_path))
+    fs.delete(d, True)
 
 
 def new_run_id() -> str:

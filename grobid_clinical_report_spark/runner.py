@@ -9,14 +9,26 @@ Scale design (the 100 TB story):
 - **Guardrails (S4)**: documents over `max_spans` go to a quarantine sink with
   a metric row instead of poisoning a task (the reference rejects >300k-block
   PDFs for the same reason, MedicalReportSegmenterParser.java:136-139,250-253).
-- **Skew**: the extraction cost is ~linear in span count, so instead of
-  hash-partitioning blindly we split each bucket into a salted number of
-  tasks: heavy docs (top size tier) are spread round-robin by a salt derived
-  from hash(doc_id) so no task gets two whales; AQE can't help a map-only
+- **Size pass**: one job per run (a groupBy over the pending buckets) returns
+  each bucket's admitted doc and span counts and how many rows it
+  quarantines. The counts size each bucket's partitioning before anything
+  pays to move data. A bucket with nothing to quarantine writes its empty
+  quarantine file from the driver (no second scan, no Spark job); only a
+  bucket that quarantines rows scans for them again. The pass returns
+  counts only, so no input, however malformed, can grow its aggregation
+  buffers or its collected result.
+- **Skew**: the extraction cost is ~linear in span count. Each bucket is
+  salted into k partitions, one per mapper batch of admitted input
+  (pipeline's coalescing caps), at most ``tasks``: the header path pays a
+  fixed cost per batch, so a small bucket runs as one task. Heavy docs
+  (top size tier) are spread round-robin over the k salts so no task gets
+  two whales while there are salts to spare; AQE can't help a map-only
   stage, salting at the repartition does.
-- **Shuffle count**: exactly one repartition per bucket (to spread work);
-  the cascade itself is a single mapInArrow — no other exchange.
-- **Resume**: per-bucket overwrite + manifest append (see manifest.py).
+- **Shuffle count**: one repartition per bucket plus the size pass's
+  aggregate (one row per bucket and map task); the cascade itself is a
+  single mapInArrow — no other exchange.
+- **Resume**: per-bucket overwrite + one manifest file per commit (see
+  manifest.py).
 """
 
 from __future__ import annotations
@@ -24,11 +36,11 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import manifest as mf
-from .pipeline import run_mode
+from .pipeline import _COALESCE_DOCS, _COALESCE_SPANS, run_mode
 
 DEFAULT_MAX_SPANS = 50_000
 HEAVY_SPANS = 5_000
@@ -52,20 +64,34 @@ def split_guardrail(
     at corpus scale a bad input line must stay visible and counted, not
     vanish. They sit in `_quarantine` as evidence; process_quarantined's
     size() filters skip them (they cannot be re-processed)."""
-    n = F.size("spans")
-    malformed = F.isnull("spans") | F.isnull("doc_id")
-    return (
-        df.filter(~malformed & (n <= max_spans)),
-        df.filter(malformed | (n > max_spans)),
-    )
+    ok = _admitted(max_spans)
+    return df.filter(ok), df.filter(~ok)
+
+
+def _n_spans() -> Column:
+    """size(spans), read through one leaf: `spans.offset` is null exactly
+    when `spans` is and has the same length, so a plan that needs only span
+    counts (the size pass) scans the offsets, not the span text."""
+    return F.size("spans.offset")
+
+
+def _admitted(max_spans: int) -> Column:
+    """The guardrail predicate: well-formed and at most ``max_spans`` spans.
+    Never null — a malformed row is False before the size is read — so its
+    negation is exactly the quarantine side."""
+    malformed = F.isnull("spans.offset") | F.isnull("doc_id")
+    return ~malformed & (_n_spans() <= max_spans)
 
 
 def salt_partition(df: DataFrame, tasks: int) -> DataFrame:
     """Spread documents across ``tasks`` partitions with whale spreading.
 
-    Light docs hash anywhere. Heavy docs (> HEAVY_SPANS spans) get a TRUE
-    round-robin salt — row_number over the (small, guardrail-bounded) heavy
-    id set, mod ``tasks`` — broadcast-joined back, so heavy docs are spread
+    Light docs hash anywhere, by a hash independent of with_bucket's: with
+    the bucket hash, every light doc of a bucket would get a salt congruent
+    to the bucket mod gcd(tasks, n_buckets) and pile into a few partitions.
+    Heavy docs (> HEAVY_SPANS spans) get a TRUE round-robin salt —
+    row_number over the (small, guardrail-bounded) heavy id set, mod
+    ``tasks`` — broadcast-joined back, so heavy docs are spread
     evenly across salt values (≤ ceil(H/tasks) whales per salt, not the
     independent-hash collisions of round 1). The salt→partition step is
     still a hash partitioning, so co-location of two salts is possible but
@@ -80,6 +106,9 @@ def salt_partition(df: DataFrame, tasks: int) -> DataFrame:
     heavy_ids = (
         df.filter(F.size("spans") > HEAVY_SPANS)
         .select("doc_id")
+        # one salt per id: a duplicated heavy doc_id must not multiply its
+        # rows in the join below
+        .distinct()
         .withColumn(
             # partition key is constant-but-non-foldable: the heavy set is
             # guardrail-bounded so one partition is safe, and an explicit
@@ -100,7 +129,7 @@ def salt_partition(df: DataFrame, tasks: int) -> DataFrame:
         "_salt",
         F.coalesce(
             F.col("_heavy_salt").cast("long"),
-            F.pmod(F.xxhash64("doc_id"), F.lit(tasks)),
+            F.pmod(F.hash("doc_id"), F.lit(tasks)),
         ),
     )
     return salted.repartition(tasks, "_salt").drop("_salt", "_heavy_salt")
@@ -132,7 +161,7 @@ def stage_bucketed_input(
     silently drop every document in buckets >= n_buckets."""
     import json
 
-    from .io import read_documents
+    from .io import hadoop_fs, read_documents
 
     # The sidecar goes through Spark / the Hadoop FileSystem API — the
     # staged data lives on whatever filesystem `staged_path` names (HDFS,
@@ -144,9 +173,7 @@ def stage_bucketed_input(
     marker = os.path.join(staged_path, "_SUCCESS")
     meta_dir = os.path.join(staged_path, "_STAGING_META")
     want_meta = {"n_buckets": n_buckets, "input_path": input_path}
-    jvm = spark._jvm
-    jmarker = jvm.org.apache.hadoop.fs.Path(marker)
-    fs = jmarker.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jmarker = hadoop_fs(spark, marker)
     if not force and fs.exists(jmarker):
         try:
             have_meta = json.loads(
@@ -183,13 +210,17 @@ def run_extraction_job(
 ) -> dict:
     """End-to-end batch job with per-bucket checkpointing.
 
-    Buckets run through a driver-side thread pool (``max_concurrent`` Spark
-    jobs in flight): Spark schedules concurrent jobs from multiple driver
-    threads, so the cluster never idles between per-bucket jobs the way the
-    round-2 sequential loop did (scheduling gaps + per-job overhead at 256
-    buckets). Manifest appends are serialized under a lock — two jobs
-    sharing one parquet append path would race in the output-committer
-    temporary directory; the append itself is milliseconds.
+    One size pass over the pending buckets (see _size_pass) sizes each
+    bucket's partitioning and counts its quarantine. Buckets then run through
+    a driver-side thread pool (``max_concurrent`` Spark jobs in flight):
+    Spark schedules concurrent jobs from multiple driver threads, so the
+    cluster never idles between per-bucket jobs the way the round-2
+    sequential loop did (scheduling gaps + per-job overhead at 256
+    buckets). Each bucket thread labels its jobs ``"<mode> bucket=<b>"``
+    in the Spark UI, and restores the label it found. A clean bucket's empty
+    quarantine and every manifest commit are driver-side file writes
+    through the Hadoop FileSystem API: they start no Spark job and run in
+    parallel, and the lock guards only the concurrency counters.
 
     ``stage_buckets=True`` materializes a bucket-partitioned copy of the
     input first (stage_bucketed_input) so each bucket job scans 1/N of the
@@ -213,7 +244,8 @@ def run_extraction_job(
     from .io import read_documents, write_spans
 
     run_id = mf.new_run_id()
-    tasks = tasks_per_bucket or spark.sparkContext.defaultParallelism
+    sc = spark.sparkContext
+    tasks = tasks_per_bucket or sc.defaultParallelism
     if stage_buckets:
         staged = os.path.join(output_path, "_staged_input")
         stage_bucketed_input(
@@ -247,6 +279,15 @@ def run_extraction_job(
         mf.reset(spark, output_path)
         pending = list(range(n_buckets))
 
+    sizes = {}
+    if pending:
+        caller_label = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"{mode} size pass")
+        try:
+            sizes = _size_pass(docs, pending, max_spans)
+        finally:
+            sc.setJobDescription(caller_label)
+
     lock = threading.Lock()
     state = {"active": 0, "peak": 0}
 
@@ -254,11 +295,20 @@ def run_extraction_job(
         with lock:
             state["active"] += 1
             state["peak"] = max(state["peak"], state["active"])
+        thread_label = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"{mode} bucket={b}")
         try:
             t0 = time.monotonic()
+            size = sizes.get(b, _EMPTY_BUCKET)
             chunk = docs.filter(F.col("bucket") == b).drop("bucket")
             ok, bad = split_guardrail(chunk, max_spans)
-            ok = salt_partition(ok, tasks)
+            # one task per mapper batch of input, at most `tasks`: the
+            # header path pays a fixed cost per batch
+            k = max(
+                -(-size["docs"] // _COALESCE_DOCS),
+                -(-size["spans"] // _COALESCE_SPANS),
+            )
+            ok = salt_partition(ok, min(max(k, 1), tasks))
 
             extracted = (
                 extract_fn(ok) if extract_fn is not None
@@ -278,21 +328,24 @@ def run_extraction_job(
 
             # quarantine is ALWAYS (over)written — an empty dataset when
             # clean — so a re-run with a raised max_spans can't leave stale
-            # whale rows
+            # whale rows. The size pass counted it: a clean bucket writes
+            # its empty file from the driver, with no second scan
             q_dir = os.path.join(output_path, "_quarantine", f"bucket={b}")
-            q_obs = Observation()
-            bad.select("doc_id", F.size("spans").alias("n_spans")).observe(
-                q_obs, F.count(F.lit(1)).alias("n")
-            ).write.mode("overwrite").parquet(q_dir)
-            n_quarantined = q_obs.get["n"]
+            n_quarantined = size["quarantined"]
+            if n_quarantined:
+                bad.select("doc_id", _n_spans().alias("n_spans")).write.mode(
+                    "overwrite"
+                ).parquet(q_dir)
+            else:
+                _write_empty_quarantine(spark, q_dir)
 
-            with lock:  # serialize the tiny manifest append
-                mf.commit_bucket(
-                    spark, output_path, b, n_docs, n_spans, n_quarantined,
-                    time.monotonic() - t0, input_path, run_id, config,
-                )
+            mf.commit_bucket(
+                spark, output_path, b, n_docs, n_spans, n_quarantined,
+                time.monotonic() - t0, input_path, run_id, config,
+            )
             return int(n_docs), int(n_spans), int(n_quarantined)
         finally:
+            sc.setJobDescription(thread_label)
             with lock:
                 state["active"] -= 1
 
@@ -309,6 +362,56 @@ def run_extraction_job(
     totals["wall_sec"] = time.monotonic() - t_all
     totals["peak_concurrency"] = state["peak"]
     return totals
+
+
+# a bucket the size pass saw no row of
+_EMPTY_BUCKET = {"docs": 0, "spans": 0, "quarantined": 0}
+
+
+def _size_pass(docs: DataFrame, pending: list[int], max_spans: int) -> dict:
+    """One job over the pending buckets → {bucket: {docs, spans,
+    quarantined}}: the admitted doc and span counts, and how many rows
+    split_guardrail quarantines (the malformed and over-``max_spans``
+    ones). Counts only, so the aggregation and the collected result stay
+    one small row per bucket however many rows a bad input sends to the
+    quarantine. Buckets with no rows are absent."""
+    ok = _admitted(max_spans)
+    n = _n_spans()
+    rows = (
+        docs.filter(F.col("bucket").isin(pending))
+        .groupBy("bucket")
+        .agg(
+            F.count_if(ok).alias("docs"),
+            F.sum(F.when(ok, n).otherwise(0)).alias("spans"),
+            F.count_if(~ok).alias("quarantined"),
+        )
+        .collect()
+    )
+    return {r["bucket"]: r.asDict() for r in rows}
+
+
+def _write_empty_quarantine(spark: SparkSession, q_dir: str) -> None:
+    """Overwrite one bucket's quarantine with a single empty parquet file of
+    the (doc_id, n_spans) schema, written from the driver through the
+    Hadoop FileSystem API: no Spark job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from .io import hadoop_fs
+
+    buf = pa.BufferOutputStream()
+    pq.write_table(
+        pa.table({"doc_id": pa.array([], pa.string()),
+                  "n_spans": pa.array([], pa.int32())}),
+        buf,
+    )
+    fs, d = hadoop_fs(spark, q_dir)
+    fs.delete(d, True)
+    out = fs.create(spark._jvm.org.apache.hadoop.fs.Path(d, "part-0.parquet"))
+    try:
+        out.write(bytearray(buf.getvalue().to_pybytes()))
+    finally:
+        out.close()
 
 
 def read_extracted(spark: SparkSession, output_path: str) -> DataFrame:

@@ -34,7 +34,7 @@ def stream_extract(
     """Start (and return) an availableNow streaming query: processes every
     file currently in ``input_dir`` that the checkpoint hasn't seen, then
     stops. Re-running continues where the checkpoint left off — the
-    streaming-native equivalent of the manifest anti-join resume."""
+    streaming-native equivalent of the batch job's manifest resume."""
     checkpoint_dir = checkpoint_dir or os.path.join(output_dir, "_checkpoint")
     stream = (
         spark.readStream.schema(DOCUMENTS_SCHEMA)

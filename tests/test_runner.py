@@ -75,11 +75,18 @@ def test_job_runs_and_resumes_idempotently(spark, input_path, tmp_path):
     spark.createDataFrame(pdf, mf.MANIFEST_SCHEMA).write.parquet(
         mf.manifest_path(out)
     )
+    # these parquet rows are the format an older writer appended: they
+    # still refuse an incompatible job
+    with pytest.raises(ValueError, match="incompatible"):
+        runner.run_extraction_job(
+            spark, input_path, out, n_buckets=4, max_spans=400
+        )
 
     m2 = runner.run_extraction_job(
         spark, input_path, out, n_buckets=4, max_spans=500
     )
     assert m2["buckets_run"] == 1  # only the missing bucket
+    assert mf.completed_buckets(spark, out) == {0, 1, 2, 3}
     second = {
         r["doc_id"]: r["spans"]
         for r in runner.read_extracted(spark, out).collect()
@@ -493,3 +500,171 @@ def test_trained_weights_serve_extraction(spark, input_path, tmp_path):
             spark, input_path, str(tmp_path / "x"), mode="ner",
             n_buckets=3, extract_fn=fn,
         )
+
+
+def test_salt_partition_spreads_a_buckets_light_docs(spark, input_path):
+    """Light docs are salted by a hash independent of with_bucket's: a
+    bucket's chunk salted with ``tasks`` dividing ``n_buckets`` spreads over
+    more than one partition. With the bucket hash as the salt, every light
+    doc of bucket b got salt b mod gcd(tasks, n_buckets): one partition."""
+    chunk = (
+        runner.with_bucket(spark.read.parquet(input_path), 4)
+        .filter(F.col("bucket") == 1)
+        .drop("bucket")
+    )
+    light = runner.salt_partition(chunk, 4).filter(
+        F.size("spans") <= runner.HEAVY_SPANS
+    )
+    pids = [r[0] for r in light.select(F.spark_partition_id()).collect()]
+    assert len(pids) >= 4 and len(set(pids)) > 1
+
+
+def _docs(spark, rows, path):
+    from grobid_clinical_report_spark.schema import DOCUMENTS_DDL
+
+    spark.createDataFrame(
+        [
+            (doc_id, None if n is None else datagen._with_offsets(
+                [("text", f"Ligne {i} du compte rendu", None)
+                 for i in range(n)]
+            ))
+            for doc_id, n in rows
+        ],
+        DOCUMENTS_DDL,
+    ).write.parquet(path)
+
+
+def test_job_output_and_quarantine_hold_every_row_once(spark, tmp_path):
+    """Exactly once at the job level: every input row lands once in the
+    output or the quarantine, as a multiset of doc_id (None included), with
+    duplicate ids, malformed rows (thousands: the size pass only counts a
+    bucket's quarantine), an empty doc, docs at and just over the
+    guardrail, and admitted heavy docs (one duplicated) that take
+    salt_partition's round-robin salt inside the job."""
+    from collections import Counter
+
+    cap = runner.HEAVY_SPANS + 2
+    malformed = [(f"bad-{i}", None) for i in range(3000)]
+    rows = [
+        ("dup", 3), ("dup", 3),
+        ("heavy", runner.HEAVY_SPANS + 1), ("heavy", runner.HEAVY_SPANS + 1),
+        ("null-spans", None), (None, 2),
+        ("empty", 0),
+        ("at-cap", cap), ("over-cap", cap + 1),
+    ] + [(f"doc-{i}", 1 + i % 7) for i in range(12)] + malformed
+    inp = str(tmp_path / "docs.parquet")
+    _docs(spark, rows, inp)
+
+    out = str(tmp_path / "out")
+    m = runner.run_extraction_job(
+        spark, inp, out, mode="extract_header", n_buckets=4, max_spans=cap
+    )
+
+    got_out = [r["doc_id"] for r in runner.read_extracted(spark, out).collect()]
+    q = spark.read.parquet(os.path.join(out, "_quarantine", "bucket=*"))
+    got_q = [r["doc_id"] for r in q.collect()]
+    assert Counter(got_out + got_q) == Counter(d for d, _ in rows)
+    want_q = [("null-spans", None), (None, 2), ("over-cap", cap + 1)]
+    assert sorted(map(tuple, q.select("doc_id", "n_spans").collect()),
+                  key=str) == sorted(want_q + malformed, key=str)
+    assert (m["docs"], m["quarantined"]) == (len(got_out), 3 + len(malformed))
+
+
+def test_manifest_calls_start_no_spark_job(spark, tmp_path):
+    """Commit, pending, the compatibility check and reset run on the driver
+    through the Hadoop FileSystem API: no Spark job."""
+    out = str(tmp_path / "out")
+    config = {"mode": "extract_full", "n_buckets": 4, "max_spans": 500,
+              "input_path": "in"}
+    sc = spark.sparkContext
+
+    def jobs_of(group, calls):
+        sc.setJobGroup(group, group)
+        try:
+            calls()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    def commit_and_check():
+        for b in (0, 2):
+            mf.commit_bucket(
+                spark, out, b, 10 + b, 100 + b, b, 0.5, "in", "run-t", config
+            )
+        assert mf.pending_buckets(spark, out, 4) == [1, 3]
+        mf.check_compatible(spark, out, config)
+        with pytest.raises(ValueError, match="incompatible"):
+            mf.check_compatible(spark, out, {**config, "max_spans": 400})
+
+    def reset():
+        mf.reset(spark, out)
+        assert mf.pending_buckets(spark, out, 4) == [0, 1, 2, 3]
+
+    assert not jobs_of("manifest-commit", commit_and_check)
+    assert [
+        (r["bucket"], r["n_docs"], r["n_spans"], r["n_quarantined"],
+         r["mode"], r["max_spans"])
+        for r in sorted(mf.read_manifest(spark, out).collect())
+    ] == [(0, 10, 100, 0, "extract_full", 500),
+          (2, 12, 102, 2, "extract_full", 500)]
+    assert not jobs_of("manifest-reset", reset)
+    # the group does see a job
+    assert jobs_of("manifest-count", lambda: spark.range(3).count())
+
+
+def test_concurrent_commits_lose_no_bucket(spark, tmp_path):
+    """Commits are no longer serialized: many threads committing at once,
+    more threads than cores and a short switch interval, must each leave
+    their bucket done."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    out = str(tmp_path / "out")
+    n = 48
+    config = {"mode": "m", "n_buckets": n, "max_spans": 1, "input_path": "in"}
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as ex:
+            futures = [
+                ex.submit(mf.commit_bucket, spark, out, b, 1, 1, 0, 0.0,
+                          "in", "run-c", config)
+                for b in range(n)
+            ]
+            for f in futures:
+                f.result(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert mf.pending_buckets(spark, out, n) == []
+    mf.check_compatible(spark, out, config)
+
+
+def test_jobs_carry_mode_and_bucket_labels(spark, input_path, tmp_path,
+                                           monkeypatch):
+    """Each bucket's jobs are labelled "<mode> bucket=<b>", the size pass
+    "<mode> size pass", and afterwards the caller's own label is back."""
+    sc = spark.sparkContext
+    seen = []
+    real_size_pass = runner._size_pass
+
+    def size_pass(*args):
+        seen.append(sc.getLocalProperty("spark.job.description"))
+        return real_size_pass(*args)
+
+    def extract(df):
+        seen.append(sc.getLocalProperty("spark.job.description"))
+        return df
+
+    monkeypatch.setattr(runner, "_size_pass", size_pass)
+    sc.setJobDescription("caller's label")
+    try:
+        runner.run_extraction_job(
+            spark, input_path, str(tmp_path / "out"), mode="ner",
+            n_buckets=3, max_spans=500, extract_fn=extract, job_tag="labels",
+        )
+        assert seen[0] == "ner size pass"
+        assert sorted(seen[1:]) == [f"ner bucket={b}" for b in range(3)]
+        assert sc.getLocalProperty("spark.job.description") == "caller's label"
+    finally:
+        sc.setJobDescription(None)
