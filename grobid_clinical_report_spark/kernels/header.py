@@ -19,8 +19,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from . import subparsers as sub_k
 from .labels import HEADER_LABELS, label_index, sticky_transitions
 from .normalize import normalize_text, to_iso_date
+from .subparsers import EMPTY_SPANS as _EMPTY
 from .viterbi import viterbi_segments
 from .segments import seg_starts
 
@@ -183,8 +185,6 @@ def merge_header_fields(df: pd.DataFrame) -> pd.DataFrame:
 # C2 enrichment cascade (HeaderMedicalParser.java:110-198)
 # ---------------------------------------------------------------------------
 
-_EMPTY = pd.DataFrame(columns=["doc_id", "kind", "text", "media_ref", "offset"])
-
 # language-id markers for the 200-char body sample
 # (HeaderMedicalParser.java:121-147; the reference defaults to 'fr' and its
 # languageUtilities call never overrides it — we keep the fr default but make
@@ -204,25 +204,8 @@ def _subparse_fields(fields: pd.DataFrame, labeler, prefix: str) -> pd.DataFrame
     """
     if fields.empty:
         return _EMPTY
-    from . import subparsers as sub_k
-    from .tokenize import assign_blocks_pages, explode_tokens
-
-    sub = pd.DataFrame(
-        {
-            "doc_id": fields["doc_id"].to_numpy(),
-            "kind": "text",
-            "text": fields["text"].to_numpy(),
-            "media_ref": None,
-            "offset": fields["offset"].to_numpy(),
-        }
-    )
-    sub = assign_blocks_pages(sub)
-    toks = explode_tokens(sub)
-    if toks.empty:
-        return _EMPTY
-    toks = sub_k.token_features(toks)
-    toks["label"] = labeler(toks)
-    out = sub_k.tokens_to_spans(toks)
+    # each field text is one line of the token path
+    out = sub_k.token_spans(fields[["doc_id", "text", "offset"]], labeler)
     if out.empty:
         return _EMPTY
     out["kind"] = prefix + out["kind"]
@@ -237,8 +220,6 @@ def _dateline_fallback(spans: pd.DataFrame) -> pd.DataFrame:
     dl = spans[spans["kind"].eq("dateline")]
     if dl.empty:
         return _EMPTY
-    from . import subparsers as sub_k
-
     parsed = _subparse_fields(dl, sub_k.parse_dateline_tokens, "")
     if parsed.empty:
         return _EMPTY
@@ -335,14 +316,11 @@ def enrich_header_fields(
 
     ``lines`` must carry the zone column (for the body language sample and
     page counting); ``spans`` is merge_header_fields output. Everything is
-    column-vectorized; the sub-models reuse the exact token kernels the
-    string endpoints use (composition, not reimplementation).
+    column-vectorized; the sub-models run the string endpoints' own token
+    path (subparsers.token_spans — composition, not reimplementation).
     """
     if spans.empty:
         return spans
-    from . import subparsers as sub_k
-    from .cluster import group_join
-
     parts = [spans, _dateline_fallback(spans)]
     parts.append(
         _subparse_fields(

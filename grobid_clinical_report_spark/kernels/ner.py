@@ -17,10 +17,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from .labels import NER_LABELS, label_index, sticky_transitions
-from .segments import seg_starts
-from .subparsers import tokens_to_spans
-from .viterbi import viterbi_segments
+from .cluster import rle_cluster_ids
+from .labels import NER_LABELS, label_index
+from .subparsers import _decode, line_opens, tokens_to_spans
 
 _IX = label_index(NER_LABELS)
 
@@ -45,7 +44,7 @@ def ner_emissions(t: pd.DataFrame) -> np.ndarray:
     # is half of even f32 (this kernel feeds the corpus-NER hot loop on a
     # bandwidth-bound box; confidence margins are halved back to the
     # original scale in ner_entities). Transitions double in lockstep:
-    # label_ner_tokens/ner_entities pass stay=4.0 (= 2 × the modeled 2.0).
+    # label_ner_tokens decodes with stay=4.0 (= 2 × the modeled 2.0).
     em = np.zeros((len(t), len(NER_LABELS)), dtype=np.int16)
 
     def w(x: float) -> np.int16:
@@ -121,27 +120,9 @@ def ner_emissions(t: pd.DataFrame) -> np.ndarray:
 
 
 def label_ner_tokens(t: pd.DataFrame) -> pd.Series:
-    em = ner_emissions(t)
     # stay=4.0 = 2 × the modeled 2.0: transitions scale with the doubled
     # int16 emissions so every path comparison is unchanged
-    trans = sticky_transitions(NER_LABELS, stay=4.0)
-    starts = seg_starts(t["line_key"].to_numpy())
-    flat = viterbi_segments(em, starts, trans)
-    # Categorical: the decoded CODES flow straight through (rle_cluster_ids
-    # has a codes fast path); strings materialize only at the span level
-    return pd.Series(
-        pd.Categorical.from_codes(flat, NER_LABELS), index=t.index
-    )
-
-
-def ner_spans(t: pd.DataFrame) -> pd.DataFrame:
-    """Entities as flat spans [doc_id, kind, text, media_ref, offset].
-
-    Mutates `t` (adds the label column): the only caller (pipeline.flat_ner)
-    owns its freshly-built token frame, and a defensive deep copy of the
-    ~50-column corpus-sized frame costs ~6% of the NER wall."""
-    t["label"] = label_ner_tokens(t)
-    return tokens_to_spans(t, drop=("other",))
+    return _decode(t, ner_emissions(t), NER_LABELS, stay=4.0)
 
 
 def ner_entities(t: pd.DataFrame) -> pd.DataFrame:
@@ -153,40 +134,31 @@ def ner_entities(t: pd.DataFrame) -> pd.DataFrame:
     the best alternative, squashed to 0..1000 (margin/(1+margin) milli) —
     the deterministic analog of the CRF's posterior confidence: gazetteer
     hits (strong emissions) score high, weak contextual attachments low.
+    ``t`` is not modified.
     """
-    t = t.copy()
     em = ner_emissions(t)
-    trans = sticky_transitions(NER_LABELS, stay=4.0)  # 2 × 2.0, see above
-    starts = seg_starts(t["line_key"].to_numpy())
-    flat_lab = viterbi_segments(em, starts, trans)
-    t["label"] = pd.Series(
-        pd.Categorical.from_codes(flat_lab, NER_LABELS), index=t.index
-    )
+    label = _decode(t, em, NER_LABELS, stay=4.0)  # as label_ner_tokens
+    codes = label.cat.codes.to_numpy()[:, None]
     # per-token margin: emission of the decoded label minus the best OTHER
     # emission (negative when the transition prior carried the token).
     # Emissions are 2×-scaled int16 — mask with the int sentinel, then
     # halve back to the modeled scale (exact: margins are small integers)
-    decoded_em = np.take_along_axis(em, flat_lab[:, None], axis=1)[:, 0]
+    decoded_em = np.take_along_axis(em, codes, axis=1)[:, 0]
     masked = em.copy()
-    np.put_along_axis(
-        masked, flat_lab[:, None], np.iinfo(np.int16).min >> 1, axis=1
-    )
-    margin = (
-        decoded_em.astype(np.float64) - masked.max(axis=1)
-    ) / 2.0
-    t["_margin"] = np.clip(margin, 0.0, None)
+    np.put_along_axis(masked, codes, np.iinfo(np.int16).min >> 1, axis=1)
+    margin = (decoded_em.astype(np.float64) - masked.max(axis=1)) / 2.0
 
-    flat = tokens_to_spans(t, drop=("other",), with_char_offsets=True)
-    # mean margin over each entity's tokens (clusters are contiguous)
-    from .cluster import rle_cluster_ids
-
-    d = t
-    cl = rle_cluster_ids(d["line_key"], d["label"])
-    cstarts = seg_starts(cl)
-    sums = np.add.reduceat(d["_margin"].to_numpy(), cstarts)
-    sizes = np.diff(np.append(cstarts, len(d)))
-    keep = ~d["label"].iloc[cstarts].isin(["other"]).to_numpy()
-    mean_margin = (sums / sizes)[keep]
+    d = t.copy(deep=False)
+    d["label"] = label
+    flat = tokens_to_spans(d, with_char_offsets=True)
+    # mean margin over each entity's tokens: the same clusters
+    # tokens_to_spans builds, in order, minus the 'other' ones it drops
+    cl = rle_cluster_ids(d["doc_id"], label, break_before=line_opens(d))
+    sums = np.bincount(cl, weights=np.clip(margin, 0.0, None))
+    sizes = np.bincount(cl)
+    kind = np.empty(len(sizes), dtype=codes.dtype)
+    kind[cl] = codes[:, 0]
+    mean_margin = (sums / sizes)[kind != _IX["other"]]
     conf = np.floor(
         1000.0 * mean_margin / (1.0 + mean_margin)
     ).astype(np.int64)

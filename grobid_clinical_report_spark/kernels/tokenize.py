@@ -199,17 +199,19 @@ def _np_parts(uniq):
     return pa.ListArray.from_arrays(pa.array(list_offs, type=pa.int32()), values)
 
 
-def explode_tokens(
-    lines: pd.DataFrame, text_col: str = "text", drop_text: bool = False
-) -> pd.DataFrame:
-    """Flat lines DataFrame → flat tokens DataFrame.
+def explode_tokens(lines: pd.DataFrame) -> pd.DataFrame:
+    """Flat lines DataFrame → flat tokens DataFrame, one row per token.
 
-    Input columns: at least [doc_id, seq, text]; output adds:
+    Input columns: at least [text]; every other input column passes through
+    onto the line's tokens, and ``text`` itself does not (token readers use
+    tok/gap). Output adds:
       tok      — the token string,
       gap      — the raw text between the previous token and this one (so any
                  token-range span can reconstruct its exact source substring:
                  first tok + Σ(gap_i + tok_i) — no per-row slicing needed),
-      tok_idx  — position within the line.
+      tok_idx  — position within the input row: a line opens where
+                 tok_idx == 0 (subparsers.line_starts),
+      tok_start/tok_end — char offsets within the line.
 
     Fully Arrow-vectorized: every token match is bracketed with a \\x00
     sentinel (one RE2 replace), the line splits on the sentinel into an
@@ -218,20 +220,14 @@ def explode_tokens(
     tokens from gaps (pandas str.findall was a per-row Python re loop, the
     former tokenizer hotspot). tok/gap come back ARROW-BACKED (no object
     materialization; downstream arr_of calls are zero-copy).
-
-    ``drop_text``: skip replicating the line-text column onto every token
-    row — the extraction token models never read it (pipeline's
-    _content_tokens audit), and carrying it through the per-token take +
-    later frame rebuilds was pure waste. Default False: corpus_import and
-    the tests rely on the pass-through.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
 
     from . import arrowtext as at
-    from .segments import seg_position, seg_starts
+    from .segments import seg_cumsum, seg_position, seg_starts
 
-    arr = at.arr_of(lines[text_col])
+    arr = at.arr_of(lines["text"])
     arr = pc.coalesce(arr, "")
     # dictionary-encode first: the TOKEN_RE bracketing pass (the big RE2
     # alternation, this kernel's dominant cost) runs over the ~60%-unique
@@ -278,8 +274,8 @@ def explode_tokens(
     parts = parts_u.take(codes)
     flat = pc.list_flatten(parts)
     parent = pc.list_parent_indices(parts).to_numpy(zero_copy_only=False)
-    n_flat = len(flat)
-    pos = seg_position(seg_starts(parent), n_flat)
+    pstarts = seg_starts(parent)
+    pos = seg_position(pstarts, len(flat))
     is_tok = (pos % 2) == 1  # odd positions are the bracketed matches
 
     tok_idx_flat = np.flatnonzero(is_tok)
@@ -299,19 +295,11 @@ def explode_tokens(
     gaps_arr = flat.take(pa.array(kept_idx - 1))  # element before = gap
     parents = parent[kept_idx]
 
-    src = lines.drop(columns=[text_col]) if drop_text else lines
-    out = src.reset_index(drop=True).take(parents).reset_index(drop=True)
+    src = lines.drop(columns=["text"]).reset_index(drop=True)
+    out = src.take(parents).reset_index(drop=True)
     out["tok"] = at.series_of(toks_arr, index=out.index)
     out["gap"] = at.series_of(gaps_arr, index=out.index)
-    doc = out["doc_id"].to_numpy()
-    if not np.issubdtype(doc.dtype, np.integer):
-        doc = pd.factorize(doc)[0]
-    out["line_key"] = doc.astype(np.int64) * (1 << 22) + out["seq"].to_numpy()
-
-    from .segments import seg_cumsum, seg_position, seg_starts
-
-    lstarts = seg_starts(out["line_key"].to_numpy())
-    out["tok_idx"] = seg_position(lstarts, len(out))
+    out["tok_idx"] = seg_position(seg_starts(parents), len(out))
     # char offsets within the line (entity spans report start/end,
     # FrenchMedicalNERParser.java:560-797). The cumsum runs over ALL flat
     # parts — gaps, tokens, AND junk-filtered tokens — then indexes at the
@@ -321,7 +309,7 @@ def explode_tokens(
     # the difference (prepare_lines sanitizes junk out of the text first),
     # but corpus_import labels tokens by offsets in the ORIGINAL document
     # text, where a NUL/@PAGE before an entity must still be counted.
-    ends_all = seg_cumsum(flat_lens, seg_starts(parent))
+    ends_all = seg_cumsum(flat_lens, pstarts)
     out["tok_end"] = ends_all[kept_idx]
     out["tok_start"] = ends_all[kept_idx] - flat_lens[kept_idx]
     return out

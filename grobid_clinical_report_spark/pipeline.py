@@ -49,12 +49,9 @@ from .kernels.cluster import dedup_notes
 from .kernels.features import featurize_extras, featurize_lines
 from .kernels.normalize import normalize_text
 from .kernels.segmenter import segment_lines
-from .kernels.tokenize import assign_blocks_pages, explode_tokens, sanitize_lines
+from .kernels.subparsers import EMPTY_SPANS as _EMPTY_SPANS
+from .kernels.tokenize import assign_blocks_pages, sanitize_lines
 from .schema import EXTRACTED_DDL
-
-_EMPTY_SPANS = pd.DataFrame(
-    columns=["doc_id", "kind", "text", "media_ref", "offset"]
-)
 
 
 # Preferred input-split size per mode (spark.sql.files.maxPartitionBytes, a
@@ -215,40 +212,21 @@ def flat_extract_leftnote(lines: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _content_tokens(lines: pd.DataFrame) -> pd.DataFrame:
+def _content_lines(lines: pd.DataFrame) -> pd.DataFrame:
+    """The token models' input lines: content lines only, pruned to the 4
+    columns the token path reads BEFORE explode_tokens replicates each line
+    onto its tokens (carrying the ~40 line-feature columns through that
+    take was the single largest NER cost — profiled: 2000 docs / 2M
+    tokens, 7.0s → 2.4s for the explode)."""
     content = lines[
         ~(lines["is_blank"] | lines["is_page_break"] | lines["is_media"])
     ]
-    # prune to the 4 columns the token path consumes BEFORE the per-token
-    # gather: explode_tokens row-replicates its input frame (one row per
-    # token), and carrying the ~40 line-feature columns through that take
-    # was the single largest NER cost (profiled: 2000 docs / 2M tokens,
-    # 7.0s → 2.4s for the explode; the token models use only token-level
-    # features, never line features — verified by column-usage audit)
-    content = content[["doc_id", "seq", "text", "offset"]]
-    # drop_text: the token models never read the line text again — without
-    # it the per-token replication take and every later frame rebuild are
-    # 3 int columns + the Arrow tok/gap arrays, no string column
-    toks = explode_tokens(content, drop_text=True)
-    if toks.empty:
-        return toks
-    return sub_k.token_features(toks)
-
-
-def flat_ner(lines: pd.DataFrame) -> pd.DataFrame:
-    toks = _content_tokens(lines)
-    if toks.empty:
-        return _EMPTY_SPANS
-    return ner_k.ner_spans(toks)
+    return content[["doc_id", "seq", "text", "offset"]]
 
 
 def _flat_token_mode(labeler: Callable, pojo: bool = False) -> Callable:
     def fn(lines: pd.DataFrame) -> pd.DataFrame:
-        toks = _content_tokens(lines)
-        if toks.empty:
-            return _EMPTY_SPANS
-        toks["label"] = labeler(toks)
-        spans = sub_k.tokens_to_spans(toks)
+        spans = sub_k.token_spans(_content_lines(lines), labeler)
         # medic/patient string endpoints fill ONE POJO per input string —
         # repeated field clusters merge (MedicParser.java:103-228)
         return sub_k.pojo_merge_spans(spans) if pojo else spans
@@ -263,9 +241,8 @@ FLAT_MODES: dict[str, Callable[[pd.DataFrame], pd.DataFrame]] = {
     "extract_full": flat_extract_full,
     "extract_header": flat_extract_header,
     "extract_leftnote": flat_extract_leftnote,
-    "ner": flat_ner,
 }
-for _name, _labeler in sub_k.SUBPARSERS.items():
+for _name, _labeler in {"ner": ner_k.label_ner_tokens, **sub_k.SUBPARSERS}.items():
     FLAT_MODES[_name] = _flat_token_mode(_labeler, pojo=_name in _POJO_MODES)
 
 
@@ -465,10 +442,10 @@ def run_training_ner(df):
         for doc_ids, lines in _prepared(batches):
             if lines.empty:
                 continue
-            toks = _content_tokens(lines)
+            toks = sub_k.tokens_of(_content_lines(lines))
             if toks.empty:
                 continue
-            toks = toks.assign(label=ner_k.label_ner_tokens(toks))
+            toks["label"] = ner_k.label_ner_tokens(toks)
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(

@@ -21,9 +21,10 @@ constant but NO resource method or process handler references it anywhere
 under src/main/java/org/grobid/service (grep: the only 'annotat' hits are
 metrics @Timed imports). There is no behavior to match; the span data
 model additionally carries no page geometry (SURVEY.md §2.6 scope note).
-The geometry-free annotation need (entity overlays) is served by the
-`ner` mode's char-offset standoff output (ner_entities: doc_id, kind,
-start, end, confidence).
+The geometry-free annotation need (entity overlays) is served in process
+by `kernels.ner.ner_entities` (doc_id, kind, text, start, end,
+confidence_milli — char-offset standoff); the `ner` mode emits flat spans
+without char offsets.
 """
 
 from __future__ import annotations

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from .kernels.labels import NER_LABELS, label_index
 from .kernels.segments import seg_starts
+from .kernels.subparsers import CUES, line_starts, tokens_of
 from .kernels.viterbi import viterbi_segments
 
 _IX = label_index(NER_LABELS)
@@ -134,7 +135,7 @@ def _patient_spec() -> ModelSpec:
     """The patient sub-model (PatientParser.java:147-182 analog): shared
     token basis plus the five word-identity cues its labeler keys on
     (birth marker + trailing article, 'ans' age idiom, IPP/NIP id
-    keywords, sex keywords — all synthesized at pack time, _SYNTH)."""
+    keywords, sex keywords — subparsers.CUES, packed at pack time)."""
     from .kernels.labels import PATIENT_LABELS
     from .kernels.subparsers import parse_patient_tokens
 
@@ -160,50 +161,19 @@ TS_DDL = (
 )
 
 
-def _synth_le_after_born(t: pd.DataFrame) -> np.ndarray:
-    # 'née le 02/02/1962': the article rides the birth marker — same
-    # frame-wide roll the patient labeler applies (subparsers.py:380-382)
-    born = t["low"].isin({"née", "né", "nee", "ne"}).to_numpy()
-    prev_born = np.roll(born, 1)
-    if len(born):
-        prev_born[0] = False
-    return t["low"].eq("le").to_numpy() & prev_born
-
-
-# Synthesized feature bits: per-spec cues the shared token_features frame
-# does not carry as columns. Each mirrors the corresponding surrogate
-# labeler EXACTLY (the distillation gold must be representable in the
-# feature basis, or the refit can never close the gap).
-_SYNTH = {
-    # medic labeler's email cue (subparsers.py parse_medic_tokens)
-    "has_at": lambda t: t["tok"].str.contains("@", na=False).to_numpy(),
-    # patient labeler cues (subparsers.py parse_patient_tokens)
-    "is_born_marker": lambda t: t["low"]
-    .isin({"née", "né", "nee", "ne"})
-    .to_numpy(),
-    "is_le_after_born": _synth_le_after_born,
-    "is_ans_cue": lambda t: (
-        t["low"].eq("ans") | (t["is_num"] & t["low"].shift(-1).eq("ans"))
-    ).to_numpy(),
-    "is_idno_kw": lambda t: t["low"].isin({"ipp", "nip"}).to_numpy(),
-    "is_sex_kw": lambda t: t["low"]
-    .isin({"sexe", "féminin", "feminin", "masculin"})
-    .to_numpy(),
-}
-
-
 def pack_features(
     toks: pd.DataFrame, features: tuple[str, ...] = TRAIN_FEATURES
 ) -> np.ndarray:
     """Token feature frame → one int64 bitmask per token (bit i ⇔
-    features[i]). 'bias' (always-on) and the _SYNTH cues are synthesized;
-    everything else reads a boolean token_features column."""
+    features[i]). 'bias' is always on, the labelers' word cues come from
+    their one definition (subparsers.CUES), and everything else reads a
+    boolean token_features column."""
     bits = np.zeros(len(toks), dtype=np.int64)
     for i, name in enumerate(features):
         if name == "bias":
             col = None
-        elif name in _SYNTH:
-            col = _SYNTH[name](toks)
+        elif name in CUES:
+            col = CUES[name](toks)
         else:
             col = toks[name].to_numpy()
         if col is None:
@@ -355,7 +325,7 @@ def build_training_set(docs: DataFrame, spec: ModelSpec | None = None) -> DataFr
     to reproduce the decoder it will replace. `join_supervision` swaps in
     external gold (e.g. the Quaero-analog import) instead.
     """
-    from .pipeline import _content_tokens, _prepared
+    from .pipeline import _content_lines, _prepared
 
     spec = spec or _ner_spec()
     labeler, label_ix, features = spec.labeler, spec.ix, spec.features
@@ -364,7 +334,7 @@ def build_training_set(docs: DataFrame, spec: ModelSpec | None = None) -> DataFr
         for doc_ids, lines in _prepared(batches):
             if lines.empty:
                 continue
-            toks = _content_tokens(lines)
+            toks = tokens_of(_content_lines(lines))
             if toks.empty:
                 continue
             gold = (
@@ -380,7 +350,7 @@ def build_training_set(docs: DataFrame, spec: ModelSpec | None = None) -> DataFr
             # per-line segment starts, made doc-relative fully vectorized:
             # global start rows → owning doc via searchsorted → subtract
             # the doc's first row; list offsets via bincount.
-            g_starts = seg_starts(toks["line_key"].to_numpy())
+            g_starts = line_starts(toks)
             doc_of = np.searchsorted(dstarts[:-1], g_starts, side="right") - 1
             rel = (g_starts - dstarts[doc_of]).astype(np.int32)
             per_doc = np.bincount(doc_of, minlength=len(codes))
@@ -859,41 +829,35 @@ def run_trained_ner(
     spec: ModelSpec | None = None,
 ) -> DataFrame:
     """documents (doc_id, spans) → extracted entity spans, decoded with
-    TRAINED weights — the same `pipeline._extract` batch loop as
-    `pipeline.run_mode("ner")`, with X·W emissions (exactness-tiered BLAS)
-    instead of the hand-weighted surrogate. Weights ship in the closure
+    TRAINED weights — the same `pipeline._extract` batch loop and token
+    mode as `pipeline.run_mode("ner")`, with the trained decode
+    (`_decode_trained`: X·W emissions, exactness-tiered BLAS) as its
+    labeler instead of the hand-weighted surrogate. Weights ship in the closure
     (≈2k ints). This closes the loop the reference runs operationally:
     createTraining → train → the trained model serves extraction
     (`MedicalReportTrainerRunner.java` mode 0 feeding the engine's model
     directory)."""
-    from .kernels.subparsers import tokens_to_spans
-    from .pipeline import EXTRACTED_DDL, _EMPTY_SPANS, _content_tokens, _extract
+    from .pipeline import EXTRACTED_DDL, _extract, _flat_token_mode
 
     spec = spec or _ner_spec()
     wf = W.copy()
     tf = T.copy()
     features = spec.features
 
-    def decode(lines: pd.DataFrame) -> pd.DataFrame:
-        toks = _content_tokens(lines)
-        if toks.empty:
-            return _EMPTY_SPANS
+    def labeler(toks: pd.DataFrame) -> pd.Series:
         flat = _decode_trained(
-            pack_features(toks, features),
-            seg_starts(toks["line_key"].to_numpy()), wf, tf,
+            pack_features(toks, features), line_starts(toks), wf, tf
         )
-        # Categorical, as in the surrogate decoders (r8): codes flow
-        # through rle_cluster_ids' fast path, strings materialize at
-        # span granularity inside tokens_to_spans
-        toks["label"] = pd.Series(
-            pd.Categorical.from_codes(flat, spec.labels),
-            index=toks.index,
+        # Categorical, as in the surrogate decoders: codes flow through
+        # rle_cluster_ids' fast path, strings materialize at span
+        # granularity inside tokens_to_spans
+        return pd.Series(
+            pd.Categorical.from_codes(flat, spec.labels), index=toks.index
         )
-        return tokens_to_spans(toks)
 
     def mapper(batches):
         _blas_single_thread()
-        yield from _extract(batches, decode)
+        yield from _extract(batches, _flat_token_mode(labeler))
 
     return df.mapInArrow(mapper, schema=EXTRACTED_DDL)
 

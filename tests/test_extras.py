@@ -231,18 +231,17 @@ def test_marker_majority_vote():
 def test_ner_char_offsets(fixture_docs_pdf):
     from grobid_clinical_report_spark.kernels import ner as ner_k
     from grobid_clinical_report_spark.kernels import subparsers as sub_k
-    from grobid_clinical_report_spark.kernels.tokenize import explode_tokens
-    from grobid_clinical_report_spark.pipeline import _docs_batch, _prepared
+    from grobid_clinical_report_spark.pipeline import (
+        _content_lines,
+        _docs_batch,
+        _prepared,
+    )
 
     pdf = fixture_docs_pdf[fixture_docs_pdf.doc_id == "fx-ner-0004"].reset_index(
         drop=True
     )
     _, lines = next(_prepared([_docs_batch(pdf)]))
-    content = lines[
-        ~(lines["is_blank"] | lines["is_page_break"] | lines["is_media"])
-    ]
-    toks = sub_k.token_features(explode_tokens(content))
-    ents = ner_k.ner_entities(toks)
+    ents = ner_k.ner_entities(sub_k.tokens_of(_content_lines(lines)))
     first = ents.iloc[0]
     assert first["kind"] == "persname"
     # offsets point into the flattened doc: line offset + in-line char range
@@ -256,6 +255,42 @@ def test_ner_char_offsets(fixture_docs_pdf):
     assert ents["confidence_milli"].between(0, 1000).all()
     by_text = dict(zip(ents["text"], ents["confidence_milli"]))
     assert by_text["Arthrite septique"] > by_text["Ostéomyélite"]
+
+
+def test_ner_entities_match_the_ner_mode(fixture_docs_pdf):
+    """The two callers of the shared NER decode agree row for row:
+    ner_entities' (doc_id, kind, text) equal the `ner` mode's spans, and
+    each entity starts inside the line whose offset the mode reports."""
+    from grobid_clinical_report_spark.kernels import ner as ner_k
+    from grobid_clinical_report_spark.kernels import subparsers as sub_k
+    from grobid_clinical_report_spark.pipeline import (
+        _content_lines,
+        _docs_batch,
+        _prepared,
+    )
+
+    pdf = fixture_docs_pdf[
+        fixture_docs_pdf.doc_id.str.startswith("fx-ner-")
+    ].reset_index(drop=True)
+    doc_ids, lines = next(_prepared([_docs_batch(pdf)]))
+    ents = ner_k.ner_entities(sub_k.tokens_of(_content_lines(lines)))
+    line_offsets = {
+        d: [s["offset"] for s in spans] for d, spans in zip(pdf.doc_id, pdf.spans)
+    }
+    got = []
+    for code, kind, text, start in zip(
+        ents["doc_id"], ents["kind"], ents["text"], ents["start"]
+    ):
+        doc = doc_ids[code].as_py()
+        line = max(o for o in line_offsets[doc] if o <= start)
+        got.append((doc, kind, text, line))
+    want = [
+        (doc, s["kind"], s["text"], s["offset"])
+        for doc, spans in zip(*PANDAS_MODES["ner"](pdf)[["doc_id", "spans"]].T.values)
+        for s in spans
+    ]
+    assert len(want) > 20
+    assert got == want
 
 
 def test_streaming_stateful_dedup(spark, tmp_path):

@@ -5,6 +5,7 @@ through the Spark mapInArrow path (the same batch loop, verified)."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 
 from grobid_clinical_report_spark import datagen
@@ -29,6 +30,42 @@ def test_fixture_pandas(fixture_docs_pdf, mode, doc_id, expected):
     )
     out = PANDAS_MODES[mode](pdf)
     assert _triples(out.spans.iloc[0]) == [tuple(e) for e in expected]
+
+
+def _doc(doc_id: str, *texts: str) -> dict:
+    return {
+        "doc_id": doc_id,
+        "spans": datagen._with_offsets([("text", t, None) for t in texts]),
+    }
+
+
+@pytest.mark.parametrize(
+    "mode",
+    ["ner", "parse_dateline", "parse_medic", "parse_patient", "parse_name",
+     "parse_address", "parse_org"],
+)
+def test_token_mode_spans_ignore_batch_neighbours(fixture_docs_pdf, mode):
+    """A document's spans are the same alone and in a mixed batch: no token
+    cue reaches across a line or a document. The two pairs are the patient
+    cues that once did — a doc ending in 'née' turned the next doc's 'le'
+    into a birthdate article, and a doc starting with 'ans' turned the
+    previous doc's last number into an age."""
+    pairs = pd.DataFrame(
+        [
+            _doc("ends-born", "Madame Jeanne DUPONT née"),
+            _doc("born", "le 02/02/1962 à Lyon"),
+            _doc("age", "Patient âgé de 50"),
+            _doc("starts-ans", "ans plus tard, Madame Jeanne DUPONT"),
+        ]
+    )
+    batch = pd.concat([pairs, fixture_docs_pdf], ignore_index=True)
+    together = PANDAS_MODES[mode](batch)
+    for i, doc_id in enumerate(batch["doc_id"]):
+        alone = PANDAS_MODES[mode](batch.iloc[[i]].reset_index(drop=True))
+        assert together.spans.iloc[i] == alone.spans.iloc[0], doc_id
+    if mode == "parse_patient":
+        born = {(s["kind"], s["text"]) for s in together.spans.iloc[1]}
+        assert ("birthdate", "02/02/1962") in born
 
 
 @pytest.mark.parametrize("mode", sorted(datagen.FIXTURE_EXPECTED))

@@ -31,8 +31,7 @@ _NF = trainer._NF
 
 
 def test_feature_contract():
-    from grobid_clinical_report_spark.kernels.subparsers import token_features
-    from grobid_clinical_report_spark.kernels.tokenize import explode_tokens
+    from grobid_clinical_report_spark.kernels.subparsers import tokens_of
 
     assert _NF <= 63
     assert trainer.TRAIN_FEATURES[-1] == "bias"
@@ -44,7 +43,7 @@ def test_feature_contract():
             "offset": [0, 1],
         }
     )
-    toks = token_features(explode_tokens(lines))
+    toks = tokens_of(lines)
     for name in trainer.TRAIN_FEATURES:
         if name == "bias":
             continue
@@ -358,7 +357,7 @@ def test_sub_specs_train_with_own_layout(spark, fixture_docs_pdf, name,
 
     spec = trainer.SPECS[name]()
     assert spec.n_feats == _NF + len(extra)
-    assert all(e in spec.features and e in trainer._SYNTH for e in extra)
+    assert all(e in spec.features and e in trainer.CUES for e in extra)
     assert trainer.SPECS["fr-medical-ner"]().features == trainer.TRAIN_FEATURES
     docs = spark.createDataFrame(fixture_docs_pdf, schema=DOCUMENTS_SCHEMA)
     ts = trainer.build_training_set(docs, spec=spec).cache()
