@@ -107,7 +107,9 @@ def label_body_lines(df: pd.DataFrame) -> pd.Series:
     starts = seg_starts(df["doc_id"].to_numpy())
     # one decode over the contiguous per-doc segments; docs (~50-400 lines)
     # land mostly in viterbi_segments' factor-2 padded buckets, whose
-    # padded DP work stays under 2x the live work
+    # padded DP work stays under 2x the live work. The matrix is
+    # column-structured, but most blocks (and the whales' B=2 blocks) are
+    # narrow enough that _decode runs the general step on them
     flat = viterbi_segments(em, starts, body_transitions())
     return pd.Series(
         np.array(BODY_LABELS, dtype=object)[flat], index=df.index, name="label"

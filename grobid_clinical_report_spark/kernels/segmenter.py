@@ -220,8 +220,8 @@ def segment_lines(df: pd.DataFrame) -> pd.Series:
     trans = segment_transitions()
     # one decode over the contiguous per-doc segments, mostly in
     # viterbi_segments' factor-2 padded buckets (the zone-order transition
-    # matrix is non-sticky, so this runs the general O(L^2) step — L=7,
-    # still one small tensor per time step)
+    # matrix is non-sticky, so every block runs the general O(L^2) step —
+    # L=12, one (B, 12, 12) tensor per time step)
     flat = viterbi_segments(em, seg_starts(df["doc_id"].to_numpy()), trans)
     lab = np.array(SEG_LABELS, dtype=object)[flat]
     return pd.Series(lab, index=df.index, name="zone")

@@ -18,6 +18,17 @@ holding a single length decodes as a (k, T, L) reshape view with no padding
 and no mask; any other bucket is scattered into a padded block with a live
 mask, its padded work bounded at 2× the live work. One DP core, `_decode`,
 runs both.
+
+`_decode` picks its DP step per block, from the transitions and the block's
+shape. A sticky or column-structured matrix (every hand-set model but the
+segmenter) admits `_step_structured`, O(L) work per row, but it costs ~20
+numpy calls per step against the general O(L²) step's 3. So a block of at most
+_GENERAL_MAX_CELLS B·L² cells, where call overhead outweighs arithmetic,
+takes the general step: the whale documents' B=2 blocks of ~20k steps, and
+most short single-length blocks. Wider blocks keep the structured step.
+Both break ties by argmax first index, so the labels do not depend on the
+route while the DP sums are exact: every model here has integer or
+half-integer hand-set scores, or integer trained weights.
 """
 
 from __future__ import annotations
@@ -28,6 +39,16 @@ import numpy as np
 # longer segments share factor-2 buckets — the crossover is where per-length
 # numpy call overhead on small (B, L) blocks outgrows the ≤2× padded work
 _DENSE_MAX_T = 64
+
+# step crossover: blocks of at most this many B·L² cells take the general
+# step even when the matrix is structured. Per-step cost of `_decode`,
+# structured vs general, OMP_NUM_THREADS=1 on a 4-core box:
+#   L=12 (body, f32): B=16 64.2 vs 29.5 µs; B=64 88.3 vs 73.7; B=80 97.4 vs
+#     90.4; B=96 102.3 vs 103.2; B=128 115.3 vs 132.4 → crossover ≈ 13.8k;
+#   L=30 (NER, int16): B=8 66.7 vs 46.8; B=12 70.2 vs 62.0; B=16 71.4 vs
+#     75.3; B=24 79.7 vs 105.8 → crossover between 10.8k and 14.4k.
+# Either step is within ~15% of the other from ~8k to ~14k cells.
+_GENERAL_MAX_CELLS = 12 * 1024
 
 
 def _acc_dtype(em_dtype: np.dtype) -> np.dtype:
@@ -164,8 +185,9 @@ def _col_move(transitions: np.ndarray):
 # full-batch buffer runs to hundreds of MB and every step streams it
 # through memory three times (fill, argmax, gather); tiling rows so the
 # buffer sits in cache turned a 32.7s sf0.1 trained-NER decode into the
-# numbers in BENCH/TRAINER.md. Structured matrices never tile — their
-# step materializes no (B, L, L) tensor to begin with.
+# numbers in BENCH/TRAINER.md. Structured matrices never tile: a wide
+# block's structured step materializes no (B, L, L) tensor, and a narrow
+# block's buffer (≤ _GENERAL_MAX_CELLS cells) is far under the budget.
 _GENERAL_TILE_BYTES = 4 << 20
 
 
@@ -225,10 +247,14 @@ def _decode(
     and factor-2 buckets guarantee that is at least half of all steps (all
     of them for a single-length block).
 
-    The step is picked once: `_step_structured` (top-2 of dp + one fix-up
-    column) for constant-move (sticky) and column-structured (body model:
-    per-label entry costs) matrices, the general O(L²) scores step
-    otherwise. Tie resolution is argmax-first-index in both."""
+    The step is picked once per block. `_step_structured` (top-2 of dp +
+    one fix-up column) serves constant-move (sticky) and column-structured
+    (body model: per-label entry costs) matrices on blocks wider than
+    _GENERAL_MAX_CELLS B·L² cells; every other block takes the general
+    O(L²) scores step. A narrow block is call-bound — the general step's 3
+    numpy calls cost 13–30 µs at L=12, B ≤ 16, the structured step's ~20
+    cost 50–65 µs — and a whale's B=2 block runs ~20k such steps. Tie
+    resolution is argmax-first-index in both."""
     b, max_t, n_lab = emis.shape
     rows = np.arange(b)
     # accumulator: _acc_dtype, except that int16 emissions keep an int16 dp
@@ -246,7 +272,11 @@ def _decode(
         if max_t * per_step < (1 << 14) - 64:
             acc = emis.dtype
     transitions = np.asarray(transitions, dtype=acc)
-    mv, scalar = _col_move(transitions)
+    mv, scalar = (
+        _col_move(transitions)
+        if b * n_lab * n_lab > _GENERAL_MAX_CELLS
+        else (None, False)
+    )
 
     if mv is None:
         # general-transition blocks decode in row tiles (rows are

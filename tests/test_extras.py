@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 
 import pandas as pd
+import pytest
 
 from grobid_clinical_report_spark import datagen
 from grobid_clinical_report_spark.kernels.tei import spans_to_tei
@@ -1487,3 +1488,109 @@ def test_eval_nfold_partitions_the_micro_counts(spark):
     assert sum(r["n_gold"] for r in folds) == micro["n_gold"]
     assert sum(r["n_pred"] for r in folds) == micro["n_pred"]
     assert sum(r["tp"] for r in folds) == micro["tp"]
+
+
+def _bench():
+    """Import the repo-root bench module without letting its
+    OMP_NUM_THREADS default leak into this test session's workers."""
+    had = "OMP_NUM_THREADS" in os.environ
+    import bench
+
+    if not had:
+        os.environ.pop("OMP_NUM_THREADS", None)
+    return bench
+
+
+def _fake_scaling(cores, eff):
+    return {
+        "cores": cores, "n_small": 1, "n_big": 4, "docs": 20030,
+        "sec_small": 40.0, "sec_big": 10.0, "docs_per_sec_small": 500.8,
+        "docs_per_sec_big": 2003.0, "scaling_efficiency": eff,
+        "attempts_sec": {"1": [40.0, 41.0], "4": [10.0, 10.5]},
+        "ladder": {"1": {"sec": 40.0, "docs_per_sec": 500.8},
+                   "4": {"sec": 10.0, "docs_per_sec": 2003.0}},
+    }
+
+
+def test_baseline_md_replaces_only_the_measured_box(tmp_path):
+    """`bench.py --scaling` rewrites its own box's section of
+    BENCH/BASELINE.md: another box's section and the notes under the
+    box's `### ` headings survive byte for byte, and a box with no
+    section yet gets one ahead of the others."""
+    bench = _bench()
+    path = str(tmp_path / "BASELINE.md")
+    with open(bench.BASELINE_MD) as f:
+        real = f.read()
+    at32 = real.index("## 32-core box")
+    orig = (
+        real[: real.index("## ")]
+        + "## 4-core box\n\nold figures, eff 0.123\n\n"
+        + "### Earlier cuts on this box\n\n- kept as written\n\n"
+        + real[at32:]
+    )
+    with open(path, "w") as f:
+        f.write(orig)
+
+    def part(text, head, stop="\n## "):
+        i = text.index(head)
+        j = text.find(stop, i + len(head))
+        return text[i:] if j < 0 else text[i:j]
+
+    box32 = part(orig, "## 32-core box")
+    notes4 = part(orig, "### Earlier cuts on this box")
+    bench.write_baseline_md(_fake_scaling(4, 0.777), path)
+    with open(path) as f:
+        once = f.read()
+    assert part(once, "## 32-core box") == box32
+    assert part(once, "### Earlier cuts on this box") == notes4
+    assert once.count("## 4-core box") == 1 and "= 0.777**" in once
+    assert "0.123" not in once
+    assert once.startswith(orig[: orig.index("## ")])
+
+    bench.write_baseline_md(_fake_scaling(4, 0.888), path)
+    with open(path) as f:
+        twice = f.read()
+    assert "0.777" not in twice and "= 0.888**" in twice
+    assert len(twice.splitlines()) == len(once.splitlines())
+
+    bench.write_baseline_md(_fake_scaling(8, 0.999), path)
+    with open(path) as f:
+        third = f.read()
+    assert third.index("## 8-core box") < third.index("## 4-core box")
+    assert part(third, "## 32-core box") == box32
+    assert third.replace(part(third, "## 8-core box", "## 4-core box"), "") == twice
+
+
+def test_scaling_ladder_is_cut_at_the_usable_cores(monkeypatch):
+    """`scaling()` launches no leg wider than the cores this process may
+    use, and refuses an N→4N pair that does not fit. Legs are stubbed:
+    nothing is launched."""
+    import json as _json
+    import subprocess
+    import types
+
+    from grobid_clinical_report_spark import pyfiles
+
+    bench = _bench()
+    launched = []
+
+    def fake_run(cmd, **kw):
+        cpus = int(cmd[cmd.index("--extract-only") + 1])
+        launched.append(cpus)
+        line = _json.dumps({"cpus": cpus, "n_docs": 1000, "sec": 40.0 / cpus})
+        return types.SimpleNamespace(stdout=line + "\n")
+
+    monkeypatch.setattr(subprocess, "run", fake_run)
+    monkeypatch.setattr(pyfiles, "build", lambda path, repo_root: path)
+    monkeypatch.setattr(bench, "_gate_idle", lambda: {})
+    monkeypatch.setattr(bench.os, "sched_getaffinity", lambda pid: {0, 1, 2, 3})
+    s = bench.scaling()
+    assert s["cores"] == 4 and sorted(set(launched)) == [1, 2, 4]
+    assert sorted(s["ladder"], key=int) == ["1", "2", "4"]
+    assert s["scaling_efficiency"] == 1.0
+
+    launched.clear()
+    monkeypatch.setattr(bench.os, "sched_getaffinity", lambda pid: {0, 1})
+    with pytest.raises(ValueError, match="needs 4 cores"):
+        bench.scaling()
+    assert launched == []

@@ -97,12 +97,30 @@ def _rand_transitions(rng, L, kind):
     return tr
 
 
-def test_viterbi_structured_shapes_optimal_and_consistent():
-    """All three transition structures hit distinct decode branches
-    (scalar top-2, vector-move top-2, general scores tensor); each must be
+def _count_structured_steps(monkeypatch) -> list:
+    """Wrap viterbi._step_structured; the returned list grows by one per
+    structured DP step."""
+    from grobid_clinical_report_spark.kernels import viterbi as V
+
+    calls = []
+    real_step = V._step_structured
+    monkeypatch.setattr(
+        V, "_step_structured", lambda *a: calls.append(1) or real_step(*a)
+    )
+    return calls
+
+
+def test_viterbi_structured_shapes_optimal_and_consistent(monkeypatch):
+    """All three transition structures, on blocks narrow and wide: a block
+    of at most _GENERAL_MAX_CELLS B·L² cells takes the general scores
+    step whatever its matrix, a wider one takes the scalar top-2 (sticky),
+    vector-move top-2 (column-structured) or general step. Each must be
     score-optimal vs brute force, and the segments decoder (one-length
-    blocks / padded factor-2 buckets, every emission dtype) must agree
-    exactly with the textbook reference."""
+    blocks / padded factor-2 buckets, every emission dtype, whale-long
+    segments with forced ties) must agree exactly with the textbook
+    reference."""
+    from grobid_clinical_report_spark.kernels import viterbi as V
+
     rng = np.random.default_rng(11)
     for trial in range(24):
         L = int(rng.integers(2, 5))
@@ -137,6 +155,68 @@ def test_viterbi_structured_shapes_optimal_and_consistent():
             [_ref_viterbi(em[s : s + ln], tr) for s, ln in zip(starts, lens)]
         )
         assert np.array_equal(got, want), (trial, trial % 3, em.dtype)
+
+    structured = _count_structured_steps(monkeypatch)
+    for kind in range(3):
+        # one-length bucket just wider than the crossover: the structured
+        # step for the sticky and column-structured kinds
+        L, T = (3, 12, 30)[kind], 9
+        b = V._GENERAL_MAX_CELLS // (L * L) + 1
+        tr = _rand_transitions(rng, L, kind)
+        em = rng.integers(-3, 4, size=(b * T, L)).astype(
+            (np.float32, np.float64, np.int16)[kind]
+        )
+        structured.clear()
+        got = viterbi_segments(em, np.arange(0, b * T, T), tr).reshape(b, T)
+        assert len(structured) == (T - 1 if kind < 2 else 0), kind
+        for r in range(b):
+            assert np.array_equal(got[r], _ref_viterbi(em[r * T:(r + 1) * T], tr))
+    for kind in range(3):
+        # whale-length segments: a lone 50k segment, and a padded B=2
+        # block of unequal lengths (the whale bucket); emissions in {0, 1}
+        # and transitions in {-1, 0, 1} tie at almost every step
+        for lens in ([50_000], [20_000, 17_500]):
+            L = 12
+            tr = _rand_transitions(rng, L, kind).clip(-1, 1)
+            n = sum(lens)
+            em = rng.integers(0, 2, size=(n, L)).astype(np.float32)
+            starts = np.array([0] + lens[:-1], dtype=np.int64).cumsum()
+            got = viterbi_segments(em, starts, tr)
+            want = np.concatenate(
+                [_ref_viterbi(em[s : s + ln], tr) for s, ln in zip(starts, lens)]
+            )
+            assert np.array_equal(got, want), (kind, lens)
+
+
+def test_viterbi_step_follows_block_shape(monkeypatch):
+    """The DP step is picked by the block's B·L², not only by the matrix:
+    a whale's B=2 padded block (~20k steps, call-bound) runs no structured
+    step, while a sticky block wider than the crossover runs all its T−1
+    steps through `_step_structured`. Labels match the reference either
+    way."""
+    from grobid_clinical_report_spark.kernels import viterbi as V
+    from grobid_clinical_report_spark.kernels.body import body_transitions
+
+    calls = _count_structured_steps(monkeypatch)
+    tr = body_transitions()
+    L = tr.shape[0]
+    rng = np.random.default_rng(5)
+
+    lens = [20_000, 18_700]  # one factor-2 bucket: padded, B=2
+    em = rng.integers(-4, 5, size=(sum(lens), L)).astype(np.float32)
+    starts = np.array([0, lens[0]], dtype=np.int64)
+    got = V.viterbi_segments(em, starts, tr)
+    assert len(calls) == 0
+    assert np.array_equal(got[: lens[0]], _ref_viterbi(em[: lens[0]], tr))
+    assert np.array_equal(got[lens[0]:], _ref_viterbi(em[lens[0]:], tr))
+
+    b, T = 128, 30  # one-length block, B·L² = 18432 > the crossover
+    assert b * L * L > V._GENERAL_MAX_CELLS
+    em = rng.integers(-4, 5, size=(b * T, L)).astype(np.float32)
+    got = V.viterbi_segments(em, np.arange(0, b * T, T), tr).reshape(b, T)
+    assert len(calls) == T - 1
+    for r in range(0, b, 17):
+        assert np.array_equal(got[r], _ref_viterbi(em[r * T:(r + 1) * T], tr))
 
 
 def test_viterbi_int16_long_segment_no_overflow():
