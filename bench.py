@@ -132,9 +132,10 @@ def run_extraction(spark, corpus: str, tasks: int) -> tuple[int, float]:
 
     Zero-shuffle by design: the production source is an Iceberg table
     bucket-partitioned by doc_id (SURVEY.md §4.1 'zero-shuffle map pipeline'),
-    so the scan's file splits ARE the task partitioning; salting
-    (runner.salt_partition) is reserved for skewed buckets. ``tasks`` is kept
-    for the API but parallelism comes from the file splits."""
+    so the scan's file splits ARE the task partitioning; the batch job's
+    per-bucket repartition (runner.salt_partition) is not run here.
+    ``tasks`` is kept for the API but parallelism comes from the file
+    splits."""
     from grobid_clinical_report_spark import runner
     from grobid_clinical_report_spark.pipeline import run_mode
 

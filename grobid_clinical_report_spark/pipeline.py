@@ -523,7 +523,8 @@ def run_training(df, model: str = "segmenter"):
 def run_mode(df, mode: str):
     """documents DataFrame → extracted-spans DataFrame, one vectorized
     mapInArrow pass (no shuffle: one row = one document; partitioning is
-    whatever the scan/repartition upstream chose — see runner.salt_partition).
+    whatever the scan or an upstream repartition by doc_id chose — see
+    runner.salt_partition).
     """
     flat_fn = FLAT_MODES[mode]
 

@@ -18,12 +18,11 @@ Scale design (the 100 TB story):
   counts only, so no input, however malformed, can grow its aggregation
   buffers or its collected result.
 - **Skew**: the extraction cost is ~linear in span count. Each bucket is
-  salted into k partitions, one per mapper batch of admitted input
-  (pipeline's coalescing caps), at most ``tasks``: the header path pays a
-  fixed cost per batch, so a small bucket runs as one task. Heavy docs
-  (top size tier) are spread round-robin over the k salts so no task gets
-  two whales while there are salts to spare; AQE can't help a map-only
-  stage, salting at the repartition does.
+  hash-partitioned by doc_id into k partitions, one per mapper batch of
+  admitted input (pipeline's coalescing caps), at most ``tasks``: the header
+  path pays a fixed cost per batch, so a small bucket runs as one task. AQE
+  can't help a map-only stage; the partitioning at the exchange does. The
+  guardrail caps a whale at max_spans; whales are not placed apart.
 - **Shuffle count**: one repartition per bucket plus the size pass's
   aggregate (one row per bucket and map task); the cascade itself is a
   single mapInArrow — no other exchange.
@@ -43,7 +42,6 @@ from . import manifest as mf
 from .pipeline import _COALESCE_DOCS, _COALESCE_SPANS, run_mode
 
 DEFAULT_MAX_SPANS = 50_000
-HEAVY_SPANS = 5_000
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -84,55 +82,12 @@ def _admitted(max_spans: int) -> Column:
 
 
 def salt_partition(df: DataFrame, tasks: int) -> DataFrame:
-    """Spread documents across ``tasks`` partitions with whale spreading.
-
-    Light docs hash anywhere, by a hash independent of with_bucket's: with
-    the bucket hash, every light doc of a bucket would get a salt congruent
-    to the bucket mod gcd(tasks, n_buckets) and pile into a few partitions.
-    Heavy docs (> HEAVY_SPANS spans) get a TRUE round-robin salt —
-    row_number over the (small, guardrail-bounded) heavy id set, mod
-    ``tasks`` — broadcast-joined back, so heavy docs are spread
-    evenly across salt values (≤ ceil(H/tasks) whales per salt, not the
-    independent-hash collisions of round 1). The salt→partition step is
-    still a hash partitioning, so co-location of two salts is possible but
-    probabilistically bounded; exact isolation would need a custom
-    partitioner, and the guardrail already caps a whale at max_spans.
-    The heavy set is tiny by construction (whales are the size-distribution
-    tail and hard-capped by the guardrail), so the broadcast is safe.
-    One explicit shuffle; the map stage after it is shuffle-free.
-    """
-    from pyspark.sql.window import Window
-
-    heavy_ids = (
-        df.filter(F.size("spans") > HEAVY_SPANS)
-        .select("doc_id")
-        # one salt per id: a duplicated heavy doc_id must not multiply its
-        # rows in the join below
-        .distinct()
-        .withColumn(
-            # partition key is constant-but-non-foldable: the heavy set is
-            # guardrail-bounded so one partition is safe, and an explicit
-            # key keeps the WindowExec no-partition warning for REAL bugs
-            "_heavy_salt",
-            (
-                F.row_number().over(
-                    Window.partitionBy(F.isnull("doc_id")).orderBy(
-                        F.xxhash64("doc_id")
-                    )
-                )
-                - 1
-            )
-            % tasks,
-        )
-    )
-    salted = df.join(F.broadcast(heavy_ids), "doc_id", "left").withColumn(
-        "_salt",
-        F.coalesce(
-            F.col("_heavy_salt").cast("long"),
-            F.pmod(F.hash("doc_id"), F.lit(tasks)),
-        ),
-    )
-    return salted.repartition(tasks, "_salt").drop("_salt", "_heavy_salt")
+    """Spread documents across ``tasks`` partitions: one exchange on the
+    murmur3 hash of doc_id, which is independent of with_bucket's xxhash64
+    (with the bucket hash, every doc of a bucket would land on a partition
+    congruent to the bucket mod gcd(tasks, n_buckets)). Whales hash like
+    any other doc; the guardrail caps each at max_spans."""
+    return df.repartition(tasks, "doc_id")
 
 
 def stage_bucketed_input(
@@ -433,7 +388,7 @@ def process_quarantined(
     ``continuity_cap`` spans (default 5 × max_spans — covers the realistic
     whale tail; the reference REJECTS >300k-block documents outright,
     MedicalReportSegmenterParser.java:250-253) run the normal cascade
-    UN-WINDOWED, one task per whale (round-robin salt spreading) — zone
+    UN-WINDOWED, hash-partitioned by doc_id over the cores — zone
     decisions are document-global by construction, so a header/zone
     crossing the old window boundary can neither re-open nor double-emit,
     and the output is byte-identical to a run with a raised guardrail.
@@ -461,7 +416,7 @@ def process_quarantined(
     whole = heavy.filter(F.size("spans") <= continuity_cap)
     big = heavy.filter(F.size("spans") > continuity_cap)
 
-    # un-windowed path: one task per whale, exact zone continuity.
+    # un-windowed path: whole documents, exact zone continuity.
     # ``extract_fn`` (e.g. a trained-weight decoder from __main__
     # --weights) decodes the whale pass too — otherwise surrogate-decoded
     # quarantine spans would land next to trained-weight buckets in one

@@ -14,7 +14,7 @@ from contextlib import redirect_stdout
 
 import pyspark.sql.functions as F
 
-from grobid_clinical_report_spark import relational, runner, textops
+from grobid_clinical_report_spark import datagen, relational, runner, textops
 from grobid_clinical_report_spark.pipeline import run_mode
 
 SF = "/root/testdata/sf0.001"
@@ -90,15 +90,18 @@ def test_topk_uses_broadcast_join(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_salt_partition_single_exchange(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet").selectExpr(
-        "cast(doc_id as string) as doc_id",
-        "array(struct('text' as kind, text, cast(null as string) as media_ref,"
-        " 0 as offset)) as spans",
-    )
+def test_salt_partition_single_exchange(spark, tmp_path):
+    # a real parquet scan: over literal spans Spark could fold away any
+    # size-dependent branch and hide its exchanges
+    p = str(tmp_path / "documents.parquet")
+    datagen.write_documents_parquet(p, n_docs=20, max_spans=20)
+    docs = spark.read.parquet(p).select("doc_id", "spans")
     plan = _plan(run_mode(runner.salt_partition(docs, 8), "extract_full"))
     # exactly one exchange node in the plan tree: the salt repartition
     assert plan.count("Exchange (") == 1
+    assert "BroadcastExchange" not in plan
+    assert "Window" not in plan
+
 
 def test_load_wide_skips_shuffle_when_scan_parallel(spark, tmp_path):
     """_load_wide must NOT inject a repartition (full shuffle) when the scan

@@ -28,21 +28,25 @@ def test_guardrail_split(spark, input_path):
     assert ok.count() == df.count() - 1
 
 
-def test_salt_partition_isolates_whales(spark, input_path):
-    df = spark.read.parquet(input_path)
-    tasks = 4
-    salted = runner.salt_partition(df, tasks)
-    assert salted.rdd.getNumPartitions() == tasks
-    # every partition gets at most ceil(heavy/tasks) heavy docs (here: 1)
-    heavy_per_part = (
-        salted.withColumn("pid", F.spark_partition_id())
-        .filter(F.size("spans") > runner.HEAVY_SPANS)
-        .groupBy("pid")
-        .count()
-        .agg(F.max("count"))
-        .collect()[0][0]
-    )
-    assert heavy_per_part is None or heavy_per_part <= 1
+def test_salt_partition_fills_every_partition(spark, tmp_path):
+    """Each of k partitions gets rows, and each row sits in partition
+    pmod(hash(doc_id), k): one hash of doc_id, not a salt in [0, k) hashed a
+    second time (which put every row of 400 docs into one partition at k=2)."""
+    p = str(tmp_path / "docs.parquet")
+    datagen.write_documents_parquet(p, n_docs=400, max_spans=20)
+    df = spark.read.parquet(p).select("doc_id")
+    for k in (2, 3, 4, 8):
+        rows = (
+            runner.salt_partition(df, k)
+            .select(
+                F.spark_partition_id().alias("pid"),
+                F.pmod(F.hash("doc_id"), F.lit(k)).alias("want"),
+            )
+            .collect()
+        )
+        assert len(rows) >= 400
+        assert len({r["pid"] for r in rows}) == k, k
+        assert all(r["pid"] == r["want"] for r in rows), k
 
 
 def test_job_runs_and_resumes_idempotently(spark, input_path, tmp_path):
@@ -503,19 +507,17 @@ def test_trained_weights_serve_extraction(spark, input_path, tmp_path):
 
 
 def test_salt_partition_spreads_a_buckets_light_docs(spark, input_path):
-    """Light docs are salted by a hash independent of with_bucket's: a
+    """Docs are partitioned by a hash independent of with_bucket's: a
     bucket's chunk salted with ``tasks`` dividing ``n_buckets`` spreads over
-    more than one partition. With the bucket hash as the salt, every light
-    doc of bucket b got salt b mod gcd(tasks, n_buckets): one partition."""
+    more than one partition. With the bucket hash as the salt, every doc of
+    bucket b got salt b mod gcd(tasks, n_buckets): one partition."""
     chunk = (
         runner.with_bucket(spark.read.parquet(input_path), 4)
         .filter(F.col("bucket") == 1)
         .drop("bucket")
     )
-    light = runner.salt_partition(chunk, 4).filter(
-        F.size("spans") <= runner.HEAVY_SPANS
-    )
-    pids = [r[0] for r in light.select(F.spark_partition_id()).collect()]
+    salted = runner.salt_partition(chunk, 4)
+    pids = [r[0] for r in salted.select(F.spark_partition_id()).collect()]
     assert len(pids) >= 4 and len(set(pids)) > 1
 
 
@@ -539,15 +541,15 @@ def test_job_output_and_quarantine_hold_every_row_once(spark, tmp_path):
     output or the quarantine, as a multiset of doc_id (None included), with
     duplicate ids, malformed rows (thousands: the size pass only counts a
     bucket's quarantine), an empty doc, docs at and just over the
-    guardrail, and admitted heavy docs (one duplicated) that take
-    salt_partition's round-robin salt inside the job."""
+    guardrail, and admitted heavy docs (one duplicated) that go through
+    salt_partition inside the job."""
     from collections import Counter
 
-    cap = runner.HEAVY_SPANS + 2
+    cap = 5_002
     malformed = [(f"bad-{i}", None) for i in range(3000)]
     rows = [
         ("dup", 3), ("dup", 3),
-        ("heavy", runner.HEAVY_SPANS + 1), ("heavy", runner.HEAVY_SPANS + 1),
+        ("heavy", 5_001), ("heavy", 5_001),
         ("null-spans", None), (None, 2),
         ("empty", 0),
         ("at-cap", cap), ("over-cap", cap + 1),
