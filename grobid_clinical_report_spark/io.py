@@ -76,3 +76,33 @@ def hadoop_fs(spark: SparkSession, path: str):
     with no Spark job."""
     p = spark._jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def write_line(spark: SparkSession, path: str, line: str) -> None:
+    """Commit one ASCII line to ``path`` with no Spark job: a dot-prefixed
+    temp file beside it, renamed onto it (the rename is the commit point)."""
+    fs, p = hadoop_fs(spark, path)
+    tmp = spark._jvm.org.apache.hadoop.fs.Path(
+        p.getParent(), f".{p.getName()}.tmp"
+    )
+    out = fs.create(tmp, True)
+    try:
+        out.writeBytes(line + "\n")  # one byte per char: ASCII only
+    finally:
+        out.close()
+    if not fs.rename(tmp, p):
+        raise OSError(f"could not commit {path}")
+
+
+def read_line(spark: SparkSession, path: str) -> str | None:
+    """The first line of ``path``, or None when there is no such file."""
+    fs, p = hadoop_fs(spark, path)
+    if not fs.exists(p):
+        return None
+    jio = spark._jvm.java.io
+    stream = fs.open(p)
+    try:
+        reader = jio.BufferedReader(jio.InputStreamReader(stream, "UTF-8"))
+        return reader.readLine()
+    finally:
+        stream.close()

@@ -21,7 +21,7 @@ from .cluster import rle_cluster_ids
 from .labels import BODY_LABELS, label_index, sticky_transitions
 from .normalize import normalize_text
 from .segments import seg_starts
-from .viterbi import viterbi_segments
+from .viterbi import decode
 
 _IX = label_index(BODY_LABELS)
 
@@ -103,16 +103,14 @@ def body_transitions() -> np.ndarray:
 
 
 def label_body_lines(df: pd.DataFrame) -> pd.Series:
-    em = body_emissions(df)
-    starts = seg_starts(df["doc_id"].to_numpy())
     # one decode over the contiguous per-doc segments; docs (~50-400 lines)
     # land mostly in viterbi_segments' factor-2 padded buckets, whose
     # padded DP work stays under 2x the live work. The matrix is
     # column-structured, but most blocks (and the whales' B=2 blocks) are
     # narrow enough that _decode runs the general step on them
-    flat = viterbi_segments(em, starts, body_transitions())
-    return pd.Series(
-        np.array(BODY_LABELS, dtype=object)[flat], index=df.index, name="label"
+    return decode(
+        body_emissions(df), seg_starts(df["doc_id"].to_numpy()),
+        body_transitions(), BODY_LABELS, df.index,
     )
 
 
@@ -129,13 +127,17 @@ def relabel_caption_tails(df: pd.DataFrame) -> pd.Series:
       * PUSH — once the caption sentence has closed, later non-media,
         non-caption lines stickiness kept in the run become paragraphs.
 
-    Input: labeled body lines (label column). Returns the adjusted labels.
+    Input: labeled body lines (label column: label_body_lines' Categorical).
+    Returns the adjusted Categorical: the rules read and write its codes.
     """
     from . import arrowtext as at
 
-    lab = df["label"].to_numpy().copy()
-    if not (((lab == "figure") | (lab == "table")).any()):
-        return pd.Series(lab, index=df.index, name="label")
+    lab = df["label"].array.copy()
+    # a read-only view of lab's codes: it follows the edits below
+    codes = lab.codes
+    fig, tab, para = _IX["figure"], _IX["table"], _IX["paragraph"]
+    if not ((codes == fig) | (codes == tab)).any():
+        return pd.Series(lab, index=df.index)
     low = at.lower(at.arr_of(df["text"]))
     caption = at.match(low, r"(?:figure|fig\.)\s*\d*")
     table_line = at.match(low, r"(?:tableau|table)\b")
@@ -143,21 +145,18 @@ def relabel_caption_tails(df: pd.DataFrame) -> pd.Series:
 
     is_media = df["is_media"].to_numpy()
     ends = df["ends_period"].to_numpy()
-    n = len(df)
     doc = df["doc_id"].to_numpy()
     block = df["block_id"].to_numpy()
-    same_block_prev = np.zeros(n, dtype=bool)
-    if n > 1:
-        same_block_prev[1:] = (doc[1:] == doc[:-1]) & (block[1:] == block[:-1])
+    same_block_prev = np.r_[
+        False, (doc[1:] == doc[:-1]) & (block[1:] == block[:-1])
+    ]
 
     def runs():
         # mirror body_spans clustering (incl. the media break) so each media
         # span's caption is evaluated within its own run
-        return np.asarray(
-            rle_cluster_ids(
-                df["doc_id"], pd.Series(lab, index=df.index),
-                aux=block.astype(np.int64), break_before=is_media,
-            )
+        return rle_cluster_ids(
+            df["doc_id"], pd.Series(lab, index=df.index),
+            aux=block.astype(np.int64), break_before=is_media,
         )
 
     # PULL (bounded: captions beyond 4 lines don't occur in practice; each
@@ -166,18 +165,15 @@ def relabel_caption_tails(df: pd.DataFrame) -> pd.Series:
         run = runs()
         rstarts = seg_starts(run)
         run_closed = seg_any_transform(ends & ~is_media, rstarts)
-        figtab = (lab == "figure") | (lab == "table")
-        last_of_run = np.ones(n, dtype=bool)
-        if n > 1:
-            last_of_run[:-1] = run[1:] != run[:-1]
+        figtab = (codes == fig) | (codes == tab)
+        last_of_run = np.r_[run[1:] != run[:-1], True]
         open_last = figtab & last_of_run & ~run_closed
-        prev_open = np.zeros(n, dtype=bool)
-        if n > 1:
-            prev_open[1:] = open_last[:-1]
-        pull = prev_open & same_block_prev & (lab == "paragraph") & ~is_media
+        prev_open = np.r_[False, open_last[:-1]]
+        pull = prev_open & same_block_prev & (codes == para) & ~is_media
         if not pull.any():
             break
-        lab[pull] = np.roll(lab, 1)[pull]  # previous run's kind
+        at_pull = np.flatnonzero(pull)
+        lab[at_pull] = lab[at_pull - 1]  # previous run's kind
 
     # PUSH — tabular DATA rows (tab/2+-space separated cells) are table
     # CONTENT, not trailing prose: TableParser consumes the grid after the
@@ -188,13 +184,13 @@ def relabel_caption_tails(df: pd.DataFrame) -> pd.Series:
     run = runs()
     e = ends.astype(np.int64)
     closed_before = seg_cumsum(e, seg_starts(run)) - e
-    figtab = (lab == "figure") | (lab == "table")
+    figtab = (codes == fig) | (codes == tab)
     tail = (
         figtab & (closed_before > 0) & ~is_media & ~caption & ~table_line
         & ~tabular
     )
     lab[tail] = "paragraph"
-    return pd.Series(lab, index=df.index, name="label")
+    return pd.Series(lab, index=df.index)
 
 
 def zone_block_spans(df: pd.DataFrame) -> pd.DataFrame:
@@ -230,7 +226,7 @@ def body_spans(df: pd.DataFrame) -> pd.DataFrame:
     # (2+-space or tab runs) become single TABs before the ordinary
     # whitespace normalization — normalize_text would collapse them to one
     # space and erase the column structure
-    tbl = d["label"].to_numpy() == "table"
+    tbl = d["label"].eq("table").to_numpy()
     if tbl.any():
         from . import arrowtext as at
 
@@ -245,7 +241,7 @@ def body_spans(df: pd.DataFrame) -> pd.DataFrame:
     # its caption line still merges INTO that cluster
     seq = d["seq"].to_numpy().astype(np.int64)
     aux = d["block_id"].to_numpy().astype(np.int64)
-    aux = np.where(d["label"].to_numpy() == "item", -seq - 1, aux)
+    aux = np.where(d["label"].eq("item").to_numpy(), -seq - 1, aux)
     d["_cl"] = rle_cluster_ids(
         d["doc_id"], d["label"], aux=aux,
         break_before=d["is_media"].to_numpy(),
@@ -283,5 +279,6 @@ def body_spans(df: pd.DataFrame) -> pd.DataFrame:
         ["doc_id", "kind", "text", "media_ref", "offset"]
     ]
     # drop empty clusters (TEIFormatter.java:968-973) unless they carry media
-    agg = agg[(agg["text"].str.len() > 0) | agg["media_ref"].notna()]
-    return agg.reset_index(drop=True)
+    keep = (agg["text"].str.len() > 0) | agg["media_ref"].notna()
+    # kind back to plain strings at span granularity, as in tokens_to_spans
+    return agg[keep].astype({"kind": str}).reset_index(drop=True)

@@ -67,8 +67,8 @@ def rle_cluster_ids(
     (an explicit `I-` prefix in a label value also opens a new cluster, as in
     GROBID's IOB scheme)."""
     # change detection and the I- scan run on int codes / the tiny
-    # dictionary, not per-row string compares (profiled hotspot); the
-    # Categorical labels of the token-mode labelers already carry both
+    # dictionary, not per-row string compares (profiled hotspot); every
+    # labeler's Categorical (viterbi.decode) already carries both
     if isinstance(labels, pd.Series) and isinstance(
         labels.dtype, pd.CategoricalDtype
     ):

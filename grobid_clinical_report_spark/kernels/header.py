@@ -23,7 +23,7 @@ from . import subparsers as sub_k
 from .labels import HEADER_LABELS, label_index, sticky_transitions
 from .normalize import normalize_text, to_iso_date
 from .subparsers import EMPTY_SPANS as _EMPTY
-from .viterbi import viterbi_segments
+from .viterbi import decode
 from .segments import seg_starts
 
 _IX = label_index(HEADER_LABELS)
@@ -108,13 +108,9 @@ def header_emissions(df: pd.DataFrame) -> np.ndarray:
 
 
 def label_header_lines(df: pd.DataFrame) -> pd.Series:
-    em = header_emissions(df)
     trans = sticky_transitions(HEADER_LABELS, stay=1.0)
     starts = seg_starts(df["doc_id"].to_numpy())
-    flat = viterbi_segments(em, starts, trans)
-    return pd.Series(
-        np.array(HEADER_LABELS, dtype=object)[flat], index=df.index, name="label"
-    )
+    return decode(header_emissions(df), starts, trans, HEADER_LABELS, df.index)
 
 
 def merge_header_fields(df: pd.DataFrame) -> pd.DataFrame:
@@ -142,10 +138,8 @@ def merge_header_fields(df: pd.DataFrame) -> pd.DataFrame:
     d["pos"] = np.arange(len(d))  # document order, the tie-break below
 
     # keep-longest for dates / first-wins for time, vectorized by ranking
-    tlen = d["text_n"].str.len()
-    d["rank"] = np.where(
-        d["label"].eq("date"), -tlen, d.groupby(["doc_id", "label"]).cumcount()
-    )
+    nth = d.groupby(["doc_id", "label"], observed=True).cumcount()
+    d["rank"] = np.where(d["label"].eq("date"), -d["text_n"].str.len(), nth)
     d = d.sort_values(["doc_id", "label", "rank"], kind="stable")
     keep_one = d["label"].isin(["date", "time"])
     first_of_field = ~d.duplicated(subset=["doc_id", "label"], keep="first")
@@ -176,9 +170,10 @@ def merge_header_fields(df: pd.DataFrame) -> pd.DataFrame:
     iso = to_iso_date(agg.loc[is_date, "text"])
     agg.loc[is_date, "text"] = iso.where(iso.ne(""), agg.loc[is_date, "text"])
     agg["media_ref"] = None
+    # kind back to plain strings at span granularity
     return agg.sort_values(["doc_id", "offset", "pos"], kind="stable")[
         ["doc_id", "kind", "text", "media_ref", "offset"]
-    ].reset_index(drop=True)
+    ].astype({"kind": str}).reset_index(drop=True)
 
 
 # ---------------------------------------------------------------------------
@@ -209,6 +204,10 @@ def _subparse_fields(fields: pd.DataFrame, labeler, prefix: str) -> pd.DataFrame
     if out.empty:
         return _EMPTY
     out["kind"] = prefix + out["kind"]
+    # a document has one span per field, and fields are in doc_id order
+    # (merge_header_fields' sort): each sub-span takes its parent's position
+    parent = np.searchsorted(fields["doc_id"].to_numpy(), out["doc_id"])
+    out["_pos"] = fields["_pos"].to_numpy()[parent]
     return out
 
 
@@ -318,9 +317,13 @@ def enrich_header_fields(
     page counting); ``spans`` is merge_header_fields output. Everything is
     column-vectorized; the sub-models run the string endpoints' own token
     path (subparsers.token_spans — composition, not reimplementation).
+    Sub-spans and dateline fills sit right after their parent field, also
+    when fields share an offset.
     """
     if spans.empty:
         return spans
+    # emission order; sub-spans and fills take their parent's, after it
+    spans = spans.assign(_pos=np.arange(len(spans)))
     parts = [spans, _dateline_fallback(spans)]
     parts.append(
         _subparse_fields(
@@ -339,8 +342,6 @@ def enrich_header_fields(
 
     parts.append(scalar_enrichment_spans(lines, spans))
     out = pd.concat([p for p in parts if not p.empty], ignore_index=True)
-    # stable by offset: sub-spans share their parent's offset and were
-    # concatenated after it, so they sort immediately after the parent
-    return out.sort_values(["doc_id", "offset"], kind="stable")[
+    return out.sort_values(["doc_id", "offset", "_pos"], kind="stable")[
         ["doc_id", "kind", "text", "media_ref", "offset"]
     ].reset_index(drop=True)

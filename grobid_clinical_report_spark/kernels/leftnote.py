@@ -17,7 +17,7 @@ import pandas as pd
 
 from .labels import LEFTNOTE_LABELS, label_index, sticky_transitions
 from .segments import seg_starts
-from .viterbi import viterbi_segments
+from .viterbi import decode
 
 _IX = label_index(LEFTNOTE_LABELS)
 
@@ -56,9 +56,5 @@ def label_leftnote_lines(df: pd.DataFrame) -> pd.Series:
     em = leftnote_emissions(df)
     trans = sticky_transitions(LEFTNOTE_LABELS, stay=1.0)
     starts = seg_starts(df["doc_id"].to_numpy())
-    flat = viterbi_segments(em, starts, trans)
-    return pd.Series(
-        np.array(LEFTNOTE_LABELS, dtype=object)[flat], index=df.index,
-        name="label"
-    )
+    return decode(em, starts, trans, LEFTNOTE_LABELS, df.index)
 

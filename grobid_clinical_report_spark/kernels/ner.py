@@ -19,7 +19,7 @@ import pandas as pd
 
 from .cluster import rle_cluster_ids
 from .labels import NER_LABELS, label_index
-from .subparsers import _decode, line_opens, tokens_to_spans
+from .subparsers import _cluster_spans, _decode, line_opens
 
 _IX = label_index(NER_LABELS)
 
@@ -150,15 +150,13 @@ def ner_entities(t: pd.DataFrame) -> pd.DataFrame:
 
     d = t.copy(deep=False)
     d["label"] = label
-    flat = tokens_to_spans(d, with_char_offsets=True)
-    # mean margin over each entity's tokens: the same clusters
-    # tokens_to_spans builds, in order, minus the 'other' ones it drops
+    # one clustering for both the spans and their mean margins: the spans
+    # are these clusters, in order, minus the 'other' ones
     cl = rle_cluster_ids(d["doc_id"], label, break_before=line_opens(d))
+    flat = _cluster_spans(d, cl, with_char_offsets=True)
     sums = np.bincount(cl, weights=np.clip(margin, 0.0, None))
-    sizes = np.bincount(cl)
-    kind = np.empty(len(sizes), dtype=codes.dtype)
-    kind[cl] = codes[:, 0]
-    mean_margin = (sums / sizes)[kind != _IX["other"]]
+    entity = np.bincount(cl, weights=codes[:, 0] != _IX["other"]) > 0
+    mean_margin = (sums / np.bincount(cl))[entity]
     conf = np.floor(
         1000.0 * mean_margin / (1.0 + mean_margin)
     ).astype(np.int64)

@@ -22,7 +22,7 @@ import pandas as pd
 
 from .labels import SEG_LABELS, label_index, sticky_transitions
 from .segments import seg_starts
-from .viterbi import viterbi_segments
+from .viterbi import decode
 
 _IX = label_index(SEG_LABELS)
 
@@ -215,13 +215,13 @@ def segment_transitions() -> np.ndarray:
 
 def segment_lines(df: pd.DataFrame) -> pd.Series:
     """Assign a zone label to every line. df must be featurized; rows must be
-    ordered by (doc_id, seq). Returns a string Series aligned with df."""
-    em = segment_emissions(df)
-    trans = segment_transitions()
+    ordered by (doc_id, seq). Returns a Categorical Series over SEG_LABELS
+    aligned with df."""
     # one decode over the contiguous per-doc segments, mostly in
     # viterbi_segments' factor-2 padded buckets (the zone-order transition
     # matrix is non-sticky, so every block runs the general O(L^2) step —
     # L=12, one (B, 12, 12) tensor per time step)
-    flat = viterbi_segments(em, seg_starts(df["doc_id"].to_numpy()), trans)
-    lab = np.array(SEG_LABELS, dtype=object)[flat]
-    return pd.Series(lab, index=df.index, name="zone")
+    return decode(
+        segment_emissions(df), seg_starts(df["doc_id"].to_numpy()),
+        segment_transitions(), SEG_LABELS, df.index,
+    )

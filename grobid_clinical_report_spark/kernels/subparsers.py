@@ -16,9 +16,10 @@ This module owns the token path every token model runs — the string
 endpoints, the header's enrichment sub-models, the NER (kernels/ner.py) and
 the trained NER (trainer.run_trained_ner): `tokens_of` (explode_tokens →
 token_features) builds the token frame, `_decode` is the one surrogate
-decode, `token_spans` runs tokens → labeler → `tokens_to_spans`, and
-`line_opens` is the one definition of a token's line (a line opens where
-tok_idx == 0).
+decode (sticky transitions → `viterbi.decode`, the Categorical every
+labeler returns), `token_spans` runs tokens → labeler → `tokens_to_spans`,
+and `line_opens` is the one definition of a token's line (a line opens
+where tok_idx == 0).
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ from .labels import (
 )
 from .segments import seg_cumsum, seg_position
 from .tokenize import explode_tokens
-from .viterbi import viterbi_segments
+from .viterbi import decode
 
 _MEDIC_TITLES = {"dr", "pr", "docteur", "professeur", "dr.", "pr."}
 _PATIENT_TITLES = {"madame", "monsieur", "mme", "mlle", "mademoiselle", "m"}
@@ -253,35 +254,33 @@ def _decode(
     """The surrogate decode every token model runs: emissions ``em`` →
     sticky transitions → one Viterbi per line → Categorical labels."""
     trans = sticky_transitions(labels, stay=stay)
-    flat = viterbi_segments(em, line_starts(t), trans)
-    # Categorical: codes flow through rle_cluster_ids' fast path; strings
-    # materialize only at the span level (tokens_to_spans)
-    return pd.Series(pd.Categorical.from_codes(flat, labels), index=t.index)
+    return decode(em, line_starts(t), trans, labels, t.index)
 
 
-def tokens_to_spans(
-    t: pd.DataFrame, with_char_offsets: bool = False
+def tokens_to_spans(t: pd.DataFrame) -> pd.DataFrame:
+    """RLE-cluster labeled tokens (clusters never cross a line) into spans
+    (_cluster_spans)."""
+    cl = rle_cluster_ids(t["doc_id"], t["label"], break_before=line_opens(t))
+    return _cluster_spans(t, cl)
+
+
+def _cluster_spans(
+    t: pd.DataFrame, cl: np.ndarray, with_char_offsets: bool = False
 ) -> pd.DataFrame:
-    """RLE-cluster labeled tokens (clusters never cross a line) and rebuild
-    each non-'other' span's exact source text: first token verbatim,
-    subsequent members prefixed by their gap.
+    """Labeled tokens and their cluster ids → one span per non-'other'
+    cluster, its exact source text rebuilt: first token verbatim, later
+    members prefixed by their gap.
 
     ``with_char_offsets`` adds start/end — character offsets in the flattened
     document (line offset + in-line token offsets), the entity-coordinate
     contract of the reference NER output
-    (FrenchMedicalNERParser.java:560-797)."""
-    cl = rle_cluster_ids(t["doc_id"], t["label"], break_before=line_opens(t))
-
-    # cluster ids are nondecreasing (rle_cluster_ids is a cumsum), so the
-    # first/last-member masks are one diff each — pd.duplicated hashed the
-    # corpus-sized int column twice
-    first_of_cl = np.empty(len(t), dtype=bool)
-    last_of_cl = np.empty(len(t), dtype=bool)
-    if len(t):
-        first_of_cl[0] = True
-        first_of_cl[1:] = cl[1:] != cl[:-1]
-        last_of_cl[-1] = True
-        last_of_cl[:-1] = cl[1:] != cl[:-1]
+    (FrenchMedicalNERParser.java:560-797); ner_entities passes it with the
+    clusters it also averages its confidence over."""
+    # cluster ids are nondecreasing (rle_cluster_ids is a cumsum) and ≥ 0,
+    # so the first/last-member masks are one diff each — pd.duplicated
+    # hashed the corpus-sized int column twice
+    first_of_cl = np.diff(cl, prepend=-1) != 0
+    last_of_cl = np.diff(cl, append=-1) != 0
     # span text = first token verbatim + Σ(gap+tok): built entirely in
     # Arrow (binary_join over a ListArray sliced at cluster starts) — the
     # former np.where object-concat + reduceat join was per-row Python
@@ -318,9 +317,7 @@ def tokens_to_spans(
             + t.loc[last_of_cl, "tok_end"].to_numpy()
         )
     agg = agg[agg["kind"].ne("other")]
-    # kind back to plain strings at SPAN granularity (categorical labels
-    # from the r8 decoders must not leak into downstream contracts; spans
-    # are ~100× fewer than tokens, so this conversion is negligible)
+    # kind back to plain strings at span granularity (~100× fewer rows)
     agg["kind"] = agg["kind"].astype(str)
     agg["media_ref"] = None
     cols = ["doc_id", "kind", "text", "media_ref", "offset"]

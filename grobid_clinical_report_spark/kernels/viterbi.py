@@ -8,6 +8,11 @@ sequence labeling is rebuilt as deterministic feature-driven emissions plus a
 real linear-chain Viterbi decode in numpy, with transition/emission weights fit
 offline against the fixture corpus (SURVEY.md §7.0).
 
+`decode` is the one place codes become labels: every model's labeler gets
+a Categorical over its vocabulary, in vocabulary order, and labels stay
+codes up to the span boundary (`viterbi_segments` alone serves the
+trainer's code-level perceptron and `predict`).
+
 Vectorization contract ("never per-row Python", BASELINE.json north_star):
 every model decodes a whole Arrow batch's segments in one `viterbi_segments`
 call; the only Python loops are over length buckets and over *time steps*
@@ -34,6 +39,7 @@ half-integer hand-set scores, or integer trained weights.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
 # bucket cap: lengths up to this decode one length per block (zero padding);
 # longer segments share factor-2 buckets — the crossover is where per-length
@@ -145,6 +151,17 @@ def viterbi_segments(
     out = np.empty(n, dtype=np.int64)
     out[gather] = out_sorted
     return out
+
+
+def decode(
+    em: np.ndarray, starts: np.ndarray, transitions: np.ndarray,
+    labels: list[str], index: pd.Index,
+) -> pd.Series:
+    """`viterbi_segments` → a Categorical Series over ``labels`` (categories
+    in vocabulary order) aligned with ``index``: equality, `isin` and
+    `rle_cluster_ids` then read integer codes, not strings."""
+    flat = viterbi_segments(em, starts, transitions)
+    return pd.Series(pd.Categorical.from_codes(flat, labels), index=index)
 
 
 def _neg_sentinel(dtype: np.dtype):

@@ -29,7 +29,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .io import hadoop_fs
+from .io import hadoop_fs, read_line, write_line
 from .schema import MANIFEST_SCHEMA
 
 _DONE = "_done-"
@@ -40,7 +40,7 @@ def manifest_path(output_path: str) -> str:
 
 
 def _listing(spark: SparkSession, output_path: str) -> tuple:
-    """(fs, [(name, path)] of the per-commit JSON files, whether parquet part
+    """([(name, path)] of the per-commit JSON files, whether parquet part
     files an older writer appended are present) — one directory listing."""
     fs, d = hadoop_fs(spark, manifest_path(output_path))
     done, parquet = [], False
@@ -49,10 +49,10 @@ def _listing(spark: SparkSession, output_path: str) -> tuple:
             path = st.getPath()
             name = path.getName()
             if name.startswith(_DONE) and name.endswith(".json"):
-                done.append((name, path))
+                done.append((name, path.toString()))
             elif not name.startswith(("_", ".")):
                 parquet = True
-    return fs, done, parquet
+    return done, parquet
 
 
 def _parquet_rows(spark: SparkSession, output_path: str) -> list[dict]:
@@ -68,18 +68,8 @@ def _parquet_rows(spark: SparkSession, output_path: str) -> list[dict]:
 def _rows(spark: SparkSession, output_path: str) -> list[dict]:
     """Every committed manifest row: the per-commit JSON files, plus the
     rows of any parquet part files an older writer appended."""
-    fs, done, parquet = _listing(spark, output_path)
-    jio = spark._jvm.java.io
-    rows = []
-    for _, path in done:
-        stream = fs.open(path)
-        try:
-            line = jio.BufferedReader(
-                jio.InputStreamReader(stream, "UTF-8")
-            ).readLine()
-        finally:
-            stream.close()
-        rows.append(json.loads(line))
+    done, parquet = _listing(spark, output_path)
+    rows = [json.loads(read_line(spark, path)) for _, path in done]
     return rows + (_parquet_rows(spark, output_path) if parquet else [])
 
 
@@ -94,7 +84,7 @@ def read_manifest(spark: SparkSession, output_path: str) -> DataFrame:
 def completed_buckets(spark: SparkSession, output_path: str) -> set[int]:
     """Done buckets from the listing alone: every JSON file is a 'done'
     commit named `_done-<bucket>-<run_id>.json`, so none is opened."""
-    _, done, parquet = _listing(spark, output_path)
+    done, parquet = _listing(spark, output_path)
     got = {int(name[len(_DONE):].split("-", 1)[0]) for name, _ in done}
     if parquet:
         got |= {
@@ -146,19 +136,11 @@ def commit_bucket(
             ),
         )
     )
-    fs, d = hadoop_fs(spark, manifest_path(output_path))
-    Path = spark._jvm.org.apache.hadoop.fs.Path
     name = f"{_DONE}{int(bucket)}-{run_id}.json"
-    tmp = Path(d, f".{name}.tmp")
-    out = fs.create(tmp, True)
-    try:
-        # json.dumps escapes every non-ASCII character, so the line is ASCII
-        # and writeBytes (one byte per char) writes it exactly
-        out.writeBytes(json.dumps(row) + "\n")
-    finally:
-        out.close()
-    if not fs.rename(tmp, Path(d, name)):
-        raise OSError(f"manifest commit of bucket {bucket} failed: {name}")
+    # json.dumps escapes every non-ASCII character: the line is ASCII
+    write_line(
+        spark, os.path.join(manifest_path(output_path), name), json.dumps(row)
+    )
 
 
 def check_compatible(

@@ -486,17 +486,15 @@ def run_training(df, model: str = "segmenter"):
                 continue
             lines = _zoned(lines)
             if model in ("header", "leftnote"):
-                zone = _zone_lines(lines, model)
-                if zone.empty:
+                lines = _zone_lines(lines, model)
+                if lines.empty:
                     continue
-                zone = zone.rename(columns={"zone": "_zone"})
                 labeler = (
                     header_k.label_header_lines
                     if model == "header"
                     else leftnote_k.label_leftnote_lines
                 )
-                zone["zone"] = labeler(zone)
-                lines = zone
+                lines = lines.assign(zone=labeler(lines))
             content = lines[
                 ~(lines["is_blank"] | lines["is_page_break"])
             ]

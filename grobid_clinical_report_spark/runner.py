@@ -19,10 +19,11 @@ Scale design (the 100 TB story):
   buffers or its collected result.
 - **Skew**: the extraction cost is ~linear in span count. Each bucket is
   hash-partitioned by doc_id into k partitions, one per mapper batch of
-  admitted input (pipeline's coalescing caps), at most ``tasks``: the header
-  path pays a fixed cost per batch, so a small bucket runs as one task. AQE
-  can't help a map-only stage; the partitioning at the exchange does. The
-  guardrail caps a whale at max_spans; whales are not placed apart.
+  admitted input (pipeline's coalescing caps), at most the session's
+  ``defaultParallelism``: the header path pays a fixed cost per batch, so
+  a small bucket runs as one task. AQE can't help a map-only stage; the
+  partitioning at the exchange does. The guardrail caps a whale at
+  max_spans; whales are not placed apart.
 - **Shuffle count**: one repartition per bucket plus the size pass's
   aggregate (one row per bucket and map task); the cascade itself is a
   single mapInArrow — no other exchange.
@@ -116,27 +117,19 @@ def stage_bucketed_input(
     silently drop every document in buckets >= n_buckets."""
     import json
 
-    from .io import hadoop_fs, read_documents
+    from .io import hadoop_fs, read_documents, read_line, write_line
 
-    # The sidecar goes through Spark / the Hadoop FileSystem API — the
-    # staged data lives on whatever filesystem `staged_path` names (HDFS,
-    # s3a, …, at the 100 TB deployment shape), so a local open()/os.path
-    # sidecar would crash there or, worse, never match and restage every
-    # run (ADVICE r4). `_STAGING_META` is a 1-row text dataset; the leading
-    # underscore keeps it invisible to the parquet file index, like
-    # _SUCCESS.
-    marker = os.path.join(staged_path, "_SUCCESS")
-    meta_dir = os.path.join(staged_path, "_STAGING_META")
-    want_meta = {"n_buckets": n_buckets, "input_path": input_path}
-    fs, jmarker = hadoop_fs(spark, marker)
-    if not force and fs.exists(jmarker):
-        try:
-            have_meta = json.loads(
-                spark.read.text(meta_dir).head().value
-            )
-        except Exception:
-            have_meta = None
-        if have_meta == want_meta:
+    # marker and sidecar go through the Hadoop FileSystem API (no Spark
+    # job), on whatever filesystem `staged_path` names (HDFS, s3a, …); the
+    # leading underscore keeps the sidecar out of the parquet file index.
+    # A staging with no matching sidecar is restaged.
+    fs, marker = hadoop_fs(spark, os.path.join(staged_path, "_SUCCESS"))
+    meta_path = os.path.join(staged_path, "_STAGING_META.json")
+    want_meta = json.dumps(
+        {"input_path": input_path, "n_buckets": n_buckets}, sort_keys=True
+    )
+    if not force and fs.exists(marker):
+        if read_line(spark, meta_path) == want_meta:
             return
     docs = read_documents(spark, input_path).select("doc_id", "spans")
     with_bucket(docs, n_buckets).write.mode("overwrite").partitionBy(
@@ -144,9 +137,7 @@ def stage_bucketed_input(
     ).parquet(staged_path)
     # written AFTER the overwrite (which clears the directory) so a partial
     # write can never leave a matching sidecar without matching data
-    spark.createDataFrame(
-        [(json.dumps(want_meta, sort_keys=True),)], "value string"
-    ).coalesce(1).write.mode("overwrite").text(meta_dir)
+    write_line(spark, meta_path, want_meta)
 
 
 def run_extraction_job(
@@ -155,7 +146,6 @@ def run_extraction_job(
     output_path: str,
     mode: str = "extract_full",
     n_buckets: int = 8,
-    tasks_per_bucket: int | None = None,
     max_spans: int = DEFAULT_MAX_SPANS,
     resume: bool = True,
     max_concurrent: int = 4,
@@ -200,7 +190,6 @@ def run_extraction_job(
 
     run_id = mf.new_run_id()
     sc = spark.sparkContext
-    tasks = tasks_per_bucket or sc.defaultParallelism
     if stage_buckets:
         staged = os.path.join(output_path, "_staged_input")
         stage_bucketed_input(
@@ -257,13 +246,13 @@ def run_extraction_job(
             size = sizes.get(b, _EMPTY_BUCKET)
             chunk = docs.filter(F.col("bucket") == b).drop("bucket")
             ok, bad = split_guardrail(chunk, max_spans)
-            # one task per mapper batch of input, at most `tasks`: the
-            # header path pays a fixed cost per batch
+            # one task per mapper batch of input, at most one per core:
+            # the header path pays a fixed cost per batch
             k = max(
                 -(-size["docs"] // _COALESCE_DOCS),
                 -(-size["spans"] // _COALESCE_SPANS),
             )
-            ok = salt_partition(ok, min(max(k, 1), tasks))
+            ok = salt_partition(ok, min(max(k, 1), sc.defaultParallelism))
 
             extracted = (
                 extract_fn(ok) if extract_fn is not None

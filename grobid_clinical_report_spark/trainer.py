@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 from .kernels.labels import NER_LABELS, label_index
 from .kernels.segments import seg_starts
 from .kernels.subparsers import CUES, line_starts, tokens_of
-from .kernels.viterbi import viterbi_segments
+from .kernels.viterbi import decode, viterbi_segments
 
 _IX = label_index(NER_LABELS)
 _L = len(NER_LABELS)
@@ -103,7 +103,6 @@ class ModelSpec:
         self.labels = list(labels)
         self.features = tuple(features)
         self.labeler = labeler
-        self.ix = label_index(self.labels)
         self.n_feats = len(self.features)
         self.n_labels = len(self.labels)
 
@@ -257,17 +256,17 @@ def _emissions(
     return _matmul_exact(X8, W)
 
 
-def _decode_trained(
+def _trained_emissions(
     feats: np.ndarray, starts: np.ndarray, W: np.ndarray, T: np.ndarray
 ) -> np.ndarray:
-    """Packed masks + segment starts → trained-weights label codes: the
-    shared Viterbi over _emissions plus a corpus-decode int32 narrowing
-    pass. Trained weights usually overflow the sgemm tier (so _emissions
-    lands int64), but the DP bound over the ACTUAL emission extrema often
-    still fits int32 — halving the general-transition decode's memory
-    traffic. Training's mini-batch decodes measured and rejected the
-    extra pass (their buffers sit in cache either way); the corpus-scale
-    serve/eval decode is bandwidth-bound, where it pays
+    """Packed masks + segment starts → the trained-weights emissions that
+    `predict` and `run_trained_ner` decode: _emissions plus a corpus-decode
+    int32 narrowing pass. Trained weights usually overflow the sgemm tier
+    (so _emissions lands int64), but the DP bound over the ACTUAL emission
+    extrema often still fits int32 — halving the general-transition
+    decode's memory traffic. Training's mini-batch decodes measured and
+    rejected the extra pass (their buffers sit in cache either way); the
+    corpus-scale serve/eval decode is bandwidth-bound, where it pays
     (BENCH/TRAINER.md)."""
     t_abs = int(np.abs(T).max(initial=0))
     t_max = int(np.diff(np.append(starts, len(feats))).max(initial=0))
@@ -276,7 +275,7 @@ def _decode_trained(
         em_abs = max(int(em.max()), -int(em.min()), 0)
         if t_max * (em_abs + t_abs + 1) < (1 << 31):
             em = em.astype(np.int32)
-    return viterbi_segments(em, starts, T)
+    return em
 
 
 _BLAS_PINNED = False
@@ -328,7 +327,7 @@ def build_training_set(docs: DataFrame, spec: ModelSpec | None = None) -> DataFr
     from .pipeline import _content_lines, _prepared
 
     spec = spec or _ner_spec()
-    labeler, label_ix, features = spec.labeler, spec.ix, spec.features
+    labeler, features = spec.labeler, spec.features
 
     def mapper(batches):
         for doc_ids, lines in _prepared(batches):
@@ -337,12 +336,8 @@ def build_training_set(docs: DataFrame, spec: ModelSpec | None = None) -> DataFr
             toks = tokens_of(_content_lines(lines))
             if toks.empty:
                 continue
-            gold = (
-                pd.Series(labeler(toks))
-                .map(label_ix)
-                .to_numpy()
-                .astype(np.int32)
-            )
+            # the labeler's codes index its vocabulary, spec.labels
+            gold = labeler(toks).cat.codes.to_numpy().astype(np.int32)
             feats = pack_features(toks, features)
             doc = toks["doc_id"].to_numpy()
             first = seg_starts(doc)
@@ -797,7 +792,9 @@ def predict(
             if not b.num_rows:
                 continue
             feats, gold, _, starts = _flat_packed(b)
-            pred = _decode_trained(feats, starts, wf, tf)
+            pred = viterbi_segments(
+                _trained_emissions(feats, starts, wf, tf), starts, tf
+            )
             yield pa.RecordBatch.from_arrays(
                 [
                     b.column("doc_id").take(
@@ -831,7 +828,7 @@ def run_trained_ner(
     """documents (doc_id, spans) → extracted entity spans, decoded with
     TRAINED weights — the same `pipeline._extract` batch loop and token
     mode as `pipeline.run_mode("ner")`, with the trained decode
-    (`_decode_trained`: X·W emissions, exactness-tiered BLAS) as its
+    (`_trained_emissions`: X·W emissions, exactness-tiered BLAS) as its
     labeler instead of the hand-weighted surrogate. Weights ship in the closure
     (≈2k ints). This closes the loop the reference runs operationally:
     createTraining → train → the trained model serves extraction
@@ -845,15 +842,9 @@ def run_trained_ner(
     features = spec.features
 
     def labeler(toks: pd.DataFrame) -> pd.Series:
-        flat = _decode_trained(
-            pack_features(toks, features), line_starts(toks), wf, tf
-        )
-        # Categorical, as in the surrogate decoders: codes flow through
-        # rle_cluster_ids' fast path, strings materialize at span
-        # granularity inside tokens_to_spans
-        return pd.Series(
-            pd.Categorical.from_codes(flat, spec.labels), index=toks.index
-        )
+        starts = line_starts(toks)
+        em = _trained_emissions(pack_features(toks, features), starts, wf, tf)
+        return decode(em, starts, tf, spec.labels, toks.index)
 
     def mapper(batches):
         _blas_single_thread()

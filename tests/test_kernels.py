@@ -336,6 +336,125 @@ def test_merge_header_fields_tied_offsets_keep_document_order():
     assert out["text"].tolist()[1] == "2000-04-29"
 
 
+def test_header_sub_spans_follow_their_parent_when_offsets_tie():
+    """medic_* / patient_* sub-spans and dateline fills sit right after
+    their parent field also when every line of a header shares one offset
+    (hostile input): each header fixture with its offsets tied still gives
+    its expected span list."""
+    from grobid_clinical_report_spark import datagen
+    from grobid_clinical_report_spark.pipeline import PANDAS_MODES
+
+    fx = datagen.fixture_documents_pdf().set_index("doc_id")["spans"]
+    expected = datagen.FIXTURE_EXPECTED["extract_header"]
+    tied = pd.DataFrame(
+        [
+            {"doc_id": d, "spans": [dict(s, offset=0) for s in fx[d]]}
+            for d in expected
+        ]
+    )
+    out = PANDAS_MODES["extract_header"](tied)
+    for doc_id, spans in zip(out["doc_id"], out["spans"]):
+        got = [(s["kind"], s["text"], s["media_ref"]) for s in spans]
+        assert got == [tuple(e) for e in expected[doc_id]], doc_id
+
+
+def _trained_ner_labeler(monkeypatch):
+    """run_trained_ner's labeler under fixed integer weights, caught where
+    its mapper hands it to the token mode (no Spark session)."""
+    from grobid_clinical_report_spark import pipeline, trainer
+
+    spec = trainer.SPECS["fr-medical-ner"]()
+    rng = np.random.default_rng(3)
+    W = rng.integers(-4, 5, size=(spec.n_feats, spec.n_labels))
+    T = rng.integers(-2, 3, size=(spec.n_labels, spec.n_labels))
+    caught = []
+    monkeypatch.setattr(pipeline, "_flat_token_mode", caught.append)
+
+    class Df:
+        def mapInArrow(self, fn, schema):
+            return fn
+
+    list(trainer.run_trained_ner(Df(), W, T, spec)(iter([])))
+    return caught[0]
+
+
+def _zone_labeler(zone, labeler):
+    from grobid_clinical_report_spark.pipeline import _zone_lines
+
+    return lambda zoned: labeler(_zone_lines(zoned, zone))
+
+
+def _relabeled_body(zoned):
+    from grobid_clinical_report_spark.kernels import body
+
+    b = zoned[zoned["zone"].eq("body")].copy()
+    b["label"] = body.label_body_lines(b)
+    return body.relabel_caption_tails(b)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["segment_lines", "label_body_lines", "relabel_caption_tails",
+     "label_header_lines", "label_leftnote_lines", "ner", "parse_dateline",
+     "parse_medic", "parse_patient", "parse_name", "parse_address",
+     "parse_org", "run_trained_ner"],
+)
+def test_labelers_return_categorical_over_their_vocabulary(name, monkeypatch):
+    """Every labeler returns a Categorical whose categories are its model's
+    vocabulary, in vocabulary order, aligned with its input rows: its codes
+    are the label indices that rle_cluster_ids and the trainer's gold read."""
+    from grobid_clinical_report_spark import datagen
+    from grobid_clinical_report_spark.kernels import body, header, leftnote
+    from grobid_clinical_report_spark.kernels import labels as L
+    from grobid_clinical_report_spark.kernels import ner as ner_k
+    from grobid_clinical_report_spark.kernels import subparsers as sub_k
+    from grobid_clinical_report_spark.pipeline import (
+        _content_lines,
+        _docs_batch,
+        _prepared,
+        _zoned,
+    )
+
+    line_labelers = {
+        "segment_lines": (lambda zoned: zoned["zone"], L.SEG_LABELS),
+        "label_body_lines": (
+            _zone_labeler("body", body.label_body_lines), L.BODY_LABELS
+        ),
+        "relabel_caption_tails": (_relabeled_body, L.BODY_LABELS),
+        "label_header_lines": (
+            _zone_labeler("header", header.label_header_lines),
+            L.HEADER_LABELS,
+        ),
+        "label_leftnote_lines": (
+            _zone_labeler("leftnote", leftnote.label_leftnote_lines),
+            L.LEFTNOTE_LABELS,
+        ),
+    }
+    token_vocab = {
+        "ner": L.NER_LABELS, "parse_dateline": L.DATELINE_LABELS,
+        "parse_medic": L.MEDIC_LABELS, "parse_patient": L.PATIENT_LABELS,
+        "parse_name": L.NAME_LABELS, "parse_address": L.ADDRESS_LABELS,
+        "parse_org": L.ORG_LABELS, "run_trained_ner": L.NER_LABELS,
+    }
+    _, lines = next(_prepared([_docs_batch(datagen.fixture_documents_pdf())]))
+    if name in line_labelers:
+        labeler, vocab = line_labelers[name]
+        got = labeler(_zoned(lines))
+    else:
+        labeler = (
+            _trained_ner_labeler(monkeypatch) if name == "run_trained_ner"
+            else {"ner": ner_k.label_ner_tokens, **sub_k.SUBPARSERS}[name]
+        )
+        vocab = token_vocab[name]
+        toks = sub_k.tokens_of(_content_lines(lines))
+        got = labeler(toks)
+        assert got.index.equals(toks.index)
+    assert len(got) > 0
+    assert isinstance(got.dtype, pd.CategoricalDtype)
+    assert list(got.cat.categories) == vocab
+    assert (got.cat.codes >= 0).all()
+
+
 # --- tokenization ------------------------------------------------------------
 
 def test_explode_tokens_exact_reconstruction():

@@ -187,28 +187,24 @@ def test_staged_buckets_match_unstaged(spark, input_path, tmp_path):
 def test_stale_staging_restaged_on_param_change(spark, input_path, tmp_path):
     """ADVICE r3 (medium): a leftover staging from a crashed run with MORE
     buckets must not be trusted by a new run with fewer buckets — documents
-    in buckets >= n_buckets would silently vanish. The _STAGING_META
-    sidecar (a 1-row text dataset written through Spark, so it lives on the
-    same filesystem as the staged data — ADVICE r4) pins
+    in buckets >= n_buckets would silently vanish. The _STAGING_META.json
+    sidecar (one file written through the Hadoop FileSystem API, so it
+    lives on the same filesystem as the staged data) pins
     (n_buckets, input_path) exactly."""
     import glob
     import json
 
     def read_meta(staged_dir):
-        return json.loads(
-            spark.read.text(os.path.join(staged_dir, "_STAGING_META"))
-            .head().value
-        )
+        with open(os.path.join(staged_dir, "_STAGING_META.json")) as f:
+            return json.loads(f.readline())
 
     staged = str(tmp_path / "staged")
     # simulate the crashed prior run: staged with 8 buckets, no manifest
     runner.stage_bucketed_input(spark, input_path, staged, n_buckets=8)
     assert len(glob.glob(os.path.join(staged, "bucket=*"))) == 8
-    # same params → skipped (idempotent): mtime of the sidecar part file
+    # same params → skipped (idempotent): mtime of the sidecar file
     # unchanged
-    [meta_part] = glob.glob(
-        os.path.join(staged, "_STAGING_META", "part-*")
-    )
+    [meta_part] = glob.glob(os.path.join(staged, "_STAGING_META.json"))
     t0 = os.path.getmtime(meta_part)
     runner.stage_bucketed_input(spark, input_path, staged, n_buckets=8)
     assert os.path.getmtime(meta_part) == t0
@@ -572,22 +568,28 @@ def test_job_output_and_quarantine_hold_every_row_once(spark, tmp_path):
     assert (m["docs"], m["quarantined"]) == (len(got_out), 3 + len(malformed))
 
 
+def _jobs_of(spark, group, calls):
+    """The ids of the Spark jobs ``calls()`` starts, under job group
+    ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        calls()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_manifest_calls_start_no_spark_job(spark, tmp_path):
     """Commit, pending, the compatibility check and reset run on the driver
     through the Hadoop FileSystem API: no Spark job."""
     out = str(tmp_path / "out")
     config = {"mode": "extract_full", "n_buckets": 4, "max_spans": 500,
               "input_path": "in"}
-    sc = spark.sparkContext
 
     def jobs_of(group, calls):
-        sc.setJobGroup(group, group)
-        try:
-            calls()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setJobDescription(None)
-        return sc.statusTracker().getJobIdsForGroup(group)
+        return _jobs_of(spark, group, calls)
 
     def commit_and_check():
         for b in (0, 2):
@@ -670,3 +672,37 @@ def test_jobs_carry_mode_and_bucket_labels(spark, input_path, tmp_path,
         assert sc.getLocalProperty("spark.job.description") == "caller's label"
     finally:
         sc.setJobDescription(None)
+
+
+def test_staging_check_starts_no_spark_job(spark, input_path, tmp_path):
+    """A staging whose marker and _STAGING_META.json sidecar match is
+    skipped on the driver, through the Hadoop FileSystem API: no Spark job.
+    A staging whose sidecar is a 1-row text dataset (the earlier format) is
+    restaged once, and then skipped."""
+    import json
+
+    staged = str(tmp_path / "staged")
+
+    def stage():
+        runner.stage_bucketed_input(spark, input_path, staged, n_buckets=4)
+
+    stage()
+    assert not _jobs_of(spark, "staging-skip", stage)
+    # the earlier format: a text dataset directory instead of the file
+    meta = os.path.join(staged, "_STAGING_META.json")
+    with open(meta) as f:
+        line = f.readline()
+    os.remove(meta)
+    os.makedirs(os.path.join(staged, "_STAGING_META"))
+    with open(os.path.join(staged, "_STAGING_META", "part-00000"), "w") as f:
+        f.write(line)
+    assert _jobs_of(spark, "staging-old-format", stage)
+    assert not os.path.exists(os.path.join(staged, "_STAGING_META"))
+    with open(meta) as f:
+        assert json.loads(f.readline()) == {
+            "input_path": input_path, "n_buckets": 4
+        }
+    assert not _jobs_of(spark, "staging-skip-again", stage)
+    assert spark.read.parquet(staged).count() == spark.read.parquet(
+        input_path
+    ).count()
