@@ -35,13 +35,8 @@ def body_emissions(df: pd.DataFrame) -> np.ndarray:
     all_caps = df["all_caps"].to_numpy()
     ends_colon = df["ends_colon"].to_numpy()
     media = df["is_media"].to_numpy()
-    from . import arrowtext as at
-
-    low = at.lower(at.arr_of(df["text"]))
-    caption = at.match(low, r"(?:figure|fig\.)\s*\d*")
-    table_line = at.match(low, r"(?:tableau|table)\b")
-    fig_marker = at.contains(low, r"\((?:cf\.?|voir)\s+figure")
-    tab_marker = at.contains(low, r"\((?:cf\.?|voir)\s+tableau")
+    caption = df["is_caption"].to_numpy()
+    table_line = df["is_table_line"].to_numpy()
 
     # title eligibility is relative to the BODY zone, not the whole document:
     # a cover/header-heavy front matter must not push the opening title out
@@ -71,11 +66,9 @@ def body_emissions(df: pd.DataFrame) -> np.ndarray:
     # columnar shape: ≥3 fields separated by 2+-space/tab runs is a table
     # DATA row even without the 'Tableau' keyword (the caption may precede
     # or be absent; TableParser consumes the whole grid)
-    em[:, _IX["table"]] += 2.5 * at.contains(
-        at.arr_of(df["text"]), r"\S(?:\t| {2,})\S.*(?:\t| {2,})\S"
-    )
-    em[:, _IX["figure_marker"]] += 6.0 * fig_marker
-    em[:, _IX["table_marker"]] += 6.0 * tab_marker
+    em[:, _IX["table"]] += 2.5 * df["is_tabular_row"].to_numpy()
+    em[:, _IX["figure_marker"]] += 6.0 * df["has_fig_marker"].to_numpy()
+    em[:, _IX["table_marker"]] += 6.0 * df["has_tab_marker"].to_numpy()
     em[:, _IX["medic"]] += 5.0 * df["has_medic_title"].to_numpy()
     em[:, _IX["patient"]] += 3.0 * (
         df["has_patient_title"] & df["has_birth"]
@@ -130,17 +123,12 @@ def relabel_caption_tails(df: pd.DataFrame) -> pd.Series:
     Input: labeled body lines (label column: label_body_lines' Categorical).
     Returns the adjusted Categorical: the rules read and write its codes.
     """
-    from . import arrowtext as at
-
     lab = df["label"].array.copy()
     # a read-only view of lab's codes: it follows the edits below
     codes = lab.codes
     fig, tab, para = _IX["figure"], _IX["table"], _IX["paragraph"]
     if not ((codes == fig) | (codes == tab)).any():
         return pd.Series(lab, index=df.index)
-    low = at.lower(at.arr_of(df["text"]))
-    caption = at.match(low, r"(?:figure|fig\.)\s*\d*")
-    table_line = at.match(low, r"(?:tableau|table)\b")
     from .segments import seg_any_transform, seg_cumsum
 
     is_media = df["is_media"].to_numpy()
@@ -178,16 +166,14 @@ def relabel_caption_tails(df: pd.DataFrame) -> pd.Series:
     # PUSH — tabular DATA rows (tab/2+-space separated cells) are table
     # CONTENT, not trailing prose: TableParser consumes the grid after the
     # caption sentence closes (FullMedicalTextParser.java:5599-5647)
-    tabular = at.contains(
-        at.arr_of(df["text"]), r"\S(?:\t| {2,})\S.*(?:\t| {2,})\S"
-    )
     run = runs()
     e = ends.astype(np.int64)
     closed_before = seg_cumsum(e, seg_starts(run)) - e
     figtab = (codes == fig) | (codes == tab)
     tail = (
-        figtab & (closed_before > 0) & ~is_media & ~caption & ~table_line
-        & ~tabular
+        figtab & (closed_before > 0) & ~is_media
+        & ~(df["is_caption"] | df["is_table_line"] | df["is_tabular_row"])
+        .to_numpy()
     )
     lab[tail] = "paragraph"
     return pd.Series(lab, index=df.index)

@@ -150,6 +150,17 @@ def featurize_lines(lines: pd.DataFrame) -> pd.DataFrame:
     f["ends_period"] = u_ends_period[codes]
     u_is_bullet = at.match(txt, _BULLET_RE)
     f["is_bullet"] = u_is_bullet[codes]
+    # the body model's cues (body_emissions, relabel_caption_tails):
+    # caption and table keyword lines, figure/table call-outs, and tabular
+    # DATA rows (≥3 fields separated by 2+-space/tab runs)
+    f["is_caption"] = at.match(low, r"(?:figure|fig\.)\s*\d*")[codes]
+    f["is_table_line"] = at.match(low, r"(?:tableau|table)\b")[codes]
+    marker = r"\((?:cf\.?|voir)\s+"
+    f["has_fig_marker"] = at.contains(low, marker + "figure")[codes]
+    f["has_tab_marker"] = at.contains(low, marker + "tableau")[codes]
+    f["is_tabular_row"] = at.contains(
+        txt, r"\S(?:\t| {2,})\S.*(?:\t| {2,})\S"
+    )[codes]
     # token count via separator-RUN count: a run of internal spaces/tabs is
     # one separator (plain count_substring(' ') inflated column-aligned
     # table lines, shifting heading_shaped / doctype cues — ADVICE r2).

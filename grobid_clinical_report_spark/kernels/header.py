@@ -12,12 +12,19 @@ and enrichment (:96-213): ISO date normalization (:174-181, 394-409).
 Rebuild: line-level linear emissions + Viterbi, then a vectorized
 field-merge. Output: one span per populated field, ordered by first
 occurrence (FIXTURES.md fx-hdr-0002).
+
+`fill_fields` is the one field fill: the header and left-note merges
+(`merge_header_fields`, ' ; ' joins) and the medic/patient string
+endpoints' POJO fill (MedicParser.java:103-228, '; ' / '\\t' / ' ' joins)
+all run it, so the dedup key and the date/time keep-one rules live there.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from . import subparsers as sub_k
 from .labels import HEADER_LABELS, label_index, sticky_transitions
@@ -113,67 +120,79 @@ def label_header_lines(df: pd.DataFrame) -> pd.Series:
     return decode(header_emissions(df), starts, trans, HEADER_LABELS, df.index)
 
 
-def merge_header_fields(df: pd.DataFrame) -> pd.DataFrame:
-    """L4 field aggregation over labeled header lines.
-
-    Returns flat spans [doc_id, kind, text, media_ref, offset]: one span per
-    populated field per document, offset = first contributing line's offset.
-    Merge semantics per HeaderMedicalParser.java:1229-1349:
-      * dedup case/space-insensitive repeats (isDifferentContent),
-      * date: keep the longest raw value, emit ISO-normalized,
-      * time: first wins,
-      * other fields: distinct values joined with ' ; '.
-    Entirely groupby/agg — no per-row Python.
+def fill_fields(
+    spans: pd.DataFrame, sep: str, seps: dict[str, str] | None = None
+) -> pd.DataFrame:
+    """The field fill every field model runs: spans [doc_id, kind, text,
+    media_ref, offset] in document order → one span per (doc, kind), offset
+    = the field's first occurrence. The reference's resultExtraction rules
+    (HeaderMedicalParser.java:1229-1349; LeftNoteMedicalParser reuses them,
+    MedicParser.java:103-228 fills its POJO the same way):
+      * case/space-insensitive repeats are dropped, the first kept
+        (isDifferentContent, :1355-1370),
+      * date: the longest value is kept and emitted ISO-normalized
+        (:1261-1266, enrichment :174-181),
+      * time: the first value wins (:1267-1270),
+      * every other field joins its values with ``sep``, or with
+        ``seps[kind]`` where that names the field.
+    Output is sorted by (doc, offset, document order). No per-row Python.
     """
-    d = df[~(df["is_blank"] | df["is_page_break"]) & ~df["is_media"]].copy()
-    if d.empty:
-        return pd.DataFrame(
-            columns=["doc_id", "kind", "text", "media_ref", "offset"]
-        )
-    d["text_n"] = normalize_text(d["text"])
-    d = d[d["text_n"].ne("")]
-    d["canon"] = d["text_n"].str.lower().str.replace(r"\s+", "", regex=True)
-    # isDifferentContent dedup: first occurrence of (doc, field, canon) wins
-    d = d[~d.duplicated(subset=["doc_id", "label", "canon"], keep="first")]
-    d["pos"] = np.arange(len(d))  # document order, the tie-break below
+    if spans.empty:
+        return _EMPTY
+    d = spans.reset_index(drop=True)
+    d["_pos"] = np.arange(len(d))  # document order, the tie-break below
+    canon = d["text"].str.lower().str.replace(r"\s+", "", regex=True)
+    d = d[~d[["doc_id", "kind"]].assign(canon=canon).duplicated()]
 
-    # keep-longest for dates / first-wins for time, vectorized by ranking
-    nth = d.groupby(["doc_id", "label"], observed=True).cumcount()
-    d["rank"] = np.where(d["label"].eq("date"), -d["text_n"].str.len(), nth)
-    d = d.sort_values(["doc_id", "label", "rank"], kind="stable")
-    keep_one = d["label"].isin(["date", "time"])
-    first_of_field = ~d.duplicated(subset=["doc_id", "label"], keep="first")
-    d = d[~keep_one | first_of_field]
+    # keep-longest for dates / first-wins for times: a stable sort ranks
+    # each field's values, ties keep document order
+    k = d[d["kind"].isin(["date", "time"])]
+    rank = np.where(k["kind"].eq("date"), -k["text"].str.len(), 0)
+    k = k.assign(_rank=rank).sort_values(
+        ["doc_id", "kind", "_rank"], kind="stable"
+    )
+    d = d.drop(k.index[k.duplicated(subset=["doc_id", "kind"])])
 
-    # ' ; ' concatenation via Arrow group_join over contiguous
-    # (doc, label) groups (the former .agg(" ; ".join) was a per-group
-    # Python call — the header merge's profiled hotspot). Each group's
-    # first row after the (doc, label, offset) sort carries min(offset)
-    # and, among that offset's rows, the earliest document position; the
-    # final (doc, offset, pos) sort restores the emission order, document
-    # order included when fields share an offset (hostile input).
+    # the join runs in Arrow over contiguous (doc, kind) groups: each piece
+    # carries its separator (none on a group's first row) and group_join
+    # concatenates them (a per-group Python join was the header merge's
+    # profiled hotspot, and an object-dtype sep + text concat makes one
+    # Python string per span). Each group's first row after the
+    # (doc, kind, offset) sort carries min(offset) and, among that offset's
+    # rows, the earliest document position; the final (doc, offset, pos)
+    # sort restores the emission order, document order included when
+    # fields share an offset (hostile input).
+    from .arrowtext import arr_of
     from .cluster import group_join
 
-    d = d.sort_values(["doc_id", "label", "offset"], kind="stable")
-    first = (~d.duplicated(subset=["doc_id", "label"])).to_numpy()
-    grp = np.cumsum(first) - 1
-    agg = (
-        d.loc[first, ["doc_id", "label", "offset", "pos"]]
-        .rename(columns={"label": "kind"})
-        .reset_index(drop=True)
+    d = d.sort_values(["doc_id", "kind", "offset"], kind="stable")
+    first = (~d.duplicated(subset=["doc_id", "kind"])).to_numpy()
+    codes, kinds = pd.factorize(d["kind"])
+    lead = pc.take(pa.array([(seps or {}).get(k, sep) for k in kinds]), codes)
+    piece = pc.binary_join_element_wise(
+        pc.if_else(pa.array(first), "", lead), arr_of(d["text"]), ""
     )
-    agg["text"] = group_join(
-        d["text_n"].to_numpy(), grp, sep=" ; "
-    )
-    # ISO-normalize the merged date (C2 enrichment)
+    agg = d.loc[first, ["doc_id", "kind", "media_ref", "offset", "_pos"]]
+    agg = agg.reset_index(drop=True)
+    agg["text"] = group_join(piece, np.cumsum(first) - 1, sep="")
     is_date = agg["kind"].eq("date")
     iso = to_iso_date(agg.loc[is_date, "text"])
     agg.loc[is_date, "text"] = iso.where(iso.ne(""), agg.loc[is_date, "text"])
-    agg["media_ref"] = None
     # kind back to plain strings at span granularity
-    return agg.sort_values(["doc_id", "offset", "pos"], kind="stable")[
+    return agg.sort_values(["doc_id", "offset", "_pos"], kind="stable")[
         ["doc_id", "kind", "text", "media_ref", "offset"]
     ].astype({"kind": str}).reset_index(drop=True)
+
+
+def merge_header_fields(df: pd.DataFrame) -> pd.DataFrame:
+    """L4 field aggregation over labeled header lines (the left-note's L5
+    too): the content lines' normalized texts → fill_fields, repeats joined
+    with ' ; '."""
+    d = df[~(df["is_blank"] | df["is_page_break"] | df["is_media"])]
+    text = normalize_text(d["text"])
+    d = pd.DataFrame({"doc_id": d["doc_id"], "kind": d["label"], "text": text,
+                      "media_ref": None, "offset": d["offset"]})
+    return fill_fields(d[text.ne("")], " ; ")
 
 
 # ---------------------------------------------------------------------------

@@ -116,18 +116,6 @@ NER_LABELS = [
     "unit", "value", "web", "other",
 ]
 
-ALL_MODEL_LABELS = {
-    "medical-report-segmenter": SEG_LABELS,
-    "full-medical-text": BODY_LABELS,
-    "header-medical-report": HEADER_LABELS,
-    "left-note-medical-report": LEFTNOTE_LABELS,
-    "dateline": DATELINE_LABELS,
-    "medic": MEDIC_LABELS,
-    "patient": PATIENT_LABELS,
-    "name-person-medical": NAME_LABELS,
-    "fr-medical-ner": NER_LABELS,
-}
-
 
 def label_index(labels: list[str]) -> dict[str, int]:
     return {lab: i for i, lab in enumerate(labels)}

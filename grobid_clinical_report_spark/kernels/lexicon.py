@@ -28,12 +28,6 @@ MONTHS_FR = {
     "decembre": 12,
 }
 
-# --- person titles / honorifics (name-person model; PersonNameParser) -------
-PERSON_TITLES = {
-    "dr", "dr.", "docteur", "pr", "pr.", "professeur", "mme", "madame",
-    "m.", "monsieur", "mlle", "mademoiselle", "interne", "externe",
-}
-
 ROLE_WORDS = {
     "chef", "service", "opérateur", "operateur", "assistant", "assistante",
     "anesthésiste", "anesthesiste", "chirurgien", "radiologue", "secrétariat",
@@ -136,10 +130,6 @@ RE_PHONE = re.compile(r"\b0\d(?:[ .-]?\d{2}){4}\b")
 RE_EMAIL = re.compile(r"\b[\w.+-]+@[\w-]+\.[\w.]+\b")
 RE_WEB = re.compile(r"\b(?:https?://|www\.)\S+\b")
 RE_POSTCODE = re.compile(r"\b\d{5}\b")
-RE_YEAR = re.compile(r"\b(?:19|20)\d{2}\b")
-RE_IPP = re.compile(r"\bIPP\b|\bNIP\b|\bN°\s*dossier\b", re.IGNORECASE)
-RE_DOSE = re.compile(r"\b\d+(?:[.,]\d+)?\s*(?:mg|g|ml|ui|µg|mcg)\b",
-                     re.IGNORECASE)
 
 STOPWORDS_FR = {
     "le", "la", "les", "de", "des", "du", "un", "une", "et", "ou", "à", "a",

@@ -19,7 +19,9 @@ token_features) builds the token frame, `_decode` is the one surrogate
 decode (sticky transitions → `viterbi.decode`, the Categorical every
 labeler returns), `token_spans` runs tokens → labeler → `tokens_to_spans`,
 and `line_opens` is the one definition of a token's line (a line opens
-where tok_idx == 0).
+where tok_idx == 0). The medic/patient endpoints' POJO fill is the header's
+field fill, `header.fill_fields`, with the POJO separators
+(pipeline._POJO_SEPS).
 """
 
 from __future__ import annotations
@@ -324,48 +326,6 @@ def _cluster_spans(
     if with_char_offsets:
         cols += ["start", "end"]
     return agg[cols].reset_index(drop=True)
-
-
-# POJO-fill field separators (MedicParser.java:103-228): roles concatenate
-# with '\t' (:126), notes with ' ' (:221), every other field with '; '
-_POJO_JOIN = {"rolename": "\t", "note": " "}
-
-
-def pojo_merge_spans(spans: pd.DataFrame) -> pd.DataFrame:
-    """L6 POJO-fill semantics for the medic/patient STRING endpoints: the
-    reference's processMedic/processPatient fill ONE Medic/Patient POJO per
-    input string, so repeated clusters of a field concatenate into one value
-    (MedicParser.java:103-228 — '; ' joins, '\\t' for roles, ' ' for notes;
-    org-type clusters all land in the same organisation field :147-155),
-    with case/whitespace-insensitive repeat dedup (the header's
-    isDifferentContent, HeaderMedicalParser.java:1355-1370, applied to the
-    fill). Output: one span per populated field, offset = first cluster.
-
-    The header-enrichment path keeps per-cluster spans: there the reference
-    splits medics on ';' and builds a LIST of POJOs (HeaderMedicalParser.
-    java:184-190), each rendered separately."""
-    if spans.empty:
-        return spans
-    d = spans.copy()
-    # cluster emission rank: spans within one line share its offset, so the
-    # positional index is the first-occurrence tiebreak for field order
-    d["_ord"] = np.arange(len(d))
-    d["_canon"] = d["text"].str.lower().str.replace(r"\s+", "", regex=True)
-    d = d[~d.duplicated(subset=["doc_id", "kind", "_canon"], keep="first")]
-    d = d.sort_values(["doc_id", "kind", "offset", "_ord"], kind="stable")
-    from .cluster import group_join
-
-    grp = pd.factorize(
-        d["doc_id"].astype(str) + "\x1f" + d["kind"].astype(str)
-    )[0]
-    first = ~d.duplicated(subset=["doc_id", "kind"])
-    sep = d["kind"].map(_POJO_JOIN).fillna("; ")
-    piece = np.where(first, d["text"], sep + d["text"])
-    agg = d[first][["doc_id", "kind", "media_ref", "offset", "_ord"]].copy()
-    agg["text"] = group_join(piece, grp, sep="")
-    return agg.sort_values(["doc_id", "offset", "_ord"], kind="stable")[
-        ["doc_id", "kind", "text", "media_ref", "offset"]
-    ].reset_index(drop=True)
 
 
 # ---------------------------------------------------------------------------

@@ -37,11 +37,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-MEDIA_DDL = (
-    "doc_id string, media_ref string, payload binary, "
-    "media_type string, width int, height int"
-)
-
 FEATURE_DDL = (
     "doc_id string, media_ref string, n_bytes long, media_type string, "
     "thumb_w int, thumb_h int, feature array<double>"

@@ -224,18 +224,23 @@ def _content_lines(lines: pd.DataFrame) -> pd.DataFrame:
     return content[["doc_id", "seq", "text", "offset"]]
 
 
+# string endpoints whose reference parser fills a single POJO per input
+# string, and that fill's separators (MedicParser.java:103-228): roles join
+# with '\t' (:126), notes with ' ' (:221), every other field with '; '. The
+# header's enrichment sub-models keep one span per cluster instead: there
+# the reference splits medics on ';' and builds a LIST of POJOs
+# (HeaderMedicalParser.java:184-190).
+_POJO_MODES = {"parse_medic", "parse_patient"}
+_POJO_SEPS = {"rolename": "\t", "note": " "}
+
+
 def _flat_token_mode(labeler: Callable, pojo: bool = False) -> Callable:
     def fn(lines: pd.DataFrame) -> pd.DataFrame:
         spans = sub_k.token_spans(_content_lines(lines), labeler)
-        # medic/patient string endpoints fill ONE POJO per input string —
-        # repeated field clusters merge (MedicParser.java:103-228)
-        return sub_k.pojo_merge_spans(spans) if pojo else spans
+        # repeated field clusters merge into the one POJO
+        return header_k.fill_fields(spans, "; ", _POJO_SEPS) if pojo else spans
 
     return fn
-
-
-# string endpoints whose reference parser fills a single POJO per input
-_POJO_MODES = {"parse_medic", "parse_patient"}
 
 FLAT_MODES: dict[str, Callable[[pd.DataFrame], pd.DataFrame]] = {
     "extract_full": flat_extract_full,

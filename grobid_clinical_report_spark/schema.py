@@ -34,10 +34,6 @@ DOCUMENTS_SCHEMA = T.StructType(
     ]
 )
 
-# Output spans use the same struct: kind = extraction label, text = normalized
-# span text, media_ref carried through for figure/media spans, offset = order.
-EXTRACTED_SCHEMA = DOCUMENTS_SCHEMA
-
 # DDL forms for mapInArrow
 SPAN_DDL = (
     "array<struct<kind:string,text:string,media_ref:string,offset:int>>"

@@ -253,11 +253,6 @@ _SHINGLES_OF_W = (
     f"transform(sequence(1, greatest(size(w) - {_SHINGLE_W - 1}, 1)),"
     f" i -> concat_ws(' ', slice(w, i, {_SHINGLE_W})))"
 )
-# legacy inline form, kept for expression-level parity in the oracles
-_SHINGLES = (
-    f"transform(sequence(1, greatest(size({_WORDS}) - {_SHINGLE_W - 1}, 1)),"
-    f" i -> concat_ws(' ', slice({_WORDS}, i, {_SHINGLE_W})))"
-)
 
 
 def _with_shingles(spark: SparkSession, sf_dir: str, extra: str = "") -> DataFrame:

@@ -186,46 +186,75 @@ def test_media_ref_conservation_property():
 
 
 def test_pojo_merge_property():
-    """Property (hypothesis): pojo_merge_spans emits exactly one span per
-    (doc, kind); every distinct (case/space-insensitive) input value appears
-    in its field's joined text; repeats are dropped; offset is the field's
-    first occurrence."""
+    """Property (hypothesis): fill_fields with the POJO separators matches a
+    row-by-row reference fill: one span per (doc, kind); case/space-
+    insensitive repeats dropped, the first kept; a date keeps its longest
+    value (the first among equals), ISO-normalized; a time keeps its first;
+    every other field joins its values with its kind's separator; fields
+    come out by (offset, document order), also when offsets tie."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from grobid_clinical_report_spark.kernels.subparsers import (
-        pojo_merge_spans,
+    from grobid_clinical_report_spark.kernels.header import fill_fields
+    from grobid_clinical_report_spark.pipeline import _POJO_SEPS
+
+    words = ["Dr A", "dr  a", "Ward B", "CHU X", "9 rue Y"]
+    iso = {
+        "29.04.2000": "2000-04-29", "01.02.1999": "1999-02-01",
+        "29 avril 2000": "2000-04-29", "29 Avril  2000": "2000-04-29",
+        "2 mai 99": "1999-05-02", "hier": "hier",
+    }
+    times = ["10h30", "10H30", "08:15", "9 h 05"]
+    pairs = (
+        [(k, v) for k in ("persname", "rolename", "note", "orgname")
+         for v in words]
+        + [("date", v) for v in iso]
+        + [("time", v) for v in times]
     )
 
-    kinds = st.sampled_from(["persname", "rolename", "orgname", "address"])
-    vals = st.sampled_from(["Dr A", "dr a", "Ward B", "CHU X", "9 rue Y"])
-
-    @settings(max_examples=60, deadline=None)
-    @given(st.lists(st.tuples(kinds, vals), min_size=1, max_size=10))
+    @settings(max_examples=150, deadline=None)
+    @given(st.lists(
+        st.tuples(st.sampled_from(["d0", "d1"]), st.sampled_from(pairs),
+                  st.integers(0, 2)),
+        min_size=1, max_size=12,
+    ))
     def check(rows):
+        # document order: by doc, then offset; rows sharing an offset keep
+        # their drawn order
+        rows = sorted(rows, key=lambda r: (r[0], r[2]))
         spans = pd.DataFrame(
             {
-                "doc_id": ["d"] * len(rows),
-                "kind": [k for k, _ in rows],
-                "text": [v for _, v in rows],
-                "media_ref": [None] * len(rows),
-                "offset": [0] * len(rows),
+                "doc_id": [d for d, _, _ in rows],
+                "kind": [k for _, (k, _), _ in rows],
+                "text": [v for _, (_, v), _ in rows],
+                "media_ref": None,
+                "offset": [o for _, _, o in rows],
             }
         )
-        out = pojo_merge_spans(spans)
-        assert list(out["kind"]) == list(dict.fromkeys(out["kind"]))
-        assert set(out["kind"]) == {k for k, _ in rows}
-        for kind in set(out["kind"]):
-            joined = out[out["kind"] == kind]["text"].iloc[0]
-            seen = set()
-            for k, v in rows:
-                if k != kind:
-                    continue
-                canon = v.lower().replace(" ", "")
-                if canon in seen:
-                    continue
-                seen.add(canon)
-                assert v in joined
+        out = fill_fields(spans, "; ", _POJO_SEPS)
+
+        expected = []
+        for doc in sorted({d for d, _, _ in rows}):
+            fields, seen = {}, set()
+            for pos, (d, (kind, text), off) in enumerate(rows):
+                canon = (kind, "".join(text.lower().split()))
+                if d == doc and canon not in seen:
+                    seen.add(canon)
+                    fields.setdefault(kind, []).append((off, pos, text))
+            filled = []
+            for kind, vals in fields.items():
+                if kind == "date":
+                    off, pos, text = max(vals, key=lambda v: len(v[2]))
+                    text = iso[text]
+                elif kind == "time":
+                    off, pos, text = vals[0]
+                else:
+                    off, pos, _ = vals[0]
+                    text = _POJO_SEPS.get(kind, "; ").join(v[2] for v in vals)
+                filled.append((off, pos, kind, text))
+            expected += [(doc, k, t, o) for o, _, k, t in sorted(filled)]
+        got = list(zip(out["doc_id"], out["kind"], out["text"], out["offset"]))
+        assert got == expected
 
     check()
 
