@@ -129,12 +129,8 @@ def repeated_pattern_flags(
     content = (~(lines["is_blank"] | lines["is_page_break"])).to_numpy()
     n = len(lines)
 
-    # integer composite keys: doc codes are batch-local ints, pages small
-    doc = lines["doc_id"].to_numpy()
-    doc_codes = doc if np.issubdtype(doc.dtype, np.integer) else pd.factorize(doc)[0]
-    doc_codes = doc_codes.astype(np.int64)
-    page = lines["page_id"].to_numpy().astype(np.int64)
-    dp_key = doc_codes * (1 << 20) + page
+    # integer composite keys: page_key is doc * 2^20 + page
+    dp_key = lines["page_key"].to_numpy()
     pstarts = seg_starts(dp_key)
 
     c = content.astype(np.int64)
@@ -154,7 +150,8 @@ def repeated_pattern_flags(
     pat_codes = u_pat[t_codes]
     u_empty = pc.equal(norm_u, "").to_numpy(zero_copy_only=False)
     norm_nonempty = ~u_empty[t_codes]
-    comp = doc_codes * (1 << 42) + pat_codes * (1 << 20) + page
+    page = lines["page_id"].to_numpy()
+    comp = (dp_key >> 20) * (1 << 42) + pat_codes * (1 << 20) + page
     uniq = np.unique(comp)
     dp_of_uniq = uniq >> 20
     ustarts = seg_starts(dp_of_uniq)

@@ -114,14 +114,12 @@ def featurize_lines(lines: pd.DataFrame) -> pd.DataFrame:
     from .segments import seg_position, seg_size_transform, seg_starts
 
     n = len(lines)
-    doc = lines["_doc_code"].to_numpy()
-    dstarts = seg_starts(doc)
+    dstarts = seg_starts(lines["doc_id"].to_numpy())
     f["rel_pos"] = seg_position(dstarts, n) / np.maximum(
         seg_size_transform(dstarts, n), 1
     )
 
-    page_key = doc * (1 << 20) + lines["page_id"].to_numpy()
-    pstarts = seg_starts(page_key)
+    pstarts = seg_starts(lines["page_key"].to_numpy())
     f["rel_pos_page"] = seg_position(pstarts, n) / np.maximum(
         seg_size_transform(pstarts, n), 1
     )
@@ -161,6 +159,13 @@ def featurize_lines(lines: pd.DataFrame) -> pd.DataFrame:
     f["is_tabular_row"] = at.contains(
         txt, r"\S(?:\t| {2,})\S.*(?:\t| {2,})\S"
     )[codes]
+    # the segmenter's word cues: the trailing-zone openers and the
+    # figure/table caption head. The head is not is_caption | is_table_line:
+    # 'figures' and 'fig. 3' are captions and 'table' is a table line, but
+    # none of them is a caption head
+    f["opens_annex"] = at.match(low, r"annexe")[codes]
+    f["opens_ack"] = at.match(low, r"remerciements")[codes]
+    f["is_caption_head"] = at.match(low, r"(?:figure|fig\.|tableau)\b")[codes]
     # token count via separator-RUN count: a run of internal spaces/tabs is
     # one separator (plain count_substring(' ') inflated column-aligned
     # table lines, shifting heading_shaped / doctype cues — ADVICE r2).

@@ -27,6 +27,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from . import subparsers as sub_k
+from .arrowtext import arr_of, series_of
 from .labels import HEADER_LABELS, label_index, sticky_transitions
 from .normalize import normalize_text, to_iso_date
 from .subparsers import EMPTY_SPANS as _EMPTY
@@ -141,8 +142,20 @@ def fill_fields(
         return _EMPTY
     d = spans.reset_index(drop=True)
     d["_pos"] = np.arange(len(d))  # document order, the tie-break below
-    canon = d["text"].str.lower().str.replace(r"\s+", "", regex=True)
-    d = d[~d[["doc_id", "kind"]].assign(canon=canon).duplicated()]
+    # the dedup key, built in Arrow whatever the text's dtype (object on
+    # the header path, Arrow on the POJO path): lowercase as Python's
+    # str.lower() does (utf8_lower differs from it at U+0130 alone, per
+    # code point; a final Σ keys as σ where Python gives ς, which a
+    # case-insensitive key should equate anyway), then drop every run of
+    # what Python's \s matches (RE2's own \s is ASCII-only)
+    low = pc.utf8_lower(
+        pc.replace_substring(arr_of(d["text"]), "\u0130", "i\u0307")
+    )
+    canon = pc.replace_substring_regex(
+        low, r"[\t-\r\x{1c}-\x{20}\x{85}\p{Z}]+", ""
+    )
+    key = d[["doc_id", "kind"]].assign(canon=series_of(canon, d.index))
+    d = d[~key.duplicated()]
 
     # keep-longest for dates / first-wins for times: a stable sort ranks
     # each field's values, ties keep document order
@@ -162,7 +175,6 @@ def fill_fields(
     # rows, the earliest document position; the final (doc, offset, pos)
     # sort restores the emission order, document order included when
     # fields share an offset (hostile input).
-    from .arrowtext import arr_of
     from .cluster import group_join
 
     d = d.sort_values(["doc_id", "kind", "offset"], kind="stable")

@@ -84,9 +84,6 @@ def ner_emissions(t: pd.DataFrame) -> np.ndarray:
     add("location", 4.0, (t["is_city"] | t["suf_city"]).to_numpy())
     # person-TYPE mentions ('la patiente', 'le médecin') — standalone
     # descriptors, NOT titles attached to a following name (<persType>)
-    # (is_perstype_word/is_ans/next_is_ans are unique-form features from
-    # token_features — the former .isin/.eq here hashed the full object
-    # 'low' column per call)
     add("perstype", 6.0, t["is_perstype_word"].to_numpy() & ~t["next_is_cap"].to_numpy())
 
     # age: '50 ans'

@@ -57,12 +57,14 @@ def to_iso_date(s: pd.Series) -> pd.Series:
     num = s.str.extract(_NUM_DATE, expand=True)
     txt = s.str.lower().str.extract(_TEXT_DATE, expand=True)
 
-    day = num[0].fillna(txt[0])
+    # where, not fillna: fillna on these object columns downcasts, which
+    # pandas deprecates (a FutureWarning on a string with no date)
+    day = num[0].where(num[0].notna(), txt[0])
     month_txt = txt[1].map(
         lambda m: f"{MONTHS_FR[m]:02d}" if isinstance(m, str) else None
     )
-    month = num[1].fillna(month_txt)
-    year = num[2].fillna(txt[2])
+    month = num[1].where(num[1].notna(), month_txt)
+    year = num[2].where(num[2].notna(), txt[2])
 
     ok = day.notna() & month.notna() & year.notna()
     # two-digit years: 00-29 → 20xx, else 19xx (reference pivots similarly)

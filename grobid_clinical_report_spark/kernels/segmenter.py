@@ -12,7 +12,10 @@ zone-order transition prior replaces the CRF decode. Zone order is the
 clinical-report invariant the reference's trained CRF learns implicitly:
 header → leftnote → body → annex → acknowledgement, with page/headnote/footnote
 interrupting at page edges. Weights are fit offline against the fixture corpus
-(SURVEY.md §7.0).
+(SURVEY.md §7.0). Like the reference's CRF, which reads only the vector
+FeaturesVectorMedical built, the emissions read feature columns and never
+the line text: the word cues (annex/acknowledgement openers, caption heads)
+are featurize_lines columns too.
 """
 
 from __future__ import annotations
@@ -64,20 +67,15 @@ def segment_emissions(df: pd.DataFrame) -> np.ndarray:
     )
     block_contact = has_contact & has_org
 
-    from . import arrowtext as at
-
-    low = at.lower(at.arr_of(df["text"]))
-    annex_start = at.match(low, r"annexe")
-    ack_start = at.match(low, r"remerciements")
+    annex_start = df["opens_annex"].to_numpy()
+    ack_start = df["opens_ack"].to_numpy()
 
     # titlePage: a cover page — the first page of a multi-page document that
     # carries no body prose at all (MedicalLabels.java:15 <titlePage>; without
     # x/y geometry, the no-prose-page shape is the surrogate)
     prose_shaped = (long_line & ends_period) | df["is_bullet"].to_numpy()
-    dstarts = seg_starts(df["_doc_code"].to_numpy())
-    pstarts = seg_starts(
-        df["_doc_code"].to_numpy() * (1 << 20) + df["page_id"].to_numpy()
-    )
+    dstarts = seg_starts(df["doc_id"].to_numpy())
+    pstarts = seg_starts(df["page_key"].to_numpy())
     page_has_prose = seg_any_transform(prose_shaped & ~blank, pstarts)
     doc_multi_page = seg_any_transform(df["is_page_break"].to_numpy(), dstarts)
     cover = fp & ~page_has_prose & doc_multi_page
@@ -143,8 +141,7 @@ def segment_emissions(df: pd.DataFrame) -> np.ndarray:
     # unambiguous body evidence and an embedded media span is mild evidence
     # (the reference's bitmapAround/vectorAround features feed its body
     # zone the same way, MedicalReportSegmenterParser.java:342-351)
-    caption_line = at.match(low, r"(?:figure|fig\.|tableau)\b")
-    em[:, _IX["body"]] += 4.0 * caption_line
+    em[:, _IX["body"]] += 4.0 * df["is_caption_head"].to_numpy()
     em[:, _IX["body"]] += 2.0 * df["is_media"].to_numpy()
 
     # body: strong structural cues open the body zone

@@ -22,6 +22,14 @@ and `line_opens` is the one definition of a token's line (a line opens
 where tok_idx == 0). The medic/patient endpoints' POJO fill is the header's
 field fill, `header.fill_fields`, with the POJO separators
 (pipeline._POJO_SEPS).
+
+Like the reference's CRFs, which read only the vector their
+FeaturesVector* class built, the labelers read feature columns and never
+the token text: every word cue a model keys on (the sub-models' doctype,
+'@', birth/id/sex keywords, name suffix, country and org-head cues
+included) is a `token_features` column, and trainer.pack_features packs
+those same columns. Text is read only by `token_features` and the span
+builder (`_cluster_spans`).
 """
 
 from __future__ import annotations
@@ -45,6 +53,34 @@ from .viterbi import decode
 _MEDIC_TITLES = {"dr", "pr", "docteur", "professeur", "dr.", "pr."}
 _PATIENT_TITLES = {"madame", "monsieur", "mme", "mlle", "mademoiselle", "m"}
 _ABBREVS = {"dr", "pr", "m", "mme", "mlle"}
+
+# head word → hierarchy label: the token that OPENS an organizational unit
+# names its level; following tokens on the line ride that level until the
+# next head (the reference CRF learns this from <service>/<chu>/… training
+# chunks — 'SERVICE DE GYNECOLOGIE CHU HENRI MONDOR' → service + chu)
+_ORG_HEADS = {
+    "service": "service",
+    "département": "department", "departement": "department",
+    "pôle": "pole", "pole": "pole",
+    "unité": "unit", "unite": "unit",
+    "chu": "chu",
+    "ghu": "ghu",
+    "dmu": "dmu",
+    "site": "site",
+    "hôpital": "hospital", "hopital": "hospital", "clinique": "hospital",
+    "université": "university", "universite": "university",
+    "institut": "institution", "institution": "institution",
+    "centre": "center",
+    "aphp": "administration", "ap-hp": "administration",
+    "administration": "administration",
+}
+_HEAD_CATS = sorted(set(_ORG_HEADS.values()))
+# org_head codes: slot 0 = not a head, then 1 + the category index of each
+# head word, in _ORG_HEADS order
+_HEAD_CODES = np.array(
+    [0] + [1 + _HEAD_CATS.index(c) for c in _ORG_HEADS.values()],
+    dtype=np.int8,
+)
 
 
 EMPTY_SPANS = pd.DataFrame(columns=["doc_id", "kind", "text", "media_ref", "offset"])
@@ -88,9 +124,10 @@ def token_features(toks: pd.DataFrame) -> pd.DataFrame:
     morphology) is computed over the batch's DICTIONARY of unique forms and
     expanded by fancy indexing: natural-language token columns are massively
     repetitive (measured ~1.9k unique forms in 518k tokens, a 270× ratio),
-    so the ~25 RE2/hash passes run over thousands of strings instead of
+    so the ~45 RE2/hash passes run over thousands of strings instead of
     hundreds of thousands. Positional context features (shifts, windows)
-    stay per-row numpy. Features accumulate in a dict and attach with ONE
+    stay per-row numpy. Every cue a token model reads is a column here;
+    no column holds text. Features accumulate in a dict and attach with ONE
     concat — incremental column inserts re-consolidate the pandas block
     manager each time (profiled at ~60% of this kernel's wall)."""
     from . import arrowtext as at
@@ -106,8 +143,7 @@ def token_features(toks: pd.DataFrame) -> pd.DataFrame:
     codes = np.asarray(enc.indices)
     tok_u = enc.dictionary
     low_u = pc.utf8_lower(tok_u)
-    low_u_np = low_u.to_numpy(zero_copy_only=False)
-    f: dict[str, np.ndarray] = {"low": low_u_np[codes]}
+    f: dict[str, np.ndarray] = {}
 
     # unique-FORM features accumulate at dictionary level in `u` and
     # expand with ONE (U, F) row gather below — ~24 separate per-feature
@@ -149,14 +185,23 @@ def token_features(toks: pd.DataFrame) -> pd.DataFrame:
     u["abbrev"] = ISIN(_ABBREVS) | u["is_initial"]
     u["kw_fax"] = ISIN({"fax"})
     u["kw_tel"] = ISIN({"tél", "tel", "téléphone", "telephone"})
-    # person-TYPE words + the age cue, computed on the unique-form
-    # dictionary (ner_emissions previously ran .isin/.eq over the full
-    # object 'low' column — per-row Python string hashing/compares)
+    # person-TYPE words + the age cue (the NER's)
     u["is_perstype_word"] = ISIN(
         {"patient", "patiente", "patients", "patientes", "médecin",
          "medecin", "médecins", "infirmier", "infirmière"}
     )
     u["is_ans"] = pc.equal(low_u, "ans").to_numpy(zero_copy_only=False)
+    # the string sub-models' word cues: doctype words (dateline), '@'
+    # (medic e-mail), birth markers, 'le', id and sex keywords (patient),
+    # name suffixes (name) and the country (address, org)
+    u["is_doctype_word"] = ISIN(lx.DOCTYPE_WORDS)
+    u["has_at"] = pc.match_substring(tok_u, "@").to_numpy(zero_copy_only=False)
+    u["is_born_marker"] = ISIN({"née", "né", "nee", "ne"})
+    u["is_le"] = pc.equal(low_u, "le").to_numpy(zero_copy_only=False)
+    u["is_idno_kw"] = ISIN({"ipp", "nip"})
+    u["is_sex_kw"] = ISIN({"sexe", "féminin", "feminin", "masculin"})
+    u["is_name_suffix"] = ISIN({"jr", "sr", "junior"})
+    u["is_france"] = ISIN({"france"})
     for lex_name, lex_set in lx.MEDICAL_SETS.items():
         u[f"lex_{lex_name}"] = ISIN(lex_set)
     # suffix-class features (FeaturesVectorMedicalNER's 1-4 char prefix/
@@ -193,8 +238,13 @@ def token_features(toks: pd.DataFrame) -> pd.DataFrame:
         mat[:, j] = u[nm]
     exp = mat[codes]
     E = {nm: exp[:, j] for j, nm in enumerate(u_names)}
-    internal = {"abbrev", "kw_fax", "kw_tel"}
+    internal = {"abbrev", "kw_fax", "kw_tel", "is_le"}
     f.update({nm: E[nm] for nm in u_names if nm not in internal})
+    # the org model's head category (_HEAD_CODES; a null index is no head)
+    head_ix = pc.index_in(low_u, value_set=pa.array(list(_ORG_HEADS)))
+    f["org_head"] = _HEAD_CODES[
+        pc.fill_null(head_ix, -1).to_numpy(zero_copy_only=False) + 1
+    ][codes]
 
     # previous-token context (within the same line), vectorized via roll
     same_line = ~line_opens(toks)
@@ -224,6 +274,13 @@ def token_features(toks: pd.DataFrame) -> pd.DataFrame:
     # periods which continue the name)
     f["is_sent_period"] = f["is_period"] & ~f["prev_abbrev"]
     f["next_is_ans"] = np.roll(E["is_ans"], -1) & next_same
+    # the patient model's context cues: the article of 'née le 02/02/1962'
+    # (a birth marker before it on its line) and the age idiom '50 ans'
+    # ('ans' itself, or a number before it on its line)
+    le = np.flatnonzero(E["is_le"] & same_line)  # never a line's first
+    f["is_le_after_born"] = np.zeros(n, dtype=bool)
+    f["is_le_after_born"][le] = E["is_born_marker"][le - 1]
+    f["is_ans_cue"] = E["is_ans"] | (E["is_num"] & f["next_is_ans"])
     # drug hit within the previous 2 tokens (dose attachment window) —
     # suffix-detected drugs attach doses exactly like gazetteer ones
     med = f["lex_medicament"] | f["suf_drug"]
@@ -348,7 +405,7 @@ def parse_dateline_tokens(t: pd.DataFrame) -> pd.Series:
     # city names — the reference's CRF learns these from suffix features)
     city_like = (t["is_city"] | t["suf_city"]).to_numpy()
     em[:, _DL_IX["place"]] += 5.0 * (city_like & t["is_cap"].to_numpy())
-    em[:, _DL_IX["doctype"]] += 2.0 * t["low"].isin(lx.DOCTYPE_WORDS).to_numpy()
+    em[:, _DL_IX["doctype"]] += 2.0 * t["is_doctype_word"].to_numpy()
     em[:, _DL_IX["note"]] += 2.0 * (
         t["is_cap"].to_numpy() & ~city_like & ~t["is_medic_title"].to_numpy()
     )
@@ -362,48 +419,6 @@ def parse_dateline_tokens(t: pd.DataFrame) -> pd.Series:
 # ---------------------------------------------------------------------------
 
 _MD_IX = label_index(MEDIC_LABELS)
-
-
-# Word cues the medic / patient labelers key on that token_features does
-# not carry as columns. CUES is their one definition: the labelers call
-# these functions and trainer.pack_features packs the same ones as feature
-# bits, so a trained model's gold is always representable in its basis.
-def _has_at(t: pd.DataFrame) -> np.ndarray:
-    return t["tok"].str.contains("@", na=False).to_numpy()
-
-
-def _born_marker(t: pd.DataFrame) -> np.ndarray:
-    return t["low"].isin({"née", "né", "nee", "ne"}).to_numpy()
-
-
-def _le_after_born(t: pd.DataFrame) -> np.ndarray:
-    # 'née le 02/02/1962': the article after a birth marker on its line
-    # (row 0 always opens a line, so the roll's wrap-around is masked)
-    after = np.roll(_born_marker(t), 1) & ~line_opens(t)
-    return t["low"].eq("le").to_numpy() & after
-
-
-def _ans_cue(t: pd.DataFrame) -> np.ndarray:
-    # the age idiom '50 ans': 'ans' itself, or a number before it on its line
-    return (t["is_ans"] | (t["is_num"] & t["next_is_ans"])).to_numpy()
-
-
-def _idno_kw(t: pd.DataFrame) -> np.ndarray:
-    return t["low"].isin({"ipp", "nip"}).to_numpy()
-
-
-def _sex_kw(t: pd.DataFrame) -> np.ndarray:
-    return t["low"].isin({"sexe", "féminin", "feminin", "masculin"}).to_numpy()
-
-
-CUES = {
-    "has_at": _has_at,
-    "is_born_marker": _born_marker,
-    "is_le_after_born": _le_after_born,
-    "is_ans_cue": _ans_cue,
-    "is_idno_kw": _idno_kw,
-    "is_sex_kw": _sex_kw,
-}
 
 
 def parse_medic_tokens(t: pd.DataFrame) -> pd.Series:
@@ -432,7 +447,7 @@ def parse_medic_tokens(t: pd.DataFrame) -> pd.Series:
         & ~t["is_role"]
         & ~t["is_medic_title"]
     ).to_numpy()
-    em[:, _MD_IX["email"]] += 6.0 * _has_at(t)
+    em[:, _MD_IX["email"]] += 6.0 * t["has_at"].to_numpy()
     em[:, _MD_IX["address"]] += 3.0 * (
         t["is_street"] | t["is_postcode"]
     ).to_numpy()
@@ -460,15 +475,15 @@ def parse_patient_tokens(t: pd.DataFrame) -> pd.Series:
     em[:, _PT_IX["birthdate"]] += 4.0 * t["is_date"].to_numpy()
     # 'née le 02/02/1962' — the birth marker opens the birthdate phrase and
     # the article rides it (PatientParser birth-date chunks carry the marker)
-    em[:, _PT_IX["birthdate"]] += 4.0 * _born_marker(t)
-    em[:, _PT_IX["birthdate"]] += 3.5 * _le_after_born(t)
-    em[:, _PT_IX["age"]] += 5.0 * _ans_cue(t)
+    em[:, _PT_IX["birthdate"]] += 4.0 * t["is_born_marker"].to_numpy()
+    em[:, _PT_IX["birthdate"]] += 3.5 * t["is_le_after_born"].to_numpy()
+    em[:, _PT_IX["age"]] += 5.0 * t["is_ans_cue"].to_numpy()
     em[:, _PT_IX["address"]] += 4.0 * (
         t["is_street"] | t["is_postcode"] | t["is_city"]
     ).to_numpy()
     em[:, _PT_IX["address"]] += 2.5 * t["is_num"].to_numpy()
-    em[:, _PT_IX["idno"]] += 5.0 * _idno_kw(t)
-    em[:, _PT_IX["sex"]] += 4.0 * _sex_kw(t)
+    em[:, _PT_IX["idno"]] += 5.0 * t["is_idno_kw"].to_numpy()
+    em[:, _PT_IX["sex"]] += 4.0 * t["is_sex_kw"].to_numpy()
     em[:, _PT_IX["other"]] += 3.0 * (
         (t["is_stop"] | t["is_punct"]) & ~(t["is_period"] & t["prev_abbrev"])
     ).to_numpy()
@@ -508,7 +523,7 @@ def parse_name_tokens(t: pd.DataFrame) -> pd.Series:
     em[:, _NM_IX["middlename"]] += 4.0 * (name_tok & (cap_rank > 1)
                                           & t["is_cap"].to_numpy())
     em[:, _NM_IX["surname"]] += 5.0 * (name_tok & t["is_allcaps"].to_numpy())
-    em[:, _NM_IX["suffix"]] += 5.0 * t["low"].isin({"jr", "sr", "junior"}).to_numpy()
+    em[:, _NM_IX["suffix"]] += 5.0 * t["is_name_suffix"].to_numpy()
     em[:, _NM_IX["other"]] += 3.0 * (
         (t["is_stop"] | t["is_punct"]) & ~(t["is_period"] & t["prev_abbrev"])
     ).to_numpy()
@@ -541,7 +556,7 @@ def parse_address_tokens(t: pd.DataFrame) -> pd.Series:
     em[:, _AD_IX["city"]] += 2.0 * (
         (t["is_cap"] | t["is_allcaps"]).to_numpy() & after_postcode
     )
-    em[:, _AD_IX["country"]] += 5.0 * t["low"].isin({"france"}).to_numpy()
+    em[:, _AD_IX["country"]] += 5.0 * t["is_france"].to_numpy()
     em[:, _AD_IX["other"]] += 3.0 * t["is_punct"].to_numpy()
     em[:, _AD_IX["other"]] += 0.2
     return _decode(t, em, ADDRESS_LABELS, stay=2.0)
@@ -554,28 +569,6 @@ def parse_address_tokens(t: pd.DataFrame) -> pd.Series:
 
 _OG_IX = label_index(ORG_LABELS)
 
-# head word → hierarchy label: the token that OPENS an organizational unit
-# names its level; following tokens on the line ride that level until the
-# next head (the reference CRF learns this from <service>/<chu>/… training
-# chunks — 'SERVICE DE GYNECOLOGIE CHU HENRI MONDOR' → service + chu)
-_ORG_HEADS = {
-    "service": "service",
-    "département": "department", "departement": "department",
-    "pôle": "pole", "pole": "pole",
-    "unité": "unit", "unite": "unit",
-    "chu": "chu",
-    "ghu": "ghu",
-    "dmu": "dmu",
-    "site": "site",
-    "hôpital": "hospital", "hopital": "hospital", "clinique": "hospital",
-    "université": "university", "universite": "university",
-    "institut": "institution", "institution": "institution",
-    "centre": "center",
-    "aphp": "administration", "ap-hp": "administration",
-    "administration": "administration",
-}
-_HEAD_CATS = sorted(set(_ORG_HEADS.values()))
-
 
 def parse_org_tokens(t: pd.DataFrame) -> pd.Series:
     n = len(t)
@@ -583,8 +576,7 @@ def parse_org_tokens(t: pd.DataFrame) -> pd.Series:
     lstarts = line_starts(t)
 
     # category id per token: 0 = not a head, 1+i = head of category i
-    cat_of = {h: 1 + _HEAD_CATS.index(c) for h, c in _ORG_HEADS.items()}
-    head_cat = t["low"].map(cat_of).fillna(0).to_numpy().astype(np.int64)
+    head_cat = t["org_head"].to_numpy().astype(np.int64)
 
     # forward-fill the most recent head within the line: global running max
     # of head indices is line-local because indices increase monotonically —
@@ -609,7 +601,7 @@ def parse_org_tokens(t: pd.DataFrame) -> pd.Series:
         t["is_street"] | t["is_postcode"]
     ).to_numpy()
     em[:, _OG_IX["settlement"]] += 5.0 * t["is_city"].to_numpy()
-    em[:, _OG_IX["country"]] += 5.0 * t["low"].isin({"france"}).to_numpy()
+    em[:, _OG_IX["country"]] += 5.0 * t["is_france"].to_numpy()
     em[:, _OG_IX["other"]] += 3.0 * t["is_punct"].to_numpy()
     em[:, _OG_IX["other"]] += 2.4 * (t["is_stop"] & (active_cat == 0)).to_numpy()
     em[:, _OG_IX["other"]] += 0.2

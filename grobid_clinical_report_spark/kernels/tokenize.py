@@ -355,7 +355,8 @@ def assign_blocks_pages(lines: pd.DataFrame) -> pd.DataFrame:
     factorized on the fly for the test path).
 
     Adds: is_blank, is_page_break, is_media, block_id, page_id,
-    line_in_block, block_len, block_key (doc⊕block int composite).
+    line_in_block, block_len, block_key and page_key (doc⊕block and
+    doc⊕page int composites: their runs are the blocks and pages).
     """
     from . import arrowtext as at
 
@@ -384,7 +385,6 @@ def assign_blocks_pages(lines: pd.DataFrame) -> pd.DataFrame:
     if not np.issubdtype(doc.dtype, np.integer):
         doc = pd.factorize(doc)[0]
     doc = doc.astype(np.int64)
-    df["_doc_code"] = doc
 
     # lines arrive grouped by document → every grouping below is a
     # contiguous-segment aggregation (kernels/segments.py), no hash groupby
@@ -395,6 +395,7 @@ def assign_blocks_pages(lines: pd.DataFrame) -> pd.DataFrame:
     df["block_id"] = seg_cumsum(sep, dstarts) - sep
     pb = df["is_page_break"].to_numpy().astype(np.int64)
     df["page_id"] = seg_cumsum(pb, dstarts) - pb
+    df["page_key"] = doc * (1 << 20) + df["page_id"].to_numpy()
 
     block_key = doc * (1 << 22) + df["block_id"].to_numpy()
     df["block_key"] = block_key

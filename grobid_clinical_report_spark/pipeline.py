@@ -32,6 +32,7 @@ Public modes (API parity with §2.6: EngineMedical.process* / REST endpoints):
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+from itertools import chain
 
 import numpy as np
 import pandas as pd
@@ -277,26 +278,21 @@ def _coalesced(
 ) -> Iterator[pa.RecordBatch]:
     buf: list[pa.RecordBatch] = []
     docs = spans = 0
-    for b in batches:
-        if b.num_rows == 0:
-            continue
-        buf.append(b)
-        docs += b.num_rows
-        s = pc.sum(pc.list_value_length(b.column("spans"))).as_py()
-        spans += int(s or 0)
-        if docs >= _COALESCE_DOCS or spans >= _COALESCE_SPANS:
+    for b in chain(batches, [None]):  # None ends the input: flush the rest
+        if b is not None and b.num_rows:
+            buf.append(b)
+            docs += b.num_rows
+            s = pc.sum(pc.list_value_length(b.column("spans"))).as_py()
+            spans += int(s or 0)
+        if buf and (
+            b is None or docs >= _COALESCE_DOCS or spans >= _COALESCE_SPANS
+        ):
             yield (
                 buf[0]
                 if len(buf) == 1
                 else pa.Table.from_batches(buf).combine_chunks().to_batches()[0]
             )
             buf, docs, spans = [], 0, 0
-    if buf:
-        yield (
-            buf[0]
-            if len(buf) == 1
-            else pa.Table.from_batches(buf).combine_chunks().to_batches()[0]
-        )
 
 
 def _lines_from_batch(batch: pa.RecordBatch) -> tuple[pa.Array, pd.DataFrame]:
@@ -346,13 +342,6 @@ def _batch_from_flat(doc_ids: pa.Array, flat: pd.DataFrame) -> pa.RecordBatch:
         codes = codes[order]
         counts = np.bincount(codes, minlength=n_docs)
 
-        def _str_col(s: pd.Series) -> pa.Array:
-            # Arrow-backed columns (token-mode span text since r8) export
-            # without the object round-trip; never-null by construction
-            if isinstance(s.dtype, pd.ArrowDtype):
-                return arr_of(s)
-            return pa.array(s.astype(str), type=pa.string())
-
         mref = flat["media_ref"]
         if mref.isna().all():
             mref_arr = pa.nulls(len(flat), pa.string())
@@ -363,8 +352,8 @@ def _batch_from_flat(doc_ids: pa.Array, flat: pd.DataFrame) -> pa.RecordBatch:
             )
         struct = pa.StructArray.from_arrays(
             [
-                _str_col(flat["kind"]),
-                _str_col(flat["text"]),
+                arr_of(flat["kind"]),
+                arr_of(flat["text"]),
                 mref_arr,
                 pa.array(
                     flat["offset"].to_numpy().astype(np.int32), type=pa.int32()

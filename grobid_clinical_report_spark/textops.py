@@ -1184,16 +1184,14 @@ FROM scored
 # pairs alone under-merge — a~b, b~c must collapse to one component even
 # when a~c never cleared the Jaccard bar; Lee et al. 2022 'Deduplicating
 # Training Data Makes Language Models Better' dedups by exactly these
-# transitive MinHash clusters). Iterative min-label propagation
-# over the pair graph, run TO FIXPOINT with a driver-side convergence check
-# (each iteration is one bounded join on the pair table — ≪ corpus —
-# and the iteration count is the graph diameter, small for dup clusters).
+# transitive MinHash clusters). Alternating large-star / small-star over
+# the pair graph (cc_labels_star), run TO FIXPOINT with a driver-side
+# convergence check; each round is two bounded joins on the pair table
+# (≪ corpus) and the round count is O(log component size).
 # Deterministic: the component id is the min doc_id reachable, which the
 # DuckDB recursive-CTE oracle computes exactly — so convergence itself is
 # oracle-verified, not assumed.
 # ---------------------------------------------------------------------------
-
-_CC_MAX_ITERS = 20
 
 
 def _cc_materialize(df: DataFrame, name: str) -> DataFrame:
@@ -1228,71 +1226,6 @@ def _symmetric_edges(pairs: DataFrame):
     )
 
 
-def cc_labels_propagate(edges: DataFrame) -> DataFrame:
-    """Min-label propagation to fixpoint over a SYMMETRIC edge table →
-    [doc, lab]. Rounds = graph diameter (small for dup clusters); each
-    round is one bounded join + agg on the pair table, ≪ corpus."""
-    from pyspark.sql import functions as F
-
-    labels = edges.select(F.col("doc_a").alias("doc")).distinct().withColumn(
-        "lab", F.col("doc")
-    )
-
-    def _propagate(lbl):
-        return (
-            lbl.join(edges, lbl["doc"] == edges["doc_a"])
-            .select(F.col("doc_b").alias("doc"), "lab")
-            .union(lbl)
-            .groupBy("doc")
-            .agg(F.min("lab").alias("lab"))
-        )
-
-    # One propagation round per convergence probe. A two-rounds-per-probe
-    # variant (VERDICT r4 next #6) was built and MEASURED in r5: because
-    # _propagate consumes its input in two branches (join + union), the
-    # intermediate step must itself be materialized, and the probe job
-    # then populates two cache trees back-to-back — 26.6s for the second
-    # probe vs 3.6s for the equivalent two single-step iterations on the
-    # same box. The per-iteration count is an anti-join of two cached
-    # label tables (tiny); the propagation shuffle dominates, so halving
-    # counts while adding cache materializations loses. Kept: the explicit
-    # non-convergence raise below (ADVICE r4). For graphs whose DIAMETER
-    # breaks the round budget, cc_labels_star below is the O(log n)-round
-    # path.
-    converged = False
-    for i in range(_CC_MAX_ITERS):
-        nxt = _propagate(labels)
-        # lineage-truncating materialize FIRST (alternating names so an
-        # iteration never reads the path it writes), then probe
-        # convergence: changed = rows whose label improved (anti-join on
-        # equality) — a tiny driver count
-        nxt = _cc_materialize(nxt, f"cc_labels_{i % 2}")
-        changed = (
-            nxt.alias("n")
-            .join(
-                labels.alias("o"),
-                (F.col("n.doc") == F.col("o.doc"))
-                & (F.col("n.lab") == F.col("o.lab")),
-                "left_anti",
-            )
-            .count()
-        )
-        labels = nxt
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # a silent early exit would return under-merged components that LOOK
-        # valid; a dup chain with diameter > _CC_MAX_ITERS (versioned /
-        # incrementally-edited documents) must be an explicit failure
-        raise RuntimeError(
-            "dedup_components: min-label propagation did not converge in "
-            f"{_CC_MAX_ITERS} rounds ({changed} labels still improving); "
-            "raise _CC_MAX_ITERS or use cc_labels_star for this graph"
-        )
-    return labels
-
-
 _CC_STAR_MAX_ROUNDS = 40
 
 
@@ -1301,10 +1234,10 @@ def cc_labels_star(edges: DataFrame) -> DataFrame:
     et al. 2014, 'Connected Components in MapReduce and Beyond') over a
     SYMMETRIC edge table → [doc, lab] with lab = component min.
 
-    The at-scale alternative to cc_labels_propagate: rounds are
-    O(log n) in COMPONENT SIZE instead of O(diameter), so a
-    1000-link chain of incrementally-edited near-dups converges in ~10
-    rounds where propagation needs 1000. Each round is two bounded
+    Rounds are O(log n) in COMPONENT SIZE instead of the O(diameter) of
+    min-label propagation, so a 1000-link chain of incrementally-edited
+    near-dups converges in ~10 rounds where propagation needs 1000. Each
+    round is two bounded
     groupBy+join passes over the shrinking edge list:
       large-star: every node points its LARGER neighbors at the min of
         its closed neighborhood (emitted from the smaller endpoint, so
@@ -1313,8 +1246,8 @@ def cc_labels_star(edges: DataFrame) -> DataFrame:
         onto the min of that set.
     Fixpoint = the edge set stops changing; the graph is then a star per
     component centered on the component min, and the label read-off is
-    one aggregation. Equality with cc_labels_propagate (and with the
-    exact DuckDB recursive-CTE closure) is pinned by pytest."""
+    one aggregation. Equality with a union-find (and with the exact
+    DuckDB recursive-CTE closure) is pinned by pytest."""
     from pyspark.sql import functions as F
 
     E = _cc_materialize(
@@ -1388,14 +1321,14 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the gated path IS the scale path (VERDICT r5 next #4): large/small-star
     # converges in O(log component-size) rounds regardless of graph diameter,
     # so the query the driver oracle-checks every round is the one a 100 TB
-    # run with 1000-link near-dup chains needs. cc_labels_propagate
-    # (O(diameter), cheaper per round on shallow graphs) stays available and
-    # its equality with the star path + the exact recursive-CTE closure is
-    # pinned by pytest.
-    # Auto-select evaluated and REJECTED (VERDICT r6 next #8), measured
-    # r7 at local[32]: on the shallow sf1 synthetic graph star costs
-    # 2.7s cold / 1.4s warm vs propagation's 1.6s/1.2s — the checksum
-    # fixpoint (see cc_labels_star) cut the shallow-graph penalty from
+    # run with 1000-link near-dup chains needs; its equality with the exact
+    # recursive-CTE closure is the oracle.
+    # Auto-selecting min-label propagation (O(diameter), cheaper per round
+    # on shallow graphs; since deleted) was evaluated and REJECTED (VERDICT
+    # r6 next #8), measured r7 at local[32]: on the shallow sf1 synthetic
+    # graph star costs 2.7s cold / 1.4s warm vs propagation's 1.6s/1.2s —
+    # the checksum fixpoint (see cc_labels_star) cut the shallow-graph
+    # penalty from
     # ~60% of a 23s wall to a ~1s constant; on a 2000-link chain star
     # converges in ~13 rounds (15.4s) while propagation FAILS outright at
     # its 20-round cap. A 1-round probe would buy ≤1s on shallow graphs

@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 
 from .kernels.labels import NER_LABELS, label_index
 from .kernels.segments import seg_starts
-from .kernels.subparsers import CUES, line_starts, tokens_of
+from .kernels.subparsers import line_starts, tokens_of
 from .kernels.viterbi import decode, viterbi_segments
 
 _IX = label_index(NER_LABELS)
@@ -94,7 +94,9 @@ class ModelSpec:
     (`MedicalReportTrainerRunner.java:60-131` dispatching per-model
     `*Trainer` classes over a shared Wapiti engine); this is the same
     shape — every token-level model that draws on the shared
-    `token_features` basis trains through the same kernel."""
+    `token_features` basis trains through the same kernel. Every feature
+    but the trailing 'bias' names a `token_features` column, so a
+    labeler's word cues are packed from the columns it reads."""
 
     def __init__(self, name, labels, features, labeler):
         assert len(features) <= 63, name
@@ -117,9 +119,9 @@ def _ner_spec() -> ModelSpec:
 
 
 def _medic_spec() -> ModelSpec:
-    """The medic sub-model (MedicParser.java:103-228 analog): same token
-    basis plus the one feature its labeler uses that token_features does
-    not carry (the '@' email cue, synthesized at pack time)."""
+    """The medic sub-model (MedicParser.java:103-228 analog): the NER's
+    token basis plus the one column only its labeler reads (has_at, the
+    '@' e-mail cue)."""
     from .kernels.labels import MEDIC_LABELS
     from .kernels.subparsers import parse_medic_tokens
 
@@ -131,10 +133,10 @@ def _medic_spec() -> ModelSpec:
 
 
 def _patient_spec() -> ModelSpec:
-    """The patient sub-model (PatientParser.java:147-182 analog): shared
-    token basis plus the five word-identity cues its labeler keys on
-    (birth marker + trailing article, 'ans' age idiom, IPP/NIP id
-    keywords, sex keywords — subparsers.CUES, packed at pack time)."""
+    """The patient sub-model (PatientParser.java:147-182 analog): the NER's
+    token basis plus the five cue columns only its labeler reads (birth
+    marker + trailing article, 'ans' age idiom, IPP/NIP id keywords, sex
+    keywords)."""
     from .kernels.labels import PATIENT_LABELS
     from .kernels.subparsers import parse_patient_tokens
 
@@ -164,21 +166,12 @@ def pack_features(
     toks: pd.DataFrame, features: tuple[str, ...] = TRAIN_FEATURES
 ) -> np.ndarray:
     """Token feature frame → one int64 bitmask per token (bit i ⇔
-    features[i]). 'bias' is always on, the labelers' word cues come from
-    their one definition (subparsers.CUES), and everything else reads a
-    boolean token_features column."""
+    features[i]). 'bias' is always on; every other bit is the boolean
+    token_features column of that name."""
     bits = np.zeros(len(toks), dtype=np.int64)
     for i, name in enumerate(features):
-        if name == "bias":
-            col = None
-        elif name in CUES:
-            col = CUES[name](toks)
-        else:
-            col = toks[name].to_numpy()
-        if col is None:
-            bits |= np.int64(1) << np.int64(i)
-        else:
-            bits |= col.astype(np.int64) << np.int64(i)
+        on = True if name == "bias" else toks[name].to_numpy()
+        bits |= np.asarray(on, dtype=np.int64) << np.int64(i)
     return bits
 
 

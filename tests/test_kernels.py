@@ -6,6 +6,7 @@ import itertools
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from grobid_clinical_report_spark.kernels import normalize
@@ -276,12 +277,21 @@ def test_viterbi_int64_emissions_not_narrowed():
 # --- normalization -----------------------------------------------------------
 
 def test_iso_dates():
-    s = pd.Series(
-        ["Le 29.04.2000", "01/01/1990", "le 3 mars 2018", "29-04-00", "rien"]
-    )
-    assert normalize.to_iso_date(s).tolist() == [
-        "2000-04-29", "1990-01-01", "2018-03-03", "2000-04-29", "",
-    ]
+    """Numeric and textual dates normalize to ISO and a string with no
+    date gives '', with no pandas FutureWarning: a batch whose dates all
+    fail to parse ('hier') must not hit fillna's deprecated downcast."""
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        for raw, want in (
+            (["Le 29.04.2000", "01/01/1990", "le 3 mars 2018", "29-04-00",
+              "rien"],
+             ["2000-04-29", "1990-01-01", "2018-03-03", "2000-04-29", ""]),
+            (["hier"], [""]),
+            (["hier", "le 1er avril 98"], ["", "1998-04-01"]),
+        ):
+            assert normalize.to_iso_date(pd.Series(raw)).tolist() == want
 
 
 def test_normalize_text_dehyphenize():
@@ -334,6 +344,28 @@ def test_merge_header_fields_tied_offsets_keep_document_order():
     out = merge_header_fields(lines)
     assert out["kind"].tolist() == ["doctype", "date", "medic", "address"]
     assert out["text"].tolist()[1] == "2000-04-29"
+
+
+def test_fill_fields_dedup_key_ignores_text_dtype():
+    """The case/space-insensitive dedup key is the same whether the span
+    text is object (the header path) or Arrow-backed (the POJO path):
+    'Dr A', 'Dr\xa0A', 'DR a' and 'Dr\vA' are one value on both, since
+    the key removes whatever Python's \\s matches, Unicode spaces
+    included."""
+    from grobid_clinical_report_spark.kernels.header import fill_fields
+
+    texts = ["Dr A", "Dr\xa0A", "DR a", "Dr\vA", "Pr B"]
+    spans = pd.DataFrame(
+        {"doc_id": [0] * 5, "kind": ["medic"] * 5, "text": texts,
+         "media_ref": None, "offset": range(5)}
+    )
+    arrow = spans.assign(text=spans["text"].astype(pd.ArrowDtype(pa.string())))
+    rows = [
+        fill_fields(d, " ; ").astype({"text": object}).to_dict("records")
+        for d in (spans, arrow)
+    ]
+    assert rows[0] == rows[1]
+    assert [r["text"] for r in rows[0]] == ["Dr A ; Pr B"]
 
 
 def test_header_sub_spans_follow_their_parent_when_offsets_tie():
@@ -453,6 +485,86 @@ def test_labelers_return_categorical_over_their_vocabulary(name, monkeypatch):
     assert isinstance(got.dtype, pd.CategoricalDtype)
     assert list(got.cat.categories) == vocab
     assert (got.cat.codes >= 0).all()
+
+
+@pytest.fixture(scope="module")
+def prepared_batches():
+    """Prepared lines of the fixtures and of a synthetic batch."""
+    from grobid_clinical_report_spark import datagen
+    from grobid_clinical_report_spark.pipeline import _docs_batch, _prepared
+
+    pdfs = (datagen.fixture_documents_pdf(),
+            datagen.synthetic_documents_pdf(120, seed=11))
+    return [lines for pdf in pdfs for _, lines in _prepared([_docs_batch(pdf)])]
+
+
+_LINE_MODELS = ["segment_lines", "label_body_lines", "label_header_lines",
+                "label_leftnote_lines"]
+_TOKEN_MODELS = ["label_ner_tokens", "parse_dateline", "parse_medic",
+                 "parse_patient", "parse_name", "parse_address", "parse_org"]
+
+
+@pytest.mark.parametrize(
+    "name",
+    _LINE_MODELS + _TOKEN_MODELS
+    + ["pack_features:fr-medical-ner", "pack_features:medic",
+       "pack_features:patient"],
+)
+def test_models_read_no_text(name, prepared_batches):
+    """Every labeler, and the trainer's feature packing, reads feature
+    columns only: dropping the text columns (`text` for the line models;
+    `tok`, `gap` and any other string column for the token models) leaves
+    its output unchanged. Text is read by the featurizers and the span
+    builders alone."""
+    from grobid_clinical_report_spark import trainer
+    from grobid_clinical_report_spark.kernels import body, header, leftnote
+    from grobid_clinical_report_spark.kernels import ner as ner_k
+    from grobid_clinical_report_spark.kernels import subparsers as sub_k
+    from grobid_clinical_report_spark.kernels.features import featurize_lines
+    from grobid_clinical_report_spark.kernels.segmenter import segment_lines
+    from grobid_clinical_report_spark.pipeline import (
+        _content_lines, _zone_lines, _zoned,
+    )
+
+    line_models = {
+        "segment_lines": (featurize_lines, segment_lines),
+        "label_body_lines": (
+            lambda ls: (z := _zoned(ls))[z["zone"].eq("body")],
+            body.label_body_lines,
+        ),
+        "label_header_lines": (
+            lambda ls: _zone_lines(_zoned(ls), "header"),
+            header.label_header_lines,
+        ),
+        "label_leftnote_lines": (
+            lambda ls: _zone_lines(_zoned(ls), "leftnote"),
+            leftnote.label_leftnote_lines,
+        ),
+    }
+    token_models = {"label_ner_tokens": ner_k.label_ner_tokens,
+                    **sub_k.SUBPARSERS}
+    for lines in prepared_batches:
+        if name in line_models:
+            frame, model = line_models[name]
+            featured, text_cols = frame(lines), ["text"]
+        else:
+            featured = sub_k.tokens_of(_content_lines(lines))
+            # tok, gap and any other column that holds strings
+            text_cols = [c for c in featured
+                         if pd.api.types.is_string_dtype(featured[c])]
+            assert {"tok", "gap"} <= set(text_cols)
+            if name in token_models:
+                model = token_models[name]
+            else:
+                spec = trainer.SPECS[name.split(":")[1]]()
+                model = lambda t: trainer.pack_features(t, spec.features)  # noqa: E731
+        assert len(featured) > 0
+        want = model(featured)
+        got = model(featured.drop(columns=text_cols))
+        if isinstance(want, pd.Series):
+            pd.testing.assert_series_equal(got, want)
+        else:
+            np.testing.assert_array_equal(got, want)
 
 
 # --- tokenization ------------------------------------------------------------

@@ -350,14 +350,19 @@ def test_matmul_exact_property():
 def test_sub_specs_train_with_own_layout(spark, fixture_docs_pdf, name,
                                          extra):
     """ModelSpec genericity: each sub-model trains through the same
-    kernel with its OWN label space and bit layout (incl. its synthesized
-    cues), distributed bit-equal to the serial twin; layouts are per-spec
-    so the NER masks are untouched by the extra features."""
+    kernel with its OWN label space and bit layout (incl. its own cue
+    columns), distributed bit-equal to the serial twin; layouts are
+    per-spec so the NER masks are untouched by the extra features."""
+    from grobid_clinical_report_spark.kernels.subparsers import tokens_of
     from grobid_clinical_report_spark.schema import DOCUMENTS_SCHEMA
 
     spec = trainer.SPECS[name]()
     assert spec.n_feats == _NF + len(extra)
-    assert all(e in spec.features and e in trainer.CUES for e in extra)
+    toks = tokens_of(pd.DataFrame(
+        {"doc_id": [0], "seq": [0], "text": ["Née le 02/02/1962"],
+         "offset": [0]}
+    ))
+    assert all(e in spec.features and e in toks.columns for e in extra)
     assert trainer.SPECS["fr-medical-ner"]().features == trainer.TRAIN_FEATURES
     docs = spark.createDataFrame(fixture_docs_pdf, schema=DOCUMENTS_SCHEMA)
     ts = trainer.build_training_set(docs, spec=spec).cache()
