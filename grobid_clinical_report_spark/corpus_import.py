@@ -50,6 +50,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .fixture_oracle import _sql_str, values_sql
+
 CORPUS_DDL = (
     "doc_id string, text string, "
     "entities array<struct<etype:string, start:int, length:int>>"
@@ -330,10 +332,6 @@ def q_import_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     return import_lexicon(fixture_corpus_df(spark))
 
 
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
-
-
 # Hand-verified supervision rows for QUAERO_FIXTURE (the literal-VALUES
 # oracle convention of the fixture family): every row checked against the
 # fixture text + entity offsets by hand — see tests/test_extras.py
@@ -372,15 +370,8 @@ IMPORT_NER_EXPECTED: list[tuple[str, int, int, str, str]] = [
 
 
 def _oracle_import_ner() -> str:
-    rows = ",\n ".join(
-        f"({_sql_str(d)}, CAST({s} AS INT), CAST({t} AS INT),"
-        f" {_sql_str(tok)}, {_sql_str(lab)})"
-        for d, s, t, tok, lab in IMPORT_NER_EXPECTED
-    )
     return (
-        "SELECT * FROM (VALUES\n "
-        + rows
-        + "\n) AS t(doc_id, seq, tok_idx, text, label)"
+        values_sql(IMPORT_NER_EXPECTED, "doc_id, seq, tok_idx, text, label")
         + " ORDER BY doc_id, seq, tok_idx"
     )
 

@@ -37,12 +37,32 @@ def _sql_str(s: str | None) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
+def values_sql(rows, columns: str) -> str:
+    """Literal VALUES table named ``t(columns)``, one row per tuple: ints
+    become INT literals, strings (and None) VARCHAR ones."""
+    body = ",\n ".join(
+        "("
+        + ", ".join(
+            f"CAST({v} AS INT)" if isinstance(v, int) else _sql_str(v)
+            for v in row
+        )
+        + ")"
+        for row in rows
+    )
+    return f"SELECT * FROM (VALUES\n {body}\n) AS t({columns})"
+
+
+def _fixture_docs(spark: SparkSession, keep) -> DataFrame:
+    """The fixture documents whose doc_id is in ``keep``, as a Spark
+    DataFrame."""
+    pdf = datagen.fixture_documents_pdf()
+    pdf = pdf[pdf.doc_id.isin(sorted(keep))].reset_index(drop=True)
+    return spark.createDataFrame(pdf, schema=DOCUMENTS_SCHEMA)
+
+
 def fixture_docs_df(spark: SparkSession, mode: str) -> DataFrame:
     """The fixture documents a mode is graded on, as a Spark DataFrame."""
-    pdf = datagen.fixture_documents_pdf()
-    keep = sorted(datagen.FIXTURE_EXPECTED[mode])
-    pdf = pdf[pdf.doc_id.isin(keep)].reset_index(drop=True)
-    return spark.createDataFrame(pdf, schema=DOCUMENTS_SCHEMA)
+    return _fixture_docs(spark, datagen.FIXTURE_EXPECTED[mode])
 
 
 def fixture_query(mode: str) -> Callable[[SparkSession, str], DataFrame]:
@@ -71,18 +91,13 @@ def fixture_query(mode: str) -> Callable[[SparkSession, str], DataFrame]:
 
 def fixture_oracle_sql(mode: str) -> str:
     """Literal VALUES oracle: the pinned expected span sequences."""
-    rows = []
-    for doc_id, exp in sorted(datagen.FIXTURE_EXPECTED[mode].items()):
-        for i, (kind, text, media_ref) in enumerate(exp):
-            rows.append(
-                f"({_sql_str(doc_id)}, CAST({i} AS INT), {_sql_str(kind)},"
-                f" {_sql_str(text)}, {_sql_str(media_ref)})"
-            )
-    body = ",\n ".join(rows)
-    return (
-        "SELECT * FROM (VALUES\n "
-        + body
-        + "\n) AS t(doc_id, seq, kind, text, media_ref)"
+    return values_sql(
+        (
+            (doc_id, i, kind, text, media_ref)
+            for doc_id, exp in sorted(datagen.FIXTURE_EXPECTED[mode].items())
+            for i, (kind, text, media_ref) in enumerate(exp)
+        ),
+        "doc_id, seq, kind, text, media_ref",
     )
 
 
@@ -123,87 +138,54 @@ assert set(QUERY_NAMES) <= set(FLAT_MODES), sorted(
 def q_training_segmenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .pipeline import run_training
 
-    pdf = datagen.fixture_documents_pdf()
-    keep = sorted(datagen.FX_SEG_TRAINING)
-    pdf = pdf[pdf.doc_id.isin(keep)].reset_index(drop=True)
-    docs = spark.createDataFrame(pdf, schema=DOCUMENTS_SCHEMA)
+    docs = _fixture_docs(spark, datagen.FX_SEG_TRAINING)
     return run_training(docs, model="segmenter").select(
         "doc_id", "seq", "label"
     )
 
 
-def _training_oracle_sql() -> str:
-    rows = []
-    for doc_id, pairs in sorted(datagen.FX_SEG_TRAINING.items()):
-        for seq, zone in pairs:
-            rows.append(
-                f"({_sql_str(doc_id)}, CAST({seq} AS INT), {_sql_str(zone)})"
-            )
-    return (
-        "SELECT * FROM (VALUES\n "
-        + ",\n ".join(rows)
-        + "\n) AS t(doc_id, seq, label)"
+def _pins_oracle_sql(pins: dict, columns: str) -> str:
+    """VALUES oracle of per-document pins {doc_id: [(seq, ...), ...]}: one
+    row (doc_id, seq, ...) per pin, documents in doc_id order."""
+    return values_sql(
+        ((doc_id, *pin) for doc_id, rows in sorted(pins.items()) for pin in rows),
+        columns,
     )
 
 
 OPS["training_segmenter"] = q_training_segmenter
-ORACLES["training_segmenter"] = _training_oracle_sql()
+ORACLES["training_segmenter"] = _pins_oracle_sql(
+    datagen.FX_SEG_TRAINING, "doc_id, seq, label"
+)
 
 
 def q_training_header(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .pipeline import run_training
 
-    pdf = datagen.fixture_documents_pdf()
-    keep = sorted(datagen.FX_HDR_TRAINING)
-    pdf = pdf[pdf.doc_id.isin(keep)].reset_index(drop=True)
-    docs = spark.createDataFrame(pdf, schema=DOCUMENTS_SCHEMA)
+    docs = _fixture_docs(spark, datagen.FX_HDR_TRAINING)
     return run_training(docs, model="header").select(
         "doc_id", "seq", "label"
     )
 
 
-def _training_header_oracle_sql() -> str:
-    rows = []
-    for doc_id, pairs in sorted(datagen.FX_HDR_TRAINING.items()):
-        for seq, label in pairs:
-            rows.append(
-                f"({_sql_str(doc_id)}, CAST({seq} AS INT), {_sql_str(label)})"
-            )
-    return (
-        "SELECT * FROM (VALUES\n "
-        + ",\n ".join(rows)
-        + "\n) AS t(doc_id, seq, label)"
-    )
-
-
 OPS["training_header"] = q_training_header
-ORACLES["training_header"] = _training_header_oracle_sql()
+ORACLES["training_header"] = _pins_oracle_sql(
+    datagen.FX_HDR_TRAINING, "doc_id, seq, label"
+)
 
 
 def q_training_ner(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .pipeline import run_training_ner
 
-    pdf = datagen.fixture_documents_pdf()
-    keep = sorted(datagen.FX_NER_TRAINING)
-    pdf = pdf[pdf.doc_id.isin(keep)].reset_index(drop=True)
-    docs = spark.createDataFrame(pdf, schema=DOCUMENTS_SCHEMA)
+    docs = _fixture_docs(spark, datagen.FX_NER_TRAINING)
     return run_training_ner(docs).select(
         "doc_id", "seq", "tok_idx", "text", "label"
     )
 
 
 def _training_ner_oracle_sql() -> str:
-    rows = []
-    for doc_id, toks in sorted(datagen.FX_NER_TRAINING.items()):
-        for seq, tok_idx, tok, label in toks:
-            rows.append(
-                f"({_sql_str(doc_id)}, CAST({seq} AS INT),"
-                f" CAST({tok_idx} AS INT), {_sql_str(tok)}, {_sql_str(label)})"
-            )
-    return (
-        "SELECT * FROM (VALUES\n "
-        + ",\n ".join(rows)
-        + "\n) AS t(doc_id, seq, tok_idx, text, label)"
+    return _pins_oracle_sql(
+        datagen.FX_NER_TRAINING, "doc_id, seq, tok_idx, text, label"
     )
 
 
@@ -219,10 +201,7 @@ def q_training_anonym(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import anonymize as anon
     from .pipeline import run_training
 
-    pdf = datagen.fixture_documents_pdf()
-    keep = sorted(datagen.FX_SEG_TRAINING)
-    pdf = pdf[pdf.doc_id.isin(keep)].reset_index(drop=True)
-    docs = spark.createDataFrame(pdf, schema=DOCUMENTS_SCHEMA)
+    docs = _fixture_docs(spark, datagen.FX_SEG_TRAINING)
     t = run_training(docs, model="segmenter")
     return (
         t.selectExpr("doc_id", "seq", "label", f"{anon._spark_stage1()} as t2")
@@ -231,50 +210,22 @@ def q_training_anonym(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _training_anonym_oracle_sql() -> str:
-    rows = []
-    for doc_id, pins in sorted(datagen.FX_ANON_TRAINING.items()):
-        for seq, text, label in pins:
-            rows.append(
-                f"({_sql_str(doc_id)}, CAST({seq} AS INT),"
-                f" {_sql_str(text)}, {_sql_str(label)})"
-            )
-    return (
-        "SELECT * FROM (VALUES\n "
-        + ",\n ".join(rows)
-        + "\n) AS t(doc_id, seq, text, label)"
-    )
-
-
 OPS["training_anonym"] = q_training_anonym
-ORACLES["training_anonym"] = _training_anonym_oracle_sql()
+ORACLES["training_anonym"] = _pins_oracle_sql(
+    datagen.FX_ANON_TRAINING, "doc_id, seq, text, label"
+)
 
 
 def q_training_leftnote(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .pipeline import run_training
 
-    pdf = datagen.fixture_documents_pdf()
-    keep = sorted(datagen.FX_LEFTNOTE_TRAINING)
-    pdf = pdf[pdf.doc_id.isin(keep)].reset_index(drop=True)
-    docs = spark.createDataFrame(pdf, schema=DOCUMENTS_SCHEMA)
+    docs = _fixture_docs(spark, datagen.FX_LEFTNOTE_TRAINING)
     return run_training(docs, model="leftnote").select(
         "doc_id", "seq", "label"
     )
 
 
-def _training_leftnote_oracle_sql() -> str:
-    rows = []
-    for doc_id, pairs in sorted(datagen.FX_LEFTNOTE_TRAINING.items()):
-        for seq, label in pairs:
-            rows.append(
-                f"({_sql_str(doc_id)}, CAST({seq} AS INT), {_sql_str(label)})"
-            )
-    return (
-        "SELECT * FROM (VALUES\n "
-        + ",\n ".join(rows)
-        + "\n) AS t(doc_id, seq, label)"
-    )
-
-
 OPS["training_leftnote"] = q_training_leftnote
-ORACLES["training_leftnote"] = _training_leftnote_oracle_sql()
+ORACLES["training_leftnote"] = _pins_oracle_sql(
+    datagen.FX_LEFTNOTE_TRAINING, "doc_id, seq, label"
+)

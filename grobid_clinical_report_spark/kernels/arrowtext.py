@@ -18,27 +18,30 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 
-def arr_of(s: pd.Series) -> pa.Array:
-    """pandas Series → Arrow string array. Zero-copy when the Series is
-    already Arrow-backed (the pipeline keeps text columns as ArrowDtype so
-    the megabytes of document text are never re-encoded per feature pass)."""
-    if isinstance(s.dtype, pd.ArrowDtype):
-        arr = s.array._pa_array  # ChunkedArray
-        arr = arr.combine_chunks() if arr.num_chunks != 1 else arr.chunk(0)
-        if arr.null_count:
-            arr = pc.fill_null(arr, "")
-        return arr
-    if isinstance(s.dtype, pd.CategoricalDtype):
-        # codes + tiny dictionary → string array via one C++ take (the
-        # r8 token-mode labelers ship Categorical labels; .astype(str)
-        # here would materialize the corpus-sized object column)
-        codes = s.cat.codes.to_numpy()
-        cats = pa.array(s.cat.categories.astype(str), type=pa.string())
-        d = pa.DictionaryArray.from_arrays(
-            pa.array(codes, mask=codes < 0), cats
-        )
-        return pc.fill_null(d.dictionary_decode(), "")
-    return pa.array(s.fillna("").astype(str), type=pa.string())
+def arr_of(s: pd.Series | pa.Array | pa.ChunkedArray) -> pa.Array:
+    """Text column → null-free Arrow string array. Zero-copy when the
+    input is already Arrow (an array, or an Arrow-backed Series: the
+    cascade keeps text Arrow from flatten to emit, so the megabytes of
+    document text are never re-encoded per pass). Categorical labels go
+    through their codes; object text arrives only from tests and from
+    callers outside the cascade."""
+    if isinstance(s, pd.Series):
+        if isinstance(s.dtype, pd.CategoricalDtype):
+            # codes + tiny dictionary → string array via one C++ take (the
+            # r8 token-mode labelers ship Categorical labels; .astype(str)
+            # here would materialize the corpus-sized object column)
+            codes = s.cat.codes.to_numpy()
+            cats = pa.array(s.cat.categories.astype(str), type=pa.string())
+            d = pa.DictionaryArray.from_arrays(
+                pa.array(codes, mask=codes < 0), cats
+            )
+            return pc.fill_null(d.dictionary_decode(), "")
+        if not isinstance(s.dtype, pd.ArrowDtype):
+            return pa.array(s.fillna("").astype(str), type=pa.string())
+        s = s.array._pa_array  # ChunkedArray
+    if isinstance(s, pa.ChunkedArray):
+        s = s.combine_chunks() if s.num_chunks != 1 else s.chunk(0)
+    return pc.fill_null(s, "") if s.null_count else s
 
 
 def series_of(arr: pa.Array, index=None) -> pd.Series:

@@ -16,8 +16,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
-from .cluster import rle_cluster_ids
+from . import arrowtext as at
+from .cluster import group_join, rle_cluster_ids
 from .labels import BODY_LABELS, label_index, sticky_transitions
 from .normalize import normalize_text
 from .segments import seg_starts
@@ -194,19 +197,19 @@ def body_spans(df: pd.DataFrame) -> pd.DataFrame:
     flow).  Media lines contribute their `media_ref`; caption lines
     contribute text; both fuse into one `figure` span when adjacent (C3).
     """
-    # prune to the 8 consumed columns BEFORE the row filter + copy: the
+    # prune to the 8 consumed columns BEFORE the row filter: the
     # input is the ~40-column featurized frame and the mask-take over all
     # of it was pure allocation waste
     d = df.loc[
         ~(df["is_blank"] | df["is_page_break"]),
         ["doc_id", "seq", "text", "media_ref", "offset", "label",
          "block_id", "is_media"],
-    ].copy()
+    ]
     if d.empty:
         return pd.DataFrame(
             columns=["doc_id", "kind", "text", "media_ref", "offset"]
         )
-    d["text_n"] = normalize_text(d["text"])
+    text = at.arr_of(normalize_text(d["text"]))
     # table lines keep their CELL structure (C3, FullMedicalTextParser.java:
     # 5599-5647 → TableParser row/cell emission): columnar separators
     # (2+-space or tab runs) become single TABs before the ordinary
@@ -214,12 +217,10 @@ def body_spans(df: pd.DataFrame) -> pd.DataFrame:
     # space and erase the column structure
     tbl = d["label"].eq("table").to_numpy()
     if tbl.any():
-        from . import arrowtext as at
-
-        raw = at.arr_of(d.loc[tbl, "text"])
+        raw = at.arr_of(d["text"]).filter(pa.array(tbl))
         raw = at.replace(raw, r"\s*(?:\t| {2,})\s*", "\t")
         raw = at.strip(at.replace(raw, r" +", " "))
-        d.loc[tbl, "text_n"] = raw.to_numpy(zero_copy_only=False)
+        text = pc.replace_with_mask(text, pa.array(tbl), raw)
     # block-change breaks clusters (label stays the output kind); list items
     # never merge — each bullet is its own <item> (TEIFormatter.java:876-883);
     # every media span opens a new figure cluster so no media_ref is ever
@@ -228,42 +229,35 @@ def body_spans(df: pd.DataFrame) -> pd.DataFrame:
     seq = d["seq"].to_numpy().astype(np.int64)
     aux = d["block_id"].to_numpy().astype(np.int64)
     aux = np.where(d["label"].eq("item").to_numpy(), -seq - 1, aux)
-    d["_cl"] = rle_cluster_ids(
+    cl = rle_cluster_ids(
         d["doc_id"], d["label"], aux=aux,
         break_before=d["is_media"].to_numpy(),
     )
 
-    # vectorized aggregation: firsts via drop_duplicates (rows are already in
-    # cluster order), text join via reduceat (kernels/cluster.group_join)
-    from .cluster import group_join
-
-    base = d.drop_duplicates("_cl")[["_cl", "doc_id", "label", "offset"]]
-    base = base.rename(columns={"label": "kind"}).set_index("_cl")
-    base["text"] = group_join(
-        d["text_n"].to_numpy(), d["_cl"].to_numpy(), " "
-    )
+    # vectorized aggregation: firsts are each cluster's first row, the text
+    # join runs in Arrow (group_join)
+    first = np.diff(cl, prepend=-1) != 0
+    base = d.loc[first, ["doc_id", "label", "offset"]]
+    base = base.rename(columns={"label": "kind"}).reset_index(drop=True)
+    joined = group_join(text, cl, " ")
     # a table cluster keeps its ROW structure: member lines join with
     # newlines (cells are tab-separated within each line), so one span
     # carries the whole head + rows × cells grid
     if tbl.any():
-        base_tbl = base["kind"].eq("table").to_numpy()
-        if base_tbl.any():
-            base.loc[base_tbl, "text"] = group_join(
-                d["text_n"].to_numpy(), d["_cl"].to_numpy(), "\n"
-            )[base_tbl]
+        base_tbl = pa.array(base["kind"].eq("table").to_numpy())
+        joined = pc.if_else(base_tbl, group_join(text, cl, "\n"), joined)
+    base["text"] = at.series_of(joined)
     # first non-null media_ref per cluster: clusters are contiguous runs, so
     # a minimum.reduceat over non-null row indices replaces the pandas hash
     # groupby (the former body_spans hotspot)
     media = d["media_ref"].to_numpy()
     notna = pd.notna(media)
     idx = np.where(notna, np.arange(len(d)), len(d))
-    first_idx = np.minimum.reduceat(idx, seg_starts(d["_cl"].to_numpy()))
+    first_idx = np.minimum.reduceat(idx, np.flatnonzero(first))
     base["media_ref"] = np.where(
         first_idx < len(d), media[np.minimum(first_idx, len(d) - 1)], None
     )
-    agg = base.reset_index(drop=True)[
-        ["doc_id", "kind", "text", "media_ref", "offset"]
-    ]
+    agg = base[["doc_id", "kind", "text", "media_ref", "offset"]]
     # drop empty clusters (TEIFormatter.java:968-973) unless they carry media
     keep = (agg["text"].str.len() > 0) | agg["media_ref"].notna()
     # kind back to plain strings at span granularity, as in tokens_to_spans

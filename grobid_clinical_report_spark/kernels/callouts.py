@@ -28,9 +28,11 @@ def reconcile_markers(flat: pd.DataFrame) -> pd.DataFrame:
     m = flat[is_marker]
     # the referent is the callout mention in the text ('Figure 2' vs
     # 'Tableau 2' are different callouts; the vote fixes labeling
-    # inconsistencies for the SAME referent)
+    # inconsistencies for the SAME referent). Python strings on purpose:
+    # RE2's \s and \d are ASCII, Python's take NBSP and every Unicode digit
     ref = (
         m["text"]
+        .astype(object)
         .str.lower()
         .str.extract(r"((?:figure|fig|tableau|table)\.?\s*\d*)", expand=False)
         .fillna("")

@@ -17,27 +17,24 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 
-def group_join(values: np.ndarray, cluster_ids: np.ndarray, sep: str = " ") -> np.ndarray:
-    """Join string values per contiguous cluster — Arrow binary_join over a
-    ListArray sliced at cluster starts (C++), replacing the former
-    np.add.reduceat object-concat (per-element Python string adds).
-    `cluster_ids` must be non-decreasing. Empty members are skipped (no
-    double separators)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+def group_join(values, cluster_ids: np.ndarray, sep: str = " ") -> pa.Array:
+    """Join text values (a Series or an Arrow array, read through
+    arrowtext.arr_of) per contiguous cluster into one Arrow string per
+    cluster: Arrow binary_join over a ListArray sliced at cluster starts
+    (C++, no per-row Python). `cluster_ids` must be non-decreasing. With a
+    separator, empty members are skipped (no double separators)."""
+    from .arrowtext import arr_of
 
-    n = len(values)
+    vals = arr_of(values)
+    n = len(vals)
     if n == 0:
-        return np.zeros(0, dtype=object)
+        return pa.array([], type=pa.string())
     cluster_ids = np.asarray(cluster_ids)
     starts = np.flatnonzero(np.diff(cluster_ids, prepend=cluster_ids[0] - 1))
-    if isinstance(values, (pa.Array, pa.ChunkedArray)):
-        vals = pc.coalesce(values, "")
-    else:
-        vals = pa.array(np.asarray(values, dtype=object), type=pa.string())
-        vals = pc.coalesce(vals, "")
     bounds = np.append(starts, n)
     if sep:
         # drop empty members and remap cluster bounds onto the kept rows
@@ -50,7 +47,7 @@ def group_join(values: np.ndarray, cluster_ids: np.ndarray, sep: str = " ") -> n
     lst = pa.ListArray.from_arrays(
         pa.array(offsets.astype(np.int32), type=pa.int32()), vals
     )
-    return pc.binary_join(lst, sep).to_numpy(zero_copy_only=False)
+    return pc.binary_join(lst, sep)
 
 
 def rle_cluster_ids(
@@ -143,8 +140,6 @@ def repeated_pattern_flags(
     # Distinct texts can normalize to the SAME pattern, so the unique-text
     # norms are re-coded (Arrow dictionary_encode) and composed through
     # the text gather: pat_codes[i] = norm_code_of_unique[t_codes[i]]
-    import pyarrow.compute as pc
-
     norm_enc = norm_u.dictionary_encode()
     u_pat = np.asarray(norm_enc.indices, dtype=np.int64)
     pat_codes = u_pat[t_codes]
@@ -170,8 +165,11 @@ def dedup_notes(spans: pd.DataFrame) -> pd.DataFrame:
     shorter than 6 chars dropped), other kinds untouched.
     """
     is_note = spans["kind"].isin(["headnote", "footnote"])
+    # Python strings on purpose: str.lower maps a final Σ to ς and Python's
+    # \s is Unicode, where utf8_lower and RE2's ASCII \s key differently
     norm = (
-        spans["text"].fillna("").str.lower().str.replace(r"\s+", " ", regex=True)
+        spans["text"].astype(object).fillna("").str.lower()
+        .str.replace(r"\s+", " ", regex=True)
     )
     too_short = is_note & (norm.str.len() < 6)
     dup = (

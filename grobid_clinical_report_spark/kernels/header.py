@@ -28,6 +28,7 @@ import pyarrow.compute as pc
 
 from . import subparsers as sub_k
 from .arrowtext import arr_of, series_of
+from .cluster import group_join
 from .labels import HEADER_LABELS, label_index, sticky_transitions
 from .normalize import normalize_text, to_iso_date
 from .subparsers import EMPTY_SPANS as _EMPTY
@@ -142,12 +143,11 @@ def fill_fields(
         return _EMPTY
     d = spans.reset_index(drop=True)
     d["_pos"] = np.arange(len(d))  # document order, the tie-break below
-    # the dedup key, built in Arrow whatever the text's dtype (object on
-    # the header path, Arrow on the POJO path): lowercase as Python's
-    # str.lower() does (utf8_lower differs from it at U+0130 alone, per
-    # code point; a final Σ keys as σ where Python gives ς, which a
-    # case-insensitive key should equate anyway), then drop every run of
-    # what Python's \s matches (RE2's own \s is ASCII-only)
+    # the dedup key, built in Arrow: lowercase as Python's str.lower()
+    # does (utf8_lower differs from it at U+0130 alone, per code point; a
+    # final Σ keys as σ where Python gives ς, which a case-insensitive key
+    # should equate anyway), then drop every run of what Python's \s
+    # matches (RE2's own \s is ASCII-only)
     low = pc.utf8_lower(
         pc.replace_substring(arr_of(d["text"]), "\u0130", "i\u0307")
     )
@@ -175,8 +175,6 @@ def fill_fields(
     # rows, the earliest document position; the final (doc, offset, pos)
     # sort restores the emission order, document order included when
     # fields share an offset (hostile input).
-    from .cluster import group_join
-
     d = d.sort_values(["doc_id", "kind", "offset"], kind="stable")
     first = (~d.duplicated(subset=["doc_id", "kind"])).to_numpy()
     codes, kinds = pd.factorize(d["kind"])
@@ -186,7 +184,7 @@ def fill_fields(
     )
     agg = d.loc[first, ["doc_id", "kind", "media_ref", "offset", "_pos"]]
     agg = agg.reset_index(drop=True)
-    agg["text"] = group_join(piece, np.cumsum(first) - 1, sep="")
+    agg["text"] = series_of(group_join(piece, np.cumsum(first) - 1, sep=""))
     is_date = agg["kind"].eq("date")
     iso = to_iso_date(agg.loc[is_date, "text"])
     agg.loc[is_date, "text"] = iso.where(iso.ne(""), agg.loc[is_date, "text"])
@@ -287,8 +285,6 @@ def scalar_enrichment_spans(
     121-155): language id over a 200-char body sample (fr default — the
     reference never overrides it) + page count. Emitted as `lang` /
     `page_count` spans after the document's last line."""
-    from .cluster import group_join
-
     doc_ids = np.sort(spans["doc_id"].unique())
     last_off = lines.groupby("doc_id")["offset"].max()
 
@@ -300,17 +296,15 @@ def scalar_enrichment_spans(
         sample = pd.Series("", index=pd.Index(doc_ids, name="doc_id"))
     else:
         body = body.sort_values(["doc_id", "offset"], kind="stable")
-        joined = pd.Series(
-            group_join(
-                body["text"].astype(str).to_numpy(),
-                pd.factorize(body["doc_id"])[0],
-                sep=" ",
-            ),
+        joined = group_join(body["text"], pd.factorize(body["doc_id"])[0])
+        sample = series_of(
+            pc.utf8_slice_codeunits(joined, 0, 200),
             index=body.loc[~body.duplicated("doc_id"), "doc_id"].to_numpy(),
-        )
-        sample = joined.str.slice(0, 200).reindex(doc_ids, fill_value="")
-    fr = sample.str.lower().str.count(_FR_MARKERS)
-    en = sample.str.lower().str.count(_EN_MARKERS)
+        ).reindex(doc_ids, fill_value="")
+    # Python strings on purpose: RE2's \b is ASCII, Python's is Unicode
+    low = sample.astype(object).str.lower()
+    fr = low.str.count(_FR_MARKERS)
+    en = low.str.count(_EN_MARKERS)
     lang = np.where(en > fr, "en", "fr")  # fr default, as the reference
 
     breaks = lines[lines["is_page_break"]].groupby("doc_id").size()
@@ -318,11 +312,12 @@ def scalar_enrichment_spans(
         breaks.reindex(doc_ids, fill_value=0).to_numpy(dtype=np.int64) + 1
     )
     tail_off = last_off.reindex(doc_ids).to_numpy(dtype=np.int64)
+    text = np.stack([lang, n_pages.astype(str)], axis=1).ravel()
     return pd.DataFrame(
         {
             "doc_id": np.repeat(doc_ids, 2),
             "kind": np.tile(["lang", "page_count"], len(doc_ids)),
-            "text": np.stack([lang, n_pages.astype(str)], axis=1).ravel(),
+            "text": series_of(pa.array(text, type=pa.string())),
             "media_ref": None,
             "offset": np.stack([tail_off + 1, tail_off + 2], axis=1).ravel(),
         }

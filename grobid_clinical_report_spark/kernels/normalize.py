@@ -6,19 +6,22 @@ Reference parity:
 - ISO date normalization with French month names
   (HeaderMedicalParser.java:174-181, 394-409).
 
-All functions are vectorized over pandas Series (pd.Series -> pd.Series).
+All functions are vectorized over pandas Series (pd.Series -> pd.Series) and
+return Arrow-backed text; `to_iso_date` extracts with Python's `re` inside.
 """
 
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 
 from .lexicon import MONTHS_FR
 
 
 def normalize_text(s: pd.Series) -> pd.Series:
     """dehyphenize + space-collapse — the normalization applied to every
-    emitted span's text (FIXTURES.md §2). Arrow-compute fast path."""
+    emitted span's text (FIXTURES.md §2), in Arrow compute. Returns
+    Arrow-backed text on ``s``'s index."""
     from . import arrowtext as at
 
     arr = at.arr_of(s)
@@ -27,10 +30,7 @@ def normalize_text(s: pd.Series) -> pd.Series:
     # RE2 group replace is skipped outright
     if at.contains_byte(arr, 0x0A).any():
         arr = at.replace(arr, r"(\w)-\s*\n\s*(\w)", r"\1\2")
-    arr = at.strip(at.collapse_ws_runs(arr))
-    return pd.Series(
-        arr.to_numpy(zero_copy_only=False), index=s.index, name=s.name
-    )
+    return at.series_of(at.strip(at.collapse_ws_runs(arr)), index=s.index)
 
 
 # ---------------------------------------------------------------------------
@@ -46,12 +46,13 @@ def to_iso_date(s: pd.Series) -> pd.Series:
     """Extract the first date in each string and normalize to YYYY-MM-DD.
 
     Handles both numeric French forms (29.04.2000, 29/04/2000, 29-04-00) and
-    textual forms (29 avril 2000). Returns '' where no date found. Vectorized:
-    two `str.extract` passes, no per-row parsing.
+    textual forms (29 avril 2000). Returns Arrow-backed text, '' where no
+    date is found. Vectorized: two `str.extract` passes, no per-row parsing.
     """
     if isinstance(s.dtype, pd.ArrowDtype):
-        # .str.extract/callable-replace below need the object engine
-        # (Arrow's extract_regex wants named groups); date spans are few
+        # Python strings on purpose: Python's \d takes every Unicode digit,
+        # and .str.extract/callable-replace need the object engine (Arrow's
+        # extract_regex wants named groups); date spans are few
         s = s.astype(object)
     s = s.fillna("")
     num = s.str.extract(_NUM_DATE, expand=True)
@@ -80,4 +81,4 @@ def to_iso_date(s: pd.Series) -> pd.Series:
         + "-"
         + day.astype("string").str.zfill(2).fillna("")
     )
-    return out.where(ok, "").astype(str)
+    return out.where(ok, "").astype(pd.ArrowDtype(pa.string()))

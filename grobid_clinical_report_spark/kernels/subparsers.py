@@ -328,7 +328,9 @@ def _cluster_spans(
 ) -> pd.DataFrame:
     """Labeled tokens and their cluster ids → one span per non-'other'
     cluster, its exact source text rebuilt: first token verbatim, later
-    members prefixed by their gap.
+    members prefixed by their gap, each cluster's pieces joined by
+    cluster.group_join. The text stays Arrow (ArrowDtype span texts, which
+    _batch_from_flat emits zero-copy).
 
     ``with_char_offsets`` adds start/end — character offsets in the flattened
     document (line offset + in-line token offsets), the entity-coordinate
@@ -340,33 +342,21 @@ def _cluster_spans(
     # hashed the corpus-sized int column twice
     first_of_cl = np.diff(cl, prepend=-1) != 0
     last_of_cl = np.diff(cl, append=-1) != 0
-    # span text = first token verbatim + Σ(gap+tok): built entirely in
-    # Arrow (binary_join over a ListArray sliced at cluster starts) — the
-    # former np.where object-concat + reduceat join was per-row Python
+    # span text = first token verbatim + Σ(gap+tok), joined per cluster in
+    # Arrow (group_join)
     import pyarrow as pa
     import pyarrow.compute as pc
 
     from . import arrowtext as at
+    from .cluster import group_join
 
     tok_arr = at.arr_of(t["tok"])
-    gap_arr = pc.coalesce(at.arr_of(t["gap"]), "")
-    withgap = pc.binary_join_element_wise(gap_arr, tok_arr, "")
-    piece = pc.if_else(
-        pa.array(first_of_cl), tok_arr, withgap
-    )
-    offsets = pa.array(
-        np.append(np.flatnonzero(first_of_cl), len(t)).astype(np.int32),
-        type=pa.int32(),
-    )
-    texts = pc.utf8_trim_whitespace(
-        pc.binary_join(pa.ListArray.from_arrays(offsets, piece), "")
-    )
+    withgap = pc.binary_join_element_wise(at.arr_of(t["gap"]), tok_arr, "")
+    piece = pc.if_else(pa.array(first_of_cl), tok_arr, withgap)
+    texts = pc.utf8_trim_whitespace(group_join(piece, cl, ""))
     agg = t.loc[first_of_cl, ["doc_id", "label", "offset"]].rename(
         columns={"label": "kind"}
     )
-    # Arrow-backed: the span texts stay an Arrow array end-to-end —
-    # _batch_from_flat re-exports them zero-copy instead of a
-    # per-row object materialization + re-encode
     agg["text"] = at.series_of(texts, index=agg.index)
     if with_char_offsets:
         base = t.loc[first_of_cl, "offset"].to_numpy()

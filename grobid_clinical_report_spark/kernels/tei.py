@@ -114,13 +114,13 @@ def spans_to_tei(flat: pd.DataFrame) -> pd.DataFrame:
     graphic = d["media_ref"].map(_attr)
     elems = opens + _escape(d["text"]) + pre_structured + graphic + closes
     codes, uniques = pd.factorize(d["doc_id"])
-    body = group_join(elems.to_numpy(), codes, sep="")
+    body = group_join(elems, codes, sep="")
     return pd.DataFrame(
         {
             "doc_id": uniques,
             "tei": [
                 "<TEI><teiHeader/><text><body>" + b + "</body></text></TEI>"
-                for b in body
+                for b in body.to_pylist()
             ],
         }
     )

@@ -15,6 +15,14 @@ structure) feeds `_extract` (kernels → regroup), which `run_mode`, the
 trained-NER serving mapper and the in-process `PANDAS_MODES` all run; the
 training-data mappers loop over `_prepared` and only emit their own rows.
 
+Span text has one representation from `_lines_from_batch` to
+`_batch_from_flat`: Arrow (ArrowDtype Series, pa.StringArray inside a
+kernel), which the emit re-exports zero-copy. Python strings are made only
+where the result is Python's and Arrow's differs — the note repeat key
+(cluster.dedup_notes), the callout referent (callouts.reconcile_markers),
+the language sample's marker counts (header.scalar_enrichment_spans) and
+the date extraction (normalize.to_iso_date) — each on its own few rows.
+
 Line features are computed by the stage that reads them, never by the loop:
 the line modes (and `run_training`) call `_zoned` (featurize_lines →
 segmenter zones over every line), and the header/left-note paths then call
@@ -175,9 +183,10 @@ def flat_extract_full(lines: pd.DataFrame) -> pd.DataFrame:
         spans_notes = dedup_notes(spans_notes)
     else:
         spans_notes = _EMPTY_SPANS
-    return pd.concat(
-        [spans_body, spans_tail, spans_notes], ignore_index=True
-    )
+    # only the non-empty parts: an empty object-column frame would turn
+    # the concatenated Arrow text into object
+    parts = [p for p in (spans_body, spans_tail, spans_notes) if not p.empty]
+    return pd.concat(parts, ignore_index=True) if parts else _EMPTY_SPANS
 
 
 def flat_extract_header(lines: pd.DataFrame) -> pd.DataFrame:
@@ -503,8 +512,8 @@ def run_training(df, model: str = "segmenter"):
                         content["seq"].to_numpy().astype(np.int32),
                         type=pa.int32(),
                     ),
-                    pa.array(content["text"].astype(str), type=pa.string()),
-                    pa.array(content["zone"].astype(str), type=pa.string()),
+                    arr_of(content["text"]),
+                    arr_of(content["zone"]),
                 ],
                 names=["doc_id", "seq", "text", "label"],
             )

@@ -43,6 +43,8 @@ from . import manifest as mf
 from .pipeline import _COALESCE_DOCS, _COALESCE_SPANS, run_mode
 
 DEFAULT_MAX_SPANS = 50_000
+# bucket jobs in flight at once (run_extraction_job's driver thread pool)
+_MAX_CONCURRENT = 4
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -148,7 +150,6 @@ def run_extraction_job(
     n_buckets: int = 8,
     max_spans: int = DEFAULT_MAX_SPANS,
     resume: bool = True,
-    max_concurrent: int = 4,
     stage_buckets: bool = False,
     extract_fn=None,
     job_tag: str | None = None,
@@ -157,7 +158,8 @@ def run_extraction_job(
 
     One size pass over the pending buckets (see _size_pass) sizes each
     bucket's partitioning and counts its quarantine. Buckets then run through
-    a driver-side thread pool (``max_concurrent`` Spark jobs in flight):
+    a driver-side thread pool (up to ``_MAX_CONCURRENT`` = 4 Spark jobs in
+    flight; the pool's peak is reported as ``peak_concurrency``):
     Spark schedules concurrent jobs from multiple driver threads, so the
     cluster never idles between per-bucket jobs the way the round-2
     sequential loop did (scheduling gaps + per-job overhead at 256
@@ -296,7 +298,7 @@ def run_extraction_job(
     totals = {"buckets_run": 0, "docs": 0, "spans": 0, "quarantined": 0}
     t_all = time.monotonic()
     if pending:
-        workers = max(1, min(max_concurrent, len(pending)))
+        workers = max(1, min(_MAX_CONCURRENT, len(pending)))
         with ThreadPoolExecutor(max_workers=workers) as ex:
             for n_docs, n_spans, n_q in ex.map(run_bucket, pending):
                 totals["buckets_run"] += 1

@@ -211,21 +211,28 @@ def test_marker_majority_vote():
 
     flat = pd.DataFrame(
         {
-            "doc_id": ["d"] * 5,
+            "doc_id": ["d"] * 5 + ["e"] * 4,
             "kind": ["figure_marker", "figure_marker", "table_marker",
-                      "table_marker", "paragraph"],
+                      "table_marker", "paragraph",
+                      "figure_marker", "table_marker", "table_marker",
+                      "figure_marker"],
             "text": ["(cf. Figure 2)", "(voir Figure 2)", "(cf. Figure 2)",
-                      "(cf. Tableau 1)", "x"],
-            "media_ref": [None] * 5,
-            "offset": [1, 2, 3, 4, 5],
+                      "(cf. Tableau 1)", "x",
+                      "(cf. figure\xa02)", "(voir figure\xa03)", "figure ٣",
+                      "figure x"],
+            "media_ref": [None] * 9,
+            "offset": range(1, 10),
         }
     )
     out = reconcile_markers(flat)
     # 'Figure 2' referent: 2 figure votes vs 1 table → minority flips;
-    # 'Tableau 1' is a different referent and keeps its label
+    # 'Tableau 1' is a different referent and keeps its label. In doc 'e'
+    # the referent reads Python's \s and \d: 'figure\xa02', 'figure\xa03'
+    # and 'figure ٣' are three callouts, each keeping its own label
     assert out["kind"].tolist() == [
         "figure_marker", "figure_marker", "figure_marker", "table_marker",
         "paragraph",
+        "figure_marker", "table_marker", "table_marker", "figure_marker",
     ]
 
 

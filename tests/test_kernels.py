@@ -310,18 +310,59 @@ def test_rle_cluster_ids_label_doc_and_iob_breaks():
 
 
 def test_dedup_notes_keeps_first_and_drops_short():
+    """Repeated notes keep the first and short notes go. The repeat key is
+    Python's: str.lower maps a final Σ to ς ('Service ΑΣ bloc' repeats
+    'Service ας bloc') and \\s takes NBSP and \\v."""
+    texts = ["Confidentiel - Hôpital", "Confidentiel - Hôpital", "ab", "x",
+             "Service ΑΣ bloc", "Service ας bloc",
+             "Confidentiel\xa0- Hôpital", "Confidentiel -\vHôpital"]
     spans = pd.DataFrame(
         {
-            "doc_id": ["d"] * 4,
-            "kind": ["footnote", "footnote", "footnote", "paragraph"],
-            "text": ["Confidentiel - Hôpital", "Confidentiel - Hôpital", "ab", "x"],
-            "media_ref": [None] * 4,
-            "offset": [1, 2, 3, 4],
+            "doc_id": ["d"] * 8,
+            "kind": ["footnote", "footnote", "footnote", "paragraph",
+                     "headnote", "headnote", "footnote", "footnote"],
+            "text": texts,
+            "media_ref": [None] * 8,
+            "offset": range(1, 9),
         }
     )
     out = dedup_notes(spans)
-    assert out["kind"].tolist() == ["footnote", "paragraph"]
-    assert out["offset"].tolist() == [1, 4]
+    assert out["kind"].tolist() == ["footnote", "paragraph", "headnote"]
+    assert out["offset"].tolist() == [1, 4, 5]
+
+
+def test_scalar_enrichment_spans_language_sample():
+    """The language id counts its markers in the first 200 characters
+    (code points, not bytes) of the body, with Python's Unicode \\b:
+    'les' inside 'éles' is no French marker."""
+    from grobid_clinical_report_spark.kernels.header import (
+        scalar_enrichment_spans,
+    )
+
+    bodies = {
+        0: "the and éles éles éles",
+        # 'the and' sit inside the first 200 code points, 'le la les des'
+        # after them; 200 bytes would stop inside the 'é' run
+        1: "é" * 150 + " the and " + "z" * 40 + " le la les des",
+        2: "le la de",
+    }
+    lines = pd.DataFrame(
+        {
+            "doc_id": list(bodies) + [2],
+            "text": list(bodies.values()) + ["\f"],
+            "offset": [10, 20, 30, 40],
+            "zone": ["body"] * 4,
+            "is_blank": [False] * 4,
+            "is_page_break": [False, False, False, True],
+            "is_media": [False] * 4,
+        }
+    )
+    out = scalar_enrichment_spans(lines, pd.DataFrame({"doc_id": [0, 1, 2]}))
+    assert out[["doc_id", "kind", "text", "offset"]].values.tolist() == [
+        [0, "lang", "en", 11], [0, "page_count", "1", 12],
+        [1, "lang", "en", 21], [1, "page_count", "1", 22],
+        [2, "lang", "fr", 41], [2, "page_count", "2", 42],
+    ]
 
 
 def test_merge_header_fields_tied_offsets_keep_document_order():
@@ -565,6 +606,124 @@ def test_models_read_no_text(name, prepared_batches):
             pd.testing.assert_series_equal(got, want)
         else:
             np.testing.assert_array_equal(got, want)
+
+
+# --- text at the emit boundary ----------------------------------------------
+
+def _hostile_documents_pdf() -> pd.DataFrame:
+    """Documents in the input schema that carry the characters where Arrow
+    and Python text semantics part: NUL, NBSP, \\v, U+0130, Greek final
+    sigma (a running head repeated as 'Service ΑΣ bloc' / 'Service ας
+    bloc'), Arabic-Indic digits in a callout and a dateline, a table grid,
+    and empty, media-only and blank-only documents."""
+    from grobid_clinical_report_spark import datagen
+
+    fx = datagen.fixture_documents_pdf().set_index("doc_id")["spans"]
+
+    def doc(lines, media=()):
+        spans, off = [], 0
+        for i, t in enumerate(lines):
+            ref = f"img/h/{i}.png" if i in media else None
+            spans.append({"kind": "media" if ref else "text",
+                          "text": "" if ref else t, "media_ref": ref,
+                          "offset": off})
+            off += len(t) + 2
+        return spans
+
+    def edit(spans, f):
+        return [dict(s, text=f(s["text"])) for s in spans]
+
+    pages = [
+        "Service ΑΣ bloc", "COMPTE\xa0RENDU OPÉRATOIRE", "Le 29.04.2000",
+        "Dr\vJean MARTIN ; Pr İlker ÖZ",
+        "Madame Ana\x00 DUPONT, née le 01/01/1990",
+        "", "DIAGNOSTIC :", "Fibrome utérin ςσ symptomatique.",
+        "Voir la figure ٣ et la suite.", "", "(cf. figure\xa02) montre.", "",
+        "(voir figure\xa03) puis Tableau 2.", "",
+        "Tableau 2 : résultats", "A  B\tC", "1  2\t3", "Figure 1 : vue.",
+        "Service ας bloc", "1", "\x0c",
+        "Service ας bloc", "CONCLUSION :", "Texte\xa0insécable\vverticale İ.",
+        "Fait à Paris, le ٢٩.٠٤.٢٠٠٠", "Service ΑΣ  bloc", "2",
+    ]
+    rows = [
+        ("hx-greek", doc(pages, media={16})),
+        ("hx-empty", []),
+        ("hx-media", doc(["", ""], media={0, 1})),
+        ("hx-blank", doc(["", "\x0c", ""])),
+        ("hx-nbsp", edit(fx["fx-full-0001"], lambda t: t.replace(" ", "\xa0", 2))),
+        ("hx-vt", edit(fx["fx-hdr-0002"], lambda t: t.replace(" ", "\v", 1))),
+        ("hx-nul", edit(fx["fx-full-0001"], lambda t: t.replace("e", "\x00", 1))),
+        ("hx-sigma", edit(fx["fx-hdr-0002"],
+                          lambda t: t.upper().replace("S ", "Σ "))),
+        ("hx-dotted", edit(fx["fx-full-0001"], lambda t: t.replace("I", "İ"))),
+    ]
+    return pd.DataFrame(rows, columns=["doc_id", "spans"])
+
+
+def test_text_stays_arrow_to_emit(monkeypatch):
+    """Every mode hands Arrow-backed span text to the emit boundary
+    (`_batch_from_flat`): no mode turns the cascade's text into Python
+    strings on its way out, on the fixtures, a synthetic batch or the
+    hostile batch."""
+    from grobid_clinical_report_spark import datagen, pipeline
+
+    seen: dict[str, set] = {}
+    emit = pipeline._batch_from_flat
+
+    def spy(doc_ids, flat):
+        if not flat.empty:
+            seen.setdefault(mode, set()).add(str(flat["text"].dtype))
+        return emit(doc_ids, flat)
+
+    monkeypatch.setattr(pipeline, "_batch_from_flat", spy)
+    pdfs = (datagen.fixture_documents_pdf(),
+            datagen.synthetic_documents_pdf(120, seed=11),
+            _hostile_documents_pdf())
+    for mode, run in pipeline.PANDAS_MODES.items():
+        for pdf in pdfs:
+            run(pdf)
+    arrow = str(pd.ArrowDtype(pa.string()))
+    assert seen == {mode: {arrow} for mode in pipeline.PANDAS_MODES}
+
+
+def test_python_semantics_sites_take_arrow_text():
+    """The places whose result is Python's (the note repeat key, the
+    callout referent, the language sample's marker counts) give the same
+    answer on the Arrow-backed text the cascade hands them as on Python
+    strings."""
+    from grobid_clinical_report_spark.kernels.callouts import reconcile_markers
+    from grobid_clinical_report_spark.kernels.header import (
+        scalar_enrichment_spans,
+    )
+
+    def both(frame):
+        arrow = pd.ArrowDtype(pa.string())
+        return frame, frame.assign(text=frame["text"].astype(arrow))
+
+    notes = pd.DataFrame(
+        {"doc_id": 0, "kind": "headnote", "media_ref": None,
+         "text": ["Service ΑΣ bloc", "Service ας bloc", "Service\xa0ΑΣ bloc",
+                  "Service\vας bloc"], "offset": range(4)}
+    )
+    markers = pd.DataFrame(
+        {"doc_id": 0, "media_ref": None,
+         "kind": ["figure_marker", "table_marker", "table_marker",
+                  "figure_marker"],
+         "text": ["(cf. figure\xa02)", "(voir figure\xa03)", "figure ٣",
+                  "figure x"], "offset": range(4)}
+    )
+    lines = pd.DataFrame(
+        {"doc_id": 0, "text": ["the and éles éles éles"], "offset": [0],
+         "zone": "body", "is_blank": False, "is_page_break": False,
+         "is_media": False}
+    )
+    for frame in both(notes):
+        assert dedup_notes(frame)["offset"].tolist() == [0]
+    for frame in both(markers):
+        assert reconcile_markers(frame)["kind"].tolist() == markers["kind"].tolist()
+    for frame in both(lines):
+        out = scalar_enrichment_spans(frame, pd.DataFrame({"doc_id": [0]}))
+        assert out["text"].tolist() == ["en", "1"]
 
 
 # --- tokenization ------------------------------------------------------------
