@@ -5,6 +5,7 @@ through the Spark mapInArrow path (the same batch loop, verified)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -39,17 +40,18 @@ def _doc(doc_id: str, *texts: str) -> dict:
     }
 
 
-@pytest.mark.parametrize(
-    "mode",
-    ["ner", "parse_dateline", "parse_medic", "parse_patient", "parse_name",
-     "parse_address", "parse_org"],
-)
-def test_token_mode_spans_ignore_batch_neighbours(fixture_docs_pdf, mode):
-    """A document's spans are the same alone and in a mixed batch: no token
-    cue reaches across a line or a document. The two pairs are the patient
-    cues that once did — a doc ending in 'née' turned the next doc's 'le'
-    into a birthdate article, and a doc starting with 'ans' turned the
-    previous doc's last number into an age."""
+@pytest.mark.parametrize("mode", sorted(PANDAS_MODES))
+def test_token_mode_spans_ignore_batch_neighbours(
+    fixture_docs_pdf, hostile_docs_pdf, mode
+):
+    """A document's spans do not depend on which documents share its batch,
+    in every mode: the same alone, in one batch with the fixtures, a
+    synthetic corpus and the hostile batch, and in that batch shuffled and
+    cut into 37-doc batches. No cue reaches across a line or a document.
+    The two pairs are the patient cues that once did — a doc ending in
+    'née' turned the next doc's 'le' into a birthdate article, and a doc
+    starting with 'ans' turned the previous doc's last number into an
+    age."""
     pairs = pd.DataFrame(
         [
             _doc("ends-born", "Madame Jeanne DUPONT née"),
@@ -58,13 +60,26 @@ def test_token_mode_spans_ignore_batch_neighbours(fixture_docs_pdf, mode):
             _doc("starts-ans", "ans plus tard, Madame Jeanne DUPONT"),
         ]
     )
-    batch = pd.concat([pairs, fixture_docs_pdf], ignore_index=True)
-    together = PANDAS_MODES[mode](batch)
-    for i, doc_id in enumerate(batch["doc_id"]):
-        alone = PANDAS_MODES[mode](batch.iloc[[i]].reset_index(drop=True))
-        assert together.spans.iloc[i] == alone.spans.iloc[0], doc_id
+    small = pd.concat([pairs, fixture_docs_pdf], ignore_index=True)
+    batch = pd.concat(
+        [small, datagen.synthetic_documents_pdf(150, seed=13),
+         hostile_docs_pdf],
+        ignore_index=True,
+    )
+    run = PANDAS_MODES[mode]
+    together = run(batch).spans
+    assert len(together) == len(batch)
+    for i, doc_id in enumerate(small["doc_id"]):
+        alone = run(batch.iloc[[i]].reset_index(drop=True))
+        assert together.iloc[i] == alone.spans.iloc[0], doc_id
+    order = np.random.default_rng(37).permutation(len(batch))
+    for lo in range(0, len(order), 37):
+        rows = order[lo:lo + 37]
+        split = run(batch.iloc[rows].reset_index(drop=True)).spans
+        for j, i in enumerate(rows):
+            assert together.iloc[i] == split.iloc[j], batch["doc_id"][i]
     if mode == "parse_patient":
-        born = {(s["kind"], s["text"]) for s in together.spans.iloc[1]}
+        born = {(s["kind"], s["text"]) for s in together.iloc[1]}
         assert ("birthdate", "02/02/1962") in born
 
 

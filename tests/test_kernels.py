@@ -610,57 +610,7 @@ def test_models_read_no_text(name, prepared_batches):
 
 # --- text at the emit boundary ----------------------------------------------
 
-def _hostile_documents_pdf() -> pd.DataFrame:
-    """Documents in the input schema that carry the characters where Arrow
-    and Python text semantics part: NUL, NBSP, \\v, U+0130, Greek final
-    sigma (a running head repeated as 'Service ΑΣ bloc' / 'Service ας
-    bloc'), Arabic-Indic digits in a callout and a dateline, a table grid,
-    and empty, media-only and blank-only documents."""
-    from grobid_clinical_report_spark import datagen
-
-    fx = datagen.fixture_documents_pdf().set_index("doc_id")["spans"]
-
-    def doc(lines, media=()):
-        spans, off = [], 0
-        for i, t in enumerate(lines):
-            ref = f"img/h/{i}.png" if i in media else None
-            spans.append({"kind": "media" if ref else "text",
-                          "text": "" if ref else t, "media_ref": ref,
-                          "offset": off})
-            off += len(t) + 2
-        return spans
-
-    def edit(spans, f):
-        return [dict(s, text=f(s["text"])) for s in spans]
-
-    pages = [
-        "Service ΑΣ bloc", "COMPTE\xa0RENDU OPÉRATOIRE", "Le 29.04.2000",
-        "Dr\vJean MARTIN ; Pr İlker ÖZ",
-        "Madame Ana\x00 DUPONT, née le 01/01/1990",
-        "", "DIAGNOSTIC :", "Fibrome utérin ςσ symptomatique.",
-        "Voir la figure ٣ et la suite.", "", "(cf. figure\xa02) montre.", "",
-        "(voir figure\xa03) puis Tableau 2.", "",
-        "Tableau 2 : résultats", "A  B\tC", "1  2\t3", "Figure 1 : vue.",
-        "Service ας bloc", "1", "\x0c",
-        "Service ας bloc", "CONCLUSION :", "Texte\xa0insécable\vverticale İ.",
-        "Fait à Paris, le ٢٩.٠٤.٢٠٠٠", "Service ΑΣ  bloc", "2",
-    ]
-    rows = [
-        ("hx-greek", doc(pages, media={16})),
-        ("hx-empty", []),
-        ("hx-media", doc(["", ""], media={0, 1})),
-        ("hx-blank", doc(["", "\x0c", ""])),
-        ("hx-nbsp", edit(fx["fx-full-0001"], lambda t: t.replace(" ", "\xa0", 2))),
-        ("hx-vt", edit(fx["fx-hdr-0002"], lambda t: t.replace(" ", "\v", 1))),
-        ("hx-nul", edit(fx["fx-full-0001"], lambda t: t.replace("e", "\x00", 1))),
-        ("hx-sigma", edit(fx["fx-hdr-0002"],
-                          lambda t: t.upper().replace("S ", "Σ "))),
-        ("hx-dotted", edit(fx["fx-full-0001"], lambda t: t.replace("I", "İ"))),
-    ]
-    return pd.DataFrame(rows, columns=["doc_id", "spans"])
-
-
-def test_text_stays_arrow_to_emit(monkeypatch):
+def test_text_stays_arrow_to_emit(monkeypatch, hostile_docs_pdf):
     """Every mode hands Arrow-backed span text to the emit boundary
     (`_batch_from_flat`): no mode turns the cascade's text into Python
     strings on its way out, on the fixtures, a synthetic batch or the
@@ -678,7 +628,7 @@ def test_text_stays_arrow_to_emit(monkeypatch):
     monkeypatch.setattr(pipeline, "_batch_from_flat", spy)
     pdfs = (datagen.fixture_documents_pdf(),
             datagen.synthetic_documents_pdf(120, seed=11),
-            _hostile_documents_pdf())
+            hostile_docs_pdf)
     for mode, run in pipeline.PANDAS_MODES.items():
         for pdf in pdfs:
             run(pdf)
