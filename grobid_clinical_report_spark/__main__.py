@@ -78,7 +78,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "--stage-buckets", action="store_true",
         help="materialize a bucket-partitioned copy of the input first so "
-             "each bucket job scans 1/N via directory pruning (use when the "
+             "each wave scans its buckets via directory pruning (use when the "
              "source is NOT already bucket-partitioned)",
     )
     args = p.parse_args(argv)

@@ -93,9 +93,9 @@ def apply_split_hint(spark, mode: str) -> None:
     two modes with different hints planned concurrently on one session
     would race the conf. All current consumers satisfy this: __main__
     sets it once per process before the job, the bench restores the
-    default after every leg, and runner's concurrent bucket pool runs one
-    mode per job (its threads share a scan conf set before the pool
-    starts). A future mixed-mode service must plan each mode on its own
+    default after every leg, and runner's waves all run the job's one
+    mode (they share a scan conf set before the first wave). A future
+    mixed-mode service must plan each mode on its own
     session (SparkSession.newSession() shares the context but isolates
     SQL confs)."""
     hint = MODE_SPLIT_BYTES.get(mode)

@@ -11,24 +11,27 @@ Scale design (the 100 TB story):
   PDFs for the same reason, MedicalReportSegmenterParser.java:136-139,250-253).
 - **Size pass**: one job per run (a groupBy over the pending buckets) returns
   each bucket's admitted doc and span counts and how many rows it
-  quarantines. The counts size each bucket's partitioning before anything
-  pays to move data. A bucket with nothing to quarantine writes its empty
-  quarantine file from the driver (no second scan, no Spark job); only a
-  bucket that quarantines rows scans for them again. The pass returns
-  counts only, so no input, however malformed, can grow its aggregation
-  buffers or its collected result.
-- **Skew**: the extraction cost is ~linear in span count. Each bucket is
+  quarantines, before anything pays to move data. It returns counts only,
+  so no input, however malformed, can grow its aggregation buffers or its
+  collected result.
+- **Waves**: the pending buckets run in order, grouped while their admitted
+  spans fit in ``defaultParallelism`` mapper batches (a larger bucket runs
+  alone). A wave is one Spark job — scan, guardrail, exchange, mapInArrow,
+  and one write partitioned by bucket into the ``bucket=<b>/`` directories
+  — plus one quarantine write of the same shape if it quarantines rows.
+  A bucket left with no rows gets an empty file from the driver.
+- **Skew**: the extraction cost is ~linear in span count. A wave is
   hash-partitioned by doc_id into k partitions, one per mapper batch of
-  admitted input (pipeline's coalescing caps), at most the session's
-  ``defaultParallelism``: the header path pays a fixed cost per batch, so
-  a small bucket runs as one task. AQE can't help a map-only stage; the
-  partitioning at the exchange does. The guardrail caps a whale at
-  max_spans; whales are not placed apart.
-- **Shuffle count**: one repartition per bucket plus the size pass's
+  each bucket's admitted input (pipeline's coalescing caps), at most the
+  session's ``defaultParallelism``: the header path pays a fixed cost per
+  batch, so a one-bucket resume runs as one task. AQE can't help a
+  map-only stage; the partitioning at the exchange does. The guardrail
+  caps a whale at max_spans; whales are not placed apart.
+- **Shuffle count**: one repartition per wave plus the size pass's
   aggregate (one row per bucket and map task); the cascade itself is a
   single mapInArrow — no other exchange.
-- **Resume**: per-bucket overwrite + one manifest file per commit (see
-  manifest.py).
+- **Resume**: the bucket is the checkpoint unit: per-bucket overwrite + one
+  manifest file per commit (see manifest.py).
 """
 
 from __future__ import annotations
@@ -43,8 +46,6 @@ from . import manifest as mf
 from .pipeline import _COALESCE_DOCS, _COALESCE_SPANS, run_mode
 
 DEFAULT_MAX_SPANS = 50_000
-# bucket jobs in flight at once (run_extraction_job's driver thread pool)
-_MAX_CONCURRENT = 4
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -156,42 +157,38 @@ def run_extraction_job(
 ) -> dict:
     """End-to-end batch job with per-bucket checkpointing.
 
-    One size pass over the pending buckets (see _size_pass) sizes each
-    bucket's partitioning and counts its quarantine. Buckets then run through
-    a driver-side thread pool (up to ``_MAX_CONCURRENT`` = 4 Spark jobs in
-    flight; the pool's peak is reported as ``peak_concurrency``):
-    Spark schedules concurrent jobs from multiple driver threads, so the
-    cluster never idles between per-bucket jobs the way the round-2
-    sequential loop did (scheduling gaps + per-job overhead at 256
-    buckets). Each bucket thread labels its jobs ``"<mode> bucket=<b>"``
-    in the Spark UI, and restores the label it found. A clean bucket's empty
-    quarantine and every manifest commit are driver-side file writes
-    through the Hadoop FileSystem API: they start no Spark job and run in
-    parallel, and the lock guards only the concurrency counters.
+    One size pass over the pending buckets (see _size_pass, labelled
+    ``"<mode> size pass"`` in the Spark UI), then one Spark job per wave
+    (see _waves, labelled ``"<mode> wave=<i> buckets=<b,…>"``); the
+    caller's label is restored afterwards. Once a wave's writes return,
+    its buckets commit in order: all are attempted, then the first failure
+    is raised, so a crash redoes only the wave's uncommitted buckets. The
+    commits and a bucket's empty files are driver-side file writes through
+    the Hadoop FileSystem API: they start no Spark job.
 
     ``stage_buckets=True`` materializes a bucket-partitioned copy of the
-    input first (stage_bucketed_input) so each bucket job scans 1/N of the
-    data via directory pruning instead of re-scanning the flat input —
+    input first (stage_bucketed_input) so each wave scans only its
+    buckets via directory pruning instead of re-scanning the flat input —
     use it whenever the source is NOT already bucket-partitioned (an
     Iceberg bucket(doc_id) table needs no staging).
 
-    ``extract_fn`` substitutes the per-bucket extraction plan (e.g. a
-    trained decoder, trainer.run_trained_ner); ``job_tag`` is then
-    required and is folded into the manifest mode (``mode@tag``) so a
-    resume under different weights is refused instead of mixed.
+    ``extract_fn`` substitutes the extraction plan (e.g. a trained
+    decoder, trainer.run_trained_ner); ``job_tag`` is then required and is
+    folded into the manifest mode (``mode@tag``) so a resume under
+    different weights is refused instead of mixed.
 
     Returns a metrics dict: {buckets_run, docs, spans, quarantined,
-    wall_sec, peak_concurrency}.
+    wall_sec, peak_concurrency}; ``peak_concurrency`` is the largest task
+    count over the run's waves (tasks in flight). A bucket's manifest
+    ``wall_sec`` is its wave's wall.
     """
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark.sql import Observation
 
-    from .io import read_documents, write_spans
+    from .io import read_documents
 
     run_id = mf.new_run_id()
     sc = spark.sparkContext
+    cores = sc.defaultParallelism
     if stage_buckets:
         staged = os.path.join(output_path, "_staged_input")
         stage_bucketed_input(
@@ -203,10 +200,6 @@ def run_extraction_job(
         docs = read_documents(spark, input_path).select("doc_id", "spans")
         docs = with_bucket(docs, n_buckets)
 
-    # `extract_fn` substitutes the per-bucket extraction plan (e.g. a
-    # TRAINED decoder via trainer.run_trained_ner); `job_tag` must then
-    # distinguish it in the manifest mode so resume can't mix outputs
-    # decoded under different weights into one directory.
     if extract_fn is not None and not job_tag:
         raise ValueError("extract_fn needs a job_tag for resume safety")
     config = {
@@ -221,97 +214,94 @@ def run_extraction_job(
         pending = mf.pending_buckets(spark, output_path, n_buckets)
     else:
         # full recompute: clear stale manifest rows (and with them any claim
-        # over stale bucket/quarantine dirs — each bucket below overwrites)
+        # over stale bucket/quarantine dirs — each wave below overwrites)
         mf.reset(spark, output_path)
         pending = list(range(n_buckets))
 
+    extract = extract_fn or (lambda df: run_mode(df, mode))
+    q_root = os.path.join(output_path, "_quarantine")
+    totals = {"buckets_run": 0, "docs": 0, "spans": 0, "quarantined": 0,
+              "peak_concurrency": 0}
+    t_all = time.monotonic()
+    caller_label = sc.getLocalProperty("spark.job.description")
     sizes = {}
-    if pending:
-        caller_label = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(f"{mode} size pass")
-        try:
+    try:
+        if pending:
+            sc.setJobDescription(f"{mode} size pass")
             sizes = _size_pass(docs, pending, max_spans)
-        finally:
-            sc.setJobDescription(caller_label)
-
-    lock = threading.Lock()
-    state = {"active": 0, "peak": 0}
-
-    def run_bucket(b: int) -> tuple[int, int, int]:
-        with lock:
-            state["active"] += 1
-            state["peak"] = max(state["peak"], state["active"])
-        thread_label = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(f"{mode} bucket={b}")
-        try:
+        for i, wave in enumerate(_waves(pending, sizes, cores)):
+            sc.setJobDescription(f"{mode} wave={i} buckets="
+                                 + ",".join(map(str, wave)))
             t0 = time.monotonic()
-            size = sizes.get(b, _EMPTY_BUCKET)
-            chunk = docs.filter(F.col("bucket") == b).drop("bucket")
-            ok, bad = split_guardrail(chunk, max_spans)
-            # one task per mapper batch of input, at most one per core:
-            # the header path pays a fixed cost per batch
-            k = max(
-                -(-size["docs"] // _COALESCE_DOCS),
-                -(-size["spans"] // _COALESCE_SPANS),
-            )
-            ok = salt_partition(ok, min(max(k, 1), sc.defaultParallelism))
-
-            extracted = (
-                extract_fn(ok) if extract_fn is not None
-                else run_mode(ok, mode)
-            )
-            out_dir = os.path.join(output_path, f"bucket={b}")
+            wave_docs = docs.filter(F.col("bucket").isin(wave))
+            ok, bad = split_guardrail(wave_docs, max_spans)
+            # one task per mapper batch of each bucket's input, at most one
+            # per core: the header path pays a fixed cost per batch
+            k = min(cores, sum(_batches(sizes[b]) for b in wave))
+            ok = salt_partition(ok.drop("bucket"), k)
+            extracted = extract(ok)
             # metrics ride the write itself via observe() — no post-write
             # re-read of the output, no second scan of the input
             obs = Observation()
-            extracted = extracted.observe(
+            in_b = {b: F.col("bucket") == b for b in wave}
+            _write_by_bucket(with_bucket(extracted, n_buckets).observe(
                 obs,
-                F.count(F.lit(1)).alias("n_docs"),
-                F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("n_spans"),
-            )
-            write_spans(extracted, out_dir, mode="overwrite")
-            n_docs, n_spans = obs.get["n_docs"], obs.get["n_spans"]
-
-            # quarantine is ALWAYS (over)written — an empty dataset when
-            # clean — so a re-run with a raised max_spans can't leave stale
-            # whale rows. The size pass counted it: a clean bucket writes
-            # its empty file from the driver, with no second scan
-            q_dir = os.path.join(output_path, "_quarantine", f"bucket={b}")
-            n_quarantined = size["quarantined"]
-            if n_quarantined:
-                bad.select("doc_id", _n_spans().alias("n_spans")).write.mode(
-                    "overwrite"
-                ).parquet(q_dir)
-            else:
-                _write_empty_quarantine(spark, q_dir)
-
-            mf.commit_bucket(
-                spark, output_path, b, n_docs, n_spans, n_quarantined,
-                time.monotonic() - t0, input_path, run_id, config,
-            )
-            return int(n_docs), int(n_spans), int(n_quarantined)
-        finally:
-            sc.setJobDescription(thread_label)
-            with lock:
-                state["active"] -= 1
-
-    totals = {"buckets_run": 0, "docs": 0, "spans": 0, "quarantined": 0}
-    t_all = time.monotonic()
-    if pending:
-        workers = max(1, min(_MAX_CONCURRENT, len(pending)))
-        with ThreadPoolExecutor(max_workers=workers) as ex:
-            for n_docs, n_spans, n_q in ex.map(run_bucket, pending):
+                *(F.count_if(in_b[b]).alias(f"docs{b}") for b in wave),
+                *(F.sum(F.when(in_b[b], F.size("spans"))).alias(f"spans{b}")
+                  for b in wave),
+            ), output_path)
+            # quarantine is ALWAYS (over)written, empty when clean, so a
+            # re-run with a raised max_spans can't leave stale whale rows
+            bad = bad.select("doc_id", _n_spans().alias("n_spans"), "bucket")
+            if any(sizes[b]["quarantined"] for b in wave):
+                _write_by_bucket(bad, q_root)
+            wall = time.monotonic() - t0
+            totals["peak_concurrency"] = max(totals["peak_concurrency"], k)
+            failed = []
+            for b in wave:
+                n_docs, n_q = obs.get[f"docs{b}"], sizes[b]["quarantined"]
+                n_spans = obs.get[f"spans{b}"] or 0  # null: a sum of no rows
+                try:
+                    # a bucket with no rows was not written: empty it here
+                    if not n_docs:
+                        _write_empty(spark, output_path, b, extracted)
+                    if not n_q:
+                        _write_empty(spark, q_root, b, bad)
+                    mf.commit_bucket(spark, output_path, b, n_docs, n_spans,
+                                     n_q, wall, input_path, run_id, config)
+                except Exception as exc:
+                    failed.append(exc)
+                    continue
                 totals["buckets_run"] += 1
                 totals["docs"] += n_docs
                 totals["spans"] += n_spans
                 totals["quarantined"] += n_q
+            if failed:
+                raise failed[0]
+    finally:
+        sc.setJobDescription(caller_label)
     totals["wall_sec"] = time.monotonic() - t_all
-    totals["peak_concurrency"] = state["peak"]
     return totals
 
 
-# a bucket the size pass saw no row of
-_EMPTY_BUCKET = {"docs": 0, "spans": 0, "quarantined": 0}
+def _batches(size: dict) -> int:
+    """The mapper batches a bucket's admitted input fills, at least one."""
+    return max(1, -(-size["docs"] // _COALESCE_DOCS),
+               -(-size["spans"] // _COALESCE_SPANS))
+
+
+def _waves(pending: list[int], sizes: dict, cores: int) -> list[list[int]]:
+    """``pending`` in order, cut before a bucket whose admitted spans would
+    take its wave past ``cores`` mapper batches."""
+    waves, spans = [], 0
+    for b in pending:
+        n = sizes[b]["spans"]
+        if not waves or spans + n > cores * _COALESCE_SPANS:
+            waves.append([])
+            spans = 0
+        waves[-1].append(b)
+        spans += n
+    return waves
 
 
 def _size_pass(docs: DataFrame, pending: list[int], max_spans: int) -> dict:
@@ -320,7 +310,7 @@ def _size_pass(docs: DataFrame, pending: list[int], max_spans: int) -> dict:
     split_guardrail quarantines (the malformed and over-``max_spans``
     ones). Counts only, so the aggregation and the collected result stay
     one small row per bucket however many rows a bad input sends to the
-    quarantine. Buckets with no rows are absent."""
+    quarantine. A bucket with no rows counts zeros."""
     ok = _admitted(max_spans)
     n = _n_spans()
     rows = (
@@ -333,25 +323,34 @@ def _size_pass(docs: DataFrame, pending: list[int], max_spans: int) -> dict:
         )
         .collect()
     )
-    return {r["bucket"]: r.asDict() for r in rows}
+    got = {r["bucket"]: r.asDict() for r in rows}
+    zero = {"docs": 0, "spans": 0, "quarantined": 0}
+    return {b: got.get(b, zero) for b in pending}
 
 
-def _write_empty_quarantine(spark: SparkSession, q_dir: str) -> None:
-    """Overwrite one bucket's quarantine with a single empty parquet file of
-    the (doc_id, n_spans) schema, written from the driver through the
-    Hadoop FileSystem API: no Spark job."""
+def _write_by_bucket(df: DataFrame, root: str) -> None:
+    """Write ``df`` under ``root`` partitioned by its ``bucket`` column,
+    replacing only the ``bucket=<b>/`` directories it has rows for."""
+    df.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(root)
+
+
+def _write_empty(spark: SparkSession, root: str, bucket: int,
+                 df: DataFrame) -> None:
+    """Overwrite ``root``'s ``bucket=<b>/`` directory with a single empty
+    parquet file of ``df``'s columns but ``bucket``, written from the driver
+    through the Hadoop FileSystem API: no Spark job."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from .io import hadoop_fs
 
     buf = pa.BufferOutputStream()
-    pq.write_table(
-        pa.table({"doc_id": pa.array([], pa.string()),
-                  "n_spans": pa.array([], pa.int32())}),
-        buf,
-    )
-    fs, d = hadoop_fs(spark, q_dir)
+    schema = to_arrow_schema(df.drop("bucket").schema)
+    pq.write_table(schema.empty_table(), buf)
+    fs, d = hadoop_fs(spark, os.path.join(root, f"bucket={bucket}"))
     fs.delete(d, True)
     out = fs.create(spark._jvm.org.apache.hadoop.fs.Path(d, "part-0.parquet"))
     try:

@@ -56,8 +56,8 @@ def test_job_runs_and_resumes_idempotently(spark, input_path, tmp_path):
     )
     assert m1["buckets_run"] == 4
     assert m1["quarantined"] == 1
-    # the bucket jobs actually overlapped (driver-side thread pool): the
-    # cluster is never idle between per-bucket jobs
+    # the wave's tasks ran side by side: its four buckets' batches spread
+    # over more than one task
     assert m1["peak_concurrency"] >= 2
     first = {
         r["doc_id"]: r["spans"]
@@ -646,8 +646,9 @@ def test_concurrent_commits_lose_no_bucket(spark, tmp_path):
 
 def test_jobs_carry_mode_and_bucket_labels(spark, input_path, tmp_path,
                                            monkeypatch):
-    """Each bucket's jobs are labelled "<mode> bucket=<b>", the size pass
-    "<mode> size pass", and afterwards the caller's own label is back."""
+    """A wave's job is labelled "<mode> wave=<i> buckets=<b,…>", the size
+    pass "<mode> size pass", and afterwards the caller's own label is
+    back."""
     sc = spark.sparkContext
     seen = []
     real_size_pass = runner._size_pass
@@ -667,11 +668,58 @@ def test_jobs_carry_mode_and_bucket_labels(spark, input_path, tmp_path,
             spark, input_path, str(tmp_path / "out"), mode="ner",
             n_buckets=3, max_spans=500, extract_fn=extract, job_tag="labels",
         )
-        assert seen[0] == "ner size pass"
-        assert sorted(seen[1:]) == [f"ner bucket={b}" for b in range(3)]
+        assert seen == ["ner size pass", "ner wave=0 buckets=0,1,2"]
         assert sc.getLocalProperty("spark.job.description") == "caller's label"
     finally:
         sc.setJobDescription(None)
+
+
+def test_one_wave_starts_one_extraction_job(spark, input_path, tmp_path):
+    """Pending buckets that fit one wave are extracted by one Spark job: a
+    run over 8 buckets starts as many jobs as a run over 1, and a run that
+    quarantines nothing starts one job fewer (no quarantine write)."""
+    def jobs(name, n_buckets, max_spans=500):
+        return len(_jobs_of(spark, name, lambda: runner.run_extraction_job(
+            spark, input_path, str(tmp_path / name), n_buckets=n_buckets,
+            max_spans=max_spans,
+        )))
+
+    one = jobs("wave-1", 1)
+    assert jobs("wave-8", 8) == one
+    assert jobs("wave-8-clean", 8, max_spans=100_000) == one - 1
+
+
+def test_recompute_leaves_every_bucket_and_no_stale_rows(spark, input_path,
+                                                         tmp_path):
+    """A recompute over an earlier output leaves every bucket's output and
+    quarantine directory in place, holding exactly this run's rows: with
+    an input whose buckets are partly empty, and with an input whose every
+    row is quarantined (0 output rows, not a missing path)."""
+    out = str(tmp_path / "out")
+    n = 4
+    runner.run_extraction_job(spark, input_path, out, n_buckets=n,
+                              max_spans=500)
+    for name, docs, want_out, want_q in (
+        ("one-doc", [("only", 3)], ["only"], []),
+        ("all-quarantined", [("w1", 9), ("w2", 12), ("bad", None)],
+         [], ["bad", "w1", "w2"]),
+    ):
+        inp = str(tmp_path / f"{name}.parquet")
+        _docs(spark, docs, inp)
+        m = runner.run_extraction_job(spark, inp, out, n_buckets=n,
+                                      max_spans=5 if want_q else 500,
+                                      resume=False)
+        assert m["buckets_run"] == n, name
+        for b in range(n):
+            assert os.path.isdir(os.path.join(out, f"bucket={b}")), name
+            assert os.path.isdir(
+                os.path.join(out, "_quarantine", f"bucket={b}")
+            ), name
+        got = sorted(r["doc_id"] for r in
+                     runner.read_extracted(spark, out).collect())
+        assert got == want_out, name
+        q = spark.read.parquet(os.path.join(out, "_quarantine", "bucket=*"))
+        assert sorted(r["doc_id"] for r in q.collect()) == want_q, name
 
 
 def test_staging_check_starts_no_spark_job(spark, input_path, tmp_path):
