@@ -5,7 +5,7 @@ Scale design (the 100 TB story):
 - **Input** is an Iceberg table bucket-partitioned by doc_id; in this sandbox
   a parquet file stands in and `bucket = pmod(hash(doc_id), N)` reproduces the
   partition spec. Only `doc_id, spans` are read (column pruning reaches the
-  scan) and bucket pruning limits each chunk's scan to 1/N of the data.
+  scan) and bucket pruning limits each wave's scan to its buckets.
 - **Guardrails (S4)**: documents over `max_spans` go to a quarantine sink with
   a metric row instead of poisoning a task (the reference rejects >300k-block
   PDFs for the same reason, MedicalReportSegmenterParser.java:136-139,250-253).
