@@ -19,7 +19,8 @@ Scale design (the 100 TB story):
   alone). A wave is one Spark job — scan, guardrail, exchange, mapInArrow,
   and one write partitioned by bucket into the ``bucket=<b>/`` directories
   — plus one quarantine write of the same shape if it quarantines rows.
-  A bucket left with no rows gets an empty file from the driver.
+  A bucket left with no rows gets an empty file from the driver. Waves
+  run one after another.
 - **Skew**: the extraction cost is ~linear in span count. A wave is
   hash-partitioned by doc_id into k partitions, one per mapper batch of
   each bucket's admitted input (pipeline's coalescing caps), at most the
@@ -102,14 +103,14 @@ def stage_bucketed_input(
     force: bool = False,
 ) -> None:
     """ONE-pass bucket staging: materialize the input partitioned BY bucket
-    so per-bucket jobs read only their own directory (true partition
+    so each wave reads only its buckets' directories (true partition
     pruning). The production source is an Iceberg table already
     bucket-partitioned by doc_id — there the scan prunes natively and this
-    step is a no-op. On a flat parquet stand-in, `filter(bucket == b)` is a
-    predicate on a COMPUTED hash column: no file can be pruned, so N bucket
-    jobs would re-scan the whole input N times — the dominant IO cost at
-    100 TB × 256 buckets. Staging costs one extra read+write and makes
-    total input IO 2 passes instead of N.
+    step is a no-op. On a flat parquet stand-in, `bucket.isin(wave)` is a
+    predicate on a COMPUTED hash column: no file can be pruned, so W waves
+    re-scan the whole input W times (at 100 TB × 256 buckets each bucket
+    is a wave). Staging makes input IO 2 passes instead of W; a one-wave
+    run pays it as an extra read and write.
 
     Idempotent: skipped only when a committed staging (_SUCCESS marker plus
     a `_STAGING_META.json` sidecar recording the exact bucket count and
@@ -235,8 +236,6 @@ def run_extraction_job(
             t0 = time.monotonic()
             wave_docs = docs.filter(F.col("bucket").isin(wave))
             ok, bad = split_guardrail(wave_docs, max_spans)
-            # one task per mapper batch of each bucket's input, at most one
-            # per core: the header path pays a fixed cost per batch
             k = min(cores, sum(_batches(sizes[b]) for b in wave))
             ok = salt_partition(ok.drop("bucket"), k)
             extracted = extract(ok)
@@ -292,11 +291,12 @@ def _batches(size: dict) -> int:
 
 def _waves(pending: list[int], sizes: dict, cores: int) -> list[list[int]]:
     """``pending`` in order, cut before a bucket whose admitted spans would
-    take its wave past ``cores`` mapper batches."""
+    take its wave past ``cores`` mapper batches. No bucket or wave without
+    admitted spans is worth a job of its own."""
     waves, spans = [], 0
     for b in pending:
         n = sizes[b]["spans"]
-        if not waves or spans + n > cores * _COALESCE_SPANS:
+        if not waves or (spans and n and spans + n > cores * _COALESCE_SPANS):
             waves.append([])
             spans = 0
         waves[-1].append(b)

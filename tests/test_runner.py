@@ -689,6 +689,105 @@ def test_one_wave_starts_one_extraction_job(spark, input_path, tmp_path):
     assert jobs("wave-8-clean", 8, max_spans=100_000) == one - 1
 
 
+def test_waves_cut_at_the_span_budget():
+    """Pending buckets join a wave while its admitted spans fit ``cores``
+    mapper batches; a bucket over that runs alone, and a bucket with no
+    admitted spans never starts a wave of its own."""
+    c = runner._COALESCE_SPANS
+
+    def waves(*spans, cores=2):
+        sizes = {b: {"spans": n} for b, n in enumerate(spans)}
+        return runner._waves(list(sizes), sizes, cores)
+
+    assert runner._waves([], {}, 4) == []
+    assert waves(c, c) == [[0, 1]]  # exactly the budget
+    assert waves(c, c, 1) == [[0, 1], [2]]
+    assert waves(c, c, 1, cores=3) == [[0, 1, 2]]
+    assert waves(1, 3 * c, 1) == [[0], [1], [2]]  # oversized: alone
+    assert waves(3 * c, 2 * c) == [[0], [1]]
+    assert waves(0, 3 * c, 0, 1) == [[0, 1, 2], [3]]
+    assert waves(0, 0, 0) == [[0, 1, 2]]
+    # pending order is kept, whatever the bucket numbers
+    sizes = {5: {"spans": c}, 2: {"spans": c}, 7: {"spans": 1}}
+    assert runner._waves([2, 5, 7], sizes, 2) == [[2, 5], [7]]
+
+
+def test_waves_split_a_run_and_commit_wave_by_wave(spark, input_path,
+                                                   tmp_path, monkeypatch):
+    """With the mapper-batch span cap lowered to 800, the 40-doc input's 4
+    buckets (1,055, 2,093, 1,358 and 1,244 admitted spans) run as two waves
+    on 4 cores. Output and quarantine equal a one-wave run's. A crash in
+    the second wave leaves the first wave's buckets committed; a resume
+    runs the rest as one wave, and a failed commit there leaves only that
+    bucket for the next resume."""
+    from grobid_clinical_report_spark.pipeline import run_mode
+
+    sc = spark.sparkContext
+    labels, crash_in = [], []
+
+    def extract(df):
+        label = sc.getLocalProperty("spark.job.description")
+        labels.append(label)
+        if label in crash_in:
+            raise RuntimeError("injected crash in the wave")
+        return run_mode(df, "extract_full")
+
+    def run(out, **kw):
+        return runner.run_extraction_job(
+            spark, input_path, out, n_buckets=4, max_spans=500,
+            extract_fn=extract, job_tag="waves", **kw,
+        )
+
+    def rows(out):
+        got = {r["doc_id"]: r["spans"]
+               for r in runner.read_extracted(spark, out).collect()}
+        q = spark.read.parquet(os.path.join(out, "_quarantine", "bucket=*"))
+        return got, sorted(map(tuple, q.select("doc_id", "n_spans").collect()))
+
+    one = str(tmp_path / "one")
+    assert run(one)["buckets_run"] == 4
+    assert labels == ["extract_full wave=0 buckets=0,1,2,3"]
+    want = rows(one)
+
+    monkeypatch.setattr(runner, "_COALESCE_SPANS", 800)
+    two = str(tmp_path / "two")
+    labels.clear()
+    m = run(two)
+    assert labels == ["extract_full wave=0 buckets=0,1",
+                      "extract_full wave=1 buckets=2,3"]
+    assert (m["buckets_run"], m["quarantined"], m["peak_concurrency"]) == (
+        4, 1, 4)
+    assert rows(two) == want
+
+    out = str(tmp_path / "out")
+    crash_in.append("extract_full wave=1 buckets=2,3")
+    with pytest.raises(RuntimeError, match="injected crash in the wave"):
+        run(out)
+    assert mf.completed_buckets(spark, out) == {0, 1}
+
+    real_commit = mf.commit_bucket
+
+    def commit_or_fail(spark_, output_path, bucket, *args, **kwargs):
+        if bucket == 2:
+            raise RuntimeError("injected commit failure")
+        return real_commit(spark_, output_path, bucket, *args, **kwargs)
+
+    labels.clear()
+    crash_in.clear()
+    monkeypatch.setattr(mf, "commit_bucket", commit_or_fail)
+    with pytest.raises(RuntimeError, match="injected commit failure"):
+        run(out)
+    assert labels == ["extract_full wave=0 buckets=2,3"]
+    assert mf.completed_buckets(spark, out) == {0, 1, 3}
+
+    monkeypatch.setattr(mf, "commit_bucket", real_commit)
+    labels.clear()
+    assert run(out)["buckets_run"] == 1
+    assert labels == ["extract_full wave=0 buckets=2"]
+    assert rows(out) == want
+    assert run(out)["buckets_run"] == 0
+
+
 def test_recompute_leaves_every_bucket_and_no_stale_rows(spark, input_path,
                                                          tmp_path):
     """A recompute over an earlier output leaves every bucket's output and
