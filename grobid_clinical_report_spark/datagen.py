@@ -1007,6 +1007,9 @@ def write_documents_parquet_chunked(
             shards=shards_per_chunk,
             **chunk_kw,
         )
+        if not os.path.isdir(tmp):  # one shard is written as one file
+            os.rename(tmp, os.path.join(path, f"part-{c:03d}-00000.parquet"))
+            continue
         for fn in sorted(os.listdir(tmp)):
             os.rename(
                 os.path.join(tmp, fn),

@@ -6,7 +6,8 @@ per session and the parquet bucket layout (`bucket=N/` dirs + `_manifest/`,
 one `_done-<bucket>-<run_id>.json` file per committed bucket) stands in — it
 reproduces the two Iceberg properties the design depends on:
   * bucket partition pruning (each job chunk scans 1/N of the data),
-  * idempotent overwrite-by-partition (the resume unit).
+  * the bucket as the resume unit (the driver clears a pending bucket,
+    the wave appends).
 On a cluster with Iceberg on the classpath the same calls route to
 `spark.read/writeTo(...)` with a `bucket(N, doc_id)` partition spec.
 """

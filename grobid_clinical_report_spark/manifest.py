@@ -1,24 +1,24 @@
 """Checkpoint manifest + exact resume (SURVEY.md §2.1 S6, §7.2 step 6).
 
 The 10^12-row job is chunked by `bucket = pmod(hash(doc_id), n_buckets)` —
-the same bucketing an Iceberg `bucket(N, doc_id)` partition spec gives. Each
-bucket is processed and written independently (overwrite-by-partition =
-idempotent), then committed: one JSON row holding every MANIFEST_SCHEMA field
-(bucket, status, metrics, lineage, job shape) is written to a dot-prefixed
-temp file and renamed to `_manifest/_done-<bucket>-<run_id>.json` through the
-Hadoop FileSystem API. The rename is the commit point. A commit starts no
-Spark job and needs no lock (each commit owns its file), and the leading `_`
-keeps the rows out of any parquet reader of the directory.
+the same bucketing an Iceberg `bucket(N, doc_id)` partition spec gives. The
+driver clears a pending bucket's output directory, the wave appends to it,
+and the bucket is committed: one JSON row holding every MANIFEST_SCHEMA
+field (bucket, status, metrics, lineage, job shape) is written to a
+dot-prefixed temp file and renamed to `_manifest/_done-<bucket>-<run_id>.json`
+through the Hadoop FileSystem API. The rename is the commit point. A commit
+starts no Spark job and needs no lock (each commit owns its file), and the
+leading `_` keeps the rows out of any parquet reader of the directory.
 
 Resume = all buckets minus the 'done' rows, computed on the driver from one
 directory listing (a commit's file name carries its bucket, so none is
-opened; only `check_compatible` reads the rows) — only
-missing buckets are recomputed, and rewriting a bucket's output directory is
-idempotent, so a crash between data write and manifest commit re-does exactly
-that bucket (the parquet stand-in for an Iceberg transaction). Manifests an
-older writer appended as parquet part files still load, resume and pass
-`check_compatible`: their rows are read, with one Spark job, only when such
-files are present.
+opened; only `check_compatible` reads the rows) — only missing buckets are
+recomputed, and each is cleared before it is written again, so a crash
+between data write and manifest commit re-does exactly that bucket (the
+parquet stand-in for an Iceberg transaction). A recompute deletes the
+manifest with the job's other entries. Manifests an older writer appended
+as parquet part files still load, resume and pass `check_compatible`: their
+rows are read, with one Spark job, only when such files are present.
 """
 
 from __future__ import annotations
@@ -165,13 +165,6 @@ def check_compatible(
                 f"incompatible job: committed {got}, requested {want}. "
                 "Run with resume=False to recompute from scratch."
             )
-
-
-def reset(spark: SparkSession, output_path: str) -> None:
-    """Clear the manifest (full-recompute entry point): delete the directory
-    so stale 'done' rows can't shadow the new run."""
-    fs, d = hadoop_fs(spark, manifest_path(output_path))
-    fs.delete(d, True)
 
 
 def new_run_id() -> str:

@@ -31,8 +31,9 @@ Scale design (the 100 TB story):
 - **Shuffle count**: one repartition per wave plus the size pass's
   aggregate (one row per bucket and map task); the cascade itself is a
   single mapInArrow — no other exchange.
-- **Resume**: the bucket is the checkpoint unit: per-bucket overwrite + one
-  manifest file per commit (see manifest.py).
+- **Resume**: the bucket is the checkpoint unit. The driver clears a
+  pending bucket, the wave appends, and a commit is one manifest file (see
+  manifest.py); a recompute first deletes the job's own entries.
 """
 
 from __future__ import annotations
@@ -44,6 +45,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import manifest as mf
+from .io import hadoop_fs, read_documents
 from .pipeline import _COALESCE_DOCS, _COALESCE_SPANS, run_mode
 
 DEFAULT_MAX_SPANS = 50_000
@@ -100,7 +102,6 @@ def stage_bucketed_input(
     input_path: str,
     staged_path: str,
     n_buckets: int,
-    force: bool = False,
 ) -> None:
     """ONE-pass bucket staging: materialize the input partitioned BY bucket
     so each wave reads only its buckets' directories (true partition
@@ -114,14 +115,14 @@ def stage_bucketed_input(
 
     Idempotent: skipped only when a committed staging (_SUCCESS marker plus
     a `_STAGING_META.json` sidecar recording the exact bucket count and
-    input path) matches this run's parameters, unless ``force`` (a full
-    recompute must not trust a staging of a possibly-changed input).
-    The sidecar is the staleness guard: a leftover staging from a crashed
-    run with MORE buckets would otherwise pass a bucket-dir glob check and
-    silently drop every document in buckets >= n_buckets."""
+    input path) matches this run's parameters; a recompute has deleted
+    the staging, so only a resume reuses one. The sidecar is the
+    staleness guard: a leftover staging from a crashed run with MORE
+    buckets would otherwise pass a bucket-dir glob check and silently
+    drop every document in buckets >= n_buckets."""
     import json
 
-    from .io import hadoop_fs, read_documents, read_line, write_line
+    from .io import read_line, write_line
 
     # marker and sidecar go through the Hadoop FileSystem API (no Spark
     # job), on whatever filesystem `staged_path` names (HDFS, s3a, …); the
@@ -132,7 +133,7 @@ def stage_bucketed_input(
     want_meta = json.dumps(
         {"input_path": input_path, "n_buckets": n_buckets}, sort_keys=True
     )
-    if not force and fs.exists(marker):
+    if fs.exists(marker):
         if read_line(spark, meta_path) == want_meta:
             return
     docs = read_documents(spark, input_path).select("doc_id", "spans")
@@ -163,9 +164,15 @@ def run_extraction_job(
     (see _waves, labelled ``"<mode> wave=<i> buckets=<b,…>"``); the
     caller's label is restored afterwards. Once a wave's writes return,
     its buckets commit in order: all are attempted, then the first failure
-    is raised, so a crash redoes only the wave's uncommitted buckets. The
-    commits and a bucket's empty files are driver-side file writes through
-    the Hadoop FileSystem API: they start no Spark job.
+    is raised, so a crash redoes only the wave's uncommitted buckets.
+
+    The driver clears a pending bucket, the wave appends: before a wave
+    writes, its buckets' output and quarantine directories are deleted.
+    ``resume=False`` first deletes the job's own entries under
+    ``output_path`` (``_manifest``, ``_quarantine``, ``_staged_input``,
+    ``bucket=*``) and nothing else. The deletes, the commits and a
+    bucket's empty files are driver-side file operations through the
+    Hadoop FileSystem API: they start no Spark job.
 
     ``stage_buckets=True`` materializes a bucket-partitioned copy of the
     input first (stage_bucketed_input) so each wave scans only its
@@ -185,22 +192,9 @@ def run_extraction_job(
     """
     from pyspark.sql import Observation
 
-    from .io import read_documents
-
     run_id = mf.new_run_id()
     sc = spark.sparkContext
     cores = sc.defaultParallelism
-    if stage_buckets:
-        staged = os.path.join(output_path, "_staged_input")
-        stage_bucketed_input(
-            spark, input_path, staged, n_buckets, force=not resume
-        )
-        # partition column `bucket` prunes directories at the scan
-        docs = spark.read.parquet(staged).select("doc_id", "spans", "bucket")
-    else:
-        docs = read_documents(spark, input_path).select("doc_id", "spans")
-        docs = with_bucket(docs, n_buckets)
-
     if extract_fn is not None and not job_tag:
         raise ValueError("extract_fn needs a job_tag for resume safety")
     config = {
@@ -212,12 +206,20 @@ def run_extraction_job(
         # refuse to mix incompatible outputs under one directory: resume is
         # only valid when the committed manifest rows ran the same job shape
         mf.check_compatible(spark, output_path, config)
-        pending = mf.pending_buckets(spark, output_path, n_buckets)
     else:
-        # full recompute: clear stale manifest rows (and with them any claim
-        # over stale bucket/quarantine dirs — each wave below overwrites)
-        mf.reset(spark, output_path)
-        pending = list(range(n_buckets))
+        # the input may live beside the output: only the job's own entries go
+        _delete(spark, os.path.join(
+            output_path, "{_manifest,_quarantine,_staged_input,bucket=*}"))
+    pending = mf.pending_buckets(spark, output_path, n_buckets)
+
+    if stage_buckets:
+        staged = os.path.join(output_path, "_staged_input")
+        stage_bucketed_input(spark, input_path, staged, n_buckets)
+        # partition column `bucket` prunes directories at the scan
+        docs = spark.read.parquet(staged).select("doc_id", "spans", "bucket")
+    else:
+        docs = read_documents(spark, input_path).select("doc_id", "spans")
+        docs = with_bucket(docs, n_buckets)
 
     extract = extract_fn or (lambda df: run_mode(df, mode))
     q_root = os.path.join(output_path, "_quarantine")
@@ -234,6 +236,9 @@ def run_extraction_job(
             sc.setJobDescription(f"{mode} wave={i} buckets="
                                  + ",".join(map(str, wave)))
             t0 = time.monotonic()
+            for b in wave:  # uncommitted: clear what an attempt left
+                for root in (output_path, q_root):
+                    _delete(spark, os.path.join(root, f"bucket={b}"))
             wave_docs = docs.filter(F.col("bucket").isin(wave))
             ok, bad = split_guardrail(wave_docs, max_spans)
             k = min(cores, sum(_batches(sizes[b]) for b in wave))
@@ -249,8 +254,6 @@ def run_extraction_job(
                 *(F.sum(F.when(in_b[b], F.size("spans"))).alias(f"spans{b}")
                   for b in wave),
             ), output_path)
-            # quarantine is ALWAYS (over)written, empty when clean, so a
-            # re-run with a raised max_spans can't leave stale whale rows
             bad = bad.select("doc_id", _n_spans().alias("n_spans"), "bucket")
             if any(sizes[b]["quarantined"] for b in wave):
                 _write_by_bucket(bad, q_root)
@@ -261,7 +264,7 @@ def run_extraction_job(
                 n_docs, n_q = obs.get[f"docs{b}"], sizes[b]["quarantined"]
                 n_spans = obs.get[f"spans{b}"] or 0  # null: a sum of no rows
                 try:
-                    # a bucket with no rows was not written: empty it here
+                    # a bucket with no rows was not written: one empty file
                     if not n_docs:
                         _write_empty(spark, output_path, b, extracted)
                     if not n_q:
@@ -328,30 +331,33 @@ def _size_pass(docs: DataFrame, pending: list[int], max_spans: int) -> dict:
     return {b: got.get(b, zero) for b in pending}
 
 
+def _delete(spark: SparkSession, pattern: str) -> None:
+    """Recursively delete every path matching the Hadoop glob ``pattern``,
+    from the driver through the Hadoop FileSystem API: no Spark job."""
+    fs, p = hadoop_fs(spark, pattern)
+    for st in fs.globStatus(p) or []:
+        fs.delete(st.getPath(), True)
+
+
 def _write_by_bucket(df: DataFrame, root: str) -> None:
-    """Write ``df`` under ``root`` partitioned by its ``bucket`` column,
-    replacing only the ``bucket=<b>/`` directories it has rows for."""
-    df.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("bucket").parquet(root)
+    """Append ``df`` under ``root`` partitioned by its ``bucket`` column
+    into the ``bucket=<b>/`` directories the driver cleared."""
+    df.write.mode("append").partitionBy("bucket").parquet(root)
 
 
 def _write_empty(spark: SparkSession, root: str, bucket: int,
                  df: DataFrame) -> None:
-    """Overwrite ``root``'s ``bucket=<b>/`` directory with a single empty
-    parquet file of ``df``'s columns but ``bucket``, written from the driver
+    """Write ``root``'s cleared ``bucket=<b>/`` directory a single empty
+    parquet file of ``df``'s columns but ``bucket``, from the driver
     through the Hadoop FileSystem API: no Spark job."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from .io import hadoop_fs
-
     buf = pa.BufferOutputStream()
     schema = to_arrow_schema(df.drop("bucket").schema)
     pq.write_table(schema.empty_table(), buf)
     fs, d = hadoop_fs(spark, os.path.join(root, f"bucket={bucket}"))
-    fs.delete(d, True)
     out = fs.create(spark._jvm.org.apache.hadoop.fs.Path(d, "part-0.parquet"))
     try:
         out.write(bytearray(buf.getvalue().to_pybytes()))
@@ -393,7 +399,7 @@ def process_quarantined(
     documented long-document approximation for the >cap monster tail).
     Results land under `bucket=quarantine` next to the regular buckets.
     """
-    from .io import read_documents, write_spans
+    from .io import write_spans
 
     if continuity_cap is None:
         continuity_cap = 5 * max_spans

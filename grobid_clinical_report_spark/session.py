@@ -26,19 +26,6 @@ def get_spark(
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = shuffle_partitions or max(cpus, 8)
-    # task_cpus is re-measured each round (SPARK_GRAFT_TASK_CPUS overrides
-    # for the A/B). The r2-r4 setting claimed 2 cores/task at local[32]
-    # (memory-bus saturation above ~16 pandas workers, measured with the r2
-    # kernels); r5 flipped the default to 1 for the flagship extraction
-    # cascade (~21% faster). r6 A/B (fresh process per leg, best-of-2,
-    # interleaved): extraction 3.83-4.98s at 1 vs 5.34s at 2; NER 7.99s at
-    # 1 vs 6.20-6.98s at 2 — still opposite preferences, but the r6 NER
-    # kernel (int16 emissions, hybrid decode) plus the per-mode scan-split
-    # hint (pipeline.MODE_SPLIT_BYTES) put the default-config NER wall at
-    # ~5s, so the session default stays with the flagship: 1. On a real
-    # cluster the two job families run as separate applications with their
-    # own spark.task.cpus.
-    task_cpus = int(os.environ.get("SPARK_GRAFT_TASK_CPUS", "1"))
     builder = SparkSession.builder
     # Under a spark-submit-launched driver (PYSPARK_GATEWAY_PORT set: the
     # JVM gateway already exists and carries --master / --driver-memory /
@@ -54,7 +41,6 @@ def get_spark(
         )
     return (
         builder
-        .config("spark.task.cpus", str(task_cpus))
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.adaptive.enabled", "true")

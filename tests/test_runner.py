@@ -430,25 +430,29 @@ def test_chunked_corpus_writer_matches_single_shot_semantics(spark, tmp_path):
     writer's output: unique doc_ids across chunks (seed-embedded ids),
     fixtures and heavy whales present ONCE (chunk 0 only), same schema. The
     chunked path exists because the one-frame build peaks at ~10x the
-    parquet size in RAM (a 2M-doc corpus OOM-risks a 128 GB box)."""
+    parquet size in RAM (a 2M-doc corpus OOM-risks a 128 GB box). One
+    shard per chunk writes one file per chunk."""
     from grobid_clinical_report_spark import datagen
 
-    p = str(tmp_path / "chunked")
-    datagen.write_documents_parquet_chunked(
-        p, n_docs=900, chunk_docs=400, shards_per_chunk=4, heavy_docs=2
-    )
-    df = spark.read.parquet(p)
-    total = df.count()
-    n_fx = df.filter("doc_id like 'fx-%'").count()
-    assert total == 900 + n_fx + 2 and n_fx > 0
-    assert df.select("doc_id").distinct().count() == total
-    # exactly the single-shot writer's schema (the extraction input DDL)
     single = str(tmp_path / "single")
     datagen.write_documents_parquet(single, n_docs=10)
-    assert df.schema == spark.read.parquet(single).schema
-    # whales only once
-    heavy = df.selectExpr("size(spans) as n").filter("n >= 20000").count()
-    assert heavy == 2
+    for shards in (4, 1):
+        p = str(tmp_path / f"chunked{shards}")
+        datagen.write_documents_parquet_chunked(
+            p, n_docs=900, chunk_docs=400, shards_per_chunk=shards,
+            heavy_docs=2,
+        )
+        assert len(os.listdir(p)) == 3 * shards
+        df = spark.read.parquet(p)
+        total = df.count()
+        n_fx = df.filter("doc_id like 'fx-%'").count()
+        assert total == 900 + n_fx + 2 and n_fx > 0
+        assert df.select("doc_id").distinct().count() == total
+        # exactly the single-shot writer's schema (the extraction input DDL)
+        assert df.schema == spark.read.parquet(single).schema
+        # whales only once
+        heavy = df.selectExpr("size(spans) as n").filter("n >= 20000").count()
+        assert heavy == 2
 
 
 def test_trained_weights_serve_extraction(spark, input_path, tmp_path):
@@ -582,7 +586,7 @@ def _jobs_of(spark, group, calls):
 
 
 def test_manifest_calls_start_no_spark_job(spark, tmp_path):
-    """Commit, pending, the compatibility check and reset run on the driver
+    """Commit, pending and the compatibility check run on the driver
     through the Hadoop FileSystem API: no Spark job."""
     out = str(tmp_path / "out")
     config = {"mode": "extract_full", "n_buckets": 4, "max_spans": 500,
@@ -601,10 +605,6 @@ def test_manifest_calls_start_no_spark_job(spark, tmp_path):
         with pytest.raises(ValueError, match="incompatible"):
             mf.check_compatible(spark, out, {**config, "max_spans": 400})
 
-    def reset():
-        mf.reset(spark, out)
-        assert mf.pending_buckets(spark, out, 4) == [0, 1, 2, 3]
-
     assert not jobs_of("manifest-commit", commit_and_check)
     assert [
         (r["bucket"], r["n_docs"], r["n_spans"], r["n_quarantined"],
@@ -612,7 +612,6 @@ def test_manifest_calls_start_no_spark_job(spark, tmp_path):
         for r in sorted(mf.read_manifest(spark, out).collect())
     ] == [(0, 10, 100, 0, "extract_full", 500),
           (2, 12, 102, 2, "extract_full", 500)]
-    assert not jobs_of("manifest-reset", reset)
     # the group does see a job
     assert jobs_of("manifest-count", lambda: spark.range(3).count())
 
@@ -790,35 +789,56 @@ def test_waves_split_a_run_and_commit_wave_by_wave(spark, input_path,
 
 def test_recompute_leaves_every_bucket_and_no_stale_rows(spark, input_path,
                                                          tmp_path):
-    """A recompute over an earlier output leaves every bucket's output and
-    quarantine directory in place, holding exactly this run's rows: with
-    an input whose buckets are partly empty, and with an input whose every
-    row is quarantined (0 output rows, not a missing path)."""
+    """A recompute over an earlier output leaves exactly its own buckets'
+    output and quarantine directories, holding exactly this run's rows:
+    after the whale pass wrote ``bucket=quarantine`` (each doc is then read
+    once), with fewer buckets than the run before, with an input whose
+    buckets are partly empty, and with an input whose every row is
+    quarantined (0 output rows, not a missing path). A file the job did
+    not write survives every recompute."""
+    import glob
+
     out = str(tmp_path / "out")
-    n = 4
-    runner.run_extraction_job(spark, input_path, out, n_buckets=n,
+    runner.run_extraction_job(spark, input_path, out, n_buckets=4,
                               max_spans=500)
-    for name, docs, want_out, want_q in (
-        ("one-doc", [("only", 3)], ["only"], []),
-        ("all-quarantined", [("w1", 9), ("w2", 12), ("bad", None)],
+    runner.process_quarantined(spark, input_path, out, max_spans=500)
+    assert os.path.isdir(os.path.join(out, "bucket=quarantine"))
+    notes = os.path.join(out, "notes.txt")
+    with open(notes, "w") as f:
+        f.write("not the job's\n")
+
+    sizes = {r["doc_id"]: r["n"] for r in spark.read.parquet(input_path)
+             .select("doc_id", F.size("spans").alias("n")).collect()}
+    every = sorted(sizes)
+    admitted = sorted(d for d, n in sizes.items() if n <= 500)
+    whales = sorted(d for d, n in sizes.items() if n > 500)
+    assert whales and len(every) == len(sizes)
+    for name, docs, n, cap, want_out, want_q in (
+        ("after-whale-pass", input_path, 4, 100_000, every, []),
+        ("fewer-buckets", input_path, 2, 500, admitted, whales),
+        ("one-doc", [("only", 3)], 4, 500, ["only"], []),
+        ("all-quarantined", [("w1", 9), ("w2", 12), ("bad", None)], 4, 5,
          [], ["bad", "w1", "w2"]),
     ):
-        inp = str(tmp_path / f"{name}.parquet")
-        _docs(spark, docs, inp)
+        inp = docs
+        if not isinstance(docs, str):
+            inp = str(tmp_path / f"{name}.parquet")
+            _docs(spark, docs, inp)
         m = runner.run_extraction_job(spark, inp, out, n_buckets=n,
-                                      max_spans=5 if want_q else 500,
-                                      resume=False)
+                                      max_spans=cap, resume=False)
         assert m["buckets_run"] == n, name
-        for b in range(n):
-            assert os.path.isdir(os.path.join(out, f"bucket={b}")), name
-            assert os.path.isdir(
-                os.path.join(out, "_quarantine", f"bucket={b}")
-            ), name
+        want_dirs = [f"bucket={b}" for b in range(n)]
+        for root in (out, os.path.join(out, "_quarantine")):
+            got_dirs = sorted(os.path.basename(d) for d in
+                              glob.glob(os.path.join(root, "bucket=*")))
+            assert got_dirs == want_dirs, (name, root)
         got = sorted(r["doc_id"] for r in
                      runner.read_extracted(spark, out).collect())
         assert got == want_out, name
         q = spark.read.parquet(os.path.join(out, "_quarantine", "bucket=*"))
         assert sorted(r["doc_id"] for r in q.collect()) == want_q, name
+        with open(notes) as f:
+            assert f.read() == "not the job's\n", name
 
 
 def test_staging_check_starts_no_spark_job(spark, input_path, tmp_path):
