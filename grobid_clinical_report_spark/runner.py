@@ -49,6 +49,8 @@ from .io import hadoop_fs, read_documents
 from .pipeline import _COALESCE_DOCS, _COALESCE_SPANS, run_mode
 
 DEFAULT_MAX_SPANS = 50_000
+# what the job writes under its output besides the bucket=<b> directories
+_JOB_ENTRIES = {"_manifest", "_quarantine", "_staged_input", "_temporary"}
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -167,10 +169,11 @@ def run_extraction_job(
     is raised, so a crash redoes only the wave's uncommitted buckets.
 
     The driver clears a pending bucket, the wave appends: before a wave
-    writes, its buckets' output and quarantine directories are deleted.
+    writes, its buckets' output and quarantine directories and the
+    committer's ``_temporary`` staging beside them are deleted.
     ``resume=False`` first deletes the job's own entries under
-    ``output_path`` (``_manifest``, ``_quarantine``, ``_staged_input``,
-    ``bucket=*``) and nothing else. The deletes, the commits and a
+    ``output_path`` (``_JOB_ENTRIES``, ``bucket=*``) and nothing else,
+    matched by name, not as a glob. The deletes, the commits and a
     bucket's empty files are driver-side file operations through the
     Hadoop FileSystem API: they start no Spark job.
 
@@ -208,8 +211,11 @@ def run_extraction_job(
         mf.check_compatible(spark, output_path, config)
     else:
         # the input may live beside the output: only the job's own entries go
-        _delete(spark, os.path.join(
-            output_path, "{_manifest,_quarantine,_staged_input,bucket=*}"))
+        fs, p = hadoop_fs(spark, output_path)
+        for st in fs.listStatus(p) if fs.exists(p) else []:
+            name = st.getPath().getName()
+            if name in _JOB_ENTRIES or name.startswith("bucket="):
+                fs.delete(st.getPath(), True)
     pending = mf.pending_buckets(spark, output_path, n_buckets)
 
     if stage_buckets:
@@ -236,9 +242,13 @@ def run_extraction_job(
             sc.setJobDescription(f"{mode} wave={i} buckets="
                                  + ",".join(map(str, wave)))
             t0 = time.monotonic()
-            for b in wave:  # uncommitted: clear what an attempt left
-                for root in (output_path, q_root):
-                    _delete(spark, os.path.join(root, f"bucket={b}"))
+            # uncommitted: clear what an attempt left, the committer's
+            # staging too (a killed driver leaves committed task output
+            # there, which the next job commit would merge into the bucket)
+            for root in (output_path, q_root):
+                for name in ["_temporary", *(f"bucket={b}" for b in wave)]:
+                    fs, p = hadoop_fs(spark, os.path.join(root, name))
+                    fs.delete(p, True)
             wave_docs = docs.filter(F.col("bucket").isin(wave))
             ok, bad = split_guardrail(wave_docs, max_spans)
             k = min(cores, sum(_batches(sizes[b]) for b in wave))
@@ -329,14 +339,6 @@ def _size_pass(docs: DataFrame, pending: list[int], max_spans: int) -> dict:
     got = {r["bucket"]: r.asDict() for r in rows}
     zero = {"docs": 0, "spans": 0, "quarantined": 0}
     return {b: got.get(b, zero) for b in pending}
-
-
-def _delete(spark: SparkSession, pattern: str) -> None:
-    """Recursively delete every path matching the Hadoop glob ``pattern``,
-    from the driver through the Hadoop FileSystem API: no Spark job."""
-    fs, p = hadoop_fs(spark, pattern)
-    for st in fs.globStatus(p) or []:
-        fs.delete(st.getPath(), True)
 
 
 def _write_by_bucket(df: DataFrame, root: str) -> None:

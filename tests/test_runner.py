@@ -795,8 +795,9 @@ def test_recompute_leaves_every_bucket_and_no_stale_rows(spark, input_path,
     once), with fewer buckets than the run before, with an input whose
     buckets are partly empty, and with an input whose every row is
     quarantined (0 output rows, not a missing path). A file the job did
-    not write survives every recompute."""
+    not write survives every recompute; the committer's staging does not."""
     import glob
+    import shutil
 
     out = str(tmp_path / "out")
     runner.run_extraction_job(spark, input_path, out, n_buckets=4,
@@ -806,6 +807,12 @@ def test_recompute_leaves_every_bucket_and_no_stale_rows(spark, input_path,
     notes = os.path.join(out, "notes.txt")
     with open(notes, "w") as f:
         f.write("not the job's\n")
+    # task output a killed driver left in the committer's staging: a
+    # copy of bucket 0's rows, which a job commit would merge back
+    task = os.path.join(out, "_temporary", "0", "task_x", "bucket=0")
+    os.makedirs(task)
+    shutil.copy(max(glob.glob(os.path.join(out, "bucket=0", "*.parquet")),
+                    key=os.path.getsize), os.path.join(task, "part-0.parquet"))
 
     sizes = {r["doc_id"]: r["n"] for r in spark.read.parquet(input_path)
              .select("doc_id", F.size("spans").alias("n")).collect()}
@@ -839,6 +846,47 @@ def test_recompute_leaves_every_bucket_and_no_stale_rows(spark, input_path,
         assert sorted(r["doc_id"] for r in q.collect()) == want_q, name
         with open(notes) as f:
             assert f.read() == "not the job's\n", name
+        assert not os.path.exists(os.path.join(out, "_temporary")), name
+
+
+def test_resume_merges_no_task_output_a_killed_driver_left(
+    spark, input_path, tmp_path
+):
+    """A driver killed after some of a wave's tasks committed, but before
+    the job commit, leaves their output under the committer's
+    ``_temporary``. The next job commit of the default (v1)
+    FileOutputCommitter merges every committed task directory it finds
+    there, so the resume of that bucket must clear it first: each doc is
+    then read once, from its bucket and from the quarantine alike."""
+    import glob
+    import shutil
+
+    out = str(tmp_path / "out")
+    q_root = os.path.join(out, "_quarantine")
+    runner.run_extraction_job(spark, input_path, out, n_buckets=4,
+                              max_spans=500)
+
+    def rows(root):
+        return sorted(r["doc_id"] for r in spark.read.parquet(
+            os.path.join(root, "bucket=*")).collect())
+
+    want, want_q = rows(out), rows(q_root)
+    # the whale's bucket holds rows in both the output and the quarantine
+    (b,) = {r["bucket"] for r in spark.read.parquet(q_root).collect()}
+    for f in glob.glob(os.path.join(mf.manifest_path(out), f"_done-{b}-*")):
+        os.remove(f)
+    for root in (out, q_root):
+        part = max(glob.glob(os.path.join(root, f"bucket={b}", "*.parquet")),
+                   key=os.path.getsize)
+        task = os.path.join(root, "_temporary", "0", "task_x", f"bucket={b}")
+        os.makedirs(task)
+        shutil.copy(part, os.path.join(task, "part-0.parquet"))
+
+    m = runner.run_extraction_job(spark, input_path, out, n_buckets=4,
+                                  max_spans=500)
+    assert m["buckets_run"] == 1
+    assert rows(out) == want
+    assert rows(q_root) == want_q
 
 
 def test_staging_check_starts_no_spark_job(spark, input_path, tmp_path):
